@@ -11,9 +11,10 @@ import scala.collection.mutable.ArrayBuffer
   * pipeline.py:32-196, core.py:240-292,359-528) on one engine.
   *
   * Differences by design:
-  *  - each step's output is materialized ONCE (write, then count the
-  *    written files) — the reference double-executes every step's plan
-  *    (count then write, reference: core.py:452-453);
+  *  - each step's output is materialized ONCE: the write counts its own
+  *    rows, and the next step reads it back with the written schema
+  *    (see [[Handoff]]) — the reference double-executes every step's
+  *    plan (count then write, reference: core.py:452-453);
   *  - steps are `DataFrame -> DataFrame` on a shared SparkSession — no
   *    second execution engine for tokenize/export (the reference swaps
   *    to HF-datasets multiprocessing there, reference: tokenizer/

@@ -73,37 +73,21 @@ object ConnectedComponents {
   def runOnStrings(pairs: DataFrame,
                    smallGraphEdges: Long = SmallGraphEdges): DataFrame = {
     import org.apache.spark.sql.functions.monotonically_increasing_id
-    // driver fast path (the run() convention, bounded probe first):
-    // below SmallGraphEdges the id-mapping machinery — distinct ids +
-    // eager checkpoint + four joins — costs more scheduling than the
-    // whole graph costs to fold on the driver. Union-by-min over the
-    // STRING order makes the labeling deterministic (the mapped path's
-    // labels were monotonic-id-arbitrary; callers only group on them).
+    // driver fast path (the run() convention): below SmallGraphEdges
+    // the id-mapping machinery — distinct ids + eager checkpoint + four
+    // joins — costs more scheduling than the whole graph costs to fold
+    // on the driver. ONE bounded collect of smallGraphEdges + 1 edges
+    // both picks the regime and feeds the fold, so the pair lineage runs
+    // once on this path. Union-by-min over the STRING order makes the
+    // labeling deterministic (the mapped path's labels are
+    // monotonic-id-arbitrary; callers only group on them).
     val spark = pairs.sparkSession
     import spark.implicits._
-    val probe = pairs.limit((math.min(smallGraphEdges, Int.MaxValue - 1L) + 1L).toInt).count()
-    if (probe <= smallGraphEdges) {
-      val es = pairs.select(col("src").cast("string"), col("dst").cast("string"))
-        .as[(String, String)].collect()
-      val parent = scala.collection.mutable.HashMap[String, String]()
-      def find(x: String): String = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      es.foreach { case (a, b) =>
-        parent.getOrElseUpdate(a, a)
-        parent.getOrElseUpdate(b, b)
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) {
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
-      return parent.keys.toSeq.map(k => (k, find(k)))
-        .toDF("id", "component")
-    }
+    val es = pairs.select(col("src").cast("string"), col("dst").cast("string"))
+      .limit((math.min(smallGraphEdges, Int.MaxValue - 1L) + 1L).toInt)
+      .as[(String, String)].collect()
+    if (es.length <= smallGraphEdges)
+      return unionFind(es).toDF("id", "component")
     // localCheckpoint (not persist+count): monotonically_increasing_id is
     // nondeterministic under recomputation, and this mapping feeds TWO
     // joins below — if an executor-loss/cache-eviction recompute reassigned
@@ -139,27 +123,31 @@ object ConnectedComponents {
     * root the minimum id of its component, so the output labeling is
     * IDENTICAL to the distributed loop's (id -> component-min, one row
     * per node that appears in any edge). */
-  private def unionFindDriver(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val es = edges.select(col("src"), col("dst")).as[(Long, Long)].collect()
-    val parent = scala.collection.mutable.HashMap[Long, Long]()
-    def find(x: Long): Long = {
+  private def unionFind[T](edges: Iterable[(T, T)])(implicit ord: Ordering[T]): Seq[(T, T)] = {
+    val parent = scala.collection.mutable.HashMap[T, T]()
+    def find(x: T): T = {
       var r = x
       while (parent(r) != r) r = parent(r)
       var c = x
       while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    es.foreach { case (a, b) =>
+    edges.foreach { case (a, b) =>
       parent.getOrElseUpdate(a, a)
       parent.getOrElseUpdate(b, b)
       val ra = find(a); val rb = find(b)
       if (ra != rb) {
-        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+        if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb
       }
     }
-    parent.keys.toSeq.map(k => (k, find(k))).toDF("id", "component")
+    parent.keys.toSeq.map(k => (k, find(k)))
+  }
+
+  private def unionFindDriver(edges: DataFrame): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    unionFind(edges.select(col("src"), col("dst")).as[(Long, Long)].collect())
+      .toDF("id", "component")
   }
 
   def run(edges: DataFrame, maxIterations: Int = 20,

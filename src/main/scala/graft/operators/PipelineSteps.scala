@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Handoff
 import graft.core.Pipeline._
 import graft.functions.{HashFunctions, PiiFunctions, TextFunctions}
 import graft.sources.WetSource
@@ -35,17 +36,14 @@ private[operators] class SerializableHadoopConf(
   * isolation because its input is the previous step's parquet dir. */
 object PipelineSteps {
 
-  private def readStep(spark: SparkSession, cfg: PipelineConfig, step: String): DataFrame = {
-    val df = spark.read.parquet(stepDir(cfg.outputBase, stepInput(step)))
-    cfg.limit.map(df.limit).getOrElse(df)
+  /** The previous step's output, capped at `cfg.limit` rows. */
+  private def readStep(spark: SparkSession, cfg: PipelineConfig, step: String): Handoff.Read = {
+    val r = Handoff.read(spark, stepDir(cfg.outputBase, stepInput(step)))
+    cfg.limit.fold(r)(n => Handoff.Read(r.df.limit(n), r.rows.map(math.min(_, n.toLong))))
   }
 
-  private def writeStep(df: DataFrame, cfg: PipelineConfig, step: String): Long = {
-    val dir = stepDir(cfg.outputBase, step)
-    df.write.mode("overwrite").parquet(dir)
-    // count from the written files — no second execution of the lineage
-    df.sparkSession.read.parquet(dir).count()
-  }
+  private def writeStep(df: DataFrame, cfg: PipelineConfig, step: String): Long =
+    Handoff.write(df, stepDir(cfg.outputBase, step))
 
   /** ingest: WET files → documents parquet (S1-S3). */
   case class IngestStep(maxFiles: Int = Int.MaxValue,
@@ -63,12 +61,13 @@ object PipelineSteps {
   /** clean: normalize + metrics + judge; kept/dropped dual outputs
     * (reference: src/llm_data_pipeline/clean/run.py:105-117). The lineage
     * is persisted before the kept/dropped fork so the scan+judge runs
-    * once, not three times like the reference. */
+    * once, not three times like the reference; the input row count is
+    * kept + dropped, both counted on their writes. */
   case class CleanStep(thresholds: TextFunctions.CleanThresholds = TextFunctions.CleanThresholds())
       extends Step {
     val name = "clean"
     def run(spark: SparkSession, cfg: PipelineConfig): StepStats = {
-      val in = readStep(spark, cfg, name)
+      val in = readStep(spark, cfg, name).df
       val t = TextFunctions.normalizeNewlines(col("text"))
       val judged = in
         .withColumn("text", t)
@@ -79,12 +78,10 @@ object PipelineSteps {
         .withColumn("drop_reason", TextFunctions.judgeReason(col("text"), thresholds))
         .withColumn("kept", col("drop_reason") === "ok")
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val inRows = judged.count()
       val kept = writeStep(judged.filter(col("kept")), cfg, name)
-      judged.filter(!col("kept")).write.mode("overwrite")
-        .parquet(s"${cfg.outputBase}/dropped_parquet")
+      val dropped = Handoff.write(judged.filter(!col("kept")), s"${cfg.outputBase}/dropped_parquet")
       judged.unpersist()
-      StepStats(name, inRows, kept, 0, Map("dropped" -> (inRows - kept).toString))
+      StepStats(name, kept + dropped, kept, 0, Map("dropped" -> dropped.toString))
     }
   }
 
@@ -93,7 +90,7 @@ object PipelineSteps {
   case class QualityStep() extends Step {
     val name = "quality"
     def run(spark: SparkSession, cfg: PipelineConfig): StepStats = {
-      val in = readStep(spark, cfg, name)
+      val in = readStep(spark, cfg, name).df
       // model seam (reference lid.176.bin swap, quality/model.py:267-340):
       // an artifact path routes labeling through the trained NB scorer —
       // DEFAULTING to the committed 48-language artifact when present
@@ -144,7 +141,7 @@ object PipelineSteps {
   case class PiiStep(enableNer: Boolean = false) extends Step {
     val name = "pii"
     def run(spark: SparkSession, cfg: PipelineConfig): StepStats = {
-      val in = readStep(spark, cfg, name)
+      val in = readStep(spark, cfg, name).df
       val flagged0 = in
         .withColumn("pii_has_email", PiiFunctions.hasEmail(col("text")))
         .withColumn("pii_has_ip4", PiiFunctions.hasIpv4(col("text")))
@@ -169,7 +166,7 @@ object PipelineSteps {
   case class MinhashStep(mh: Dedup.MinHashConfig = Dedup.MinHashConfig()) extends Step {
     val name = "minhash"
     def run(spark: SparkSession, cfg: PipelineConfig): StepStats = {
-      val in = readStep(spark, cfg, name)
+      val in = readStep(spark, cfg, name).df
       val out = writeStep(in
         .withColumn("signature",
           HashFunctions.minhash(TextFunctions.normalizeForDedup(col("text")),
@@ -182,13 +179,19 @@ object PipelineSteps {
   /** clustering: LSH buckets → pairs → connected components → canonical
     * per component by max (length, doc_id) — the reference's pick order
     * minus the absent ts (reference: dedup/dedup.py:123-130) — then
-    * anti-join the losers out. Fully distributed (contrast
-    * reference: dedup/dedup.py:157-197 driver take_all + union-find). */
+    * anti-join the losers out. Banding, verify, pick and anti-join run
+    * distributed; connected components fold on the driver below
+    * [[ConnectedComponents.SmallGraphEdges]] edges and run the
+    * distributed star loop above it (the reference folds every graph on
+    * the driver: dedup/dedup.py:157-197 take_all + union-find). */
   case class ClusteringStep(mh: Dedup.MinHashConfig = Dedup.MinHashConfig()) extends Step {
     val name = "clustering"
     def run(spark: SparkSession, cfg: PipelineConfig): StepStats = {
-      val in = readStep(spark, cfg, name).persist(StorageLevel.MEMORY_AND_DISK)
-      val inRows = in.count()
+      val r = readStep(spark, cfg, name)
+      // lazy: the first action below fills the cache
+      val in = r.df.persist(StorageLevel.MEMORY_AND_DISK)
+      // counted only when the input was not written through the handoff
+      val inRows = r.rows.getOrElse(in.count())
       val sigs = in.select(col("doc_id").as("id"), col("signature"))
       // band-collision-only by default (the reference's mode, star
       // edges); a positive jaccardThreshold adds the signature-estimate
@@ -230,7 +233,7 @@ object PipelineSteps {
   case class TrainTokenizerStep(corpusShards: Int = 8, maxCorpusChars: Int = 100000) extends Step {
     val name = "train_tokenizer"
     def run(spark: SparkSession, cfg: PipelineConfig): StepStats = {
-      val in = readStep(spark, cfg, name)
+      val in = readStep(spark, cfg, name).df
       // S7 sharded text sink: one doc per line, newlines flattened,
       // repartitioned for parallel shard writes (reference:
       // src/llm_data_pipeline/tokenizer/train.py:25-87) - the corpus a
@@ -255,7 +258,7 @@ object PipelineSteps {
         ("<unk>", 0L, 0), ("<bos>", 0L, 1), ("<eos>", 0L, 2), ("<pad>", 0L, 3)))
         .toDF("word", "freq", "id")
       val vocab = specials.unionByName(words.select(col("word"), col("freq"), col("id")))
-      vocab.write.mode("overwrite").parquet(s"${cfg.outputBase}/vocab_parquet")
+      val n = Handoff.write(vocab, s"${cfg.outputBase}/vocab_parquet")
       if (cfg.tokenizer == "bpe") {
         // real BPE training: distributed word counts + in-memory merges;
         // persist the merge table as the model artifact
@@ -263,11 +266,10 @@ object PipelineSteps {
         val model = BpeTrainer.trainFromCorpus(in, "text", cfg.vocabSize,
           inputSentenceSize = cfg.inputSentenceSize,
           characterCoverage = cfg.characterCoverage)
-        model.merges.zipWithIndex.map { case ((a, b), r) => (r, a, b) }
-          .toDF("rank", "left", "right")
-          .coalesce(1).write.mode("overwrite").parquet(s"${cfg.outputBase}/bpe_merges_parquet")
-        model.vocab.toSeq.map { case (w, i) => (w, 0L, i) }.toDF("word", "freq", "id")
-          .coalesce(1).write.mode("overwrite").parquet(s"${cfg.outputBase}/bpe_vocab_parquet")
+        Handoff.write(model.merges.zipWithIndex.map { case ((a, b), r) => (r, a, b) }
+          .toDF("rank", "left", "right").coalesce(1), s"${cfg.outputBase}/bpe_merges_parquet")
+        Handoff.write(model.vocab.toSeq.map { case (w, i) => (w, 0L, i) }
+          .toDF("word", "freq", "id").coalesce(1), s"${cfg.outputBase}/bpe_vocab_parquet")
       }
       if (cfg.tokenizer == "unigram") {
         // unigram-LM training (SentencePiece's default model type):
@@ -278,7 +280,6 @@ object PipelineSteps {
           softEm = cfg.unigramSoftEm)
         UnigramTrainer.writeModel(spark, s"${cfg.outputBase}/unigram_model_parquet", model)
       }
-      val n = spark.read.parquet(s"${cfg.outputBase}/vocab_parquet").count()
       StepStats(name, -1, n)
     }
   }
@@ -290,13 +291,13 @@ object PipelineSteps {
     val name = "tokenize"
     def run(spark: SparkSession, cfg: PipelineConfig): StepStats = {
       import spark.implicits._
-      val in = readStep(spark, cfg, name)
+      val in = readStep(spark, cfg, name).df
       val eos = 2
       val tokenized =
         if (cfg.tokenizer == "bpe") {
-          val merges = spark.read.parquet(s"${cfg.outputBase}/bpe_merges_parquet")
+          val merges = Handoff.read(spark, s"${cfg.outputBase}/bpe_merges_parquet").df
             .orderBy("rank").collect().map(r => (r.getString(1), r.getString(2))).toSeq
-          val bvocab = spark.read.parquet(s"${cfg.outputBase}/bpe_vocab_parquet")
+          val bvocab = Handoff.read(spark, s"${cfg.outputBase}/bpe_vocab_parquet").df
             .select("word", "id").as[(String, Int)].collect().toMap
           BpeTrainer.tokenize(in.select("doc_id", "text"), "text",
               BpeTrainer.BpeModel(merges, bvocab))
@@ -307,7 +308,7 @@ object PipelineSteps {
           UnigramTrainer.tokenize(in.select("doc_id", "text"), "text", model)
             .select(col("doc_id"), concat(col("ids"), array(lit(eos))).as("ids"))
         } else {
-          val vocab = spark.read.parquet(s"${cfg.outputBase}/vocab_parquet")
+          val vocab = Handoff.read(spark, s"${cfg.outputBase}/vocab_parquet").df
             .select("word", "id").as[(String, Int)].collect().toMap
           val bc = spark.sparkContext.broadcast(vocab)
           in.select(col("doc_id"), TextFunctions.normalizeForDedup(col("text")).as("norm"))
@@ -325,12 +326,8 @@ object PipelineSteps {
         numPartitions = numPartitions)
       // S9 sink parity: zstd-compressed shards of bounded record count
       // (reference: src/llm_data_pipeline/tokenizer/run.py:220-261,540)
-      val dir = stepDir(cfg.outputBase, name)
-      packed.write.mode("overwrite")
-        .option("compression", "zstd")
-        .option("maxRecordsPerFile", 2048)
-        .parquet(dir)
-      val out = spark.read.parquet(dir).count()
+      val out = Handoff.write(packed, stepDir(cfg.outputBase, name),
+        Map("compression" -> "zstd", "maxRecordsPerFile" -> "2048"))
       StepStats(name, -1, out, 0, Map("seq_len" -> cfg.seqLen.toString))
     }
   }
@@ -352,18 +349,13 @@ object PipelineSteps {
     *
     * uint16 bounds: the reference WARNS and wraps (numpy astype;
     * reference: export/run.py:125-127) — mirrored here, `toShort` wraps
-    * identically mod 65536. */
+    * identically mod 65536. Each shard task reports its max id with its
+    * counts, so the check costs no pass of its own. */
   case class ExportStep() extends Step {
     val name = "export"
     def run(spark: SparkSession, cfg: PipelineConfig): StepStats = {
       import spark.implicits._
-      val in = readStep(spark, cfg, name)
-      if (cfg.exportDtype == "uint16") {
-        val row = in.agg(max(array_max(col("input_ids")))).head()
-        if (!row.isNullAt(0) && row.getInt(0) >= 65535)
-          System.err.println(
-            s"[graft] WARNING: token id ${row.getInt(0)} >= 65535 exported as uint16 (wraps)")
-      }
+      val in = readStep(spark, cfg, name).df
       val outPath = new HPath(s"${cfg.outputBase}/export_tokens.bin")
       val shardDir = new HPath(s"${cfg.outputBase}/export_tokens.shards")
       val hconf = spark.sparkContext.hadoopConfiguration
@@ -392,11 +384,15 @@ object PipelineSteps {
           f"part-$pid%05d.attempt-${tc.taskAttemptId()}%d.tmp")
         val os = new BufferedOutputStream(fs.create(tmp, true), 1 << 20)
         var n = 0L
+        var maxId = Int.MinValue
         it.foreach { r =>
           val ids = r.getSeq[Int](0)
           val bb = ByteBuffer.allocate(ids.length * (if (uint16) 2 else 4))
             .order(ByteOrder.LITTLE_ENDIAN)
-          ids.foreach { i => if (uint16) bb.putShort(i.toShort) else bb.putInt(i) }
+          ids.foreach { i =>
+            if (i > maxId) maxId = i
+            if (uint16) bb.putShort(i.toShort) else bb.putInt(i)
+          }
           os.write(bb.array())
           n += ids.length
         }
@@ -412,11 +408,14 @@ object PipelineSteps {
           if (!fs.exists(f))
             throw new java.io.IOException(s"shard commit failed: $f")
         }
-        Iterator((pid, n, fs.getFileStatus(f).getLen))
+        Iterator((pid, n, fs.getFileStatus(f).getLen, maxId))
       }.collect().sortBy(_._1)
+      val topId = shardStats.map(_._4).maxOption.getOrElse(Int.MinValue)
+      if (uint16 && topId >= 65535)
+        System.err.println(s"[graft] WARNING: token id $topId >= 65535 exported as uint16 (wraps)")
       // ordered concat + manifest; shards stay for direct sharded reads
       val os = new BufferedOutputStream(dfs.create(outPath, true), 1 << 20)
-      shardStats.foreach { case (pid, _, _) =>
+      shardStats.foreach { case (pid, _, _, _) =>
         val is = dfs.open(new HPath(shardDir, f"part-$pid%05d.bin"))
         try {
           val buf = new Array[Byte](1 << 20)
@@ -425,7 +424,7 @@ object PipelineSteps {
         } finally is.close()
       }
       os.close()
-      val manifest = shardStats.map { case (pid, n, bytes) =>
+      val manifest = shardStats.map { case (pid, n, bytes, _) =>
         f"""{"shard":"part-$pid%05d.bin","tokens":$n%d,"bytes":$bytes%d}"""
       }.mkString("[", ",", "]")
       val mos = dfs.create(new HPath(shardDir, "manifest.json"), true)

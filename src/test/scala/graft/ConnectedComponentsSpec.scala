@@ -106,6 +106,33 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(m("bbb") == "aaa" && m("zzz") == "xxx" && m("solo2") == "solo1")
   }
 
+  test("runOnStrings regime switch: smallGraphEdges edges fold on the driver, one more does not") {
+    import spark.implicits._
+    val k = 5
+    val hits = spark.sparkContext.longAccumulator("pairRows")
+    // a filter, so that no action (a count included) can prune it away
+    val tick = udf { (_: Long) => hits.add(1); true }.asNondeterministic()
+    // a chain of `edges` edges over string ids; every row it yields ticks `hits`
+    def chain(edges: Int) = spark.range(0, edges, 1, 1).filter(tick(col("id")))
+      .select(format_string("n%02d", col("id")).as("src"),
+        format_string("n%02d", col("id") + 1).as("dst"))
+    def members(edges: Int) = (0 to edges).map(i => f"n$i%02d").toSet
+    def groupsOf(df: org.apache.spark.sql.DataFrame) =
+      df.as[(String, String)].collect().groupBy(_._2).values.map(_.map(_._1).toSet).toSet
+
+    val atBound = ConnectedComponents.runOnStrings(chain(k), smallGraphEdges = k)
+    // driver fold: a local result, and the pair lineage ran exactly once
+    assert(atBound.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(hits.value == k)
+    assert(groupsOf(atBound) == Set(members(k)))
+
+    val over = ConnectedComponents.runOnStrings(chain(k + 1), smallGraphEdges = k)
+    assert(!over.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(groupsOf(over) == Set(members(k + 1)))
+  }
+
   test("random graphs match union-find") {
     val rnd = new Random(42)
     for (trial <- 1 to 5) {

@@ -5,7 +5,7 @@ import graft.operators.PipelineSteps
 import graft.sources.WetSource
 import org.apache.spark.sql.functions.col
 
-import java.io.{ByteArrayOutputStream, FileOutputStream}
+import java.io.{ByteArrayOutputStream, FileOutputStream, PrintStream}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 import java.util.zip.GZIPOutputStream
@@ -118,6 +118,16 @@ class PipelineSpec extends SparkSpec {
     assert(byStep("clustering").outputRows == 3)  // dup + near-dup removed
     assert(byStep("export").outputRows > 0)
 
+    // every reported row count is what a fresh read of its directory holds
+    def rowsIn(dir: String) = spark.read.parquet(dir).count()
+    Seq("ingest", "clean", "quality", "pii", "minhash", "clustering", "tokenize").foreach { s =>
+      assert(byStep(s).outputRows == rowsIn(Pipeline.stepDir(outBase, s)), s)
+    }
+    assert(byStep("train_tokenizer").outputRows == rowsIn(s"$outBase/vocab_parquet"))
+    assert(byStep("clean").extra("dropped").toLong == rowsIn(s"$outBase/dropped_parquet"))
+    assert(byStep("clean").inputRows == byStep("ingest").outputRows)
+    assert(byStep("clustering").inputRows == byStep("minhash").outputRows)
+
     // schema contracts per stage
     val cleaned = spark.read.parquet(s"$outBase/cleaned_parquet")
     assert(Seq("doc_id", "url", "warc_date", "source_path", "text", "kept", "drop_reason",
@@ -132,6 +142,7 @@ class PipelineSpec extends SparkSpec {
 
     // binary length == chunks * seqLen * 2 bytes
     val nChunks = packed.count()
+    assert(byStep("export").outputRows == nChunks * 64)
     val bin = Files.size(Path.of(s"$outBase/export_tokens.bin"))
     assert(bin == nChunks * 64 * 2, s"bin=$bin chunks=$nChunks")
     // and the bytes decode back to exactly the packed ids (little-endian u16)
@@ -212,6 +223,29 @@ class PipelineSpec extends SparkSpec {
     assert(idsU.forall(id => id >= 0 && id < 500))
     assert(idsU.exists(_ >= graft.operators.UnigramTrainer.FirstPieceId),
       "at least one learned piece id in the stream")
+  }
+
+  test("export warns on a token id that does not fit uint16, and wraps it") {
+    import spark.implicits._
+    val outBase = Files.createTempDirectory("exportwarn").toString
+    val cfg = Pipeline.PipelineConfig(dataDir = ".", outputBase = outBase)
+    // export one packed chunk of `ids`; returns what the step printed to stderr
+    def runExport(ids: Seq[Int]): String = {
+      Seq((0, 0L, ids)).toDF("part_id", "chunk_in_part", "input_ids")
+        .write.mode("overwrite").parquet(Pipeline.stepDir(outBase, "tokenize"))
+      val err = new ByteArrayOutputStream()
+      val saved = System.err
+      System.setErr(new PrintStream(err, true, "UTF-8"))
+      try PipelineSteps.ExportStep().run(spark, cfg)
+      finally System.setErr(saved)
+      err.toString("UTF-8")
+    }
+    assert(runExport(Seq(7, 70000, 65534)).contains(
+      "[graft] WARNING: token id 70000 >= 65535 exported as uint16 (wraps)"))
+    val bytes = Files.readAllBytes(Path.of(s"$outBase/export_tokens.bin"))
+    val decoded = bytes.grouped(2).map(b => (b(0) & 0xff) | ((b(1) & 0xff) << 8)).toSeq
+    assert(decoded == Seq(7, 70000 - 65536, 65534))
+    assert(!runExport(Seq(7, 65534)).contains("WARNING: token id"))
   }
 
   test("CLI flags parse into the pipeline config, tokenizer knobs included") {
