@@ -22,7 +22,6 @@ object PiiFunctions {
 
   def hasEmail(c: Column): Column = c.rlike(EmailPattern)
   def hasIpv4(c: Column): Column  = c.rlike(Ipv4Pattern)
-  def hasIpv6(c: Column): Column  = c.rlike(Ipv6Pattern)
   def hasPhone(c: Column): Column = c.rlike(PhonePattern)
   def hasSsn(c: Column): Column   = c.rlike(SsnPattern)
 

@@ -244,19 +244,6 @@ object TextFunctions {
   /** CJK character presence (reference: src/llm_data_pipeline/pii/run.py:170-179). */
   def hasCjk(c: Column): Column = c.rlike("[\\x{4e00}-\\x{9fff}]")
 
-  /** Stopword-hit count for a given stopword list (word-boundary matches,
-    * case-insensitive). Used by the language-ID heuristic and quality
-    * score. */
-  def stopwordHits(c: Column, stopwords: Seq[String]): Column = {
-    val pat = stopwords.mkString("\\b(", "|", ")\\b")
-    size(regexp_extract_all(lower(c), lit(pat), lit(0)))
-  }
-
-
-  /** English stopwords for the heuristic scorer. */
-  val EnStopwords: Seq[String] =
-    Seq("the", "and", "of", "to", "a", "in", "is", "that", "for", "with")
-
   /** Heuristic quality score in [0,1]: blend of language signal,
     * whitespace sanity, punctuation sanity and length, in the spirit of
     * the reference's rule metrics (clean/rules.py) but as one scalar.
@@ -273,12 +260,6 @@ object TextFunctions {
   /** Document fingerprint: md5 of the dedup-normalized text. Exact-dup
     * detection key; stable across engines (md5 is bit-defined). */
   def fingerprintMd5(c: Column): Column = md5(normalizeForDedup(c))
-
-  /** 64-bit rolling-polynomial document fingerprint (base-31 Horner over
-    * UTF-8 bytes of the normalized text, wrapping Long arithmetic).
-    * Cheaper than md5 at scale; not oracle-checkable (engine-specific). */
-  def fingerprintRolling(c: Column): Column =
-    HashFunctions.rollingHash64(normalizeForDedup(c))
 
   /** Word shingles (n-grams of whitespace tokens) as an array column.
     * Built as a zip_with fold over n shifted slices of the token array —

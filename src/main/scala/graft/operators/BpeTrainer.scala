@@ -116,9 +116,6 @@ object BpeTrainer {
       }
     }
 
-    def encodeWordCached(word: String): Seq[Int] =
-      encodeWordIds(word).toIndexedSeq
-
     /** Identical output to
       * `text.split("\\s+").iterator.filter(_.nonEmpty).flatMap(encodeWord).toArray`
       * (pinned in BpeTrainerSpec): splitWsRuns is the same token stream

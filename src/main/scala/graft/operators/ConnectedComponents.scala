@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.core.SmallInput
+import graft.core.SmallInput.SmallGraphEdges
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -65,29 +67,28 @@ object ConnectedComponents {
     (row.getLong(0), row.getLong(1))
   }
 
-  /** String-keyed variant (e.g. sha1 doc_ids): maps ids to dense longs
-    * via a persisted mapping table, runs the long algorithm, maps back.
-    * Two broadcast-friendly joins — no driver materialization, and no
+  /** String-keyed variant (e.g. sha1 doc_ids). At most `smallGraphEdges`
+    * pairs fold on the driver: the id-mapping machinery — distinct ids +
+    * eager checkpoint + four joins — costs more scheduling than the whole
+    * graph costs to fold there, and the probe's one bounded collect feeds
+    * the fold, so the pair lineage runs once. Union-by-min over the
+    * STRING order makes that labeling deterministic (the mapped path's
+    * labels are monotonic-id-arbitrary; callers only group on them).
+    *
+    * Above the bound, ids map to dense longs via a checkpointed mapping
+    * table, the star loop runs, and the labels map back. Two
+    * broadcast-friendly joins — no driver materialization, and no
     * hash-collision risk at 10^9+ vertices (unlike hashing ids to 64
     * bits directly). */
   def runOnStrings(pairs: DataFrame,
                    smallGraphEdges: Long = SmallGraphEdges): DataFrame = {
     import org.apache.spark.sql.functions.monotonically_increasing_id
-    // driver fast path (the run() convention): below SmallGraphEdges
-    // the id-mapping machinery — distinct ids + eager checkpoint + four
-    // joins — costs more scheduling than the whole graph costs to fold
-    // on the driver. ONE bounded collect of smallGraphEdges + 1 edges
-    // both picks the regime and feeds the fold, so the pair lineage runs
-    // once on this path. Union-by-min over the STRING order makes the
-    // labeling deterministic (the mapped path's labels are
-    // monotonic-id-arbitrary; callers only group on them).
     val spark = pairs.sparkSession
     import spark.implicits._
-    val es = pairs.select(col("src").cast("string"), col("dst").cast("string"))
-      .limit((math.min(smallGraphEdges, Int.MaxValue - 1L) + 1L).toInt)
-      .as[(String, String)].collect()
-    if (es.length <= smallGraphEdges)
-      return unionFind(es).toDF("id", "component")
+    val small = SmallInput.collectAtMost(
+      pairs.select(col("src").cast("string"), col("dst").cast("string")).as[(String, String)],
+      smallGraphEdges)
+    if (small.isDefined) return unionFind(small.get).toDF("id", "component")
     // localCheckpoint (not persist+count): monotonically_increasing_id is
     // nondeterministic under recomputation, and this mapping feeds TWO
     // joins below — if an executor-loss/cache-eviction recompute reassigned
@@ -101,23 +102,11 @@ object ConnectedComponents {
       .join(ids.select(col("sid").as("src"), col("nid").as("nsrc")), "src")
       .join(ids.select(col("sid").as("dst"), col("nid").as("ndst")), "dst")
       .select(col("nsrc").as("src"), col("ndst").as("dst"))
-    val comp = run(p2)
-    val out = comp
+    starLoop(cleanEdges(p2), maxIterations = 20)
       .join(ids.select(col("nid").as("id"), col("sid").as("id_str")), "id")
       .join(ids.select(col("nid").as("component"), col("sid").as("component_str")), "component")
       .select(col("id_str").as("id"), col("component_str").as("component"))
-    out
   }
-
-  /** Edge-count bound for the driver union-find fast path: 200k edges
-    * is ~3 MB collected — model-sized, not corpus-sized. Below it, the
-    * alternating-star loop would spend seconds of pure job-scheduling
-    * per round on a graph the driver resolves in milliseconds (dedup
-    * pair graphs are usually tiny relative to their corpus); above it,
-    * the distributed loop runs as before. The reference resolves ALL
-    * graphs driver-side (reference: src/llm_data_pipeline/dedup/
-    * dedup.py:103-121); here that is strictly a bounded fallback. */
-  val SmallGraphEdges: Long = 200000L
 
   /** Driver union-find with path compression; union-by-min keeps every
     * root the minimum id of its component, so the output labeling is
@@ -143,26 +132,32 @@ object ConnectedComponents {
     parent.keys.toSeq.map(k => (k, find(k)))
   }
 
-  private def unionFindDriver(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    unionFind(edges.select(col("src"), col("dst")).as[(Long, Long)].collect())
-      .toDF("id", "component")
-  }
-
-  def run(edges: DataFrame, maxIterations: Int = 20,
-          smallGraphEdges: Long = SmallGraphEdges): DataFrame = {
-    val spark = edges.sparkSession
-    var cur = edges.select(col("src").cast("long"), col("dst").cast("long"))
+  /** Long `src`/`dst` edges without self-loops or duplicates, persisted
+    * (the star loop unpersists it). */
+  private def cleanEdges(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long"), col("dst").cast("long"))
       .where(col("src") =!= col("dst"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var sig = signature(cur) // (edge count, hash) — the count is free here
-    if (sig._1 <= smallGraphEdges) {
-      val out = unionFindDriver(cur)
-      cur.unpersist()
-      return out
+
+  /** At most `smallGraphEdges` distinct non-self-loop edges fold on the
+    * driver (the [[SmallInput]] switch); above it the star loop runs. */
+  def run(edges: DataFrame, maxIterations: Int = 20,
+          smallGraphEdges: Long = SmallGraphEdges): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val cur = cleanEdges(edges)
+    SmallInput.collectAtMost(cur.as[(Long, Long)], smallGraphEdges) match {
+      case Some(es) => cur.unpersist(); unionFind(es).toDF("id", "component")
+      case None => starLoop(cur, maxIterations)
     }
+  }
+
+  /** The distributed alternating-star loop over persisted clean edges
+    * (see [[cleanEdges]]); unpersists them as the rounds replace them. */
+  private def starLoop(edges: DataFrame, maxIterations: Int): DataFrame = {
+    var cur = edges
+    var sig = signature(cur) // (edge count, hash)
     var converged = false
     var it = 0
     while (!converged && it < maxIterations) {

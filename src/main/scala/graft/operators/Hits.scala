@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.SmallInput
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -33,20 +34,14 @@ import org.apache.spark.storage.StorageLevel
   * smaller than edge tables for web graphs) plus one keyed aggregation
   * and one scalar max (a tiny all-to-one agg on the NODE table, not the
   * edge table). Score lineage is truncated per iteration with an eager
-  * localCheckpoint, the PageRank/CC convention. The reference has no
-  * graph stage; this backs hub/authority-style host curation next to
-  * g01's PageRank.
+  * localCheckpoint, the PageRank/CC convention. A graph of at most
+  * [[SmallInput.SmallGraphEdges]] cleaned edges skips the loop and folds
+  * on the driver instead (the [[SmallInput]] switch); the integer
+  * max-normalized update rule is order-independent, so the two paths
+  * are bit-identical. The reference has no graph stage; this backs
+  * hub/authority-style host curation next to g01's PageRank.
   */
 object Hits {
-
-  /** Edge-count bound for the driver fast path — the
-    * [[ConnectedComponents.SmallGraphEdges]] convention: below it the
-    * iterative loop would spend seconds of pure job scheduling (two
-    * eager checkpoints per iteration, each a multi-stage job) on a
-    * graph the driver folds in microseconds; above it the distributed
-    * loop runs unchanged. The integer max-normalized update rule is
-    * order-independent, so the two paths are bit-identical. */
-  val SmallGraphEdges: Long = 200000L
 
   /** Driver replay of the exact integer update rule — same micro-unit
     * multiply / sum / `(v * 1e6) div max` per half-iteration, summed
@@ -79,17 +74,15 @@ object Hits {
     *              non-positive weights dropped defensively.
     * @return (node: string, auth_micro: long, hub_micro: long) */
   def run(edges: DataFrame, iterations: Int = 2,
-          smallGraphEdges: Long = SmallGraphEdges): DataFrame = {
+          smallGraphEdges: Long = SmallInput.SmallGraphEdges): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     val e = edges.select(col("src").cast("string").as("src"),
         col("dst").cast("string").as("dst"), col("w").cast("long").as("w"))
       .where(col("src") =!= col("dst") && col("w") > 0)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // bounded probe (limit N+1, never a full count) for the driver fast
-    // path: a host-graph fixture is model-sized; the distributed loop
-    // only earns its scheduling cost past the bound
-    if (e.limit((smallGraphEdges + 1).toInt).count() <= smallGraphEdges) {
-      val collected = e.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    val small = SmallInput.collectAtMost(e, smallGraphEdges)
+    if (small.isDefined) {
+      val collected = small.get.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       val out = runDriver(collected, iterations, edges.sparkSession)
       e.unpersist()
       return out

@@ -21,13 +21,11 @@ import scala.collection.mutable.ArrayBuffer
   * carries a FRESH sample id so the pad never merges with the last real
   * segment (reference: run.py:207-209).
   *
-  * Distribution contract: packing is PARTITION-LOCAL. Rows are
-  * range-partitioned and sorted by `orderCol`, each partition packs its
-  * own stream, and each partition's tail remainder is dropped (or padded
-  * when `padTail`). Exact single-stream reference parity holds on one
-  * partition — that configuration is what the oracle checks; the
-  * multi-partition deviation (one partial chunk per partition boundary)
-  * is the documented price of linear scale-out.
+  * Distribution contract: [[packExact]] packs rows range-partitioned and
+  * sorted by `orderCol`, and its output is bit-identical to the single
+  * stream [[packStream]] at any partition count: chunk boundaries are
+  * global, so no partition drops a tail. Only the global tail is dropped
+  * (or padded when `padTail`), exactly as in the reference.
   */
 object Packer {
 
@@ -148,8 +146,7 @@ object Packer {
     *
     * Chunk boundaries are global positions ≡ 0 (mod seqLen), so the
     * emitted chunk sequence ordered by (part_id, chunk_in_part) equals
-    * the one-partition stream exactly — no dropped per-partition tails,
-    * which `pack` trades away for simplicity. */
+    * the one-partition stream exactly — no dropped per-partition tails. */
   def packExact(df: DataFrame, orderCol: String, tokensCol: String, seqLen: Int,
                 eosId: Int, padTail: Boolean = false,
                 numPartitions: Int = 0): DataFrame = {
@@ -281,34 +278,6 @@ object Packer {
     }(enc)
   }
 
-  /** DataFrame API: pack `tokensCol` (array<int>) into `seqLen` chunks.
-    * `numPartitions = 1` gives exact single-stream reference semantics;
-    * larger values give partition-local packing at linear scale. (See
-    * [[packExact]] for the two-pass construction that is reference-exact
-    * at ANY partition count.) */
-  def pack(df: DataFrame, orderCol: String, tokensCol: String, seqLen: Int,
-           eosId: Int, padTail: Boolean = false, numPartitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    val prepared0 = df.select(col(orderCol).cast("long").as("__ord"), col(tokensCol).as("__toks"))
-    val prepared =
-      if (numPartitions == 1) prepared0.coalesce(1).sortWithinPartitions("__ord")
-      else if (numPartitions > 1) prepared0.repartitionByRange(numPartitions, col("__ord"))
-        .sortWithinPartitions("__ord")
-      else prepared0.repartitionByRange(col("__ord")).sortWithinPartitions("__ord")
-    val enc = org.apache.spark.sql.Encoders.row(chunkSchema)
-    prepared.mapPartitions { rows =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      val docs = rows.map { r =>
-        val s = r.getSeq[Int](1)
-        s.toArray
-      }
-      packStream(docs, seqLen, eosId, padTail).zipWithIndex.map {
-        case ((ids, sid, lens, offs), i) =>
-          Row(pid, i.toLong, ids.toSeq, sid.toSeq, lens.toSeq, offs.toSeq)
-      }
-    }(enc)
-  }
-
   /** Sequential First-Fit-Decreasing over an already length-descending
     * iterator of (id, len): first open bin with room wins, else a new
     * bin opens. Returns (id, len, localBin). Classic Johnson '73 —
@@ -331,7 +300,7 @@ object Packer {
     * (bin_id NULL), never truncated here — truncation is a policy the
     * caller applies explicitly.
     *
-    * Distribution contract (the [[pack]] convention): eligible docs are
+    * Distribution contract (partition-local): eligible docs are
     * range-partitioned by (len DESC, id ASC) into `numParts` contiguous
     * ranges and each partition runs sequential FFD over its own sorted
     * slice — bin ids are (partition, local) under a fixed stride.

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.SmallInput
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -29,20 +30,14 @@ import org.apache.spark.storage.StorageLevel
   * truncated every iteration with an eager localCheckpoint (the CC
   * loop's convention — ConnectedComponents.scala — made eager because
   * no other per-round action exists here) so plans stay flat over many
-  * iterations. The reference has no graph stage; this backs host-level
-  * quality weighting (harmonic-centrality-style corpus curation).
+  * iterations. A graph of at most [[SmallInput.SmallGraphEdges]]
+  * cleaned edges skips the loop and folds on the driver instead (the
+  * [[SmallInput]] switch); every step of the update rule is exact integer
+  * arithmetic, so the two paths are bit-identical — UrlPageRankSpec pins
+  * it. The reference has no graph stage; this backs host-level quality
+  * weighting (harmonic-centrality-style corpus curation).
   */
 object PageRank {
-
-  /** Edge-count bound for the driver fast path — the
-    * [[Hits.SmallGraphEdges]] / [[ConnectedComponents.SmallGraphEdges]]
-    * convention: below it the iterative loop spends seconds of pure job
-    * scheduling (an eager checkpoint per iteration, each a multi-stage
-    * job) on a graph the driver folds in microseconds; above it the
-    * distributed loop runs unchanged. Every step of the update rule is
-    * exact integer arithmetic (multiply / truncating div / sum), so the
-    * two paths are bit-identical — PageRankSpec pins it. */
-  val SmallGraphEdges: Long = 200000L
 
   /** Driver replay of the exact integer update rule over the collected
     * EDGE ROWS (multi-edges preserved: `(rank*w) div out_w` truncates
@@ -73,22 +68,16 @@ object PageRank {
     * @return (node: string, rank_micro: long) */
   def run(edges: DataFrame, iterations: Int = 5,
           baseMicro: Long = 150000L, dampPct: Long = 85L,
-          smallGraphEdges: Long = SmallGraphEdges): DataFrame = {
+          smallGraphEdges: Long = SmallInput.SmallGraphEdges): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     val e = edges.select(col("src").cast("string").as("src"),
         col("dst").cast("string").as("dst"), col("w").cast("long").as("w"))
       .where(col("src") =!= col("dst") && col("w") > 0)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // bounded probe (limit N+1, never a full count) for the driver fast
-    // path — the Hits.run convention: host-graph fixtures are
-    // model-sized; the distributed loop only earns its scheduling cost
-    // past the bound
-    if (e.limit((math.min(smallGraphEdges, Int.MaxValue - 1L) + 1L).toInt)
-          .count() <= smallGraphEdges) {
-      val collected = e.collect().map(r =>
-        (r.getString(0), r.getString(1), r.getLong(2)))
-      val out = runDriver(collected, iterations, baseMicro, dampPct,
-        edges.sparkSession)
+    val small = SmallInput.collectAtMost(e, smallGraphEdges)
+    if (small.isDefined) {
+      val collected = small.get.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      val out = runDriver(collected, iterations, baseMicro, dampPct, edges.sparkSession)
       e.unpersist()
       return out
     }

@@ -180,8 +180,9 @@ object PipelineSteps {
     * per component by max (length, doc_id) — the reference's pick order
     * minus the absent ts (reference: dedup/dedup.py:123-130) — then
     * anti-join the losers out. Banding, verify, pick and anti-join run
-    * distributed; connected components fold on the driver below
-    * [[ConnectedComponents.SmallGraphEdges]] edges and run the
+    * distributed; connected components fold on the driver up to
+    * [[graft.core.SmallInput.SmallGraphEdges]] pairs (the one
+    * small-input switch, [[graft.core.SmallInput]]) and run the
     * distributed star loop above it (the reference folds every graph on
     * the driver: dedup/dedup.py:157-197 take_all + union-find). */
   case class ClusteringStep(mh: Dedup.MinHashConfig = Dedup.MinHashConfig()) extends Step {

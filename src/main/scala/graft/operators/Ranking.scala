@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.SmallInput
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
@@ -67,20 +68,17 @@ object Ranking {
       .localCheckpoint(true)
 
     // pass 1: per-(partition, group) totals; tiny by construction for
-    // low-cardinality groups. limit(+1) bounds the transfer BEFORE the
-    // collect, so a mis-used high-cardinality key errors instead of
-    // OOMing the driver.
-    val perPartRows = sorted
+    // low-cardinality groups. The bounded collect caps the transfer, so a
+    // mis-used high-cardinality key errors instead of OOMing the driver.
+    val perPartRows = SmallInput.collectAtMost(sorted
       .groupBy(spark_partition_id().as("__pid"), struct(groupCols.map(col): _*).as("__g"))
-      .agg(sum(col("__rank_v")).as("__s"))
-      .limit(MaxOffsetEntries + 1)
-      .collect()
-    require(perPartRows.length <= MaxOffsetEntries,
+      .agg(sum(col("__rank_v")).as("__s")), MaxOffsetEntries)
+    require(perPartRows.isDefined,
       s"Ranking.withRunningSum: more than $MaxOffsetEntries (partition × group) " +
       s"offset entries for groupCols=${groupCols.mkString(",")} — group cardinality " +
       "is too high for the driver-offset construction; use a plain " +
       "Window.partitionBy (per-group sorts are safe when groups are small)")
-    val perPart = perPartRows
+    val perPart = perPartRows.get
       .map(r => (r.getInt(0), r.getStruct(1).toSeq, r.getLong(2)))
 
     // start offset of (pid, group) = that group's total in earlier partitions

@@ -654,16 +654,4 @@ object TextAnalysis {
     scored.withColumn("selected",
       when(col("dsir_logw").isNull, lit(false)).otherwise(selected))
   }
-
-  /** documents → + (lang_pred, lang_score, quality_score, n_tokens,
-    * mean_token_len, fingerprint) — the combined analysis projection. */
-  def analyze(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    df.withColumn("lang_pred", langIdLabel(t))
-      .withColumn("lang_score", langIdScore(t))
-      .withColumn("quality_score", TextFunctions.qualityScore(t))
-      .withColumn("n_tokens", TextFunctions.tokenCount(t))
-      .withColumn("n_tokens_bpeish", TextFunctions.tokenCountBpeIsh(t))
-      .withColumn("fingerprint", TextFunctions.fingerprintMd5(t))
-  }
 }

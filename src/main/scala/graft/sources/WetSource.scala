@@ -21,6 +21,13 @@ import scala.collection.mutable.ArrayBuffer
   * `doc_id` = sha1(source\nurl\ndate\nrecord_id)
   * (reference: ingest/step.py:35-38).
   *
+  * `source` is the file path as listed, and [[discover]] lists
+  * ABSOLUTE paths, so `doc_id` hashes where the corpus lies, as the
+  * reference's does (SURVEY S3). The same corpus read from two
+  * directories gets different doc ids, so a different packer order
+  * (`xxhash64(doc_id)`) and different export bytes; exports compare
+  * byte for byte only between runs that read the same directory.
+  *
   * Distribution model = the reference's (S2/S3): the *file list* is the
   * parallel collection — `spark.createDataset(paths).flatMap(parse)` —
   * so each task streams one file; at 100 TB the unit of work is a file,

@@ -43,6 +43,15 @@ class ConnectedComponentsSpec extends SparkSpec {
     val gotDist = ConnectedComponents.run(df, smallGraphEdges = 0L).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotDist == want, s"distributed path, edges=$edges")
+    // at the exact bound (the cleaned edge count) the graph still folds
+    // on the driver; one below, the star loop runs — same labeling
+    val cleaned = edges.filter(e => e._1 != e._2).distinct.size.toLong
+    for ((bound, folds) <- Seq(cleaned -> true, (cleaned - 1) -> false)) {
+      val out = ConnectedComponents.run(df, smallGraphEdges = bound)
+      assert(foldedOnDriver(out) == folds, s"bound=$bound, edges=$edges")
+      assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == want,
+        s"bound=$bound, edges=$edges")
+    }
   }
 
   test("two disjoint pairs") { check(Seq((1L, 2L), (3L, 4L))) }
@@ -122,14 +131,12 @@ class ConnectedComponentsSpec extends SparkSpec {
 
     val atBound = ConnectedComponents.runOnStrings(chain(k), smallGraphEdges = k)
     // driver fold: a local result, and the pair lineage ran exactly once
-    assert(atBound.queryExecution.optimizedPlan
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(foldedOnDriver(atBound))
     assert(hits.value == k)
     assert(groupsOf(atBound) == Set(members(k)))
 
     val over = ConnectedComponents.runOnStrings(chain(k + 1), smallGraphEdges = k)
-    assert(!over.queryExecution.optimizedPlan
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(!foldedOnDriver(over))
     assert(groupsOf(over) == Set(members(k + 1)))
   }
 

@@ -51,13 +51,21 @@ class HitsSpec extends SparkSpec {
   test("hits: driver fast path and distributed loop are bit-identical") {
     // smallGraphEdges = 0 forces the distributed alternating loop; the
     // default takes the driver fold on this model-sized graph — the
-    // r12 fast path must not move a single micro-unit
+    // driver fold must not move a single micro-unit. At the exact bound
+    // (the cleaned edge count) the graph still folds; one below, it does not.
     val df = graph.toDF("src", "dst", "w")
+    val cleaned = graph.count { case (s, d, w) => s != d && w > 0 }.toLong
+    def run(bound: Long) = Hits.run(df, iterations = 2, smallGraphEdges = bound)
     val fast = Hits.run(df, iterations = 2)
       .orderBy("node").collect().toSeq
-    val dist = Hits.run(df, iterations = 2, smallGraphEdges = 0L)
-      .orderBy("node").collect().toSeq
+    val dist = run(0L).orderBy("node").collect().toSeq
     assert(fast == dist)
+    val atBound = run(cleaned)
+    assert(foldedOnDriver(atBound))
+    assert(atBound.orderBy("node").collect().toSeq == dist)
+    val below = run(cleaned - 1)
+    assert(!foldedOnDriver(below))
+    assert(below.orderBy("node").collect().toSeq == dist)
   }
 
   test("hits: authority mass follows in-links, hub mass follows out-links") {

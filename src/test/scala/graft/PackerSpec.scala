@@ -67,23 +67,6 @@ class PackerSpec extends SparkSpec {
     assert(chunks.map(_._4.toSeq) == Seq(Seq(0), Seq(0)))
   }
 
-  test("distributed pack on one partition equals pure stream pack") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val docs = (1L to 50L).map(i => (i, (1 to (i % 7 + 1).toInt).toArray))
-    val df = docs.toDF("id", "ids")
-    val packed = Packer.pack(df, "id", "ids", seqLen = 16, eosId = 0, numPartitions = 1)
-      .orderBy("part_id", "chunk_in_part").collect()
-    val expected = Packer.packStream(docs.sortBy(_._1).map(_._2).iterator, 16, 0, padTail = false).toSeq
-    assert(packed.length == expected.length)
-    packed.zip(expected).foreach { case (row, (ids, sid, lens, offs)) =>
-      assert(row.getSeq[Int](2) == ids.toSeq)
-      assert(row.getSeq[Int](3) == sid.toSeq)
-      assert(row.getSeq[Int](4) == lens.toSeq)
-      assert(row.getSeq[Int](5) == offs.toSeq)
-    }
-  }
-
   test("packExact at any partition count equals the single stream exactly") {
     import spark.implicits._
     val rnd = new scala.util.Random(13)
@@ -126,19 +109,6 @@ class PackerSpec extends SparkSpec {
     got.zip(want).foreach { case (row, (ids, _, _, _)) =>
       assert(row.getSeq[Int](2) == ids.toSeq)
     }
-  }
-
-  test("multi-partition pack conserves all but per-partition tails") {
-    import spark.implicits._
-    val docs = (1L to 200L).map(i => (i, Array.fill((i % 5 + 1).toInt)(i.toInt)))
-    val df = docs.toDF("id", "ids")
-    val seqLen = 32
-    val totalTokens = docs.map(_._2.length + 1).sum
-    val packed = Packer.pack(df, "id", "ids", seqLen, eosId = 0, numPartitions = 4).collect()
-    val nParts = packed.map(_.getInt(0)).distinct.length
-    // each partition drops < seqLen tokens
-    assert(packed.length * seqLen > totalTokens - nParts * seqLen)
-    assert(packed.length * seqLen <= totalTokens)
   }
 
   test("ffdStream matches a driver-side first-fit reference and respects capacity") {

@@ -92,17 +92,26 @@ class UrlPageRankSpec extends SparkSpec {
   test("PageRank: driver fast path and distributed loop are bit-identical") {
     // smallGraphEdges = 0 forces the distributed iterative loop; the
     // default takes the driver fold on this model-sized graph — the
-    // r13 fast path must not move a single micro-unit. Multi-edges
+    // driver fold must not move a single micro-unit. Multi-edges
     // included: (rank*w) div out_w truncates PER EDGE ROW, so parallel
     // edges are the case a naive weight-merge would get wrong.
     val edges = (1L to 300L).map(i => (s"h${i % 13}", s"h${(i * 5) % 17}", i % 4 + 1)) ++
       Seq(("h1", "h2", 3L), ("h1", "h2", 3L)) // parallel edges
+    // At the exact bound (the cleaned edge count) the graph still folds;
+    // one below, it does not.
     val df = edges.toDF("src", "dst", "w")
+    val cleaned = edges.count { case (s, d, w) => s != d && w > 0 }.toLong
+    def run(bound: Long) = PageRank.run(df, iterations = 3, smallGraphEdges = bound)
     val fast = PageRank.run(df, iterations = 3)
       .orderBy("node").collect().toSeq
-    val dist = PageRank.run(df, iterations = 3, smallGraphEdges = 0L)
-      .orderBy("node").collect().toSeq
+    val dist = run(0L).orderBy("node").collect().toSeq
     assert(fast == dist)
+    val atBound = run(cleaned)
+    assert(foldedOnDriver(atBound))
+    assert(atBound.orderBy("node").collect().toSeq == dist)
+    val below = run(cleaned - 1)
+    assert(!foldedOnDriver(below))
+    assert(below.orderBy("node").collect().toSeq == dist)
   }
 
   test("PageRank drops self-loops and isolated targets get base rank only") {
