@@ -3451,11 +3451,11 @@ object SparkEntry {
       // synthetic 31-word vocabulary collapses every word to one token
       // and the metric degenerates to 1.0
       val model = BpeTrainer.trainFromCorpus(t, "text", vocabSize = 300)
-      BpeTrainer.tokenize(t.select("doc_id", "lang", "text"), "text", model)
+      Tokenizer.encode(t.select("doc_id", "lang", "text"), "text", model)
         .select(col("lang"),
           size(col("ids")).cast("long").as("nb"),
           TextFunctions.tokenCount(col("text")).cast("long").as("nw"),
-          length(BpeTrainer.normalizeForTokenize(col("text"))).cast("long").as("nc"))
+          length(Tokenizer.normalizeForTokenize(col("text"))).cast("long").as("nc"))
         .groupBy("lang")
         .agg(sum("nb").as("bpe_tokens"), sum("nw").as("words"),
           sum("nc").as("chars"))
@@ -3483,10 +3483,10 @@ object SparkEntry {
       val t = docs(s, d)
       val model = UnigramTrainer.trainFromCorpus(t, "text",
         vocabSize = 800, characterCoverage = 0.98)
-      UnigramTrainer.tokenize(t.select("doc_id", "lang", "text"), "text", model)
+      Tokenizer.encode(t.select("doc_id", "lang", "text"), "text", model)
         .select(col("lang"), size(col("ids")).cast("long").as("np"),
           size(filter(col("ids"), i =>
-            i >= UnigramTrainer.ByteIdBase && i < UnigramTrainer.FirstPieceId))
+            i >= Tokenizer.ByteIdBase && i < Tokenizer.FirstLearnedId))
             .cast("long").as("nf"))
         .groupBy("lang")
         .agg(sum("np").as("pieces"), sum("nf").as("fallback_pieces"))
@@ -3513,7 +3513,7 @@ object SparkEntry {
         .localCheckpoint(true)
       val total = toks.agg(sum(size(col("ids")) + 1)).head().getLong(0)
       Seq(256, 512, 1024, 2048).map { l =>
-        val n = Packer.packExact(toks, "doc_id", "ids", seqLen = l, eosId = 2)
+        val n = Packer.packExact(toks, "doc_id", "ids", seqLen = l, eosId = Tokenizer.EosId)
           .count()
         val trained = n * l
         (l, n, trained, total - trained,
@@ -3531,13 +3531,13 @@ object SparkEntry {
       val t = docs(s, d)
       val model = BpeTrainer.trainFromCorpus(t, "text", vocabSize = 2000)
       val bc = s.sparkContext.broadcast(model)
-      BpeTrainer.tokenize(t.select("doc_id", "text"), "text", model)
+      Tokenizer.encode(t.select("doc_id", "text"), "text", model)
         .select(col("doc_id"),
-          BpeTrainer.normalizeForTokenize(col("text")).as("norm"), col("ids"))
+          Tokenizer.normalizeForTokenize(col("text")).as("norm"), col("ids"))
         .as[(Long, String, Seq[Int])]
         .map { case (id, norm, ids) =>
           val m = bc.value
-          (id, m.decode(ids) == norm, ids.count(_ == BpeTrainer.UnkId).toLong)
+          (id, m.decode(ids) == norm, ids.count(_ == Tokenizer.UnkId).toLong)
         }
         .toDF("doc_id", "roundtrip_ok", "n_unk")
         .orderBy("doc_id")
@@ -3575,7 +3575,7 @@ object SparkEntry {
         "unigram vocab/pieces drifted through the ModelProto round-trip")
       val bc = s.sparkContext.broadcast((bpe, bpe2, uni, uni2))
       t.select(col("doc_id"),
-          BpeTrainer.normalizeForTokenize(col("text")).as("norm"))
+          Tokenizer.normalizeForTokenize(col("text")).as("norm"))
         .as[(Long, String)]
         .map { case (id, norm) =>
           val (b1, b2, u1, u2) = bc.value
@@ -4746,7 +4746,7 @@ object SparkEntry {
       // partitioning-invariant constants.
       val dd = docs(s, d).select(col("doc_id"), col("source"), col("text"))
       val m = UnigramTrainer.trainFromCorpus(dd, "text", vocabSize = 800)
-      UnigramTrainer.tokenize(dd, "text", m)
+      Tokenizer.encode(dd, "text", m)
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"),
           sum(size(col("ids"))).cast("long").as("n_pieces"),

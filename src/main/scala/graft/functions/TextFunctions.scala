@@ -208,19 +208,27 @@ object TextFunctions {
       maxPunct: Double = 0.3,
       maxDupLine: Double = 0.3)
 
-  /** F7 — ordered short-circuit judge: returns the drop reason column
-    * ("ok" if kept). Evaluation order matches the reference exactly:
+  /** F7 — ordered short-circuit judge over a text's length and its
+    * four metrics ([[nonWsRatio]], [[alphaCjkRatio]], [[punctRatio]],
+    * [[dupLineRatio]]): returns the drop reason column ("ok" if kept).
+    * Evaluation order matches the reference exactly:
     * too_short -> too_long -> too_sparse -> low_language_signal ->
     * too_much_punct -> dup_lines -> ok.
     * (reference: src/llm_data_pipeline/clean/rules.py:84-113) */
-  def judgeReason(text: Column, t: CleanThresholds = CleanThresholds()): Column =
-    when(length(text) < t.minChars, "too_short")
-      .when(length(text) > t.maxChars, "too_long")
-      .when(nonWsRatio(text) < t.minNonWs, "too_sparse")
-      .when(alphaCjkRatio(text) < t.minAlphaCjk, "low_language_signal")
-      .when(punctRatio(text) > t.maxPunct, "too_much_punct")
-      .when(dupLineRatio(text) > t.maxDupLine, "dup_lines")
+  def judgeMetrics(len: Column, nonWs: Column, alphaCjk: Column, punct: Column,
+                   dupLine: Column, t: CleanThresholds): Column =
+    when(len < t.minChars, "too_short")
+      .when(len > t.maxChars, "too_long")
+      .when(nonWs < t.minNonWs, "too_sparse")
+      .when(alphaCjk < t.minAlphaCjk, "low_language_signal")
+      .when(punct > t.maxPunct, "too_much_punct")
+      .when(dupLine > t.maxDupLine, "dup_lines")
       .otherwise("ok")
+
+  /** [[judgeMetrics]] over freshly computed metrics of `text`. */
+  def judgeReason(text: Column, t: CleanThresholds = CleanThresholds()): Column =
+    judgeMetrics(length(text), nonWsRatio(text), alphaCjkRatio(text), punctRatio(text),
+      dupLineRatio(text), t)
 
   /** Whitespace token count: number of \s+-separated tokens; empty/blank -> 0. */
   def tokenCount(c: Column): Column =

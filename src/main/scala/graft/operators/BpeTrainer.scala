@@ -1,8 +1,8 @@
 package graft.operators
 
-import graft.functions.TextFunctions
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import graft.core.Handoff
+import graft.operators.Tokenizer._
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import scala.collection.mutable
 
@@ -17,31 +17,19 @@ import scala.collection.mutable
   * the reference's native SentencePiece training
   * (reference: src/llm_data_pipeline/tokenizer/train.py:90-264) with a
   * self-contained JVM implementation honoring the same id convention
-  * (unk=0, bos=1, eos=2, pad=3; reference: tokenizer/train.py:111-134).
+  * ([[Tokenizer]]: unk=0, bos=1, eos=2, pad=3, byte tokens 4-259;
+  * reference: tokenizer/train.py:111-134).
   */
 object BpeTrainer {
 
-  val UnkId = 0; val BosId = 1; val EosId = 2; val PadId = 3
-  /** Byte-fallback tokens <0x00>..<0xFF> occupy ids 4..259 (SentencePiece
-    * byte_fallback convention, reference: tokenizer/train.py:111-134):
-    * any character outside the trained alphabet encodes as its UTF-8
-    * bytes, so NO input ever maps to unk. */
-  val ByteIdBase = 4
-  val FirstSymbolId: Int = ByteIdBase + 256
   private val EndOfWord = "</w>"
 
-  /** Split into per-code-point strings (NOT UTF-16 chars: a surrogate
-    * pair like an emoji must stay one symbol or byte fallback would
-    * UTF-8-encode lone surrogates as replacement chars). */
-  private def codePointSymbols(word: String): Vector[String] =
-    word.codePoints().toArray.toVector.map(cp => new String(Character.toChars(cp)))
-
   case class BpeModel(merges: Seq[(String, String)], vocab: Map[String, Int])
-      extends Serializable {
+      extends Tokenizer.Model {
     @transient private lazy val mergeRank: Map[(String, String), Int] =
       merges.zipWithIndex.toMap
-    @transient private lazy val idToSymbol: Map[Int, String] =
-      vocab.map(_.swap)
+
+    def normalize(c: Column): Column = normalizeForTokenize(c)
 
     /** Greedy standard BPE encode of one word: start from characters
       * (+ end-of-word marker), repeatedly apply the lowest-rank merge.
@@ -49,7 +37,7 @@ object BpeTrainer {
       * never unk. */
     def encodeWord(word: String): Seq[Int] = {
       if (word.isEmpty) return Seq.empty
-      var parts: Vector[String] = codePointSymbols(word) :+ EndOfWord
+      var parts: Vector[String] = codePoints(word) :+ EndOfWord
       var done = false
       while (!done && parts.length > 1) {
         var bestRank = Int.MaxValue
@@ -65,78 +53,17 @@ object BpeTrainer {
         else parts = (parts.take(bestIdx) :+ (parts(bestIdx) + parts(bestIdx + 1))) ++
           parts.drop(bestIdx + 2)
       }
-      parts.flatMap { p =>
-        vocab.get(p) match {
-          case Some(id) => Seq(id)
-          case None => p.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            .toSeq.map(b => ByteIdBase + (b & 0xff))
-        }
-      }
+      parts.flatMap(pieceIds)
     }
 
     /** Inverse of [[encodeText]]: symbols concatenate, byte-fallback runs
       * UTF-8-decode, end-of-word markers become spaces. Lossless for any
       * input (the roundtrip gate asserts decode(encode(t)) == t). */
-    def decode(ids: Seq[Int]): String = {
-      val sb = new StringBuilder
-      val bytes = new scala.collection.mutable.ArrayBuffer[Byte]()
-      def flushBytes(): Unit = if (bytes.nonEmpty) {
-        sb.append(new String(bytes.toArray, java.nio.charset.StandardCharsets.UTF_8))
-        bytes.clear()
-      }
-      ids.foreach { id =>
-        if (id >= ByteIdBase && id < FirstSymbolId) bytes += (id - ByteIdBase).toByte
-        else {
-          flushBytes()
-          val sym = idToSymbol.getOrElse(id, "")
-          if (sym.endsWith(EndOfWord))
-            sb.append(sym.dropRight(EndOfWord.length)).append(' ')
-          else if (sym == "<unk>" || sym == "<bos>" || sym == "<eos>" || sym == "<pad>") ()
-          else sb.append(sym)
-        }
-      }
-      flushBytes()
-      sb.toString.stripSuffix(" ")
-    }
-
-    @transient private lazy val wordCache =
-      new java.util.concurrent.ConcurrentHashMap[String, Array[Int]]()
-
-    /** Memoized per-word encode — real tokenizers cache word→ids since
-      * natural corpora repeat words heavily (Zipf). Unboxed ids: the
-      * cache-hit path is the hot loop of every tokenize job, so it must
-      * not re-box a Seq per occurrence. Callers never mutate the array. */
-    private def encodeWordIds(word: String): Array[Int] = {
-      val hit = wordCache.get(word)
-      if (hit != null) hit
-      else {
-        val ids = encodeWord(word).toArray
-        if (wordCache.size < 1000000) wordCache.put(word, ids)
-        ids
-      }
-    }
-
-    /** Identical output to
-      * `text.split("\\s+").iterator.filter(_.nonEmpty).flatMap(encodeWord).toArray`
-      * (pinned in BpeTrainerSpec): splitWsRuns is the same token stream
-      * without the per-call regex, and the two-pass arraycopy fill is
-      * the same concatenation without boxing. */
-    def encodeText(text: String): Array[Int] = {
-      val words = TextFunctions.splitWsRuns(text)
-      val parts = new Array[Array[Int]](words.length)
-      var total = 0
-      var i = 0
-      while (i < words.length) {
-        val p = encodeWordIds(words(i)); parts(i) = p; total += p.length; i += 1
-      }
-      val out = new Array[Int](total)
-      var o = 0
-      i = 0
-      while (i < words.length) {
-        val p = parts(i); System.arraycopy(p, 0, out, o, p.length); o += p.length; i += 1
-      }
-      out
-    }
+    def decode(ids: Seq[Int]): String =
+      decodeWith(ids) { (sb, sym) =>
+        if (sym.endsWith(EndOfWord)) sb.append(sym.dropRight(EndOfWord.length)).append(' ')
+        else sb.append(sym)
+      }.stripSuffix(" ")
   }
 
   /** Apply one merge to a symbol sequence, greedy left-to-right. */
@@ -167,17 +94,17 @@ object BpeTrainer {
             characterCoverage: Double = 1.0): BpeModel = {
     // specials (4) + byte tokens (256) are fixed overhead; at least one
     // symbol slot must remain or every text would be pure byte fallback
-    require(vocabSize > FirstSymbolId,
-      s"vocabSize=$vocabSize must exceed ${FirstSymbolId} " +
+    require(vocabSize > FirstLearnedId,
+      s"vocabSize=$vocabSize must exceed $FirstLearnedId " +
       "(4 special + 256 byte-fallback ids are fixed overhead)")
     require(characterCoverage > 0.0 && characterCoverage <= 1.0,
       s"characterCoverage=$characterCoverage must be in (0, 1]")
     // words as symbol sequences with the end-of-word marker
     val words: Array[Array[String]] =
-      wordFreqs.map(wf => (codePointSymbols(wf._1) :+ EndOfWord).toArray).toArray
+      wordFreqs.map(wf => (codePoints(wf._1) :+ EndOfWord).toArray).toArray
     val wfreq: Array[Long] = wordFreqs.map(_._2).toArray
     val allBase = mutable.LinkedHashSet[String](EndOfWord)
-    wordFreqs.foreach(wf => codePointSymbols(wf._1).foreach(allBase += _))
+    wordFreqs.foreach(wf => codePoints(wf._1).foreach(allBase += _))
     // Alphabet cut — SentencePiece's character_coverage knob (reference:
     // src/llm_data_pipeline/tokenizer/train.py:111-134 passes 0.9995):
     // keep the minimal most-frequent-first prefix of characters whose
@@ -186,13 +113,13 @@ object BpeTrainer {
     // budget (so symbol ids provably stay < vocabSize — the id-bound
     // invariant the export path relies on); whichever bound is tighter
     // wins. coverage=1.0 with a fitting alphabet keeps every char.
-    val symbolBudget = vocabSize - FirstSymbolId
+    val symbolBudget = vocabSize - FirstLearnedId
     val baseSymbols: mutable.LinkedHashSet[String] =
       if (allBase.size <= symbolBudget && characterCoverage >= 1.0) allBase
       else {
         val charFreq = mutable.HashMap[String, Long]().withDefaultValue(0L)
         wordFreqs.foreach { case (w, f) =>
-          codePointSymbols(w).foreach(s => charFreq(s) += f)
+          codePoints(w).foreach(s => charFreq(s) += f)
         }
         val sorted = allBase.toSeq.filterNot(_ == EndOfWord)
           .sortBy(s => (-charFreq(s), s))
@@ -257,7 +184,7 @@ object BpeTrainer {
     // vocabSize budget = specials (4) + byte-fallback tokens (256) +
     // base symbols + merges — the SentencePiece convention where byte
     // tokens count inside vocab_size, so max emitted id < vocabSize
-    val maxMerges = math.max(0, vocabSize - 4 - 256 - baseSymbols.size)
+    val maxMerges = math.max(0, vocabSize - FirstLearnedId - baseSymbols.size)
     var iter = 0
     var exhausted = false
     while (iter < maxMerges && !exhausted) {
@@ -279,100 +206,55 @@ object BpeTrainer {
     }
 
     val symbols = (baseSymbols.toSeq ++ merges.map(m => m._1 + m._2)).distinct
-    val byteTokens = (0 until 256).map(b => f"<0x$b%02X>" -> (ByteIdBase + b))
-    val vocab = Map("<unk>" -> UnkId, "<bos>" -> BosId, "<eos>" -> EosId, "<pad>" -> PadId) ++
-      byteTokens ++
-      symbols.zipWithIndex.map { case (s, i) => s -> (i + FirstSymbolId) }
+    val vocab = ReservedVocab ++
+      symbols.zipWithIndex.map { case (s, i) => s -> (i + FirstLearnedId) }
     assert(vocab.valuesIterator.max < vocabSize,
       s"BPE id-bound invariant violated: max id ${vocab.valuesIterator.max} >= $vocabSize")
     BpeModel(merges.toSeq, vocab)
   }
 
-  /** The normalization every text crosses before training or encoding:
-    * Unicode NFKC (the reference's nmt_nfkc rule — full-width forms,
-    * ligatures compose) then whitespace-flatten + lowercase. */
-  def normalizeForTokenize(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    TextFunctions.normalizeForDedup(graft.functions.HashFunctions.normalizeNfkc(c))
-
-  /** Distributed word counting → driver merge loop. `maxWords` bounds
-    * the frequency table (the long tail below it cannot affect early
-    * merges materially — standard trainer practice).
-    *
-    * `inputSentenceSize` is SentencePiece's input_sentence_size knob
-    * (the reference passes 5M + shuffle, tokenizer/train.py:111-134):
-    * train on a bounded corpus sample instead of every row. The sample
-    * is the `n` rows with the smallest hashed text — deterministic
-    * (same corpus → same model at any partitioning, the
-    * fitKmeansOnSample convention) and a TakeOrdered, never a full
-    * sort. None (default) trains on the whole corpus.
-    *
-    * `characterCoverage` maps to the alphabet cut in [[train]]. */
+  /** [[Tokenizer.corpusWordCounts]] of the NFKC-normalized corpus →
+    * driver merge loop. `maxWords` bounds the frequency table (the long
+    * tail below it cannot affect early merges materially — standard
+    * trainer practice); `inputSentenceSize` trains on the deterministic
+    * hash-ordered sample; `characterCoverage` maps to the alphabet cut
+    * in [[train]]. */
   def trainFromCorpus(df: DataFrame, textCol: String, vocabSize: Int,
                       maxWords: Int = 100000,
                       inputSentenceSize: Option[Int] = None,
-                      characterCoverage: Double = 1.0): BpeModel = {
-    val rows = inputSentenceSize match {
-      case Some(n) =>
-        require(n > 0, "need inputSentenceSize > 0")
-        df.select(col(textCol))
-          .orderBy(xxhash64(col(textCol)), col(textCol)).limit(n)
-      case None => df.select(col(textCol))
-    }
-    val freqs = rows
-      .select(explode(split(normalizeForTokenize(col(textCol)), " ")).as("w"))
-      .filter(length(col("w")) > 0)
-      .groupBy("w").agg(count(lit(1)).as("f"))
-      .orderBy(desc("f"), asc("w"))
-      .limit(maxWords)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
-    train(freqs, vocabSize, characterCoverage)
-  }
+                      characterCoverage: Double = 1.0): BpeModel =
+    train(corpusWordCounts(df, textCol, normalizeForTokenize, maxWords, inputSentenceSize),
+      vocabSize, characterCoverage)
 
-  /** Distributed encoding with the broadcast model — the executor-
-    * singleton pattern (tokens column added as `ids`). */
-  def tokenize(df: DataFrame, textCol: String, model: BpeModel): DataFrame = {
-    val spark = df.sparkSession
+  /** [[Tokenizer.encode]] with a BPE model; kept by name for the
+    * benchmark program (perfbench/scala/perfbench/Main.scala). */
+  def tokenize(df: DataFrame, textCol: String, model: BpeModel): DataFrame =
+    Tokenizer.encode(df, textCol, model)
+
+  /** Persist a trained model as the parquet artifact the pipeline hands
+    * from train_tokenizer to tokenize — the deployment seam the
+    * reference's `tokenizer.model` file plays (reference:
+    * src/llm_data_pipeline/tokenizer/train.py:111-134): train once, ship
+    * the artifact, and any job tokenizes identically. Two tables under
+    * `dir`, each one file written through [[Handoff]]:
+    * `bpe_merges_parquet` (rank, left, right) — merge ORDER is the model
+    * (rank = priority), stored explicitly because parquet row order is
+    * not a contract — and `bpe_vocab_parquet` (word, freq, id), freq
+    * always 0. */
+  def writeModel(spark: SparkSession, dir: String, m: BpeModel): Unit = {
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(model)
-    val withNorm = df.withColumn("__norm", normalizeForTokenize(col(textCol)))
-    val enc = org.apache.spark.sql.Encoders.row(
-      org.apache.spark.sql.types.StructType(withNorm.schema.fields.filterNot(_.name == "__norm") :+
-        org.apache.spark.sql.types.StructField("ids",
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.IntegerType, false))))
-    withNorm.mapPartitions { rows =>
-      val m = bc.value
-      rows.map { r =>
-        val normIdx = r.fieldIndex("__norm")
-        val vals = (0 until r.length).filter(_ != normIdx).map(r.get)
-        org.apache.spark.sql.Row.fromSeq(vals :+ m.encodeText(r.getString(normIdx)).toSeq)
-      }
-    }(enc)
+    Handoff.write(m.merges.zipWithIndex.map { case ((a, b), r) => (r, a, b) }
+      .toDF("rank", "left", "right").coalesce(1), s"$dir/bpe_merges_parquet")
+    Handoff.write(m.vocab.toSeq.map { case (w, i) => (w, 0L, i) }
+      .toDF("word", "freq", "id").coalesce(1), s"$dir/bpe_vocab_parquet")
   }
 
-  /** Persist a trained model as a parquet artifact — the deployment
-    * seam the reference's `tokenizer.model` file plays (reference:
-    * src/llm_data_pipeline/tokenizer/train.py:111-134): train once,
-    * ship the artifact, and any job tokenizes identically. Merge ORDER
-    * is the model (rank = priority), so it's stored explicitly —
-    * parquet row order is not a contract. */
-  def writeModel(spark: org.apache.spark.sql.SparkSession, path: String,
-                 m: BpeModel): Unit = {
+  def loadModel(spark: SparkSession, dir: String): BpeModel = {
     import spark.implicits._
-    val merges = m.merges.zipWithIndex
-      .map { case ((a, b), r) => ("merge", r, a, b, -1) }
-    val vocab = m.vocab.toSeq.map { case (sym, id) => ("vocab", -1, sym, "", id) }
-    (merges ++ vocab).toDF("kind", "rank", "a", "b", "id")
-      .repartition(1).write.mode("overwrite").parquet(path)
-  }
-
-  def loadModel(spark: org.apache.spark.sql.SparkSession,
-                path: String): BpeModel = {
-    val rows = spark.read.parquet(path)
-      .select("kind", "rank", "a", "b", "id").collect()
-    val merges = rows.filter(_.getString(0) == "merge")
-      .sortBy(_.getInt(1)).map(r => (r.getString(2), r.getString(3))).toSeq
-    val vocab = rows.filter(_.getString(0) == "vocab")
-      .map(r => r.getString(2) -> r.getInt(4)).toMap
+    val merges = Handoff.read(spark, s"$dir/bpe_merges_parquet").df
+      .orderBy("rank").collect().map(r => (r.getString(1), r.getString(2))).toSeq
+    val vocab = Handoff.read(spark, s"$dir/bpe_vocab_parquet").df
+      .select("word", "id").as[(String, Int)].collect().toMap
     BpeModel(merges, vocab)
   }
 }

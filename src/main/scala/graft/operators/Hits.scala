@@ -55,7 +55,7 @@ object Hits {
     var auth = Map.empty[String, Long]
     def normalize(raw: Map[String, Long]): Map[String, Long] = {
       val full = nodes.map(n => n -> raw.getOrElse(n, 0L)).toMap
-      val mx = full.values.max
+      val mx = full.values.maxOption.getOrElse(0L) // no node survived cleaning
       if (mx <= 0L) full else full.map { case (n, v) => n -> (v * 1000000L) / mx }
     }
     for (_ <- 1 to iterations) {

@@ -75,7 +75,8 @@ object PipelineSteps {
         .withColumn("m_alpha_cjk", TextFunctions.alphaCjkRatio(col("text")))
         .withColumn("m_punct", TextFunctions.punctRatio(col("text")))
         .withColumn("m_dup_line", TextFunctions.dupLineRatio(col("text")))
-        .withColumn("drop_reason", TextFunctions.judgeReason(col("text"), thresholds))
+        .withColumn("drop_reason", TextFunctions.judgeMetrics(length(col("text")),
+          col("m_non_ws"), col("m_alpha_cjk"), col("m_punct"), col("m_dup_line"), thresholds))
         .withColumn("kept", col("drop_reason") === "ok")
         .persist(StorageLevel.MEMORY_AND_DISK)
       val kept = writeStep(judged.filter(col("kept")), cfg, name)
@@ -225,15 +226,19 @@ object PipelineSteps {
     }
   }
 
-  /** train_tokenizer: frequency-ranked word vocab with the reference's
-    * special-id convention (unk=0, bos=1, eos=2, pad=3,
-    * reference: tokenizer/train.py:111-134). A model-free stand-in for
-    * SentencePiece training: the data-side contract (corpus in, vocab
-    * artifact out) is identical, and the vocab build is one
-    * shuffle-and-top-k over the corpus. */
+  /** train_tokenizer: train the [[Tokenizer]] model `cfg.tokenizer`
+    * names. The word vocab (`vocab_parquet`: (word, freq, id), the
+    * reference's special ids unk=0, bos=1, eos=2, pad=3 then words by
+    * frequency, reference: tokenizer/train.py:111-134) is always
+    * written: a model-free stand-in for SentencePiece training whose
+    * data-side contract (corpus in, vocab artifact out) is identical.
+    * `bpe` adds [[BpeTrainer]]'s merge artifact and `unigram`
+    * [[UnigramTrainer]]'s piece table. All three count corpus words
+    * through [[Tokenizer.corpusWordCounts]]. */
   case class TrainTokenizerStep(corpusShards: Int = 8, maxCorpusChars: Int = 100000) extends Step {
     val name = "train_tokenizer"
     def run(spark: SparkSession, cfg: PipelineConfig): StepStats = {
+      import spark.implicits._
       val in = readStep(spark, cfg, name).df
       // S7 sharded text sink: one doc per line, newlines flattened,
       // repartitioned for parallel shard writes (reference:
@@ -246,81 +251,44 @@ object PipelineSteps {
       // id assignment happens driver-side after the distributed top-k:
       // the vocab artifact is <= vocabSize rows by construction, and this
       // avoids an unpartitioned (single-task) ranking window entirely
-      val ranked = in.select(explode(split(TextFunctions.normalizeForDedup(col("text")), " ")).as("word"))
-        .filter(length(col("word")) > 0)
-        .groupBy("word").agg(count(lit(1)).as("freq"))
-        .orderBy(desc("freq"), asc("word"))
-        .limit(cfg.vocabSize - 4)
-        .collect()
-      val words = spark.createDataFrame(
-        ranked.zipWithIndex.toSeq.map { case (r, i) => (r.getString(0), r.getLong(1), i + 4) })
-        .toDF("word", "freq", "id")
-      val specials = spark.createDataFrame(Seq(
-        ("<unk>", 0L, 0), ("<bos>", 0L, 1), ("<eos>", 0L, 2), ("<pad>", 0L, 3)))
-        .toDF("word", "freq", "id")
-      val vocab = specials.unionByName(words.select(col("word"), col("freq"), col("id")))
+      val words = Tokenizer.corpusWordCounts(in, "text", TextFunctions.normalizeForDedup,
+        cfg.vocabSize - Tokenizer.Specials.length)
+      val vocab = (Tokenizer.Specials.map(_ -> 0L) ++ words).zipWithIndex
+        .map { case ((w, f), id) => (w, f, id) }.toDF("word", "freq", "id")
       val n = Handoff.write(vocab, s"${cfg.outputBase}/vocab_parquet")
-      if (cfg.tokenizer == "bpe") {
-        // real BPE training: distributed word counts + in-memory merges;
-        // persist the merge table as the model artifact
-        import spark.implicits._
-        val model = BpeTrainer.trainFromCorpus(in, "text", cfg.vocabSize,
-          inputSentenceSize = cfg.inputSentenceSize,
-          characterCoverage = cfg.characterCoverage)
-        Handoff.write(model.merges.zipWithIndex.map { case ((a, b), r) => (r, a, b) }
-          .toDF("rank", "left", "right").coalesce(1), s"${cfg.outputBase}/bpe_merges_parquet")
-        Handoff.write(model.vocab.toSeq.map { case (w, i) => (w, 0L, i) }
-          .toDF("word", "freq", "id").coalesce(1), s"${cfg.outputBase}/bpe_vocab_parquet")
-      }
-      if (cfg.tokenizer == "unigram") {
-        // unigram-LM training (SentencePiece's default model type):
-        // probabilities are the model, persisted explicitly
-        val model = UnigramTrainer.trainFromCorpus(in, "text", cfg.vocabSize,
-          inputSentenceSize = cfg.inputSentenceSize,
-          characterCoverage = cfg.characterCoverage,
-          softEm = cfg.unigramSoftEm)
-        UnigramTrainer.writeModel(spark, s"${cfg.outputBase}/unigram_model_parquet", model)
-      }
+      if (cfg.tokenizer == "bpe")
+        BpeTrainer.writeModel(spark, cfg.outputBase, BpeTrainer.trainFromCorpus(in, "text",
+          cfg.vocabSize, inputSentenceSize = cfg.inputSentenceSize,
+          characterCoverage = cfg.characterCoverage))
+      if (cfg.tokenizer == "unigram")
+        UnigramTrainer.writeModel(spark, s"${cfg.outputBase}/unigram_model_parquet",
+          UnigramTrainer.trainFromCorpus(in, "text", cfg.vocabSize,
+            inputSentenceSize = cfg.inputSentenceSize,
+            characterCoverage = cfg.characterCoverage,
+            softEm = cfg.unigramSoftEm))
       StepStats(name, -1, n)
     }
   }
 
-  /** tokenize + pack: broadcast-vocab word lookup (OOV → unk) then the
-    * constant-length [[Packer]]. The vocab broadcast is the executor-
-    * singleton model pattern (ActorPool equivalent, SURVEY §2.11). */
+  /** tokenize + pack: load the [[Tokenizer]] model `cfg.tokenizer` names,
+    * encode every doc with it ([[Tokenizer.encode]], the model broadcast
+    * once — the executor-singleton pattern, ActorPool equivalent, SURVEY
+    * §2.11), append eos, then the constant-length [[Packer]]. */
   case class TokenizeStep(numPartitions: Int = 0) extends Step {
     val name = "tokenize"
     def run(spark: SparkSession, cfg: PipelineConfig): StepStats = {
       import spark.implicits._
       val in = readStep(spark, cfg, name).df
-      val eos = 2
-      val tokenized =
-        if (cfg.tokenizer == "bpe") {
-          val merges = Handoff.read(spark, s"${cfg.outputBase}/bpe_merges_parquet").df
-            .orderBy("rank").collect().map(r => (r.getString(1), r.getString(2))).toSeq
-          val bvocab = Handoff.read(spark, s"${cfg.outputBase}/bpe_vocab_parquet").df
-            .select("word", "id").as[(String, Int)].collect().toMap
-          BpeTrainer.tokenize(in.select("doc_id", "text"), "text",
-              BpeTrainer.BpeModel(merges, bvocab))
-            .select(col("doc_id"), concat(col("ids"), array(lit(eos))).as("ids"))
-        } else if (cfg.tokenizer == "unigram") {
-          val model = UnigramTrainer.loadModel(spark,
-            s"${cfg.outputBase}/unigram_model_parquet")
-          UnigramTrainer.tokenize(in.select("doc_id", "text"), "text", model)
-            .select(col("doc_id"), concat(col("ids"), array(lit(eos))).as("ids"))
-        } else {
-          val vocab = Handoff.read(spark, s"${cfg.outputBase}/vocab_parquet").df
-            .select("word", "id").as[(String, Int)].collect().toMap
-          val bc = spark.sparkContext.broadcast(vocab)
-          in.select(col("doc_id"), TextFunctions.normalizeForDedup(col("text")).as("norm"))
-            .select(col("doc_id"), split(col("norm"), " ").as("words"))
-            .as[(String, Seq[String])]
-            .map { case (id, ws) =>
-              val v = bc.value
-              (id, ws.iterator.filter(_.nonEmpty).map(w => v.getOrElse(w, 0)).toArray :+ eos)
-            }
-            .toDF("doc_id", "ids")
-        }
+      val model: Tokenizer.Model = cfg.tokenizer match {
+        case "bpe" => BpeTrainer.loadModel(spark, cfg.outputBase)
+        case "unigram" =>
+          UnigramTrainer.loadModel(spark, s"${cfg.outputBase}/unigram_model_parquet")
+        case _ => Tokenizer.WordModel(Handoff.read(spark, s"${cfg.outputBase}/vocab_parquet").df
+          .select("word", "id").as[(String, Int)].collect().toMap)
+      }
+      val eos = Tokenizer.EosId
+      val tokenized = Tokenizer.encode(in.select("doc_id", "text"), "text", model)
+        .select(col("doc_id"), concat(col("ids"), array(lit(eos))).as("ids"))
       val toks = tokenized
         .withColumn("ord", xxhash64(col("doc_id"))) // stable pseudo-order
       val packed = Packer.packExact(toks, "ord", "ids", cfg.seqLen, eosId = eos,

@@ -131,7 +131,8 @@ object SpModelProto {
     val r = new Reader(bytes, 0, bytes.length)
     val pieces = IndexedSeq.newBuilder[SpPiece]
     var modelType = ModelUnigram
-    var unkId = 0; var bosId = 1; var eosId = 2; var padId = 3
+    var unkId = Tokenizer.UnkId; var bosId = Tokenizer.BosId
+    var eosId = Tokenizer.EosId; var padId = Tokenizer.PadId
     while (r.hasMore) {
       val tag = r.readVarint()
       val field = (tag >> 3).toInt; val wt = (tag & 7).toInt
@@ -182,11 +183,10 @@ object SpModelProto {
     val byteIds = m.pieces.zipWithIndex.collect {
       case (p, i) if p.pieceType == TypeByte => i }
     // the engine's encode/decode address the byte-fallback block
-    // POSITIONALLY at 4..259 (BpeModel/UnigramModel convention), so a
+    // POSITIONALLY at 4..259 (the Tokenizer id convention), so a
     // model without that block cannot load into these structures —
     // fail fast rather than alias real pieces onto byte ids
-    require(byteIds == (BpeTrainer.ByteIdBase until
-        BpeTrainer.ByteIdBase + 256),
+    require(byteIds == (Tokenizer.ByteIdBase until Tokenizer.FirstLearnedId),
       "byte-fallback pieces must occupy ids 4..259 (the reference " +
         "layout, tokenizer/train.py unk/bos/eos/pad=0-3 + " +
         "byte_fallback=True); got byte ids " +
@@ -246,8 +246,7 @@ object SpModelProto {
     // chars legitimately carry score 0 without being merges).
     // Symbols usable as a merge side: every vocab entry except the
     // specials.
-    val special = Set("<unk>", "<bos>", "<eos>", "<pad>")
-    val sides = vocab.keySet.filterNot(special)
+    val sides = vocab.keySet.filterNot(Tokenizer.Specials.contains)
     val ranked = m.pieces.zipWithIndex
       .filter { case (p, id) =>
         p.score <= 0f && p.pieceType == TypeNormal && p.piece.length > 1 }
@@ -268,7 +267,8 @@ object SpModelProto {
     val ts = new Writer
     ts.writeInt(3, modelType)
     ts.writeInt(4, vocabSize)
-    ts.writeInt(40, 0); ts.writeInt(41, 1); ts.writeInt(42, 2); ts.writeInt(43, 3)
+    ts.writeInt(40, Tokenizer.UnkId); ts.writeInt(41, Tokenizer.BosId)
+    ts.writeInt(42, Tokenizer.EosId); ts.writeInt(43, Tokenizer.PadId)
     ts
   }
 
@@ -299,8 +299,8 @@ object SpModelProto {
       val tpe = name match {
         case "<unk>" => TypeUnknown
         case "<bos>" | "<eos>" | "<pad>" => TypeControl
-        case BytePiece(_) if id >= BpeTrainer.ByteIdBase &&
-          id < BpeTrainer.FirstSymbolId => TypeByte
+        case BytePiece(_) if id >= Tokenizer.ByteIdBase &&
+          id < Tokenizer.FirstLearnedId => TypeByte
         case _ => TypeNormal
       }
       SpPiece(name, if (tpe == TypeNormal) score(name).getOrElse(0f) else 0f, tpe)

@@ -1,7 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import graft.operators.Tokenizer._
+import org.apache.spark.sql.{Column, DataFrame}
 
 import scala.collection.mutable
 
@@ -38,30 +38,24 @@ import scala.collection.mutable
   *    `shrinking_factor=0.75` schedule). Single-character pieces are
   *    never pruned — segmentation stays total.
   *
-  * Id convention shared with BPE: unk/bos/eos/pad = 0-3, byte-fallback
-  * <0x00>..<0xFF> = 4-259, pieces from 260 in lexicographic order.
+  * Id convention shared with BPE ([[Tokenizer]]): unk/bos/eos/pad = 0-3,
+  * byte-fallback <0x00>..<0xFF> = 4-259, pieces from 260 in
+  * lexicographic order.
   * Words are marked with the SentencePiece word-boundary char (▁)
   * before segmentation, so decode restores spacing losslessly and
   * pieces can span the word start ("▁the").
   */
 object UnigramTrainer {
 
-  val UnkId = 0; val BosId = 1; val EosId = 2; val PadId = 3
-  val ByteIdBase = 4
-  val FirstPieceId: Int = ByteIdBase + 256
   /** SentencePiece's word-boundary marker (U+2581 LOWER ONE EIGHTH BLOCK). */
   val Boundary = "▁"
-
-  private def codePoints(word: String): Vector[String] =
-    word.codePoints().toArray.toVector.map(cp => new String(Character.toChars(cp)))
 
   /** pieces: piece → log P(piece), normalized over the final vocab.
     * vocab: piece → id (specials/bytes/pieces per the id convention). */
   case class UnigramModel(pieces: Map[String, Double], vocab: Map[String, Int])
-      extends Serializable {
+      extends Tokenizer.Model {
     @transient private lazy val maxPieceCp: Int =
       if (pieces.isEmpty) 1 else pieces.keysIterator.map(p => codePoints(p).size).max
-    @transient private lazy val idToPiece: Map[Int, String] = vocab.map(_.swap)
     // a byte-fallback char must always score WORSE than any real piece
     // path covering the same span, but stay finite so the DP is total
     @transient private lazy val fallbackLogP: Double =
@@ -176,77 +170,19 @@ object UnigramTrainer {
       }
     }
 
-    /** Encode one word (no boundary marker yet) to ids. */
-    def encodeWord(word: String): Seq[Int] = {
-      if (word.isEmpty) return Seq.empty
-      segment(codePoints(Boundary + word)).flatMap { p =>
-        vocab.get(p) match {
-          case Some(id) => Seq(id)
-          case None => p.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            .toSeq.map(b => ByteIdBase + (b & 0xff))
-        }
-      }
-    }
+    def normalize(c: Column): Column = normalizeForTokenize(c)
 
-    @transient private lazy val wordCache =
-      new java.util.concurrent.ConcurrentHashMap[String, Array[Int]]()
-
-    /** Memoized per-word encode (the BpeModel convention): encodeWord
-      * is a pure deterministic Viterbi, so caching is bit-identical —
-      * and the DP is the expensive part, paid once per DISTINCT word
-      * instead of per occurrence (Zipf corpora repeat words heavily).
-      * Callers never mutate the returned array. */
-    private def encodeWordIds(word: String): Array[Int] = {
-      val hit = wordCache.get(word)
-      if (hit != null) hit
-      else {
-        val ids = encodeWord(word).toArray
-        if (wordCache.size < 1000000) wordCache.put(word, ids)
-        ids
-      }
-    }
-
-    /** Identical output to
-      * `text.split("\\s+").iterator.filter(_.nonEmpty).flatMap(encodeWord).toArray`
-      * (pinned in UnigramTrainerSpec) — same token stream without the
-      * per-call regex, same concatenation without boxing. */
-    def encodeText(text: String): Array[Int] = {
-      val words = graft.functions.TextFunctions.splitWsRuns(text)
-      val parts = new Array[Array[Int]](words.length)
-      var total = 0
-      var i = 0
-      while (i < words.length) {
-        val p = encodeWordIds(words(i)); parts(i) = p; total += p.length; i += 1
-      }
-      val out = new Array[Int](total)
-      var o = 0
-      i = 0
-      while (i < words.length) {
-        val p = parts(i); System.arraycopy(p, 0, out, o, p.length); o += p.length; i += 1
-      }
-      out
-    }
+    /** Encode one word (no boundary marker yet) to ids: the Viterbi
+      * segmentation, pieces outside the vocab as byte tokens. */
+    def encodeWord(word: String): Seq[Int] =
+      if (word.isEmpty) Seq.empty
+      else segment(codePoints(Boundary + word)).flatMap(pieceIds)
 
     /** Lossless inverse: pieces concatenate, byte runs UTF-8-decode,
       * boundary markers become spaces. */
-    def decode(ids: Seq[Int]): String = {
-      val sb = new StringBuilder
-      val bytes = new mutable.ArrayBuffer[Byte]()
-      def flush(): Unit = if (bytes.nonEmpty) {
-        sb.append(new String(bytes.toArray, java.nio.charset.StandardCharsets.UTF_8))
-        bytes.clear()
-      }
-      ids.foreach { id =>
-        if (id >= ByteIdBase && id < FirstPieceId) bytes += (id - ByteIdBase).toByte
-        else {
-          flush()
-          idToPiece.get(id).filterNot(
-            Set("<unk>", "<bos>", "<eos>", "<pad>")).foreach(sb.append)
-        }
-      }
-      flush()
-      sb.toString.replace(Boundary, " ").stripPrefix(" ").stripSuffix(" ")
-    }
+    def decode(ids: Seq[Int]): String =
+      decodeWith(ids)((sb, p) => sb.append(p))
+        .replace(Boundary, " ").stripPrefix(" ").stripSuffix(" ")
   }
 
   /** Train on a word-frequency table. `vocabSize` counts specials +
@@ -256,8 +192,8 @@ object UnigramTrainer {
             maxPieceLen: Int = 8, seedFactor: Int = 8,
             emRounds: Int = 2, characterCoverage: Double = 1.0,
             softEm: Boolean = false): UnigramModel = {
-    require(vocabSize > FirstPieceId,
-      s"vocabSize=$vocabSize must exceed $FirstPieceId (specials + byte ids)")
+    require(vocabSize > FirstLearnedId,
+      s"vocabSize=$vocabSize must exceed $FirstLearnedId (specials + byte ids)")
     require(characterCoverage > 0.0 && characterCoverage <= 1.0,
       s"characterCoverage=$characterCoverage must be in (0, 1]")
     val words: Seq[(Vector[String], Long)] =
@@ -307,7 +243,7 @@ object UnigramTrainer {
     }
     val singles: Seq[String] = score.keysIterator
       .filter(p => codePoints(p).size == 1 && covered(p)).toSeq.sorted
-    val budgetTotal = vocabSize - FirstPieceId
+    val budgetTotal = vocabSize - FirstLearnedId
     require(budgetTotal > singles.size,
       s"vocabSize=$vocabSize leaves no room for multi-char pieces over " +
       s"${singles.size} single-char pieces")
@@ -397,66 +333,24 @@ object UnigramTrainer {
       r += 1
     }
 
-    val byteTokens = (0 until 256).map(b => f"<0x$b%02X>" -> (ByteIdBase + b))
     val ordered = (singles ++ multis.toSeq).sorted
-    val vocab = Map("<unk>" -> UnkId, "<bos>" -> BosId, "<eos>" -> EosId,
-      "<pad>" -> PadId) ++ byteTokens ++
-      ordered.zipWithIndex.map { case (p, i) => p -> (i + FirstPieceId) }
+    val vocab = ReservedVocab ++
+      ordered.zipWithIndex.map { case (p, i) => p -> (i + FirstLearnedId) }
     assert(vocab.valuesIterator.max < vocabSize,
       s"unigram id-bound invariant violated: ${vocab.valuesIterator.max} >= $vocabSize")
     UnigramModel(model.pieces, vocab)
   }
 
-  /** Distributed word counting → driver train loop; the same corpus
-    * contract as [[BpeTrainer.trainFromCorpus]] (normalization,
-    * maxWords bound, deterministic hash-ordered inputSentenceSize
-    * sample). */
+  /** [[Tokenizer.corpusWordCounts]] of the NFKC-normalized corpus →
+    * driver train loop; the same corpus contract as
+    * [[BpeTrainer.trainFromCorpus]]. */
   def trainFromCorpus(df: DataFrame, textCol: String, vocabSize: Int,
                       maxWords: Int = 100000,
                       inputSentenceSize: Option[Int] = None,
                       characterCoverage: Double = 1.0,
-                      softEm: Boolean = false): UnigramModel = {
-    val rows = inputSentenceSize match {
-      case Some(n) =>
-        require(n > 0, "need inputSentenceSize > 0")
-        df.select(col(textCol))
-          .orderBy(xxhash64(col(textCol)), col(textCol)).limit(n)
-      case None => df.select(col(textCol))
-    }
-    val freqs = rows
-      .select(explode(split(BpeTrainer.normalizeForTokenize(col(textCol)), " ")).as("w"))
-      .filter(length(col("w")) > 0)
-      .groupBy("w").agg(count(lit(1)).as("f"))
-      .orderBy(desc("f"), asc("w"))
-      .limit(maxWords)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
-    train(freqs, vocabSize, characterCoverage = characterCoverage,
-      softEm = softEm)
-  }
-
-  /** Distributed encode with the broadcast model (tokens as `ids`) —
-    * the executor-singleton pattern, mirroring [[BpeTrainer.tokenize]]. */
-  def tokenize(df: DataFrame, textCol: String, model: UnigramModel): DataFrame = {
-    val spark = df.sparkSession
-    val bc = spark.sparkContext.broadcast(model)
-    val withNorm = df.withColumn("__norm",
-      BpeTrainer.normalizeForTokenize(col(textCol)))
-    val enc = org.apache.spark.sql.Encoders.row(
-      org.apache.spark.sql.types.StructType(
-        withNorm.schema.fields.filterNot(_.name == "__norm") :+
-        org.apache.spark.sql.types.StructField("ids",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.IntegerType, false))))
-    withNorm.mapPartitions { rows =>
-      val m = bc.value
-      rows.map { r =>
-        val normIdx = r.fieldIndex("__norm")
-        val vals = (0 until r.length).filter(_ != normIdx).map(r.get)
-        org.apache.spark.sql.Row.fromSeq(
-          vals :+ m.encodeText(r.getString(normIdx)).toSeq)
-      }
-    }(enc)
-  }
+                      softEm: Boolean = false): UnigramModel =
+    train(corpusWordCounts(df, textCol, normalizeForTokenize, maxWords, inputSentenceSize),
+      vocabSize, characterCoverage = characterCoverage, softEm = softEm)
 
   /** Model artifact: (kind, piece, logp, id) rows — probabilities ARE
     * the model (segmentation depends on them), stored explicitly like

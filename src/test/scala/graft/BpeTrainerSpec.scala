@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.BpeTrainer
+import graft.operators.{BpeTrainer, Tokenizer}
 import org.apache.spark.sql.functions._
 
 class BpeTrainerSpec extends SparkSpec {
@@ -24,8 +24,8 @@ class BpeTrainerSpec extends SparkSpec {
     // chars never seen in training encode as UTF-8 byte tokens and decode
     // back losslessly — the SentencePiece byte_fallback contract
     val oov = m.encodeWord("héllo")
-    assert(!oov.contains(BpeTrainer.UnkId))
-    assert(oov.exists(id => id >= BpeTrainer.ByteIdBase && id < BpeTrainer.FirstSymbolId))
+    assert(!oov.contains(Tokenizer.UnkId))
+    assert(oov.exists(id => id >= Tokenizer.ByteIdBase && id < Tokenizer.FirstLearnedId))
     assert(m.decode(oov) == "héllo")
   }
 
@@ -33,7 +33,7 @@ class BpeTrainerSpec extends SparkSpec {
     val m = BpeTrainer.train(Seq("plain" -> 3L), vocabSize = 300)
     for (s <- Seq("漢字テスト", "héllo wörld", "emoji 🙂 test", "ﬁligature")) {
       val ids = s.split("\\s+").toSeq.flatMap(m.encodeWord)
-      assert(!ids.contains(BpeTrainer.UnkId), s"unk in $s")
+      assert(!ids.contains(Tokenizer.UnkId), s"unk in $s")
       assert(m.decode(ids) == s, s"roundtrip of $s")
     }
   }
@@ -48,7 +48,7 @@ class BpeTrainerSpec extends SparkSpec {
     assert(m.vocab.values.max < 270, s"max id ${m.vocab.values.max}")
     for ((w, _) <- words) {
       val ids = m.encodeWord(w)
-      assert(!ids.contains(BpeTrainer.UnkId))
+      assert(!ids.contains(Tokenizer.UnkId))
       assert(ids.forall(_ < 270))
       assert(m.decode(ids) == w)
     }
@@ -64,7 +64,7 @@ class BpeTrainerSpec extends SparkSpec {
     // 'b', 1.0 keeps all three
     val words = Seq("a" -> 90L, "b" -> 9L, "z" -> 1L)
     def hasCharToken(m: BpeTrainer.BpeModel, c: String) =
-      m.vocab.contains(c) && m.vocab(c) >= BpeTrainer.FirstSymbolId
+      m.vocab.contains(c) && m.vocab(c) >= Tokenizer.FirstLearnedId
     val m90 = BpeTrainer.train(words, vocabSize = 300, characterCoverage = 0.9)
     assert(hasCharToken(m90, "a") && !hasCharToken(m90, "b") && !hasCharToken(m90, "z"))
     val m99 = BpeTrainer.train(words, vocabSize = 300, characterCoverage = 0.99)
@@ -73,8 +73,8 @@ class BpeTrainerSpec extends SparkSpec {
     assert(hasCharToken(mAll, "z"))
     // cut chars still encode (byte tokens) and decode losslessly
     val ids = m90.encodeWord("z")
-    assert(!ids.contains(BpeTrainer.UnkId))
-    assert(ids.exists(id => id >= BpeTrainer.ByteIdBase && id < BpeTrainer.FirstSymbolId))
+    assert(!ids.contains(Tokenizer.UnkId))
+    assert(ids.exists(id => id >= Tokenizer.ByteIdBase && id < Tokenizer.FirstLearnedId))
     assert(m90.decode(ids) == "z")
   }
 
@@ -196,6 +196,12 @@ class BpeTrainerSpec extends SparkSpec {
     val m = BpeTrainer.trainFromCorpus(df, "text", vocabSize = 350)
     val path = Files.createTempDirectory("bpe_artifact").toString + "/model"
     BpeTrainer.writeModel(spark, path, m)
+    // the pipeline's two-table artifact, as external readers see it
+    val merges = spark.read.parquet(s"$path/bpe_merges_parquet")
+    val vocab = spark.read.parquet(s"$path/bpe_vocab_parquet")
+    assert(merges.columns.toSeq == Seq("rank", "left", "right"))
+    assert(vocab.columns.toSeq == Seq("word", "freq", "id"))
+    assert(merges.count() == m.merges.size && vocab.count() == m.vocab.size)
     val loaded = BpeTrainer.loadModel(spark, path)
     assert(loaded.merges == m.merges) // ORDER is the model
     assert(loaded.vocab == m.vocab)
@@ -210,7 +216,7 @@ class BpeTrainerSpec extends SparkSpec {
     val out = BpeTrainer.tokenize(df, "text", m).orderBy("doc_id").collect()
     assert(out.length == 2)
     val ids1 = out(0).getSeq[Int](2)
-    assert(ids1.nonEmpty && !ids1.contains(BpeTrainer.UnkId))
+    assert(ids1.nonEmpty && !ids1.contains(Tokenizer.UnkId))
     // token count for "aa ab aa" >= 3 words' worth, deterministic
     val again = BpeTrainer.tokenize(df, "text", m).orderBy("doc_id").collect()
     assert(again(0).getSeq[Int](2) == ids1)
@@ -222,7 +228,9 @@ class BpeTrainerSpec extends SparkSpec {
     val m = BpeTrainer.trainFromCorpus(df, "text", vocabSize = 350)
     val texts = Seq("shared words number7", "unseen zebra \u65b0\u8bcd \ud83d\ude42",
       "tabs\tand\nnewlines mixed", " lead trail ", "", "   ",
-      "nbsp\u00A0is one token", "shared shared shared words")
+      "nbsp\u00A0is one token", "shared shared shared words",
+      "\tlead and trail tabs\t", "\u000Bvertical\u000Btab\u000B",
+      "\uff46\uff55\uff4c\uff4c \uff37\uff49\uff44\uff54\uff48 words")
     texts.foreach { t =>
       val ref = t.split("\\s+").iterator.filter(_.nonEmpty).flatMap(m.encodeWord).toSeq
       assert(m.encodeText(t).toSeq == ref, s"encodeText drift on '$t'")

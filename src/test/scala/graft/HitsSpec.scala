@@ -49,23 +49,30 @@ class HitsSpec extends SparkSpec {
   }
 
   test("hits: driver fast path and distributed loop are bit-identical") {
-    // smallGraphEdges = 0 forces the distributed alternating loop; the
-    // default takes the driver fold on this model-sized graph — the
+    // smallGraphEdges = -1 forces the distributed alternating loop; the
+    // default takes the driver fold on these model-sized graphs — the
     // driver fold must not move a single micro-unit. At the exact bound
-    // (the cleaned edge count) the graph still folds; one below, it does not.
-    val df = graph.toDF("src", "dst", "w")
-    val cleaned = graph.count { case (s, d, w) => s != d && w > 0 }.toLong
-    def run(bound: Long) = Hits.run(df, iterations = 2, smallGraphEdges = bound)
-    val fast = Hits.run(df, iterations = 2)
-      .orderBy("node").collect().toSeq
-    val dist = run(0L).orderBy("node").collect().toSeq
-    assert(fast == dist)
-    val atBound = run(cleaned)
-    assert(foldedOnDriver(atBound))
-    assert(atBound.orderBy("node").collect().toSeq == dist)
-    val below = run(cleaned - 1)
-    assert(!foldedOnDriver(below))
-    assert(below.orderBy("node").collect().toSeq == dist)
+    // (the cleaned edge count) a graph still folds; one below, it does
+    // not. An empty graph and a self-loop-only graph clean to no edge:
+    // they fold at bound 0, run distributed at -1, and both sides give
+    // 0 rows.
+    val empty = Seq.empty[(String, String, Long)]
+    val selfLoops = Seq(("a", "a", 3L), ("b", "b", 1L))
+    for (g <- Seq(graph, empty, selfLoops)) {
+      val df = g.toDF("src", "dst", "w")
+      val cleaned = g.count { case (s, d, w) => s != d && w > 0 }.toLong
+      def run(bound: Long) = Hits.run(df, iterations = 2, smallGraphEdges = bound)
+      val dist = run(-1L).orderBy("node").collect().toSeq
+      assert(dist.isEmpty == (cleaned == 0))
+      assert(Hits.run(df, iterations = 2).orderBy("node").collect().toSeq == dist)
+      assert(run(0L).orderBy("node").collect().toSeq == dist)
+      val atBound = run(cleaned)
+      assert(foldedOnDriver(atBound))
+      assert(atBound.orderBy("node").collect().toSeq == dist)
+      val below = run(cleaned - 1)
+      assert(!foldedOnDriver(below))
+      assert(below.orderBy("node").collect().toSeq == dist)
+    }
   }
 
   test("hits: authority mass follows in-links, hub mass follows out-links") {

@@ -221,7 +221,7 @@ class PipelineSpec extends SparkSpec {
     val idsU = packedU.orderBy("part_id", "chunk_in_part")
       .collect().flatMap(_.getSeq[Int](2))
     assert(idsU.forall(id => id >= 0 && id < 500))
-    assert(idsU.exists(_ >= graft.operators.UnigramTrainer.FirstPieceId),
+    assert(idsU.exists(_ >= graft.operators.Tokenizer.FirstLearnedId),
       "at least one learned piece id in the stream")
   }
 

@@ -9,8 +9,22 @@ import org.apache.spark.sql.functions._
 class TextFunctionsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def reason(text: String, t: TextFunctions.CleanThresholds): String =
-    Seq(text).toDF("t").select(TextFunctions.judgeReason(col("t"), t)).head().getString(0)
+  /** The judge's reason for `text`; the fresh-metrics form
+    * (`judgeReason`) must agree with the precomputed-metrics form
+    * (`judgeMetrics` over metric columns, as CleanStep calls it). */
+  private def reason(text: String, t: TextFunctions.CleanThresholds): String = {
+    val r = Seq(text).toDF("t")
+      .withColumn("m_non_ws", TextFunctions.nonWsRatio(col("t")))
+      .withColumn("m_alpha_cjk", TextFunctions.alphaCjkRatio(col("t")))
+      .withColumn("m_punct", TextFunctions.punctRatio(col("t")))
+      .withColumn("m_dup_line", TextFunctions.dupLineRatio(col("t")))
+      .select(TextFunctions.judgeReason(col("t"), t),
+        TextFunctions.judgeMetrics(length(col("t")), col("m_non_ws"), col("m_alpha_cjk"),
+          col("m_punct"), col("m_dup_line"), t))
+      .head()
+    assert(r.getString(0) == r.getString(1), s"judge forms disagree on '$text'")
+    r.getString(0)
+  }
 
   private val t = TextFunctions.CleanThresholds(
     minChars = 10, maxChars = 100, minNonWs = 0.6, minAlphaCjk = 0.4,

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.UnigramTrainer
+import graft.operators.{Tokenizer, UnigramTrainer}
 import org.apache.spark.sql.functions._
 
 class UnigramTrainerSpec extends SparkSpec {
@@ -39,7 +39,7 @@ class UnigramTrainerSpec extends SparkSpec {
       val norm = java.text.Normalizer.normalize(t.toLowerCase,
         java.text.Normalizer.Form.NFKC)
       val ids = m.encodeText(norm)
-      assert(!ids.contains(UnigramTrainer.UnkId), s"unk in $t")
+      assert(!ids.contains(Tokenizer.UnkId), s"unk in $t")
       assert(m.decode(ids.toSeq) == norm, s"roundtrip of $norm")
     }
   }
@@ -57,7 +57,7 @@ class UnigramTrainerSpec extends SparkSpec {
     val df = Seq((1L, "the newest low table"), (2L, "lower and lowest"))
       .toDF("doc_id", "text")
     val m = UnigramTrainer.trainFromCorpus(df, "text", vocabSize = 300)
-    val out = UnigramTrainer.tokenize(df, "text", m)
+    val out = Tokenizer.encode(df, "text", m)
       .orderBy("doc_id").select("ids").as[Seq[Int]].collect()
     val norm1 = java.text.Normalizer.normalize("the newest low table",
       java.text.Normalizer.Form.NFKC)
@@ -77,8 +77,8 @@ class UnigramTrainerSpec extends SparkSpec {
         new String(Character.toChars(cp))).toSet
     assert(!pieceChars.contains("z") && !pieceChars.contains("q"))
     val ids = cut.encodeWord("quartz")
-    assert(ids.exists(id => id >= UnigramTrainer.ByteIdBase &&
-      id < UnigramTrainer.FirstPieceId)) // byte-fallback ids present
+    assert(ids.exists(id => id >= Tokenizer.ByteIdBase &&
+      id < Tokenizer.FirstLearnedId)) // byte-fallback ids present
     assert(cut.decode(cut.encodeText("quartz alps")) == "quartz alps")
     // coverage 1.0 is the identity: same model as the default path
     val full = UnigramTrainer.train(f, vocabSize = 300)
@@ -94,7 +94,7 @@ class UnigramTrainerSpec extends SparkSpec {
     val multis = m.pieces.keys.filter(p => p.codePointCount(0, p.length) > 1)
     val singles = m.pieces.keys.filter(p => p.codePointCount(0, p.length) == 1)
     assert(m.vocab.valuesIterator.max < 280)
-    assert(multis.size + singles.size + UnigramTrainer.FirstPieceId <= 280)
+    assert(multis.size + singles.size + Tokenizer.FirstLearnedId <= 280)
   }
 
   test("soft-EM cross-check: the hard-EM substitution's divergence, quantified") {
@@ -123,7 +123,7 @@ class UnigramTrainerSpec extends SparkSpec {
     val probs = Map("▁" -> 0.30, "a" -> 0.20, "b" -> 0.20,
       "ab" -> 0.25, "▁a" -> 0.05)
     val ids = probs.keys.toSeq.sorted.zipWithIndex
-      .map { case (p, i) => p -> (UnigramTrainer.FirstPieceId + i) }.toMap
+      .map { case (p, i) => p -> (Tokenizer.FirstLearnedId + i) }.toMap
     val m = UnigramTrainer.UnigramModel(
       probs.map { case (p, v) => p -> math.log(v) }, ids)
 
@@ -206,9 +206,9 @@ class UnigramTrainerSpec extends SparkSpec {
     def fallbackCount(coverage: Double): Long = {
       val m = UnigramTrainer.trainFromCorpus(df, "text", vocabSize = 300,
         characterCoverage = coverage)
-      UnigramTrainer.tokenize(df, "text", m)
+      Tokenizer.encode(df, "text", m)
         .select(size(filter(col("ids"), i =>
-          i >= UnigramTrainer.ByteIdBase && i < UnigramTrainer.FirstPieceId))
+          i >= Tokenizer.ByteIdBase && i < Tokenizer.FirstLearnedId))
           .cast("long").as("nf"))
         .agg(sum("nf")).collect().head.getLong(0)
     }
@@ -224,7 +224,9 @@ class UnigramTrainerSpec extends SparkSpec {
     val m = UnigramTrainer.train(freqs, vocabSize = 300)
     for (t <- Seq("low lower lowest", "tabs\tand\nnewlines", " lead trail ",
         "", "   ", "h\u00e9llo w\u00f6rld \ud83d\ude42",
-        "nbsp\u00A0is one token", "repeat repeat repeat")) {
+        "nbsp\u00A0is one token", "repeat repeat repeat",
+        "\tlead and trail tabs\t", "\u000Bvertical\u000Btab\u000B",
+        "\uff46\uff55\uff4c\uff4c \uff37\uff49\uff44\uff54\uff48 lowest")) {
       val ref = t.split("\\s+").iterator.filter(_.nonEmpty).flatMap(m.encodeWord).toSeq
       assert(m.encodeText(t).toSeq == ref, s"encodeText drift on '$t'")
       // second call exercises the memoized-word path — must stay identical
