@@ -65,7 +65,7 @@ object PipelineMain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val all = PipelineSteps.all(cfg.dataDir).map {
+    val all = PipelineSteps.all.map {
       case _: PipelineSteps.PiiStep => PipelineSteps.PiiStep(enableNer = flags("--enable-ner"))
       case other => other
     }

@@ -2599,18 +2599,14 @@ object SparkEntry {
       // component-size distribution (the report a curator reads before
       // choosing dedup aggressiveness). Same verified pair set as x03
       // (one shared implementation — ngramJaccardPairs), distributed CC
-      // labels components, singletons join in as size-1 via the
-      // left-join coalesce. Two bounded aggs after the CC; the oracle
-      // rebuilds graph + closure recursively and must land on the
-      // identical histogram.
+      // labels components, singletons label themselves as size-1
+      // (ConnectedComponents.labelRows). Two bounded aggs after the CC;
+      // the oracle rebuilds graph + closure recursively and must land on
+      // the identical histogram.
       val all = docs(s, d)
       val pairs = Dedup.ngramJaccardPairs(all, "doc_id", "text", n = 3, threshold = 0.8)
-      val comp = ConnectedComponents.run(pairs)
-      all.select(col("doc_id"))
-        .join(comp, col("doc_id") === col("id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("component"), col("doc_id")).as("cid"))
-        .groupBy("cid").agg(count(lit(1)).as("cluster_size"))
+      ConnectedComponents.labelRows(all.select(col("doc_id")), "doc_id", pairs)
+        .groupBy("component").agg(count(lit(1)).as("cluster_size"))
         .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
         .orderBy("cluster_size")
     }),
@@ -2619,16 +2615,15 @@ object SparkEntry {
       // dedup PROVENANCE: for every doc the x03 near-dedup drops,
       // WHICH canonical doc it lost to — the audit artifact a governed
       // pipeline stores next to the kept set ("where did my document
-      // go"). Same verified pair set + distributed CC as x03/d59 (one
-      // shared implementation); dropped = component members that are
-      // not the min-id label, canonical = the label itself. The oracle
-      // rebuilds the exact graph + transitive closure, so every
-      // (dropped, canonical) edge is independently derived.
-      val pairs = Dedup.ngramJaccardPairs(docs(s, d), "doc_id", "text",
-        n = 3, threshold = 0.8)
-      val comp = ConnectedComponents.run(pairs)
-      comp.where(col("id") =!= col("component"))
-        .select(col("id").as("dropped_id"), col("component").as("canonical_id"))
+      // go"). Same verified pair set as x03/d59 (one shared
+      // implementation) through the one dedup tail, Dedup.loserMap, with
+      // its min-id pick: dropped = component members that are not the
+      // min-id label, canonical = the label itself. The oracle rebuilds
+      // the exact graph + transitive closure, so every (dropped,
+      // canonical) edge is independently derived.
+      val t = docs(s, d)
+      Dedup.loserMap(t, "doc_id", Dedup.ngramJaccardPairs(t, "doc_id", "text",
+          n = 3, threshold = 0.8))
         .orderBy("dropped_id")
     }),
 
@@ -4353,17 +4348,18 @@ object SparkEntry {
       // the min-id default: the curation rule production corpus
       // builds actually use (keep the fullest mirror of a page, not
       // the first-crawled stub). Pair graph = x03's exact-verified
-      // word-3gram Jaccard >= 0.8 (LSH-blocked, never all-pairs);
-      // winner per component = ONE min(struct(-score, id)) aggregate —
-      // partial map-side, no window, no member list. Output is the
-      // loser -> winner provenance mapping (x12's shape); the oracle
-      // replays the same closure + (score DESC, id ASC) argmax in SQL,
-      // so a single mis-crowned component hash-fails the row.
+      // word-3gram Jaccard >= 0.8 (LSH-blocked, never all-pairs),
+      // through the one dedup tail, Dedup.loserMap, ranked by
+      // struct(score, -id): winner per component = ONE max-of-struct
+      // aggregate — partial map-side, no window, no member list. Output
+      // is the loser -> winner provenance mapping (x12's shape); the
+      // oracle replays the same closure + (score DESC, id ASC) argmax in
+      // SQL, so a single mis-crowned component hash-fails the row.
       val t = docs(s, d)
       val pairs = Dedup.ngramJaccardPairs(t, "doc_id", "text",
         n = 3, threshold = 0.8)
-      Dedup.canonicalByScore(t, "doc_id", pairs,
-          octet_length(col("text")).cast("long"))
+      Dedup.loserMap(t, "doc_id", pairs,
+          Some(struct(octet_length(col("text")).cast("long"), -col("doc_id"))))
         .orderBy("dropped_id")
     }),
 
@@ -4405,13 +4401,9 @@ object SparkEntry {
         keys.join(roots, "k").where(col("doc_id") =!= col("root"))
           .select(col("root").as("src"), col("doc_id").as("dst"))
       }
-      val comp = ConnectedComponents.run(
-        starEdges(k1).unionByName(starEdges(k2)).distinct())
-      val lab = all.select("doc_id")
-        .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(coalesce(col("component"), col("doc_id")), col("doc_id"))
-            .as("cluster_id"))
+      val lab = ConnectedComponents.labelRows(all.select("doc_id"), "doc_id",
+          starEdges(k1).unionByName(starEdges(k2)).distinct())
+        .select(col("doc_id"), col("component").as("cluster_id"))
       lab.join(lab.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size")),
           "cluster_id")
         .select("doc_id", "cluster_id", "cluster_size")

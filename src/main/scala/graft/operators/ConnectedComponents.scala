@@ -153,6 +153,12 @@ object ConnectedComponents {
     }
   }
 
+  /** `rows` with a `component` column: the [[run]] label of `idCol` over
+    * `edges`, or the id itself for a row in no edge (a singleton). */
+  def labelRows(rows: DataFrame, idCol: String, edges: DataFrame): DataFrame =
+    rows.join(run(edges).withColumnRenamed("id", idCol), Seq(idCol), "left")
+      .withColumn("component", coalesce(col("component"), col(idCol)))
+
   /** The distributed alternating-star loop over persisted clean edges
     * (see [[cleanEdges]]); unpersists them as the rounds replace them. */
   private def starLoop(edges: DataFrame, maxIterations: Int): DataFrame = {

@@ -5,6 +5,7 @@ import graft.functions.{HashFunctions, TextFunctions}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for document corpora.
@@ -15,8 +16,8 @@ import org.apache.spark.storage.StorageLevel
   * step contract (reference: src/llm_data_pipeline/dedup/dedup.py:133-232,
   * dedup/run_clustering.py:26-77), but fully distributed: candidate
   * generation is a shuffle on band/bucket keys, clustering is
-  * [[ConnectedComponents]], and the final keep-filter is a broadcastable
-  * semi-join — the driver never materializes documents or edges.
+  * [[ConnectedComponents]], and the final keep-filter is one
+  * broadcastable anti-join against [[loserMap]]'s losers.
   */
 object Dedup {
 
@@ -548,6 +549,17 @@ object Dedup {
       .select("src", "dst")
   }
 
+  /** The LSH pair build over signatures `sigs` (`id`, `signature`):
+    * banding, then band-collision-only star edges by default (the
+    * reference's mode), or, with a positive `jaccardThreshold`, every
+    * bucket pair kept at or above the signature-estimate Jaccard — the
+    * verify that templated corpora need, where every doc collides in SOME
+    * band. */
+  def lshPairs(sigs: DataFrame, cfg: MinHashConfig): DataFrame =
+    verifyPairs(
+      candidatePairs(bandRows(sigs, cfg), cfg, chainOnly = cfg.jaccardThreshold <= 0.0),
+      sigs, cfg.jaccardThreshold)
+
   /** Full MinHash-LSH near-dedup: returns the input rows minus non-canonical
     * near-duplicates. Canonical = min id per connected component of the
     * candidate-pair graph. */
@@ -555,10 +567,7 @@ object Dedup {
                  cfg: MinHashConfig = MinHashConfig()): DataFrame = {
     val sigs = minhashSignatures(df, idCol, textCol, cfg)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val pairs = verifyPairs(
-      candidatePairs(bandRows(sigs, cfg), cfg, chainOnly = cfg.jaccardThreshold <= 0.0),
-      sigs, cfg.jaccardThreshold)
-    val result = removeNonCanonical(df, idCol, pairs)
+    val result = removeNonCanonical(df, idCol, lshPairs(sigs, cfg))
     sigs.unpersist()
     result
   }
@@ -996,54 +1005,62 @@ object Dedup {
     result
   }
 
-  /** Shared tail: pairs → connected components → drop every row whose id
-    * maps to a component it is not the minimum of. The keep-filter is a
-    * `left_anti` join against only the *losing* ids (small), so Catalyst
-    * can broadcast it (reference contrast: driver keep_set closure,
-    * src/llm_data_pipeline/dedup/run_clustering.py:66-69). */
-  def removeNonCanonical(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    val p = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    if (p.isEmpty) { p.unpersist(); return df } // no dups: skip the CC rounds entirely
-    val comp = ConnectedComponents.run(p)
-    val losers = comp.where(col("id") =!= col("component")).select(col("id").as(idCol))
-    val out = df.join(losers, Seq(idCol), "left_anti")
-    out
-  }
+  /** Kept rows of every dedup family: `df` minus the losers of
+    * [[loserMap]]'s min-id pick, by a `left_anti` join against only the
+    * losing ids (small), so Catalyst can broadcast it (reference
+    * contrast: driver keep_set closure,
+    * src/llm_data_pipeline/dedup/run_clustering.py:66-69). Zero pairs
+    * cost one bounded probe inside [[ConnectedComponents]], and the
+    * anti-join with its empty relation folds away. */
+  def removeNonCanonical(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
+    df.join(loserMap(df, idCol, pairs).select(col("dropped_id").as(idCol)),
+      Seq(idCol), "left_anti")
 
-  /** SCORE-aware canonical selection — the curation-grade variant of
-    * the min-id keep rule every dedup family above defaults to: within
-    * each connected component of the near-duplicate graph, the survivor
-    * is the member with the HIGHEST `score` (ties broken by smallest
-    * id), so deduplication keeps the longest / highest-quality copy
-    * instead of whichever happened to get the smallest id. This is how
-    * production corpus builds pick canonicals (e.g. keep the
-    * best-quality mirror of a page, not the first-crawled one).
+  /** The one dedup tail: pairs → [[ConnectedComponents]] → one winner per
+    * component → the loser map (`dropped_id`, `canonical_id`), one row
+    * per component member that is not its winner. The reference's rule:
+    * union-find the pairs, keep one canonical per component, drop the
+    * rest (reference: src/llm_data_pipeline/dedup/dedup.py:103-130).
+    * Singletons never enter: only component members can lose. Every
+    * pair id is an id of `df`.
     *
-    * Returns the loser→winner mapping (dropped_id, canonical_id) — the
-    * provenance-report shape (x12's convention); compose with a
-    * left_anti join on dropped_id for the kept-rows shape.
+    * The id column's type picks the components: String ids go to
+    * [[ConnectedComponents.runOnStrings]], integral ids to
+    * [[ConnectedComponents.run]]. `rank` (a column over `df`) is the
+    * order: see [[pickLosers]]. */
+  def loserMap(df: DataFrame, idCol: String, pairs: DataFrame,
+               rank: Option[Column] = None): DataFrame =
+    pickLosers(df, idCol, rank,
+      if (df.schema(idCol).dataType == StringType) ConnectedComponents.runOnStrings(pairs)
+      else ConnectedComponents.run(pairs))
+
+  /** [[loserMap]]'s pick over components `comp` (`id`, `component`).
+    * With a `rank`, the member with the greatest `struct(rank, id)` wins,
+    * in Spark's ordering: NaN above every number, NULL below every value.
+    * The pipeline passes `length` (ties to the larger doc_id); x16 passes
+    * `struct(score, -id)` (score desc, NULLs last, ties to the smaller
+    * id). It is ONE max-of-struct aggregate, partial map-side: a
+    * million-member component carries one state per task, never a member
+    * list and never a window, and the winner table is component-sized.
     *
-    * Scale shape: components via the same distributed alternating-star
-    * [[ConnectedComponents]] as every dedup path; the winner per
-    * component is ONE min-of-struct aggregate — (-score, id) partial-
-    * aggregates map-side, so a million-member component carries one
-    * 16-byte state per task, never a member list and never a window;
-    * the winner table is component-sized and AQE broadcasts it back
-    * onto the members. `score` is any numeric column over `df` and is
-    * compared AS-IS (no silent integer truncation — fractional quality
-    * scores in [0,1] must rank, not collapse to 0); prefer
-    * integer-exact scores (byte lengths, token counts, micro-scaled
-    * quality) when bit-reproducibility across engines matters. */
-  def canonicalByScore(df: DataFrame, idCol: String, pairs: DataFrame,
-                       score: Column): DataFrame = {
-    val comp = ConnectedComponents.run(pairs)
-    val members = comp.join(
-      df.select(col(idCol).as("id"), score.as("__score")), "id")
-    val winners = members.groupBy("component")
-      .agg(min(struct((-col("__score")).as("ns"), col("id").as("wid"))).as("w"))
-      .select(col("component"), col("w.wid").as("canonical_id"))
-    members.join(winners, "component")
-      .where(col("id") =!= col("canonical_id"))
-      .select(col("id").as("dropped_id"), col("canonical_id"))
+    * Without a `rank` the smallest id wins, and for integral ids that is
+    * the component label itself, so no aggregate runs. String ids need a
+    * `rank`: runOnStrings' distributed labels are not the string minimum. */
+  def pickLosers(df: DataFrame, idCol: String, rank: Option[Column],
+                 comp: DataFrame): DataFrame = rank match {
+    case None =>
+      require(df.schema(idCol).dataType != StringType,
+        s"the min-id pick needs integral ids; $idCol is a string: pass a rank")
+      comp.where(col("id") =!= col("component"))
+        .select(col("id").as("dropped_id"), col("component").as("canonical_id"))
+    case Some(r) =>
+      // joined back onto `comp`, not onto the ranked members: a driver-
+      // folded `comp` is a local relation that Catalyst broadcasts
+      val winners = comp.join(df.select(col(idCol).as("id"), r.as("__rank")), "id")
+        .groupBy("component").agg(max(struct(col("__rank"), col("id"))).as("__w"))
+        .select(col("component"), col("__w.id").as("canonical_id"))
+      comp.join(winners, "component")
+        .where(col("id") =!= col("canonical_id"))
+        .select(col("id").as("dropped_id"), col("canonical_id"))
   }
 }

@@ -355,11 +355,9 @@ object Multimodal {
       .join(repSigs.select(col("id").as("dst"), col("sig").as("sig2")), "dst")
       .where(bit_count(col("sig1").bitwiseXOR(col("sig2"))) <= maxHamming)
       .select("src", "dst")
-    val comp = ConnectedComponents.run(nearPairs.unionByName(exactStars))
-    val out = sigs.select(col("id"), col("sig"))
-      .join(comp, Seq("id"), "left")
-      .select(col("id").as("asset_id"), col("sig").as("phash"),
-        least(coalesce(col("component"), col("id")), col("id")).as("cluster_id"))
+    val out = ConnectedComponents.labelRows(sigs.select(col("id"), col("sig")), "id",
+        nearPairs.unionByName(exactStars))
+      .select(col("id").as("asset_id"), col("sig").as("phash"), col("component").as("cluster_id"))
       // materialize before releasing the signature cache (this operator
       // owns the sigs lifecycle; callers only see checkpointed blocks)
       .localCheckpoint(true)

@@ -177,13 +177,14 @@ object PipelineSteps {
     }
   }
 
-  /** clustering: LSH buckets → pairs → connected components → canonical
-    * per component by max (length, doc_id) — the reference's pick order
-    * minus the absent ts (reference: dedup/dedup.py:123-130) — then
-    * anti-join the losers out. Banding, verify, pick and anti-join run
-    * distributed; connected components fold on the driver up to
-    * [[graft.core.SmallInput.SmallGraphEdges]] pairs (the one
-    * small-input switch, [[graft.core.SmallInput]]) and run the
+  /** clustering: LSH pairs ([[Dedup.lshPairs]]) → [[Dedup.loserMap]],
+    * the one dedup tail, ranked by `length`: per component the max
+    * (length, doc_id) survives — the reference's pick order minus the
+    * absent ts (reference: dedup/dedup.py:123-130) — and the losers are
+    * anti-joined out. Only component members are grouped; singletons
+    * pass straight through the anti-join. Connected components fold on
+    * the driver up to [[graft.core.SmallInput.SmallGraphEdges]] pairs
+    * (the one small-input switch, [[graft.core.SmallInput]]) and run the
     * distributed star loop above it (the reference folds every graph on
     * the driver: dedup/dedup.py:157-197 take_all + union-find). */
   case class ClusteringStep(mh: Dedup.MinHashConfig = Dedup.MinHashConfig()) extends Step {
@@ -194,32 +195,9 @@ object PipelineSteps {
       val in = r.df.persist(StorageLevel.MEMORY_AND_DISK)
       // counted only when the input was not written through the handoff
       val inRows = r.rows.getOrElse(in.count())
-      val sigs = in.select(col("doc_id").as("id"), col("signature"))
-      // band-collision-only by default (the reference's mode, star
-      // edges); a positive jaccardThreshold adds the signature-estimate
-      // verify — needed on templated corpora where every doc collides
-      // in SOME band (the minhashLsh convention)
-      val pairs = Dedup.verifyPairs(
-        Dedup.candidatePairs(Dedup.bandRows(sigs, mh), mh,
-          chainOnly = mh.jaccardThreshold <= 0.0),
-        sigs, mh.jaccardThreshold)
-      // canonical pick: per component keep max (length, doc_id) — via
-      // struct-max aggregation + join, not a window: a window would sort
-      // an entire mega-component inside one partition, while the
-      // aggregate carries one (length, doc_id) pair per group
-      val comp = ConnectedComponents.runOnStrings(pairs)
-      val withComp = in.join(comp, in("doc_id") === comp("id"), "left")
-        .withColumn("component", coalesce(col("component"), col("doc_id")))
-      // doc_id is unique by construction (sha1 over source/url/date/
-      // record id, and exact dupes die in dedup) so one keep-id selects
-      // exactly one row; distinct() guards the semi-join if that
-      // invariant is ever violated upstream
-      val best = withComp.groupBy("component")
-        .agg(max(struct(col("length"), col("doc_id"))).as("__best"))
-        .select(col("__best.doc_id").as("__keep_id")).distinct()
-      val kept = withComp
-        .join(best, withComp("doc_id") === best("__keep_id"), "left_semi")
-        .drop("id", "component")
+      val pairs = Dedup.lshPairs(in.select(col("doc_id").as("id"), col("signature")), mh)
+      val losers = Dedup.loserMap(in, "doc_id", pairs, Some(col("length")))
+      val kept = in.join(losers.select(col("dropped_id").as("doc_id")), Seq("doc_id"), "left_anti")
       val out = writeStep(kept, cfg, name)
       in.unpersist()
       StepStats(name, inRows, out, 0, Map("removed" -> (inRows - out).toString))
@@ -405,7 +383,7 @@ object PipelineSteps {
     }
   }
 
-  def all(dataDir: String): Seq[Step] = Seq(
+  def all: Seq[Step] = Seq(
     IngestStep(), CleanStep(), QualityStep(), PiiStep(), MinhashStep(),
     ClusteringStep(), TrainTokenizerStep(), TokenizeStep(), ExportStep())
 }

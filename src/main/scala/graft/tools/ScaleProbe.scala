@@ -126,12 +126,9 @@ object ScaleProbe {
             .count()),
         "d28 dupPassageReport" -> ((df: DataFrame) =>
           Dedup.dupPassageReport(df, "doc_id", "text").count()),
-        "x12 audit (pairs+CC)" -> ((df: DataFrame) => {
-          val pairs = Dedup.ngramJaccardPairs(df, "doc_id", "text",
-            n = 3, threshold = 0.8)
-          graft.operators.ConnectedComponents.run(pairs)
-            .where(col("id") =!= col("component")).count()
-        })
+        "x12 audit (pairs+CC)" -> ((df: DataFrame) =>
+          Dedup.loserMap(df, "doc_id",
+            Dedup.ngramJaccardPairs(df, "doc_id", "text", n = 3, threshold = 0.8)).count())
       )
       cliqueOps.foreach { case (name, op) =>
         val t1 = time(s"$name 1x")(op(docs1))
@@ -290,11 +287,11 @@ object ScaleProbe {
         // doc sits in a factor-sized component (the salted-replica
         // mega-cluster shape), so the argmax aggregate sees the
         // worst-case member fanout
-        "canonicalByScore" -> ((df: DataFrame) => {
+        "x16 score pick" -> ((df: DataFrame) => {
           val pairs = Dedup.minhashVerifiedPairs(df, "doc_id", "text",
             threshold = 0.8).select("src", "dst")
-          Dedup.canonicalByScore(df, "doc_id", pairs,
-            octet_length(col("text")).cast("long")).count()
+          Dedup.loserMap(df, "doc_id", pairs,
+            Some(struct(octet_length(col("text")).cast("long"), -col("doc_id")))).count()
         })
       )
       hygieneOps.foreach { case (name, op) =>

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, Similarity}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** End-to-end dedup behavior on corpora with planted duplicates. */
@@ -441,10 +442,13 @@ class DedupSpec extends SparkSpec {
     assert(got === Seq((1L, 1L), (2L, 1L), (3L, 2L)))
   }
 
+  /** x16's score pick: score desc, ties to the smaller id. */
+  private def byScore(score: Column) = Some(struct(score, -col("doc_id")))
+
   test("canonicalByScore ranks fractional scores instead of truncating them") {
     val df = Seq((1L, 0.12), (2L, 0.91), (3L, 0.55)).toDF("doc_id", "q")
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-    val got = Dedup.canonicalByScore(df, "doc_id", pairs, col("q"))
+    val got = Dedup.loserMap(df, "doc_id", pairs, byScore(col("q")))
       .orderBy("dropped_id").as[(Long, Long)].collect().toSeq
     // all three sub-1.0 scores would cast to 0 and fall back to min-id
     // (canonical 1) — the highest-quality doc 2 must win instead
@@ -452,23 +456,30 @@ class DedupSpec extends SparkSpec {
   }
 
   test("canonicalByScore crowns the highest score per component, ties to min id") {
-    val df = Seq(
+    val df = Seq[(Long, String)](
       (1L, "short"),                // comp {1,2,3} via chain 1-2, 2-3
       (2L, "the longest text here"),
       (3L, "mid text"),
       (10L, "same len"),            // comp {10,11}: equal scores -> min id wins
       (11L, "tied len"),
+      (20L, null),                  // comp {20,21,22}: a NULL score never wins
+      (21L, "short"),
+      (22L, "nine char"),
+      (30L, "NaN"),                 // comp {30,31}: NaN ranks above every number
+      (31L, "x"),
       (99L, "isolated")             // no pairs: never appears in the mapping
     ).toDF("doc_id", "text")
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("src", "dst")
-    val got = Dedup.canonicalByScore(df, "doc_id", pairs,
-        octet_length(col("text")).cast("long"))
+    val score = when(col("text") === "NaN", lit(Double.NaN))
+      .otherwise(octet_length(col("text")).cast("double"))
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L), (30L, 31L))
+      .toDF("src", "dst")
+    val got = Dedup.loserMap(df, "doc_id", pairs, byScore(score))
       .orderBy("dropped_id").as[(Long, Long)].collect().toSeq
     // chain is one component (transitive), winner = 2 (22 bytes)
-    assert(got === Seq((1L, 2L), (3L, 2L), (11L, 10L)))
+    assert(got === Seq((1L, 2L), (3L, 2L), (11L, 10L), (20L, 22L), (21L, 22L), (31L, 30L)))
     // partitioning invariance: partial-agg argmax, no window
-    val wide = Dedup.canonicalByScore(df.repartition(13), "doc_id",
-        pairs.repartition(7), octet_length(col("text")).cast("long"))
+    val wide = Dedup.loserMap(df.repartition(13), "doc_id",
+        pairs.repartition(7), byScore(score))
       .orderBy("dropped_id").as[(Long, Long)].collect().toSeq
     assert(wide === got)
   }

@@ -262,7 +262,7 @@ class EdgeCaseSpec extends SparkSpec {
   test("canonicalByScore with an empty pair set maps nobody") {
     val df = Seq((1L, "abc")).toDF("doc_id", "text")
     val noPairs = Seq.empty[(Long, Long)].toDF("src", "dst")
-    assert(Dedup.canonicalByScore(df, "doc_id", noPairs,
-      octet_length(col("text")).cast("long")).isEmpty)
+    assert(Dedup.loserMap(df, "doc_id", noPairs,
+      Some(struct(octet_length(col("text")).cast("long"), -col("doc_id")))).isEmpty)
   }
 }

@@ -110,7 +110,7 @@ class PipelineSpec extends SparkSpec {
       // committed 40-lang artifact; the heuristic is the right labeler
       defaultLidArtifact = false,
       seqLen = 64, vocabSize = 500, exportDtype = "uint16")
-    val stats = Pipeline.run(spark, cfg, PipelineSteps.all(dataDir.toString))
+    val stats = Pipeline.run(spark, cfg, PipelineSteps.all)
     val byStep = stats.map(s => s.step -> s).toMap
 
     assert(byStep("ingest").outputRows == 6)
@@ -194,12 +194,12 @@ class PipelineSpec extends SparkSpec {
     assert(js.contains("\"step\": \"export\""))
 
     // resume-from: re-run just export reusing prior outputs
-    val stats2 = Pipeline.run(spark, cfg, PipelineSteps.all(dataDir.toString), Some("export"))
+    val stats2 = Pipeline.run(spark, cfg, PipelineSteps.all, Some("export"))
     assert(stats2.map(_.step) == Seq("export"))
 
     // int32 export path: same token stream, 4 bytes per id
     val cfg32 = cfg.copy(exportDtype = "int32")
-    Pipeline.run(spark, cfg32, PipelineSteps.all(dataDir.toString), Some("export"))
+    Pipeline.run(spark, cfg32, PipelineSteps.all, Some("export"))
     val bin32 = Files.readAllBytes(Path.of(s"$outBase/export_tokens.bin"))
     assert(bin32.length == allIds.length * 4)
     val decoded32 = bin32.grouped(4).map(b =>
@@ -213,7 +213,7 @@ class PipelineSpec extends SparkSpec {
     // unigram-LM model — ids stay under the vocab budget, packing and
     // export flow end-to-end
     val cfgUni = cfg.copy(tokenizer = "unigram")
-    Pipeline.run(spark, cfgUni, PipelineSteps.all(dataDir.toString),
+    Pipeline.run(spark, cfgUni, PipelineSteps.all,
       Some("train_tokenizer"))
     val packedU = spark.read.parquet(s"$outBase/token_packing_parquet")
     assert(packedU.count() > 0)

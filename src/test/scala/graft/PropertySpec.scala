@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.{HashFunctions, TextFunctions}
 import graft.operators.Packer
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -286,19 +287,20 @@ class PropertySpec extends SparkSpec {
 
   test("canonicalByScore equals the union-find + argmax reference") {
     import spark.implicits._
+    import graft.operators.{ConnectedComponents, Dedup}
     val edgeGen = Gen.listOfN(25,
       Gen.zip(Gen.chooseNum(0L, 19L), Gen.chooseNum(0L, 19L)))
+    val scores = (0L until 20L).map(i => i -> ((i * 37) % 11)).toMap
+    val lens = (0L until 20L).map(i => i -> ((i * 7) % 3).toLong).toMap // many ties
+    def sid(i: Long) = s"d$i" // "d10" < "d2": the string order, not the numeric one
+    val byId = (0L until 20L).map(i => (i, "x" * scores(i).toInt)).toDF("doc_id", "text")
+    val bySid = (0L until 20L).map(i => (sid(i), lens(i))).toDF("doc_id", "length")
+    // x16's score pick, the pipeline's clustering pick, the min-id default
+    val byScore = Some(struct(octet_length(col("text")).cast("long"), -col("doc_id")))
     samples(edgeGen, 6).zipWithIndex.foreach { case (raw, ci) =>
-      val edges = raw.filter { case (a, b) => a != b }
+      val edges = raw.filter { case (a, b) => a != b }.distinct
       if (edges.nonEmpty) {
-        val scores = (0L until 20L).map(i => i -> ((i * 37) % 11)).toMap
-        val df = (0L until 20L).map(i => (i, "x" * scores(i).toInt))
-          .toDF("doc_id", "text")
-        val got = graft.operators.Dedup.canonicalByScore(df, "doc_id",
-            edges.toDF("src", "dst"), octet_length(col("text")).cast("long"))
-          .orderBy("dropped_id")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-        // reference: union-find, then (score DESC, id ASC) crown per component
+        // reference: union-find, then one crown per component
         val parent = scala.collection.mutable.Map[Long, Long]()
         def find(x: Long): Long = {
           parent.getOrElseUpdate(x, x)
@@ -307,12 +309,34 @@ class PropertySpec extends SparkSpec {
         }
         edges.foreach { case (a, b) =>
           val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(ra) = rb }
-        val comps = parent.keys.toSeq.groupBy(find)
-        val want = comps.values.flatMap { members =>
-          val crown = members.minBy(m => (-scores(m), m))
-          members.filter(_ != crown).map(m => (m, crown))
-        }.toSeq.sorted
-        assert(got === want, s"graph sample $ci")
+        val comps = parent.keys.toSeq.groupBy(find).values
+        def want[T](crown: Seq[Long] => Long, id: Long => T): Set[(Any, Any)] =
+          comps.flatMap { members =>
+            val c = crown(members)
+            members.filter(_ != c).map(m => (id(m), id(c)))
+          }.toSet
+        val wantScore = want(_.minBy(m => (-scores(m), m)), identity)
+        val wantLength = want(_.maxBy(m => (lens(m), sid(m))), sid)
+        val wantMinId = want(_.min, identity)
+        // the cleaned edge count folds on the driver, one below it runs
+        // the distributed loop
+        Seq(edges.size.toLong, edges.size - 1L).foreach { bound =>
+          val longComp = ConnectedComponents.run(edges.toDF("src", "dst"),
+            smallGraphEdges = bound).localCheckpoint()
+          val strComp = ConnectedComponents.runOnStrings(
+            edges.map { case (a, b) => (sid(a), sid(b)) }.toDF("src", "dst"),
+            smallGraphEdges = bound).localCheckpoint()
+          def got(df: DataFrame, rank: Option[Column], comp: DataFrame) = {
+            val rows = Dedup.pickLosers(df, "doc_id", rank, comp).collect()
+              .map(r => (r.get(0), r.get(1)))
+            assert(rows.length == rows.toSet.size, s"graph sample $ci: a loser twice")
+            rows.toSet
+          }
+          assert(got(byId, byScore, longComp) === wantScore, s"graph sample $ci score, bound $bound")
+          assert(got(bySid, Some(col("length")), strComp) === wantLength,
+            s"graph sample $ci length, bound $bound")
+          assert(got(byId, None, longComp) === wantMinId, s"graph sample $ci min id, bound $bound")
+        }
       }
     }
   }
