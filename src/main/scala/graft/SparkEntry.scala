@@ -5375,11 +5375,10 @@ object SparkEntry {
       graft.streaming.Streaming.runToMemory(cand, "st22_tbl",
         org.apache.spark.sql.streaming.OutputMode.Append())
       val newSigs = Multimodal.imagePhashes(assets.filter(col("asset_id") >= 400))
-      val dropped = s.table("st22_tbl")
-        .join(newSigs.select(col("id").as("__new_id"), col("sig").as("s1")), "__new_id")
-        .join(corpusSigs.select(col("id").as("__idx_id"), col("sig").as("s2")), "__idx_id")
-        .where(bit_count(col("s1").bitwiseXOR(col("s2"))) <= maxHamming)
-        .select(col("__new_id").as("id")).distinct()
+      val dropped = Dedup.hammingPairs(
+          s.table("st22_tbl").select(col("__new_id").as("src"), col("__idx_id").as("dst")),
+          newSigs, corpusSigs, maxHamming)
+        .select(col("src").as("id")).distinct()
       newSigs.join(dropped, Seq("id"), "left_anti")
         .select(col("id").as("asset_id"), col("sig").as("phash"))
         .orderBy("asset_id")

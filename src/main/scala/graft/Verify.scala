@@ -34,9 +34,24 @@ object Verify {
         }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    // ALWAYS the full oracle map, even under a dev query filter: a
+    // focused re-run into an existing outDir must not truncate the
+    // oracle file a later full compare reads (a one-entry overwrite
+    // once silently reduced an sf1 compare to a single row)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(SparkEntry.oracleSql))
+    // scale twins (tools/scale_twins.py contract): same shape, only
+    // the quadratic-oracle rows; consumed by check_oracle.py --scale
+    Files.writeString(Paths.get(s"$outDir/oracle_sql_scale.json"),
+      oracleJson(SparkEntry.oracleSqlScale))
+    spark.stop()
+  }
+
+  /** The oracle files' one JSON rendering: a flat `{"name": "sql", ...}`
+    * object in the map's iteration order. Strings escape backslash,
+    * quote, and ALL control chars (<0x20) — a tab or CR in an oracle
+    * string would otherwise make the compare's json.load fail and
+    * silently zero the whole correctness check. */
+  def oracleJson(oracle: Map[String, String]): String = {
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -46,18 +61,6 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // ALWAYS the full oracle map, even under a dev query filter: a
-    // focused re-run into an existing outDir must not truncate the
-    // oracle file a later full compare reads (a one-entry overwrite
-    // once silently reduced an sf1 compare to a single row)
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // scale twins (tools/scale_twins.py contract): same shape, only
-    // the quadratic-oracle rows; consumed by check_oracle.py --scale
-    val scaleJson = SparkEntry.oracleSqlScale
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql_scale.json"), scaleJson)
-    spark.stop()
+    oracle.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
   }
 }

@@ -252,25 +252,14 @@ object Decontamination {
     val collide = corpusBands.join(evalBands, Seq("band_id", "band_hash"))
       .select(col("id").as("__c_id"), col("__ev_id")).distinct()
       .localCheckpoint(false)
-    def gramsOf(df: DataFrame, as: String) = df.select(col(idCol).as(as),
-      HashFunctions.charShingleHashes(
-        TextFunctions.normalizeForDedup(col(textCol)), cfg.ngram).as(s"${as}_g"))
-    val gC = gramsOf(corpus, "__c_id")
-      .join(collide.select("__c_id").distinct(), Seq("__c_id"), "left_semi")
-    val gE = gramsOf(evalDocs, "__ev_id")
-    // |A∪B| = |A|+|B|−|A∩B| on distinct-hash gram sets: bit-identical
-    // __j (same integer denominator) without building the union array
-    // per candidate pair (guide §2.3)
-    val verified = collide.join(gC, "__c_id").join(gE, "__ev_id")
-      .withColumn("__i",
-        size(array_intersect(col("__c_id_g"), col("__ev_id_g"))).cast("double"))
-      .withColumn("__j",
-        col("__i") / ((size(col("__c_id_g")) + size(col("__ev_id_g")))
-          .cast("double") - col("__i")))
-      .where(col("__j") >= threshold)
-    val per = verified.groupBy("__c_id")
+    val gC = Dedup.charGrams(corpus, idCol, textCol, cfg.ngram)
+      .join(collide.select(col("__c_id").as("id")).distinct(), Seq("id"), "left_semi")
+    val verified = Dedup.exactJaccardPairs(
+      collide.select(col("__c_id").as("src"), col("__ev_id").as("dst")),
+      gC, Dedup.charGrams(evalDocs, idCol, textCol, cfg.ngram), threshold)
+    val per = verified.groupBy(col("src").as("__c_id"))
       .agg(count(lit(1)).as("n_matches"),
-        round(max(col("__j")), 6).as("max_jaccard"))
+        round(max(col("jaccard")), 6).as("max_jaccard"))
     corpus.select(col(idCol))
       .join(per, col(idCol) === col("__c_id"), "left")
       .select(col(idCol),
@@ -445,8 +434,7 @@ object Decontamination {
                                  evalFps: Array[Array[Byte]]): DataFrame = {
     require(window > 0, "window must be positive")
     val evLit = typedLit(evalFps.toSeq)
-    val tk = split(regexp_replace(trim(coalesce(col(textCol), lit(""))),
-      "\\s+", " "), " ")
+    val tk = Dedup.spanTokens(col(textCol))
     // two levels of let-binding (the spanFingerprints trick): lambda
     // BODIES re-evaluate outer sub-expressions per element, lambda
     // VARIABLES evaluate once — the doc tokenizes ONCE into the outer

@@ -219,10 +219,11 @@ object Dedup {
     spanExcise(df, idCol, textCol, window, dup)
   }
 
-  /** Null-safe whitespace tokenization shared by the span operators: a
-    * null doc behaves as the empty doc (1 empty token, no windows). */
-  private def spanTokens(textCol: String): Column =
-    split(regexp_replace(trim(coalesce(col(textCol), lit(""))), "\\s+", " "), " ")
+  /** The one null-safe whitespace tokenization of the span operators
+    * (here and in [[Decontamination]]): a null doc behaves as the empty
+    * doc (1 empty token, no windows). */
+  private[operators] def spanTokens(text: Column): Column =
+    split(regexp_replace(trim(coalesce(text, lit(""))), "\\s+", " "), " ")
 
   /** The span operators' fingerprint kernel as ONE scalar column:
     * text → array of stride-1 `window`-token 16-byte fingerprints
@@ -232,12 +233,11 @@ object Dedup {
     * gets bit-identical candidates to the Column-API path. */
   def spanFingerprints(text: Column, window: Int): Column = {
     require(window > 0, "window must be positive")
-    val tk = split(regexp_replace(trim(coalesce(text, lit(""))), "\\s+", " "), " ")
     // the tokenize is a single CHILD of the one-pass kernel expression,
     // evaluated once per row — no let-binding gymnastics needed (the
     // r12 shape bound it as a lambda variable to avoid per-window
     // re-tokenization under the HOF chain this expression replaced)
-    windowFpsOfTokens(tk, window)
+    windowFpsOfTokens(spanTokens(text), window)
   }
 
   /** The window-fingerprint kernel over a token array: stride-1
@@ -280,7 +280,7 @@ object Dedup {
   def spanExcise(df: DataFrame, idCol: String, textCol: String,
                  window: Int, dupOcc: DataFrame): DataFrame = {
     require(window > 0, "window must be positive")
-    val base = df.select(col(idCol), spanTokens(textCol).as("__tk"))
+    val base = df.select(col(idCol), spanTokens(col(textCol)).as("__tk"))
       .withColumn("__n", size(col("__tk")))
     val dup = dupOcc.select(col(idCol), col("__pos"),
       (col("__pos") + window - 1).as("__e"))
@@ -512,22 +512,14 @@ object Dedup {
       collidePairs: DataFrame, threshold: Double, ngram: Int): DataFrame = {
     val collide = collidePairs.distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    def gramsOf(df: DataFrame, as: String) = df.select(col(idCol).as(as),
-      HashFunctions.charShingleHashes(
-        TextFunctions.normalizeForDedup(col(textCol)), ngram).as(s"${as}_g"))
-    val gNew = gramsOf(newDf, "__new_id")
-      .join(collide.select("__new_id").distinct(), Seq("__new_id"), "left_semi")
-    val gIdx = gramsOf(corpus, "__idx_id")
-      .join(collide.select("__idx_id").distinct(), Seq("__idx_id"), "left_semi")
-    // |A∪B| = |A|+|B|−|A∩B| on distinct-hash gram sets — same integer
-    // denominator as the union-array form, minus the per-pair union
-    // build (guide §2.3); __i staged so the intersect runs once per pair
-    val dupIds = collide.join(gNew, "__new_id").join(gIdx, "__idx_id")
-      .withColumn("__i",
-        size(array_intersect(col("__new_id_g"), col("__idx_id_g"))).cast("double"))
-      .where(col("__i") / ((size(col("__new_id_g")) + size(col("__idx_id_g")))
-        .cast("double") - col("__i")) >= threshold)
-      .select(col("__new_id").as(idCol)).distinct()
+    val gNew = charGrams(newDf, idCol, textCol, ngram)
+      .join(collide.select(col("__new_id").as("id")).distinct(), Seq("id"), "left_semi")
+    val gIdx = charGrams(corpus, idCol, textCol, ngram)
+      .join(collide.select(col("__idx_id").as("id")).distinct(), Seq("id"), "left_semi")
+    val dupIds = exactJaccardPairs(
+        collide.select(col("__new_id").as("src"), col("__idx_id").as("dst")),
+        gNew, gIdx, threshold)
+      .select(col("src").as(idCol)).distinct()
     // collide stays persisted (referenced by three downstream joins);
     // session-scoped, LRU-evictable — same convention as
     // simhashVerifiedPairs (no unpersist seam in a lazy return)
@@ -584,11 +576,54 @@ object Dedup {
     val sigs = minhashSignatures(df, idCol, textCol, cfg)
     val cand = candidatePairsEstimateGated(sigs, cfg,
       math.max(0.0, threshold - 0.3))
-    val grams = df.select(col(idCol).as("id"),
-      HashFunctions.charShingleHashes(
-        TextFunctions.normalizeForDedup(col(textCol)), cfg.ngram).as("g"))
-    exactJaccardFilter(cand, grams, threshold)
+    val grams = charGrams(df, idCol, textCol, cfg.ngram)
+    exactJaccardPairs(cand, grams, grams, threshold)
   }
+
+  /** doc → (`id`, `g`): the distinct char-`ngram` shingle hashes of the
+    * dedup-normalized text, the gram sets [[exactJaccardPairs]] compares.
+    * Never empty for non-null text: a text shorter than `ngram` is its
+    * own single shingle. */
+  private[graft] def charGrams(df: DataFrame, idCol: String, textCol: String,
+                               ngram: Int): DataFrame =
+    df.select(col(idCol).as("id"),
+      HashFunctions.charShingleHashes(
+        TextFunctions.normalizeForDedup(col(textCol)), ngram).as("g"))
+
+  /** The one exact-Jaccard check of every verified pair family:
+    * candidate pairs (`src`, `dst`) joined to their two sides' distinct
+    * gram-hash sets (`id`, `g`) — one frame for a self-join, batch and
+    * corpus for the cross-frame callers — and kept when the exact set
+    * Jaccard reaches `threshold`. Emits (`src`, `dst`, `jaccard`) in plain
+    * int-ratio arithmetic, so an external SQL engine reproduces it
+    * bit-for-bit (shingle sets travel as distinct xxh64 longs, set sizes
+    * preserved mod collision). Both sets must be non-empty, as every
+    * shingle function here makes them for non-null text; a NULL set
+    * (NULL text) never pairs under Spark's default ANSI mode. */
+  private[graft] def exactJaccardPairs(pairs: DataFrame, srcGrams: DataFrame,
+                                       dstGrams: DataFrame, threshold: Double): DataFrame = {
+    val g1 = srcGrams.select(col("id").as("src"), col("g").as("g1"))
+    val g2 = dstGrams.select(col("id").as("dst"), col("g").as("g2"))
+    pairs.join(g1, "src").join(g2, "dst")
+      // |A∪B| = |A|+|B|−|A∩B| on distinct-hash sets: identical integer
+      // denominator (and thus bit-identical jaccard double) without the
+      // per-pair union-array build — guide §2.3
+      .withColumn("__i", size(array_intersect(col("g1"), col("g2"))).cast("double"))
+      .withColumn("jaccard",
+        col("__i") / ((size(col("g1")) + size(col("g2"))).cast("double") - col("__i")))
+      .where(col("jaccard") >= threshold)
+      .select("src", "dst", "jaccard")
+  }
+
+  /** The one Hamming check: candidate pairs (`src`, `dst`) joined to their
+    * two sides' 64-bit signatures (`id`, `sig`), kept when the signatures
+    * differ in at most `maxHamming` bits. */
+  private[graft] def hammingPairs(pairs: DataFrame, srcSigs: DataFrame,
+                                  dstSigs: DataFrame, maxHamming: Int): DataFrame =
+    pairs.join(srcSigs.select(col("id").as("src"), col("sig").as("sig1")), "src")
+      .join(dstSigs.select(col("id").as("dst"), col("sig").as("sig2")), "dst")
+      .where(bit_count(col("sig1").bitwiseXOR(col("sig2"))) <= maxHamming)
+      .select("src", "dst")
 
   /** Candidate pairs with a BUCKET-LOCAL mini-signature gate: each band
     * row carries a 32-permutation slice of the signature, pairs are
@@ -602,22 +637,13 @@ object Dedup {
     * near-dup similarity levels. */
   private[graft] def candidatePairsEstimateGated(sigs: DataFrame, cfg: MinHashConfig,
                                           estThreshold: Double): DataFrame = {
-    val b = bands(cfg)
-    val r = cfg.rowsPerBand
     // mini-signature length bounded by the actual signature length, and
     // the match quota scaled to it — a small cfg.k must loosen the gate,
     // not silently demand more matches than positions exist
     val miniLen = math.min(32, cfg.k)
     val minMatches = math.ceil(estThreshold * miniLen).toInt
-    val bandStructs = array((0 until b).map { i =>
-      struct(lit(i).as("band_id"),
-        xxhash64(lit(i), slice(col("signature"), i * r + 1, r)).as("band_hash"))
-    }: _*)
-    val bandDf = sigs
-      .select(col("id"), slice(col("signature"), 1, miniLen).as("msig"),
-        explode(bandStructs).as("band"))
-      .select(col("id"), col("msig"),
-        col("band.band_id").as("band_id"), col("band.band_hash").as("band_hash"))
+    val bandDf = bandRows(sigs.withColumn("msig", slice(col("signature"), 1, miniLen)),
+      cfg, carryCols = Seq("msig"))
     val buckets = bandDf.groupBy("band_id", "band_hash")
       .agg(sort_array(collect_list(struct(col("id"), col("msig")))).as("xs"))
       .where(size(col("xs")) > 1 && size(col("xs")) <= cfg.maxBucket)
@@ -632,9 +658,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Near-duplicate pairs via SimHash banding + Hamming-distance
-    * candidates, verified by exact char-ngram Jaccard. Same
-    * oracle-checkable contract as [[minhashVerifiedPairs]]. */
   /** SimHash banding rows for Hamming radius `maxHamming`, generalized
     * Manku-style (WWW'07 §3): split the 64 bits into `blocks` blocks and
     * key each table on a combination of `blocks - maxHamming` of them.
@@ -668,6 +691,24 @@ object Dedup {
         col("band.band_hash").as("band_hash"))
   }
 
+  /** The one SimHash pair build over signatures `sigs` (`id`, `sig`):
+    * [[simhashBandRows]] banding, bucket candidates through the capped
+    * clique expansion of [[candidatePairs]] (hot band values cannot go
+    * quadratic), then [[hammingPairs]]. Recall is guaranteed at the
+    * radius wherever no bucket exceeds `maxBucket`. `blocks = 0` means
+    * classic pigeonhole, `maxHamming + 1`.
+    * Returns (`src`, `dst`) with src < dst. */
+  private[graft] def simhashPairs(sigs: DataFrame, maxHamming: Int, maxBucket: Int,
+                                  blocks: Int): DataFrame = {
+    val banded = simhashBandRows(sigs, maxHamming,
+      if (blocks > 0) blocks else maxHamming + 1)
+    hammingPairs(candidatePairs(banded, MinHashConfig(maxBucket = maxBucket)),
+      sigs, sigs, maxHamming)
+  }
+
+  /** Near-duplicate pairs via [[simhashPairs]], verified by exact
+    * char-ngram Jaccard. Same oracle-checkable contract as
+    * [[minhashVerifiedPairs]]. */
   def simhashVerifiedPairs(df: DataFrame, idCol: String, textCol: String,
                            threshold: Double, verifyNgram: Int = 4,
                            ngram: Int = 2, maxHamming: Int = 3,
@@ -678,40 +719,12 @@ object Dedup {
     val sigs = df.select(col(idCol).as("id"),
       HashFunctions.simhash64(TextFunctions.normalizeForDedup(col(textCol)), ngram).as("sig"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val banded = simhashBandRows(sigs, maxHamming,
-      if (blocks > 0) blocks else maxHamming + 1)
-    val cand = candidatePairs(banded, MinHashConfig(maxBucket = maxBucket))
-    val s1 = sigs.select(col("id").as("src"), col("sig").as("sig1"))
-    val s2 = sigs.select(col("id").as("dst"), col("sig").as("sig2"))
-    val withinHamming = cand.join(s1, "src").join(s2, "dst")
-      .where(bit_count(col("sig1").bitwiseXOR(col("sig2"))) <= maxHamming)
-      .select("src", "dst")
-    val grams = df.select(col(idCol).as("id"),
-      HashFunctions.charShingleHashes(
-        TextFunctions.normalizeForDedup(col(textCol)), verifyNgram).as("g"))
-    exactJaccardFilter(withinHamming, grams, threshold)
+    val grams = charGrams(df, idCol, textCol, verifyNgram)
+    exactJaccardPairs(simhashPairs(sigs, maxHamming, maxBucket, blocks),
+      grams, grams, threshold)
   }
 
-  /** Keep only candidate pairs whose exact shingle-set Jaccard reaches
-    * `threshold`; emits the jaccard value (plain int-ratio arithmetic, so
-    * an external SQL engine reproduces it bit-for-bit — shingle sets
-    * travel as distinct xxh64 longs, set sizes preserved mod collision). */
-  private def exactJaccardFilter(pairs: DataFrame, grams: DataFrame,
-                                 threshold: Double): DataFrame = {
-    val g1 = grams.select(col("id").as("src"), col("g").as("g1"))
-    val g2 = grams.select(col("id").as("dst"), col("g").as("g2"))
-    pairs.join(g1, "src").join(g2, "dst")
-      // |A∪B| = |A|+|B|−|A∩B| on distinct-hash sets: identical integer
-      // denominator (and thus bit-identical jaccard double) without the
-      // per-pair union-array build — guide §2.3
-      .withColumn("__i", size(array_intersect(col("g1"), col("g2"))).cast("double"))
-      .withColumn("jaccard",
-        col("__i") / ((size(col("g1")) + size(col("g2"))).cast("double") - col("__i")))
-      .where(col("jaccard") >= threshold)
-      .select("src", "dst", "jaccard")
-  }
-
-  /** SimHash near-dedup: 64-bit simhash, 4×16-bit band blocking, Hamming
+  /** SimHash near-dedup: 64-bit simhash, block-combination banding, Hamming
     * distance <= maxHamming verification (classic Charikar'02 /
     * Manku et al. WWW'07 construction — public algorithms). */
   def simhash(df: DataFrame, idCol: String, textCol: String,
@@ -720,18 +733,8 @@ object Dedup {
     val sigs = Partitioning.ensureParallelism(df).select(col(idCol).as("id"),
         HashFunctions.simhash64(TextFunctions.normalizeForDedup(col(textCol)), ngram).as("sig"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // block-combination banding (see simhashBandRows): recall-guaranteed
-    // at the radius; bucket grouping reuses the capped clique expansion
-    // so hot band values cannot go quadratic
-    val banded = simhashBandRows(sigs, maxHamming,
-      if (blocks > 0) blocks else maxHamming + 1)
-    val cand = candidatePairs(banded, MinHashConfig(maxBucket = maxBucket))
-    val s1 = sigs.select(col("id").as("src"), col("sig").as("sig1"))
-    val s2 = sigs.select(col("id").as("dst"), col("sig").as("sig2"))
-    val pairs = cand.join(s1, "src").join(s2, "dst")
-      .where(bit_count(col("sig1").bitwiseXOR(col("sig2"))) <= maxHamming)
-      .select("src", "dst")
-    val result = removeNonCanonical(df, idCol, pairs)
+    val result = removeNonCanonical(df, idCol,
+      simhashPairs(sigs, maxHamming, maxBucket, blocks))
     sigs.unpersist()
     result
   }
@@ -848,10 +851,8 @@ object Dedup {
     // SQL oracle still hash-matches). Measured ~2x on this operator's
     // verify stage (same rework as repetitionSignals, d24).
     val sh = Partitioning.ensureParallelism(df).select(col(idCol).as("id"),
-        array_distinct(TextFunctions.wordShingleHashes(col(textCol), n)).as("sh"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        array_distinct(TextFunctions.wordShingleHashes(col(textCol), n)).as("g"))
     val sigs = minhashSignatures(df, idCol, textCol, cfg)
-      .persist(StorageLevel.MEMORY_AND_DISK)
     // two-stage verification: the cheap signature estimate prunes the
     // candidate flood BEFORE any pair leaves its LSH bucket (see
     // candidatePairsEstimateGated), ahead of the exact word-shingle
@@ -860,22 +861,7 @@ object Dedup {
     // deliberately loose.
     val cand = candidatePairsEstimateGated(sigs, cfg,
       math.max(0.0, threshold * 0.5))
-    val s1 = sh.select(col("id").as("src"), col("sh").as("sh1"))
-    val s2 = sh.select(col("id").as("dst"), col("sh").as("sh2"))
-    val pairs = cand.join(s1, "src").join(s2, "dst")
-      .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))).cast("double"))
-      // |A∪B| = |A|+|B|−|A∩B| exactly (both sides are array_distinct
-      // sets): same integer denominator as size(array_union(...)), so
-      // the double compare is bit-identical — but the per-pair
-      // hash-union array build is gone (guide §2.3: the union walked
-      // and materialized n1+n2 elements per candidate pair; size() of
-      // an existing array is O(1))
-      .withColumn("uni", (size(col("sh1")) + size(col("sh2"))).cast("double") - col("inter"))
-      .where(col("uni") > 0 && col("inter") / col("uni") >= threshold)
-      .select("src", "dst")
-    sh.unpersist()
-    sigs.unpersist()
-    pairs
+    exactJaccardPairs(cand, sh, sh, threshold).select("src", "dst")
   }
 
   /** N-gram Jaccard near-dedup: exact Jaccard over word n-gram sets,
@@ -959,26 +945,11 @@ object Dedup {
                     centroids: DataFrame, threshold: Double,
                     maxCell: Int = 100000, cellCap: Int = 512): DataFrame = {
     require(cellCap > 0, "cellCap must be positive")
-    val Array(cidCol, cvecCol) = centroids.columns.take(2)
-    val cents: Seq[(Long, Seq[Double])] = centroids
-      .select(col(cidCol).cast("long"),
-        transform(col(cvecCol), _.cast("double")))
-      .collect().toSeq
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-      .sortBy(_._1)
-    require(cents.nonEmpty, "semanticDedup needs at least one centroid")
-    require(cents.map(_._1).distinct.size == cents.size,
-      "semanticDedup centroid ids must be unique")
-    // (cosine, -centroid_id) struct max == argmax by (sim DESC, id ASC):
-    // exact ties keep the smaller centroid id, matching a rank window
-    val centsLit = typedLit(cents)
-    val scored = transform(centsLit, c => struct(
-      HashFunctions.cosineSim(col("__vecd"), c.getField("_2")).as("s"),
-      (-c.getField("_1")).as("ncid")))
+    val cents = Similarity.collectCentroids(centroids)
     val assigned = df
       .select(col(idCol).as("id"),
         transform(col(vecCol), _.cast("double")).as("__vecd"))
-      .withColumn("cell", -array_max(scored).getField("ncid"))
+      .withColumn("cell", Similarity.cellArgmax(col("__vecd"), cents))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // one count per cell — bounded by the centroid count (model-sized,
     // not corpus-sized), so the broadcast is safe by construction;

@@ -319,12 +319,12 @@ object Multimodal {
     Dedup.simhashBandRows(sigs, maxHamming, maxHamming + 1)
 
   /** Perceptual near-duplicate image clusters: aHash signatures,
-    * SimHash-style pigeonhole banding (recall-guaranteed at the
-    * Hamming radius), bucket-local candidate pairs, exact
-    * `bit_count(xor)` verify, then distributed connected components —
-    * the multimodal twin of text SimHash dedup (x02), sharing its
-    * banding/pair/CC machinery. Returns every image with its cluster
-    * id (component min) and cluster size.
+    * SimHash pigeonhole banding (recall-guaranteed at the Hamming
+    * radius), bucket-local candidate pairs and the exact
+    * `bit_count(xor)` verify — text SimHash dedup's (x02) one pair
+    * build, [[Dedup.simhashPairs]] — then connected components.
+    * Returns every image with its cluster id (component min) and
+    * cluster size.
     *
     * Skew is killed BEFORE banding: identical signatures (distance 0 —
     * they always pass the verify) collapse to one representative per
@@ -346,15 +346,8 @@ object Multimodal {
     val exactStars = sigs.join(reps, "sig")
       .where(col("id") =!= col("rep"))
       .select(col("rep").as("src"), col("id").as("dst"))
-    val repSigs = reps.select(col("rep").as("id"), col("sig"))
-    val banded = Dedup.simhashBandRows(repSigs, maxHamming, maxHamming + 1)
-    val cand = Dedup.candidatePairs(banded,
-      Dedup.MinHashConfig(maxBucket = maxBucket))
-    val nearPairs = cand
-      .join(repSigs.select(col("id").as("src"), col("sig").as("sig1")), "src")
-      .join(repSigs.select(col("id").as("dst"), col("sig").as("sig2")), "dst")
-      .where(bit_count(col("sig1").bitwiseXOR(col("sig2"))) <= maxHamming)
-      .select("src", "dst")
+    val nearPairs = Dedup.simhashPairs(reps.select(col("rep").as("id"), col("sig")),
+      maxHamming, maxBucket, maxHamming + 1)
     val out = ConnectedComponents.labelRows(sigs.select(col("id"), col("sig")), "id",
         nearPairs.unionByName(exactStars))
       .select(col("id").as("asset_id"), col("sig").as("phash"), col("component").as("cluster_id"))

@@ -248,31 +248,29 @@ object Similarity {
         .map { case (v, i) => (i.toLong, v.toArray.toSeq) }.toSeq)
   }
 
-  /** Nearest-cell id for `vec` against a literal centroid table:
-    * struct-max over (cosine, -centroid_id) — ties keep the smaller
-    * centroid id, the order a (csim DESC, id ASC) rank window would
-    * produce. Zero shuffle: the bounded centroid table ships inside the
-    * projection. */
-  private[operators] def cellArgmax(vecD: Column,
-                                    cents: Seq[(Long, Seq[Double])]): Column = {
-    val scored = transform(typedLit(cents), c => struct(
+  /** The one centroid scoring array: one (`s` = cosine, `ncid` =
+    * -centroid_id) struct per centroid of a literal table, so its struct
+    * order is (cosine DESC, centroid id ASC) — the order a rank window
+    * would produce, exact ties to the smaller centroid id. Zero shuffle:
+    * the bounded centroid table ships inside the projection. */
+  private def scoredCells(vecD: Column, cents: Seq[(Long, Seq[Double])]): Column =
+    transform(typedLit(cents), c => struct(
       graft.functions.HashFunctions.cosineSim(vecD, c.getField("_2")).as("s"),
       (-c.getField("_1")).as("ncid")))
-    -array_max(scored).getField("ncid")
-  }
+
+  /** Nearest-cell id for `vec`: the struct-max of [[scoredCells]]. */
+  private[operators] def cellArgmax(vecD: Column,
+                                    cents: Seq[(Long, Seq[Double])]): Column =
+    -array_max(scoredCells(vecD, cents)).getField("ncid")
 
   /** Top-`nProbe` cell ids for a query vector, as an array, ordered
     * (cosine DESC, centroid_id ASC): sort the literal-scored struct
     * array ascending, reverse, slice. Same zero-shuffle shape as
     * [[cellArgmax]]. */
   private[operators] def probeCells(vecD: Column, cents: Seq[(Long, Seq[Double])],
-                                    nProbe: Int): Column = {
-    val scored = transform(typedLit(cents), c => struct(
-      graft.functions.HashFunctions.cosineSim(vecD, c.getField("_2")).as("s"),
-      (-c.getField("_1")).as("ncid")))
-    transform(slice(reverse(array_sort(scored)), 1, nProbe),
+                                    nProbe: Int): Column =
+    transform(slice(reverse(array_sort(scoredCells(vecD, cents))), 1, nProbe),
       s => -s.getField("ncid"))
-  }
 
   /** IVF-style approximate top-k: corpus is assigned to the nearest of
     * `nCentroids` centroids, queries probe the `nProbe` nearest centroid
@@ -404,13 +402,8 @@ object Similarity {
     * explode, no join. */
   def centroidAssign(df: DataFrame, idCol: String, vecCol: String,
                      centroids: DataFrame): DataFrame = {
-    val cents = collectCentroids(centroids)
-    val centsLit = typedLit(cents)
-    val vecd = transform(col(vecCol), _.cast("double"))
-    val scored = transform(centsLit, c => struct(
-      graft.functions.HashFunctions.cosineSim(vecd, c.getField("_2")).as("s"),
-      (-c.getField("_1")).as("ncid")))
-    val best = array_max(scored)
+    val best = array_max(scoredCells(transform(col(vecCol), _.cast("double")),
+      collectCentroids(centroids)))
     df.select(col(idCol),
       (-best.getField("ncid")).as("cell"),
       best.getField("s").as("csim"))

@@ -368,4 +368,82 @@ class PropertySpec extends SparkSpec {
       assert(got === deg.toSet, s"graph sample $ci k=$k")
     }
   }
+
+  // texts for the shared pair stages: a tiny vocabulary (plenty of true
+  // near-dups), plus empty text, NULL text and texts shorter than the
+  // 5-gram, which every verified family must survive
+  private val pairText: Gen[Option[String]] = Gen.frequency(
+    6 -> Gen.chooseNum(1, 8).flatMap(n => Gen.listOfN(n, Gen.oneOf("ab", "cd", "ef")))
+      .map(ws => Some(ws.mkString(" "))),
+    1 -> Gen.const(Some("")),
+    1 -> Gen.const(None),
+    1 -> Gen.oneOf("x", "ab", "c d").map(Some(_)))
+
+  test("exactJaccardPairs equals brute-force set Jaccard, self-join and batch vs corpus") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    val cases = samples(Gen.zip(Gen.listOfN(12, pairText), Gen.listOfN(5, pairText)), 5)
+    assert(cases.nonEmpty)
+    cases.zipWithIndex.foreach { case ((base, extra), ci) =>
+      // exact duplicates inside the corpus, and batch rows copied from it
+      val corpus = (base ++ base.take(3)).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      val batch = (extra ++ base.slice(3, 5)).zipWithIndex.map { case (t, i) => (1000L + i, t) }
+      def grams(rows: Seq[(Long, Option[String])]) =
+        Dedup.charGrams(rows.toDF("doc_id", "text"), "doc_id", "text", 5)
+      def sets(rows: Seq[(Long, Option[String])]): Map[Long, Set[String]] =
+        rows.collect { case (id, Some(t)) => id -> charGrams(t) }.toMap
+      def brute(pairs: Seq[(Long, Long)], a: Map[Long, Set[String]],
+                b: Map[Long, Set[String]]): Seq[(Long, Long, Double)] =
+        pairs.flatMap { case (s, d) =>
+          for (x <- a.get(s); y <- b.get(d))
+            yield (s, d, x.intersect(y).size.toDouble / x.union(y).size)
+        }
+      val selfPairs = for ((i, _) <- corpus; (j, _) <- corpus if i < j) yield (i, j)
+      // plus pairs whose id is missing from one side: they never verify
+      val crossPairs = (for ((n, _) <- batch; (c, _) <- corpus) yield (n, c)) ++
+        Seq((1099L, 0L), (1000L, 99L))
+      val cg = grams(corpus)
+      Seq(("self", selfPairs, cg, cg, sets(corpus), sets(corpus)),
+          ("cross", crossPairs, grams(batch), cg, sets(batch), sets(corpus)))
+        .foreach { case (kind, pairs, srcG, dstG, srcS, dstS) =>
+          val all = brute(pairs, srcS, dstS)
+          // thresholds that some pair meets exactly, so a strict compare
+          // would lose it: the top (exact duplicates), the median, zero
+          val js = all.map(_._3).distinct.sorted
+          Seq(0.0, js(js.size / 2), js.last).foreach { t =>
+            val got = Dedup.exactJaccardPairs(pairs.toDF("src", "dst"), srcG, dstG, t)
+              .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+            assert(got === all.filter(_._3 >= t).toSet, s"sample $ci $kind t=$t")
+          }
+        }
+    }
+  }
+
+  test("simhashPairs at blocks = h + 1 equals brute-force Hamming over all pairs") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    // random signatures, copies at Hamming 0..h+1 from a random base
+    // (so every radius boundary is hit), and exact duplicates
+    val flips = Gen.listOfN(4, Gen.chooseNum(0, 63))
+    val row = Gen.zip(Gen.choose(Long.MinValue, Long.MaxValue), Gen.chooseNum(0, 9),
+      Gen.chooseNum(0, 4), flips)
+    val cases = samples(Gen.listOfN(30, row), 4)
+    assert(cases.nonEmpty)
+    cases.zipWithIndex.foreach { case (rows, ci) =>
+      val sigs = rows.foldLeft(Vector.empty[Long]) { case (acc, (r, base, k, bits)) =>
+        if (acc.isEmpty || base > 5) acc :+ r
+        else acc :+ bits.distinct.take(k).foldLeft(acc(base % acc.size))((s, b) => s ^ (1L << b))
+      }
+      val df = sigs.zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("id", "sig")
+      Seq(1, 2, 3).foreach { h =>
+        val got = Dedup.simhashPairs(df, h, maxBucket = 1000, blocks = h + 1)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        val want = (for (i <- sigs.indices; j <- sigs.indices
+          if i < j && java.lang.Long.bitCount(sigs(i) ^ sigs(j)) <= h)
+          yield (i.toLong, j.toLong)).toSet
+        assert(want.nonEmpty, s"sample $ci h=$h plants no pair")
+        assert(got === want, s"sample $ci h=$h")
+      }
+    }
+  }
 }
