@@ -214,11 +214,8 @@ object Bench {
     } catch { case _: Throwable => () }
 
     // optional comma-separated query-name filter for focused profiling
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    val selected = SparkEntry.select(only)
     // sf1 modes: "on" (default — runs in a full bench), "skip", or
     // "force" (runs even in SPARK_GRAFT_ONLY focused mode — the idle
     // re-measure path for individually-flagged rows)

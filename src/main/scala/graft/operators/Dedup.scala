@@ -380,7 +380,11 @@ object Dedup {
     * Catalyst [[graft.functions.MinHashSignature]] expression. */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         cfg: MinHashConfig = MinHashConfig()): DataFrame =
-    Partitioning.ensureParallelism(df).select(
+    signatureProjection(Partitioning.ensureParallelism(df), idCol, textCol, cfg)
+
+  private def signatureProjection(df: DataFrame, idCol: String, textCol: String,
+                                  cfg: MinHashConfig): DataFrame =
+    df.select(
       col(idCol).as("id"),
       HashFunctions.minhash(TextFunctions.normalizeForDedup(col(textCol)),
         cfg.k, cfg.ngram, cfg.seed).as("signature"))
@@ -850,9 +854,15 @@ object Dedup {
     // Jaccard is preserved modulo 64-bit collisions; the string-gram
     // SQL oracle still hash-matches). Measured ~2x on this operator's
     // verify stage (same rework as repetitionSignals, d24).
-    val sh = Partitioning.ensureParallelism(df).select(col(idCol).as("id"),
+    // one repartition feeds both sides. Null ids go first (no pair can
+    // join them): the join-inferred not-null filter then sits below the
+    // shingle side's exchange and the signature side's alike, so the two
+    // exchanges are one plan and AQE reuses it instead of shuffling twice
+    val wide = Partitioning.ensureParallelism(
+      df.select(idCol, textCol).where(col(idCol).isNotNull))
+    val sh = wide.select(col(idCol).as("id"),
         array_distinct(TextFunctions.wordShingleHashes(col(textCol), n)).as("g"))
-    val sigs = minhashSignatures(df, idCol, textCol, cfg)
+    val sigs = signatureProjection(wide, idCol, textCol, cfg)
     // two-stage verification: the cheap signature estimate prunes the
     // candidate flood BEFORE any pair leaves its LSH bucket (see
     // candidatePairsEstimateGated), ahead of the exact word-shingle

@@ -13,7 +13,7 @@ import re
 import sys
 
 # oracles whose VALUES tables pin measured sf0.01 constants (grep
-# "Pinned at sf0.01" in SparkEntry.scala; e03/e04/e05 recall pins are
+# "Pinned at sf0.01" in src/main/scala/graft/gates/; e03/e04/e05 recall pins are
 # called out in the verify skill's gotchas)
 PINNED = {
     "b03_join_hints", "d20_trained_lid", "d21_hard_lid",

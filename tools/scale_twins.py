@@ -6,7 +6,8 @@ Jaccard / cosine / Hamming graphs and their closures).
 At the sf0.01 gate the driver runs the primary oracle SQL unchanged.
 At stepped-up SFs (tools/ScaleData 10x dirs) the primary forms time out
 — the ORACLE, not the engine, is the quadratic party (round-9 sweep).
-The twins in `SparkEntry.oracleSqlScale` (dumped by Verify as
+The twins (`scaleTwin` of the gate records in src/main/scala/graft/gates/,
+collected by `SparkEntry.oracleSqlScale` and dumped by Verify as
 `oracle_sql_scale.json`) keep every projection / filter / aggregation
 of the primary verbatim, but read their pair graph from `tw_*` temp
 tables that this module materializes with vectorized exact math:
@@ -33,7 +34,7 @@ Equivalence is asserted, not assumed: tools/check_oracle.py --scale
 exactly; the sf1 sweep then runs twins where primaries time out.
 
 Gram/sig constructions are copied verbatim from the primary oracle SQL
-in SparkEntry.scala (single-sourced there; these fragments must stay
+in the gate modules (single-sourced there; these fragments must stay
 in lockstep — the twin-check run catches drift).
 """
 import numpy as np
@@ -43,7 +44,8 @@ T = 0.8                      # Jaccard threshold shared by every gram family
 COS_BORDER = 1e-9            # numpy-vs-DuckDB float fold divergence guard
 
 # ---------------------------------------------------------------- gram CTEs
-# verbatim from SparkEntry primaries (x01 / x02 / ngramGraphCtesSql)
+# verbatim from the primaries (x01 / x02 in gates/DedupGates.scala,
+# ngramGraphCtesSql in gates/Fixtures.scala)
 GRAM_CTES = {
     "char5": r"""n AS (SELECT doc_id, lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS s
        FROM documents),
@@ -67,7 +69,7 @@ S1_SQL = r"""SELECT doc_id, text FROM (
       ORDER BY doc_id) AS rn
     FROM documents) WHERE rn = 1"""
 
-# verbatim from SparkEntry phashCtesSql (m06)
+# verbatim from phashCtesSql in gates/Fixtures.scala (m06)
 PHASH_SQL = r"""WITH ids AS (SELECT doc_id AS id FROM documents WHERE doc_id % 3 = 0),
    g AS (SELECT id, list_transform(range(0, 64), i ->
        ((i*4 + id) % 256) + ((i*2 + id*3) % 256) + ((i + id*7) % 256)) AS gray
