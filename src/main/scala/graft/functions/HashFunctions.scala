@@ -11,7 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Hash / sketch expressions the built-in function set lacks.
   *
   * All are deterministic custom Catalyst `Expression`s (preference order
-  * per the engine design: built-ins > custom Expression > mapPartitions).
+  * per the engine design: built-ins > custom Expression > per-row UDF
+  * through `PerRow` > `mapPartitions` only for partition state).
   * They evaluate on `UTF8String` bytes directly — no JVM String
   * allocation on the hot path — which is what keeps a 128-perm MinHash
   * affordable over billions of documents.

@@ -101,8 +101,8 @@ object PiiFunctions {
   /** Heuristic PERSON redaction - the zero-dependency stand-in for the
     * reference's Presidio/spaCy NER (reference: src/llm_data_pipeline/
     * pii/run.py:182-300): `Xx Xx` capitalized bigrams become <NAME>.
-    * Deliberately conservative; a real NER model slots in via
-    * mapPartitions behind the same column contract. */
+    * Deliberately conservative; a real NER model slots in as a per-row
+    * column ([[graft.operators.TrainedNer]]) behind the same contract. */
   def redactNames(c: Column): Column =
     regexp_replace(c, "\\b[A-Z][a-z]+ [A-Z][a-z]+\\b", "<NAME>")
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.PerRow
 import graft.functions.{HashFunctions, TextFunctions}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
@@ -528,9 +529,7 @@ object Decontamination {
                  minWords: Long = 50L, maxWords: Long = 100000L,
                  maxDupFrac: Double = 0.2, maxTopFrac: Double = 0.2,
                  minStopHits: Int = 2): DataFrame = {
-    val lowerCols = df.columns.map(_.toLowerCase).toSet
-    val p = Iterator.iterate("__gq")(_ + "_")
-      .dropWhile(x => lowerCols.exists(_.startsWith(x))).next()
+    val p = PerRow.freshPrefix(df, "__gq")
     val t = col(textCol)
     val staged = repetitionSignals(df, textCol)
       .withColumn(s"${p}_toks",
@@ -603,9 +602,7 @@ object Decontamination {
     * gram, so they score dup=0, top=1 — same CASE the oracle takes. */
   def repetitionSignals(df: DataFrame, textCol: String,
                         dupN: Int = 3, topN: Int = 2): DataFrame = {
-    val lowerCols = df.columns.map(_.toLowerCase).toSet
-    val p = Iterator.iterate("__rep")(_ + "_")
-      .dropWhile(x => lowerCols.exists(_.startsWith(x))).next()
+    val p = PerRow.freshPrefix(df, "__rep")
     val staged = df
       .withColumn(s"${p}_nrm", TextFunctions.normalizeForDedup(col(textCol)))
       .withColumn(s"${p}_th",

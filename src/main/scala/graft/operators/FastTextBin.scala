@@ -1,9 +1,9 @@
 package graft.operators
 
+import graft.core.PerRow
 import java.io.{BufferedInputStream, DataOutputStream, FileInputStream, FileOutputStream}
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StringType, StructType}
 
 /** fastText `.bin` supervised-model loader — the reference's
   * lid.176.bin seam (reference: src/llm_data_pipeline/quality/
@@ -550,29 +550,18 @@ object FastTextBin {
 
   // ====================== DataFrame integration ======================
 
-  /** Append `outCol` (top-1 label) and `probCol` to each row — the
-    * executor-singleton broadcast pattern (R4/P7), zero shuffle, NULL
-    * text -> NULL label (the [[TrainedLid.predict]] convention). */
+  /** The top-1 `(label, prob)` struct of each row's text, as a column:
+    * a Scala UDF over the broadcast model, zero shuffle, NULL text ->
+    * NULL struct (the [[TrainedLid.label]] convention). */
+  def predict(text: Column, model: FtModel): Column = {
+    val bc = SparkSession.active.sparkContext.broadcast(model)
+    udf((t: String) => if (t == null) null else bc.value.predict(t)).apply(text)
+  }
+
+  /** `df` plus `outCol` (top-1 label) and `probCol`, the [[predict]] of
+    * `textCol`, appended through [[PerRow.append]]. */
   def predictDf(df: DataFrame, textCol: String, model: FtModel,
                 outCol: String = "lang_pred_ft",
-                probCol: String = "lang_prob_ft"): DataFrame = {
-    val spark = df.sparkSession
-    val bc = spark.sparkContext.broadcast(model)
-    val tIdx = df.schema.fieldIndex(textCol)
-    val outSchema = StructType(df.schema.fields)
-      .add(outCol, StringType, nullable = true)
-      .add(probCol, DoubleType, nullable = true)
-    df.mapPartitions { it =>
-      val m = bc.value
-      it.map { r =>
-        if (r.isNullAt(tIdx)) Row.fromSeq(r.toSeq :+ null :+ null)
-        else {
-          // the reference normalizes to single-space joined tokens
-          // before predicting (quality/model.py LanguageFilter.normalize)
-          val (label, prob) = m.predict(r.getString(tIdx))
-          Row.fromSeq(r.toSeq :+ label :+ prob)
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
+                probCol: String = "lang_prob_ft"): DataFrame =
+    PerRow.append(df, Seq(outCol, probCol), predict(col(textCol), model))
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.PerRow
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -8,7 +9,7 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 
 /** Multimodal column operators: image/audio/video as opaque `binary`
-  * columns with typed metadata, processed in bounded batches.
+  * columns with typed metadata, decoded one asset at a time.
   *
   * Image (PPM P6), audio (WAV PCM16) and video (YUV4MPEG2/C420) are
   * REAL codecs implemented dependency-free below — synthesis produces
@@ -17,10 +18,9 @@ import java.nio.charset.StandardCharsets
   * production build would swap in compressed codecs via JNI; the
   * formats here are the standard uncompressed interchange ones.)
   *
-  * Scale design: decoding runs in `mapPartitions` over `batchSize`
-  * groups — the executor-singleton/batched pattern every heavy model
-  * step in this engine uses — so decoder state amortizes per partition
-  * and peak memory is bounded by the batch, not the partition.
+  * Scale design: each decoder is a stateless per-row Scala UDF over the
+  * binary column, appended through [[graft.core.PerRow]], so it runs
+  * once per asset and peak memory is one decoded asset per task.
   */
 object Multimodal {
 
@@ -175,12 +175,6 @@ object Multimodal {
       StructField("sample_rate", IntegerType, nullable = true),
       StructField("n_frames", IntegerType, nullable = true))), nullable = false)))
 
-  private val featureSchema = StructType(Seq(
-    StructField("asset_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false),
-    StructField("n_bytes", IntegerType, nullable = false),
-    StructField("features", ArrayType(FloatType, containsNull = false), nullable = false)))
-
   /** Deterministic synthetic asset table with REAL payloads: 8x8 PPM
     * gradients for images, 256-sample PCM16 WAVs for audio, opaque bytes
     * for video. Exercises the full binary path without external files. */
@@ -214,60 +208,55 @@ object Multimodal {
     }(enc)
   }
 
-  /** Batched feature extraction: REAL decode for image (per-channel
-    * means + 2x2 block means from actual pixels) and audio (RMS,
-    * zero-crossing rate, mean from actual samples); stub for video. */
-  def extractFeatures(assets: DataFrame, batchSize: Int = 64): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(featureSchema)
-    assets.select("asset_id", "kind", "data").mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val data = r.getAs[Array[Byte]](2)
-          val features: Array[Float] = r.getString(1) match {
-            case "image" =>
-              val img = decodePpm(data)
-              val n = img.width * img.height
-              val sums = new Array[Long](3)
-              var i = 0
-              while (i < n) {
-                sums(0) += img.rgb(i * 3) & 0xff
-                sums(1) += img.rgb(i * 3 + 1) & 0xff
-                sums(2) += img.rgb(i * 3 + 2) & 0xff
-                i += 1
-              }
-              // channel means + 2x2 grayscale block means
-              val small = resizePpm(img, 2, 2)
-              val blocks = (0 until 4).map { b =>
-                ((small.rgb(b * 3) & 0xff) + (small.rgb(b * 3 + 1) & 0xff)
-                  + (small.rgb(b * 3 + 2) & 0xff)) / (3f * 255f)
-              }
-              Array(sums(0).toFloat / n / 255f, sums(1).toFloat / n / 255f,
-                sums(2).toFloat / n / 255f) ++ blocks
-            case "audio" =>
-              val wav = decodeWav(data)
-              val n = math.max(1, wav.samples.length)
-              var sumSq = 0.0; var zc = 0; var sum = 0.0
-              var i = 0
-              while (i < wav.samples.length) {
-                val s = wav.samples(i) / 32768.0
-                sumSq += s * s; sum += s
-                if (i > 0 && (wav.samples(i) >= 0) != (wav.samples(i - 1) >= 0)) zc += 1
-                i += 1
-              }
-              Array(math.sqrt(sumSq / n).toFloat, zc.toFloat / n, (sum / n).toFloat,
-                wav.sampleRate / 48000f)
-            case _ => // video: REAL decode — mean luma of each frame
-              val vid = decodeY4m(data)
-              vid.frames.take(4).map { y =>
-                var s = 0L; var i = 0
-                while (i < y.length) { s += y(i) & 0xff; i += 1 }
-                s.toFloat / math.max(1, y.length) / 255f
-              }.toArray.padTo(4, 0f)
-          }
-          Row(r.getLong(0), r.getString(1), data.length, features.toSeq)
-        }
+  /** Per-asset feature extraction: (asset_id, kind, n_bytes, features).
+    * REAL decode for image (per-channel means + 2x2 block means from
+    * actual pixels), audio (RMS, zero-crossing rate, mean from actual
+    * samples) and video (mean luma of each of the first 4 frames). */
+  def extractFeatures(assets: DataFrame): DataFrame =
+    PerRow.append(assets.select("asset_id", "kind", "data"), Seq("n_bytes", "features"),
+      struct(length(col("data")), udf(features _).apply(col("kind"), col("data"))))
+      .drop("data")
+
+  private def features(kind: String, data: Array[Byte]): Array[Float] = kind match {
+    case "image" =>
+      val img = decodePpm(data)
+      val n = img.width * img.height
+      val sums = new Array[Long](3)
+      var i = 0
+      while (i < n) {
+        sums(0) += img.rgb(i * 3) & 0xff
+        sums(1) += img.rgb(i * 3 + 1) & 0xff
+        sums(2) += img.rgb(i * 3 + 2) & 0xff
+        i += 1
       }
-    }(enc)
+      // channel means + 2x2 grayscale block means
+      val small = resizePpm(img, 2, 2)
+      val blocks = (0 until 4).map { b =>
+        ((small.rgb(b * 3) & 0xff) + (small.rgb(b * 3 + 1) & 0xff)
+          + (small.rgb(b * 3 + 2) & 0xff)) / (3f * 255f)
+      }
+      Array(sums(0).toFloat / n / 255f, sums(1).toFloat / n / 255f,
+        sums(2).toFloat / n / 255f) ++ blocks
+    case "audio" =>
+      val wav = decodeWav(data)
+      val n = math.max(1, wav.samples.length)
+      var sumSq = 0.0; var zc = 0; var sum = 0.0
+      var i = 0
+      while (i < wav.samples.length) {
+        val s = wav.samples(i) / 32768.0
+        sumSq += s * s; sum += s
+        if (i > 0 && (wav.samples(i) >= 0) != (wav.samples(i - 1) >= 0)) zc += 1
+        i += 1
+      }
+      Array(math.sqrt(sumSq / n).toFloat, zc.toFloat / n, (sum / n).toFloat,
+        wav.sampleRate / 48000f)
+    case _ => // video: REAL decode — mean luma of each frame
+      val vid = decodeY4m(data)
+      vid.frames.take(4).map { y =>
+        var s = 0L; var i = 0
+        while (i < y.length) { s += y(i) & 0xff; i += 1 }
+        s.toFloat / math.max(1, y.length) / 255f
+      }.toArray.padTo(4, 0f)
   }
 
   /** 63-bit average-hash (aHash) over a decoded image: bit i is set
@@ -299,17 +288,12 @@ object Multimodal {
     h
   }
 
-  /** (id, sig) perceptual hashes for the image assets — the decode
-    * runs batched in mapPartitions like every binary-column op here. */
-  def imagePhashes(assets: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("sig", LongType, nullable = false))))
-    assets.filter(col("kind") === "image").select("asset_id", "data")
-      .mapPartitions { rows =>
-        rows.map(r => Row(r.getLong(0), imagePhash(r.getAs[Array[Byte]](1))))
-      }(enc)
-  }
+  /** (id, sig) perceptual hashes for the image assets — the decode runs
+    * once per image through [[PerRow.append]]. */
+  def imagePhashes(assets: DataFrame): DataFrame =
+    PerRow.append(
+      assets.filter(col("kind") === "image").select(col("asset_id").as("id"), col("data")),
+      Seq("sig"), struct(udf(imagePhash _).apply(col("data")))).drop("data")
 
   /** Public banding seam over phash signatures — (id, band_id,
     * band_hash) rows for a persistable image near-dup index (the
@@ -363,22 +347,15 @@ object Multimodal {
   /** Real image resize over the binary column: decode → nearest-neighbor
     * resample → re-encode, bounded by `maxSide` preserving aspect. */
   def resizeImages(assets: DataFrame, maxSide: Int): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(StructType(Seq(
-      StructField("asset_id", LongType, nullable = false),
-      StructField("data", BinaryType, nullable = false),
-      StructField("out_width", IntegerType, nullable = false),
-      StructField("out_height", IntegerType, nullable = false))))
-    assets.filter(col("kind") === "image").select("asset_id", "data")
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val img = decodePpm(r.getAs[Array[Byte]](1))
-          val scale = math.min(1.0, maxSide.toDouble / math.max(img.width, img.height))
-          val (ow, oh) = (math.max(1, (img.width * scale).toInt),
-            math.max(1, (img.height * scale).toInt))
-          val out = resizePpm(img, ow, oh)
-          Row(r.getLong(0), encodePpm(ow, oh, out.rgb), ow, oh)
-        }
-      }(enc)
+    val resize = udf { (data: Array[Byte]) =>
+      val img = decodePpm(data)
+      val scale = math.min(1.0, maxSide.toDouble / math.max(img.width, img.height))
+      val (ow, oh) = (math.max(1, (img.width * scale).toInt),
+        math.max(1, (img.height * scale).toInt))
+      (encodePpm(ow, oh, resizePpm(img, ow, oh).rgb), ow, oh)
+    }
+    PerRow.append(assets.filter(col("kind") === "image").select("asset_id", "data"),
+      Seq("data", "out_width", "out_height"), resize(col("data")))
   }
 
   /** Video frame sampling: explode `n_frames` metadata into every k-th

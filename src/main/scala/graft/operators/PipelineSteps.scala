@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Handoff
+import graft.core.{Handoff, PerRow}
 import graft.core.Pipeline._
 import graft.functions.{HashFunctions, PiiFunctions, TextFunctions}
 import graft.sources.WetSource
@@ -86,8 +86,11 @@ object PipelineSteps {
     }
   }
 
-  /** quality: heuristic language-ID (the pluggable stand-in for the
-    * fastText scorer, see [[TextAnalysis]]) + keep filter. */
+  /** quality: language-ID + keep filter. One labeler (the stopword
+    * heuristic, a TrainedLid artifact or a fastText `.bin`, see
+    * [[TextAnalysis]]) gives each document one `(lang, lang_score)`
+    * struct, appended once through [[PerRow.append]] and then filtered,
+    * so the labeler runs once per document. */
   case class QualityStep() extends Step {
     val name = "quality"
     def run(spark: SparkSession, cfg: PipelineConfig): StepStats = {
@@ -97,37 +100,30 @@ object PipelineSteps {
       // DEFAULTING to the committed 48-language artifact when present
       // (fixtures/models/lid48), like the reference defaults to its
       // bundled lid.176.bin; the table-driven stopword heuristic is the
-      // no-artifact fallback
-      val labeled = cfg.lidModelPath.orElse(
+      // no-artifact fallback. Labels get the reference's __label__
+      // prefix unless they carry it already (fastText's do)
+      val text = col("text")
+      val labels = cfg.lidModelPath.orElse(
           if (cfg.defaultLidArtifact) TrainedLid.defaultArtifactPath else None) match {
         case Some(p) if p.endsWith(".bin") =>
           // a real fastText artifact (the reference's lid.176.bin
-          // itself): load the public .bin format and predict through
-          // the same seam — labels already carry the __label__ prefix
-          val m = FastTextBin.read(p)
-          // the model's own confidence IS the lang_score here — the
+          // itself): the model's own confidence IS the lang_score — the
           // reference thresholds fastText's prob (quality/model.py
           // LanguageFilter.keep: `score >= self.threshold`), not a
           // side-channel heuristic
-          FastTextBin.predictDf(in, "text", m,
-              outCol = "__lid", probCol = "__lidp")
-            .withColumn("lang", when(col("__lid").startsWith("__label__"),
-              col("__lid")).otherwise(concat(lit("__label__"), col("__lid"))))
-            .withColumn("lang_score", coalesce(col("__lidp"), lit(0.0)))
-            .drop("__lid", "__lidp")
+          FastTextBin.predict(text, FastTextBin.read(p))
         case Some(p) =>
-          val m = TrainedLid.loadModel(spark, p)
-          TrainedLid.predict(in, "text", m, outCol = "__lid").
-            withColumn("lang", concat(lit("__label__"), col("__lid"))).drop("__lid")
+          struct(TrainedLid.label(text, TrainedLid.loadModel(spark, p)),
+            TextAnalysis.langIdScore(text))
         case None =>
-          in.withColumn("lang",
-            concat(lit("__label__"), TextAnalysis.langIdLabel(col("text"))))
+          struct(TextAnalysis.langIdLabel(text), TextAnalysis.langIdScore(text))
       }
-      val scored = (if (labeled.columns.contains("lang_score")) labeled
-                    else labeled.withColumn("lang_score",
-                      TextAnalysis.langIdScore(col("text"))))
+      val lang = col("lang")
+      val scored = PerRow.append(in, Seq("lang", "lang_score"), labels)
+        .withColumn("lang", when(lang.startsWith("__label__"), lang)
+          .otherwise(concat(lit("__label__"), lang)))
         .withColumn("quality_keep",
-          substring(col("lang"), 10, 10).isin(cfg.langs: _*)
+          substring(lang, 10, 10).isin(cfg.langs: _*)
             && col("lang_score") >= cfg.langThreshold)
       val out = writeStep(scored.filter(col("quality_keep")), cfg, name)
       StepStats(name, -1, out)
@@ -249,9 +245,10 @@ object PipelineSteps {
   }
 
   /** tokenize + pack: load the [[Tokenizer]] model `cfg.tokenizer` names,
-    * encode every doc with it ([[Tokenizer.encode]], the model broadcast
-    * once — the executor-singleton pattern, ActorPool equivalent, SURVEY
-    * §2.11), append eos, then the constant-length [[Packer]]. */
+    * encode every doc with it ([[Tokenizer.encode]]: the model broadcast
+    * once, a per-row UDF appended through [[PerRow.append]], the
+    * ActorPool equivalent, SURVEY §2.11), append eos, then the
+    * constant-length [[Packer]]. */
   case class TokenizeStep(numPartitions: Int = 0) extends Step {
     val name = "tokenize"
     def run(spark: SparkSession, cfg: PipelineConfig): StepStats = {

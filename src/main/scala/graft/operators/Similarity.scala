@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.PerRow
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -545,9 +546,7 @@ object Similarity {
   def quantizeInt8(df: DataFrame, vecCol: String): DataFrame = {
     // stage each intermediate ONCE (interpreted-HOF lesson, d24/d15):
     // inlined, the v/maxAbs subtrees would re-evaluate per reference
-    val lowerCols = df.columns.map(_.toLowerCase).toSet
-    val p = Iterator.iterate("__q8")(_ + "_")
-      .dropWhile(x => lowerCols.exists(_.startsWith(x))).next()
+    val p = PerRow.freshPrefix(df, "__q8")
     val v = col(s"${p}_v"); val maxAbs = col(s"${p}_m")
     val scale = col(s"${p}_s")
     val staged = df

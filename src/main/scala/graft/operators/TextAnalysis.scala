@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.PerRow
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -13,8 +14,8 @@ import org.apache.spark.sql.functions._
   * model.py:267-340) — a model file this zero-egress build cannot ship.
   * Interface parity is kept: a `(label, score)` pair per document with a
   * keep-threshold filter (reference: src/llm_data_pipeline/quality/
-  * run.py:25-44), so a real model can be swapped in via mapPartitions
-  * without touching callers.
+  * run.py:25-44), so a real model can be swapped in as a per-row column
+  * (see [[TrainedLid.label]]) without touching callers.
   */
 object TextAnalysis {
 
@@ -73,21 +74,21 @@ object TextAnalysis {
     // elimination — every branch re-ran the tokenizing pass
     graft.functions.HashFunctions.langIdLabelExpr(text, table, 0.05)
 
-  /** LID score in [0,1]: normalized stopword-evidence margin.
-    * `best / greatest(total, 1)` instead of `when(total === 0, ...)`:
-    * total = 0 implies best = 0 so the value is identical, but keeping
-    * every reference in an UNCONDITIONAL position lets codegen
-    * subexpression elimination evaluate the tokenizing pass once (CSE
-    * skips `when` branches — the d04 lesson). */
+  /** LID score in [0,1]: normalized stopword-evidence margin,
+    * `best / greatest(total, 1)` over the per-language hit counts,
+    * rounded 6dp (total = 0 implies best = 0). The hits array is
+    * referenced once, folded by one `aggregate`: QualityStep appends the
+    * score through a generator ([[graft.core.PerRow]]), which has no
+    * common-subexpression elimination, so each `element_at(hits, i)`
+    * reference would re-run the tokenizing pass. */
   def langIdScore(text: Column,
-                  table: Seq[(String, Seq[String])] = LangStopwords): Column = {
-    val hitsArr = graft.functions.HashFunctions.stopwordLangHits(
-      lower(text), table.map(_._2))
-    val hits = table.indices.map(i => element_at(hitsArr, i + 1))
-    val best = hits.reduce((a, b) => greatest(a, b)).cast("double")
-    val total = hits.reduce((a, b) => a + b).cast("double")
-    round(best / greatest(total, lit(1.0)), 6)
-  }
+                  table: Seq[(String, Seq[String])] = LangStopwords): Column =
+    aggregate(graft.functions.HashFunctions.stopwordLangHits(lower(text), table.map(_._2)),
+      struct(lit(0).as("best"), lit(0).as("total")),
+      (acc, h) => struct(greatest(acc.getField("best"), h).as("best"),
+        (acc.getField("total") + h).as("total")),
+      acc => round(acc.getField("best").cast("double") /
+        greatest(acc.getField("total").cast("double"), lit(1.0)), 6))
 
   /** BM25 relevance of each document for a bag of query `terms`
     * (Robertson/Spärck Jones; the Lucene-default formulation:
@@ -106,14 +107,11 @@ object TextAnalysis {
            k1: Double = 1.2, b: Double = 0.75,
            outCol: String = "bm25"): DataFrame = {
     require(terms.nonEmpty, "bm25 needs at least one query term")
-    // collision-free internal names (same discipline as
-    // TrainedLid.predict): withColumn/select resolve case-insensitively
-    // under the default session, so compare lowercased
-    val lowerCols = df.columns.map(_.toLowerCase).toSet
-    require(!lowerCols.contains(outCol.toLowerCase),
+    // withColumn/select resolve case-insensitively under the default
+    // session, so compare case-insensitively
+    require(!df.columns.exists(_.equalsIgnoreCase(outCol)),
       s"output column '$outCol' already exists; pass outCol=")
-    val p = Iterator.iterate("__bm25")(_ + "_")
-      .dropWhile(x => lowerCols.exists(_.startsWith(x))).next()
+    val p = PerRow.freshPrefix(df, "__bm25")
     val inCols = df.columns.map(col).toSeq
     // stage 1: tokenize ONCE per row into a projected column; the
     // per-term counts then re-read the array value instead of
@@ -161,9 +159,7 @@ object TextAnalysis {
     require(chunkTokens > 0 && overlap >= 0 && overlap < chunkTokens,
       s"need 0 <= overlap < chunkTokens, got $overlap/$chunkTokens")
     val stride = chunkTokens - overlap
-    val lowerCols = df.columns.map(_.toLowerCase).toSet
-    val p = Iterator.iterate("__chunk")(_ + "_")
-      .dropWhile(x => lowerCols.exists(_.startsWith(x))).next()
+    val p = PerRow.freshPrefix(df, "__chunk")
     // filter empties: trim strips only spaces, so tab/newline-led text
     // would otherwise yield a phantom first token (the TrainedNer
     // lesson); empty text then tokenizes to [] -> one empty chunk
@@ -329,12 +325,11 @@ object TextAnalysis {
     * Docs with fewer than two tokens have no bigrams: n_bigrams 0 and
     * null score. Note: `element_at` on a map literal is a linear scan,
     * fine at model V's (64..1k); for a 100k-word vocab, ship the model
-    * via the executor-singleton pattern (TokenizeStep) instead. */
+    * as a broadcast UDF through [[graft.core.PerRow]] (TokenizeStep)
+    * instead. */
   def bigramPerplexity(df: DataFrame, textCol: String,
                        model: BigramLmModel): DataFrame = {
-    val lowerCols = df.columns.map(_.toLowerCase).toSet
-    val p = Iterator.iterate("__lm")(_ + "_")
-      .dropWhile(x => lowerCols.exists(_.startsWith(x))).next()
+    val p = PerRow.freshPrefix(df, "__lm")
     val vp1 = model.vocabSize.toDouble + 1.0
     val tk = col(s"${p}_tk")
     // Per-feature log-probs precomputed at the driver with
@@ -448,9 +443,7 @@ object TextAnalysis {
     * on both engines for a fixed corpus. */
   def backoffPerplexity(df: DataFrame, textCol: String,
                         model: BackoffLmModel): DataFrame = {
-    val lowerCols = df.columns.map(_.toLowerCase).toSet
-    val p = Iterator.iterate("__blm")(_ + "_")
-      .dropWhile(x => lowerCols.exists(_.startsWith(x))).next()
+    val p = PerRow.freshPrefix(df, "__blm")
     val tk = col(s"${p}_tk")
     def uc(w: String): Double =
       (if (w == UnkToken) model.unkCount else model.vocab(w)).toDouble
@@ -607,9 +600,7 @@ object TextAnalysis {
     * works on a static frame or a structured stream (st08 runs it on
     * the document stream unchanged, the st06 design/apply split). */
   def dsirScore(df: DataFrame, textCol: String, model: DsirModel): DataFrame = {
-    val lowerCols = df.columns.map(_.toLowerCase).toSet
-    val p = Iterator.iterate("__dsir")(_ + "_")
-      .dropWhile(x => lowerCols.exists(_.startsWith(x))).next()
+    val p = PerRow.freshPrefix(df, "__dsir")
     val tk = col(s"${p}_tk")
     // hashed-lookup single-pass folds (LookupFunctions): same
     // position-order accumulation over the same precomputed doubles as

@@ -1,9 +1,9 @@
 package graft.operators
 
+import graft.core.PerRow
 import graft.functions.{HashFunctions, TextFunctions}
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, IntegerType, StructField, StructType}
 
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
@@ -168,21 +168,14 @@ object Tokenizer {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
   }
 
-  /** Distributed encode with the broadcast model — the executor-singleton
-    * pattern: every input column plus `ids: array<int>`, the model's
-    * [[Model.encodeText]] of the normalized `textCol`. */
+  /** Distributed encode with the broadcast model: every input column
+    * plus `ids: array<int>`, the model's [[Model.encodeText]] of the
+    * normalized `textCol` (NULL text gives NULL ids), appended through
+    * [[PerRow.append]] — a column, so Catalyst prunes `textCol` when
+    * nothing above reads it. */
   def encode(df: DataFrame, textCol: String, model: Model): DataFrame = {
     val bc = df.sparkSession.sparkContext.broadcast(model)
-    val withNorm = df.withColumn("__norm", model.normalize(col(textCol)))
-    val normIdx = withNorm.schema.fieldIndex("__norm")
-    val enc = Encoders.row(StructType(withNorm.schema.fields.filterNot(_.name == "__norm") :+
-      StructField("ids", ArrayType(IntegerType, false))))
-    withNorm.mapPartitions { rows =>
-      val m = bc.value
-      rows.map { r =>
-        val vals = (0 until r.length).filter(_ != normIdx).map(r.get)
-        Row.fromSeq(vals :+ m.encodeText(r.getString(normIdx)).toSeq)
-      }
-    }(enc)
+    val ids = udf((norm: String) => if (norm == null) null else bc.value.encodeText(norm))
+    PerRow.append(df, Seq("ids"), struct(ids(model.normalize(col(textCol)))))
   }
 }

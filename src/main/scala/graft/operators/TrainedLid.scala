@@ -1,9 +1,9 @@
 package graft.operators
 
+import graft.core.PerRow
 import graft.functions.{HashFunctions, TextFunctions}
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
 
 /** Trained language identification — the model-backed path the reference
   * gets from fastText's lid.176.bin (reference: src/llm_data_pipeline/
@@ -24,11 +24,11 @@ import org.apache.spark.sql.types.StringType
   *    weights[buckets]) — the deployment seam: ship a differently
   *    trained artifact and `loadModel` picks it up with no code change.
   *  - '''Predict''' (zero shuffle): gram hashing stays a codegen'd
-  *    column projection; scoring is a tight loop over the broadcast
-  *    weight matrix in `mapPartitions` (the executor-singleton model
-  *    pattern, R4/P7). Ties break to the alphabetically-first language;
-  *    score sums run in the doc's gram order, so predictions are
-  *    partitioning-invariant too.
+  *    column expression; scoring is a tight loop over the broadcast
+  *    weight matrix in a Scala UDF, appended once per row through
+  *    [[graft.core.PerRow]] (R4/P7). Ties break to the
+  *    alphabetically-first language; score sums run in the doc's gram
+  *    order, so predictions are partitioning-invariant too.
   */
 object TrainedLid {
 
@@ -284,57 +284,41 @@ object TrainedLid {
       rows.head.getInt(3), rows.head.getInt(4))
   }
 
-  /** Append `outCol` with the argmax-language of each row's text.
+  /** The argmax language of each row's text, as a column: a Scala UDF
+    * over the broadcast weight matrix, fed by the codegen'd gram hashes.
     * NULL text yields a NULL label (mirroring the heuristic labeler's
     * null propagation, so a downstream lang filter drops the row either
     * way instead of the model path crashing the job). */
-  def predict(df: DataFrame, textCol: String, model: LidModel,
-              outCol: String = "lang_pred_model"): DataFrame = {
-    val spark = df.sparkSession
-    val bc = spark.sparkContext.broadcast(model)
-    // collision-free helper name: withColumn silently REPLACES an
-    // existing column, which would corrupt the caller's schema — and it
-    // resolves case-INSENSITIVELY under the default session, so the
-    // check must too
-    val lowerCols = df.columns.map(_.toLowerCase).toSet
-    val gramsCol = Iterator.iterate("__lid_grams")(_ + "_")
-      .dropWhile(n => lowerCols.contains(n.toLowerCase)).next()
-    val withGrams = df.withColumn(gramsCol,
-      HashFunctions.charShingleHashes(
-        TextFunctions.normalizeForDedup(col(textCol)), model.ngram))
-    val gIdx = withGrams.schema.fieldIndex(gramsCol)
-    // the helper column is consumed HERE, not carried through the row
-    // encoder and dropped later — rows are text-sized, grams likewise
-    val outSchema = org.apache.spark.sql.types.StructType(
-      withGrams.schema.filterNot(_.name == gramsCol))
-      .add(outCol, StringType, nullable = true)
-    withGrams.mapPartitions { it =>
-      val m = bc.value
-      val nL = m.langs.length
-      val b = m.buckets
-      it.map { r =>
-        val grams = if (r.isNullAt(gIdx)) null else r.getSeq[Long](gIdx)
-        val label = if (grams == null) null
-        else {
-          var bestIdx = 0
-          var bestScore = Double.NegativeInfinity
-          var li = 0
-          while (li < nL) {
-            var s = m.priors(li)
-            val w = m.weights(li)
-            val gi = grams.iterator
-            while (gi.hasNext) {
-              val g = gi.next()
-              s += w((((g % b) + b) % b).toInt) // same pmod as training
-            }
-            if (s > bestScore) { bestScore = s; bestIdx = li } // first max wins
-            li += 1
+  def label(text: Column, model: LidModel): Column = {
+    val bc = SparkSession.active.sparkContext.broadcast(model)
+    val argmax = udf { (grams: Array[Long]) =>
+      if (grams == null) null
+      else {
+        val m = bc.value
+        val b = m.buckets
+        var bestIdx = 0
+        var bestScore = Double.NegativeInfinity
+        var li = 0
+        while (li < m.langs.length) {
+          var s = m.priors(li)
+          val w = m.weights(li)
+          var gi = 0
+          while (gi < grams.length) {
+            s += w((((grams(gi) % b) + b) % b).toInt) // same pmod as training
+            gi += 1
           }
-          m.langs(bestIdx)
+          if (s > bestScore) { bestScore = s; bestIdx = li } // first max wins
+          li += 1
         }
-        val vals = r.toSeq.zipWithIndex.collect { case (v, i) if i != gIdx => v }
-        Row.fromSeq(vals :+ label)
+        m.langs(bestIdx)
       }
-    }(Encoders.row(outSchema))
+    }
+    argmax(HashFunctions.charShingleHashes(TextFunctions.normalizeForDedup(text), model.ngram))
   }
+
+  /** `df` plus `outCol`, the [[label]] of `textCol`, appended through
+    * [[PerRow.append]]. */
+  def predict(df: DataFrame, textCol: String, model: LidModel,
+              outCol: String = "lang_pred_model"): DataFrame =
+    PerRow.append(df, Seq(outCol), struct(label(col(textCol), model)))
 }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: prediction is per-token — tokenize (codegen
   * projection), posexplode, score each token against the broadcast
-  * weight matrix in `mapPartitions` (executor-singleton model, R4/P7),
+  * weight matrix ([[TrainedLid.predict]], a per-row UDF, R4/P7),
   * reassemble documents with one groupBy on the doc id (state bounded
   * by tokens-per-document). This is the standard cost of model NER at
   * corpus scale; the regex heuristic (PiiFunctions.nerRedact) remains

@@ -63,4 +63,17 @@ class TokenizerSpec extends SparkSpec {
       assert(adversarial.map(t => copy.encodeText(t).toSeq) == before)
     }
   }
+
+  private def nullTextCase(model: String,
+                           train: org.apache.spark.sql.DataFrame => Tokenizer.Model): Unit =
+    test(s"NULL text encodes to NULL ids: $model model") {
+      val m = train(Seq("shared words here", "shared words again").toDF("text"))
+      val df = Seq((1, "shared words"), (2, null)).toDF("i", "text")
+      val ids = Tokenizer.encode(df, "text", m).orderBy("i").select("ids").as[Option[Seq[Int]]]
+        .collect().toSeq
+      assert(ids == Seq(Some(m.encodeText("shared words").toSeq), None))
+    }
+  nullTextCase("word", _ => Tokenizer.WordModel(Map("shared" -> 4, "words" -> 5)))
+  nullTextCase("BPE", BpeTrainer.trainFromCorpus(_, "text", vocabSize = 280))
+  nullTextCase("unigram", UnigramTrainer.trainFromCorpus(_, "text", vocabSize = 280))
 }
