@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
@@ -90,7 +91,10 @@ object Pipeline {
 
   /** Run a sub-sequence of steps (all by default, or resume-from), with
     * stats persisted to `pipeline_stats.json` after every step
-    * (reference: pipeline.py:144-186). */
+    * (reference: pipeline.py:144-186). Each step's `extra` gains
+    * `codegen_compiles`: the generated classes the JVM compiled while the
+    * step ran (Spark's codegen cache misses; a warm pass that recompiles
+    * is thrashing that cache). */
   def run(spark: SparkSession, cfg: PipelineConfig, steps: Seq[Step],
           resumeFrom: Option[String] = None): Seq[StepStats] = {
     val ordered = steps.sortBy(s => stepOrder.indexOf(s.name))
@@ -102,8 +106,10 @@ object Pipeline {
     val acc = new ArrayBuffer[StepStats]()
     selected.foreach { step =>
       val t0 = System.nanoTime()
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val st0 = step.run(spark, cfg)
-      val st = st0.copy(elapsedSec = (System.nanoTime() - t0) / 1e9)
+      val st = st0.copy(elapsedSec = (System.nanoTime() - t0) / 1e9, extra = st0.extra +
+        ("codegen_compiles" -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0).toString))
       acc += st
       Files.write(Paths.get(s"${cfg.outputBase}/pipeline_stats.json"),
         statsJson(acc.toSeq).getBytes("UTF-8"),

@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 /** The small-input switch: the one place that decides whether an input
   * is small enough to fold on the driver.
@@ -10,7 +11,17 @@ import org.apache.spark.sql.Dataset
   * their distributed loop above it. Each probes with [[collectAtMost]],
   * whose one bounded collect both picks the side and, on the driver
   * side, hands over the rows to fold — the input runs once, and a large
-  * input is never collected past the bound. `Ranking.withRunningSum`
+  * input is never collected past the bound. A fold's output is a local
+  * relation ([[isLocal]]), so what follows can stay on the driver too:
+  * `Dedup.loserMap` picks each folded component's winner there and
+  * hands back a local loser list. `Dedup.lshLosers` (the LSH tail of the
+  * clustering step and `minhashLsh`) folds its buckets there while they
+  * stay small: at most `SmallGraphEdges` bucket-member rows, as many
+  * distinct pairs, and in verified mode 8 x `SmallGraphEdges` signature
+  * values. Measured in a test JVM, those bounds hold 33 MB (200k
+  * (band_id, band_hash, sha1 id) rows), 14 MB (200k pairs of shared
+  * sha1 ids) and 50 MB (12,500 signatures of k = 128).
+  * `Ranking.withRunningSum`
   * bounds its offset collect with the same probe and its own limit, and
   * fails past it instead of switching. The reference folds every
   * graph on the driver (reference: src/llm_data_pipeline/dedup/
@@ -37,4 +48,10 @@ object SmallInput {
     val rows = ds.limit((n + 1L).toInt).collect()
     if (rows.length <= n) Some(rows) else None
   }
+
+  /** Whether `df` is already on the driver: its optimized plan is a local
+    * relation, such as a driver fold's output, which collects without a
+    * job and broadcasts by its true size. */
+  def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
 }

@@ -112,7 +112,7 @@ object ConnectedComponents {
     * root the minimum id of its component, so the output labeling is
     * IDENTICAL to the distributed loop's (id -> component-min, one row
     * per node that appears in any edge). */
-  private def unionFind[T](edges: Iterable[(T, T)])(implicit ord: Ordering[T]): Seq[(T, T)] = {
+  private[operators] def unionFind[T](edges: Iterable[(T, T)])(implicit ord: Ordering[T]): Seq[(T, T)] = {
     val parent = scala.collection.mutable.HashMap[T, T]()
     def find(x: T): T = {
       var r = x

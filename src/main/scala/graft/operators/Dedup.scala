@@ -1,12 +1,17 @@
 package graft.operators
 
-import graft.core.Partitioning
+import graft.core.{Partitioning, PerRow, SmallInput}
 import graft.functions.{HashFunctions, TextFunctions}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, Literal}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+
+import scala.jdk.CollectionConverters._
 
 /** Deduplication operators for document corpora.
   *
@@ -17,7 +22,8 @@ import org.apache.spark.storage.StorageLevel
   * dedup/run_clustering.py:26-77), but fully distributed: candidate
   * generation is a shuffle on band/bucket keys, clustering is
   * [[ConnectedComponents]], and the final keep-filter is one
-  * broadcastable anti-join against [[loserMap]]'s losers.
+  * broadcastable anti-join against [[loserMap]]'s losers (a local
+  * relation while the pair graph folds on the driver).
   */
 object Dedup {
 
@@ -556,16 +562,100 @@ object Dedup {
       candidatePairs(bandRows(sigs, cfg), cfg, chainOnly = cfg.jaccardThreshold <= 0.0),
       sigs, cfg.jaccardThreshold)
 
+  /** The MinHash-LSH near-dup tail of `df` (`idCol` plus `signature`):
+    * the losers of [[loserMap]] over [[lshPairs]], `rank` the pick
+    * order. While the buckets are small ([[foldLsh]]) the whole tail folds
+    * on the driver: one shuffle, two bounded collects and a local loser
+    * relation. Otherwise [[lshPairs]] → [[loserMap]] runs, over cached
+    * signatures. The losers are the same either way. */
+  def lshLosers(df: DataFrame, idCol: String, cfg: MinHashConfig,
+                rank: Option[Column] = None): DataFrame =
+    foldLsh(df, idCol, cfg, rank).getOrElse {
+      val sigs = df.select(col(idCol).as("id"), col("signature"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // loserMap has run the components once it returns
+      val losers = loserMap(df, idCol, lshPairs(sigs, cfg), rank)
+      sigs.unpersist()
+      losers
+    }
+
+  /** [[lshLosers]] on the driver, or None past the [[SmallInput]] bound
+    * (the reference folds its bucket dict on its driver:
+    * src/llm_data_pipeline/dedup/dedup.py:74-130):
+    *  - one shuffle: a window counts each LSH bucket's (band_id,
+    *    band_hash) members, and the members of the buckets
+    *    [[candidatePairs]] expands (two or more members, at most
+    *    `maxBucket` unless in star mode) are collected while at most
+    *    `SmallGraphEdges`. The window buffers a bucket in spillable
+    *    memory, never as one array, so a mega-bucket streams through;
+    *  - each bucket expands as in [[candidatePairs]], into all its pairs
+    *    or in star mode a star over it (the same components), and at most
+    *    `SmallGraphEdges` distinct pairs are kept;
+    *  - one broadcast semi-join collect, with no exchange, fetches the
+    *    pair members' rank and, in verified mode, signature, while those
+    *    are at most 8 x `SmallGraphEdges` values (12,500 signatures at
+    *    k = 128);
+    *  - a pair verifies as in [[verifyPairs]], by the same
+    *    [[graft.functions.SigMatchCount]] kernel over `size(sig1)` (a NULL
+    *    or empty signature never verifies), and the verified pairs
+    *    union-find into the components that [[driverLosers]] picks from. */
+  private def foldLsh(df: DataFrame, idCol: String, cfg: MinHashConfig,
+                      rank: Option[Column]): Option[DataFrame] = {
+    val bound = SmallInput.SmallGraphEdges
+    val star = cfg.jaccardThreshold <= 0.0
+    val n = col("n")
+    val members = SmallInput.collectAtMost(
+      bandRows(df.select(col(idCol).as("id"), col("signature")), cfg)
+        .withColumn("n", count(lit(1)).over(Window.partitionBy("band_id", "band_hash")))
+        .where(if (star) n > 1 else n > 1 && n <= cfg.maxBucket)
+        .select("band_id", "band_hash", "id"), bound)
+      .getOrElse(return None)
+    val idField = df.schema(idCol).copy(name = "id")
+    val ord: Ordering[Any] =
+      if (idField.dataType == StringType) Ordering.by[Any, String](_.asInstanceOf[String])
+      else Ordering.by[Any, Long](_.asInstanceOf[Number].longValue)
+    val expanded = members.groupBy(r => (r.get(0), r.get(1))).valuesIterator.flatMap { b =>
+      val ids = b.map(_.get(2)).sorted(ord)
+      if (star) ids.iterator.drop(1).map(ids.head -> _)
+      else ids.indices.iterator.flatMap(i => (i + 1 until ids.length).iterator.map(ids(i) -> ids(_)))
+    }
+    val pairs = scala.collection.mutable.HashSet[(Any, Any)]()
+    while (expanded.hasNext && pairs.size <= bound) pairs += expanded.next()
+    val ids = pairs.flatMap(p => Seq(p._1, p._2))
+    if (pairs.size > bound || !star && ids.size.toLong * cfg.k > 8 * bound) return None
+
+    val wanted = Seq(col(idCol).as("id")) ++
+      (if (star) Nil else Seq(col("signature"))) ++ rank.map(_.as("rank"))
+    val spark = df.sparkSession
+    val fetched = if (wanted.size == 1 || ids.isEmpty) Map.empty[Any, Row] else
+      df.select(wanted: _*).join(broadcast(spark.createDataFrame(
+          ids.toSeq.map(Row(_)).asJava, StructType(Seq(idField)))), Seq("id"), "left_semi")
+        .collect().map(r => r.get(0) -> r).toMap
+    val verified = if (star) pairs.toSeq else pairs.toSeq.filter { case (a, b) =>
+      val (s1, s2) = (fetched(a).getSeq[Any](1), fetched(b).getSeq[Any](1))
+      s1 != null && s2 != null && s1.nonEmpty &&
+        sigMatch.nullSafeEval(new GenericArrayData(s1), new GenericArrayData(s2))
+          .asInstanceOf[Int].toDouble / s1.length >= cfg.jaccardThreshold
+    }
+    val rankOf = (id: Any) => fetched(id).get(wanted.size - 1)
+    Some(driverLosers(spark, ConnectedComponents.unionFind(verified)(ord), idField,
+      rank.map(r => rankOf -> df.select(r).schema.head.dataType)))
+  }
+
+  /** The [[graft.functions.SigMatchCount]] kernel, called on collected
+    * signatures (its children are unused by `nullSafeEval`). */
+  private val sigMatch = graft.functions.SigMatchCount(Literal(null), Literal(null))
+
   /** Full MinHash-LSH near-dedup: returns the input rows minus non-canonical
     * near-duplicates. Canonical = min id per connected component of the
-    * candidate-pair graph. */
+    * candidate-pair graph, through [[lshLosers]]. */
   def minhashLsh(df: DataFrame, idCol: String, textCol: String,
                  cfg: MinHashConfig = MinHashConfig()): DataFrame = {
     val sigs = minhashSignatures(df, idCol, textCol, cfg)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val result = removeNonCanonical(df, idCol, lshPairs(sigs, cfg))
+    val losers = lshLosers(sigs, "id", cfg)
     sigs.unpersist()
-    result
+    df.join(losers.select(col("dropped_id").as(idCol)), Seq(idCol), "left_anti")
   }
 
   /** Near-duplicate pairs found via MinHash-LSH candidate generation and
@@ -608,11 +698,13 @@ object Dedup {
                                        dstGrams: DataFrame, threshold: Double): DataFrame = {
     val g1 = srcGrams.select(col("id").as("src"), col("g").as("g1"))
     val g2 = dstGrams.select(col("id").as("dst"), col("g").as("g2"))
-    pairs.join(g1, "src").join(g2, "dst")
-      // |A∪B| = |A|+|B|−|A∩B| on distinct-hash sets: identical integer
-      // denominator (and thus bit-identical jaccard double) without the
-      // per-pair union-array build — guide §2.3
-      .withColumn("__i", size(array_intersect(col("g1"), col("g2"))).cast("double"))
+    // |A∪B| = |A|+|B|−|A∩B| on distinct-hash sets: identical integer
+    // denominator (and thus bit-identical jaccard double) without the
+    // per-pair union-array build — guide §2.3. The intersection is a
+    // generator output (PerRow), so the threshold filter is not pushed
+    // into the join condition with it and it runs once per pair.
+    PerRow.append(pairs.join(g1, "src").join(g2, "dst"), Seq("__i"),
+        struct(size(array_intersect(col("g1"), col("g2"))).cast("double")))
       .withColumn("jaccard",
         col("__i") / ((size(col("g1")) + size(col("g2"))).cast("double") - col("__i")))
       .where(col("jaccard") >= threshold)
@@ -1008,12 +1100,67 @@ object Dedup {
     * The id column's type picks the components: String ids go to
     * [[ConnectedComponents.runOnStrings]], integral ids to
     * [[ConnectedComponents.run]]. `rank` (a column over `df`) is the
-    * order: see [[pickLosers]]. */
+    * order: see [[pickLosers]]. When the components fold on the driver
+    * (at most [[SmallInput.SmallGraphEdges]] pairs), the pick runs there
+    * too ([[foldLosers]]) and the loser map is a local relation, so an
+    * anti-join with it broadcasts and shuffles nothing of `df`. */
   def loserMap(df: DataFrame, idCol: String, pairs: DataFrame,
-               rank: Option[Column] = None): DataFrame =
-    pickLosers(df, idCol, rank,
+               rank: Option[Column] = None): DataFrame = {
+    val comp =
       if (df.schema(idCol).dataType == StringType) ConnectedComponents.runOnStrings(pairs)
-      else ConnectedComponents.run(pairs))
+      else ConnectedComponents.run(pairs)
+    rank match {
+      case Some(r) if SmallInput.isLocal(comp) => foldLosers(df, idCol, r, comp)
+      case _ => pickLosers(df, idCol, rank, comp)
+    }
+  }
+
+  /** [[pickLosers]] on the driver, over components `comp` that are
+    * already a local relation. One broadcast semi-join collect fetches the
+    * members' ranks, with no exchange over `df`; [[driverLosers]] picks. */
+  private def foldLosers(df: DataFrame, idCol: String, rank: Column,
+                         comp: DataFrame): DataFrame = {
+    val members = comp.collect().map(r => r.get(0) -> r.get(1)).toSeq
+    val idField = comp.schema("id")
+    val ranked = df.select(col(idCol).cast(idField.dataType).as("id"), rank.as("rank"))
+      .join(broadcast(df.sparkSession.createDataFrame(
+        members.map(m => Row(m._1)).asJava, StructType(Seq(idField)))), Seq("id"), "left_semi")
+    val ranks = ranked.collect().map(r => r.get(0) -> r.get(1)).toMap
+    driverLosers(df.sparkSession, members, idField,
+      Some(((id: Any) => ranks.getOrElse(id, null)) -> ranked.schema("rank").dataType))
+  }
+
+  /** [[pickLosers]]' rule over the driver's components `comp` (id ->
+    * label; `idField` the id type). With `rank` (each id's rank, and the
+    * rank type) each component's greatest `struct(rank, id)` in Spark's
+    * ordering wins; without, the label, which is then the component's
+    * smallest integral id. The losers are a broadcast local relation. */
+  private def driverLosers(spark: SparkSession, comp: Seq[(Any, Any)], idField: StructField,
+                           rank: Option[(Any => Any, DataType)]): DataFrame = {
+    val losers = rank match {
+      case None =>
+        require(idField.dataType != StringType,
+          "the min-id pick needs integral ids; the ids are strings: pass a rank")
+        comp.collect { case (id, c) if id != c => Row(id, c) }
+      case Some((rankOf, rankType)) =>
+        val ord = sparkOrdering(StructType(Seq(StructField("rank", rankType), idField)))
+        comp.groupBy(_._2).valuesIterator.flatMap { group =>
+          val ids = group.map(_._1)
+          val winner = ids.maxBy[Any](id => Row(rankOf(id), id))(ord)
+          ids.filter(_ != winner).map(Row(_, winner))
+        }.toSeq
+    }
+    broadcast(spark.createDataFrame(losers.asJava, StructType(Seq(
+      idField.copy(name = "dropped_id"), idField.copy(name = "canonical_id")))))
+  }
+
+  /** Spark's ordering of collected `dt` values: NULL lowest, NaN highest,
+    * strings by their UTF-8 bytes, structs field by field. */
+  private def sparkOrdering(dt: DataType): Ordering[Any] = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    Ordering.by[Any, InternalRow](v => InternalRow(toCatalyst(v)))(
+      InterpretedOrdering.forSchema(Seq(dt)))
+  }
 
   /** [[loserMap]]'s pick over components `comp` (`id`, `component`).
     * With a `rank`, the member with the greatest `struct(rank, id)` wins,

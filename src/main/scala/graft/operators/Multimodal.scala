@@ -376,33 +376,29 @@ object Multimodal {
     * state; ratios are rounded 6dp from exact integer counts. */
   def audioQuality(assets: DataFrame, silenceEps: Int = 0,
                    clipLevel: Int = 32760): DataFrame = {
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets.select(col("asset_id").cast("long"), col("data"))
-      .as[(Long, Array[Byte])]
-      .map { case (id, data) =>
-        val w = decodeWav(data)
-        val n = w.samples.length
-        var nSil = 0L; var nClip = 0L; var sumSq = 0L
-        var i = 0
-        while (i < n) {
-          val v = w.samples(i).toInt
-          val a = math.abs(v)
-          if (a <= silenceEps) nSil += 1
-          if (a >= clipLevel) nClip += 1
-          sumSq += v.toLong * v
-          i += 1
-        }
-        def r6(x: Double) =
-          BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-        (id, n.toLong,
-          if (n == 0) 0.0 else r6(nSil.toDouble / n),
-          if (n == 0) 0.0 else r6(nClip.toDouble / n),
-          sumSq)
+    val quality = udf { (data: Array[Byte]) =>
+      val w = decodeWav(data)
+      val n = w.samples.length
+      var nSil = 0L; var nClip = 0L; var sumSq = 0L
+      var i = 0
+      while (i < n) {
+        val v = w.samples(i).toInt
+        val a = math.abs(v)
+        if (a <= silenceEps) nSil += 1
+        if (a >= clipLevel) nClip += 1
+        sumSq += v.toLong * v
+        i += 1
       }
-      .toDF("asset_id", "n_samples", "silence_ratio", "clipping_ratio",
-        "sum_square")
+      (n.toLong, if (n == 0) 0.0 else round6(nSil.toDouble / n),
+        if (n == 0) 0.0 else round6(nClip.toDouble / n), sumSq)
+    }
+    PerRow.append(assets.select(col("asset_id").cast("long"), col("data")),
+      Seq("n_samples", "silence_ratio", "clipping_ratio", "sum_square"),
+      quality(col("data"))).drop("data")
   }
+
+  private def round6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Scene-cut detection over Y4M video payloads — the shot-boundary
     * pass a video-curation pipeline runs before captioning/frame
@@ -415,26 +411,21 @@ object Multimodal {
     * cut_frames as a ','-joined index list — frame f means the cut is
     * BETWEEN f-1 and f, max_diff rounded 6dp). */
   def sceneCuts(assets: DataFrame, threshold: Double): DataFrame = {
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets.select(col("asset_id").cast("long"), col("data"))
-      .as[(Long, Array[Byte])]
-      .map { case (id, data) =>
-        val v = decodeY4m(data)
-        val diffs = v.frames.iterator.sliding(2).withPartial(false).map { w =>
-          val (a, b) = (w.head, w(1))
-          var s = 0L
-          var i = 0
-          while (i < a.length) { s += math.abs((a(i) & 0xff) - (b(i) & 0xff)); i += 1 }
-          s.toDouble / a.length
-        }.toArray
-        val cuts = diffs.iterator.zipWithIndex
-          .collect { case (d, i) if d >= threshold => (i + 1).toString }
-          .mkString(",")
-        val maxD = if (diffs.isEmpty) 0.0 else diffs.max
-        (id, v.frames.length,
-          cuts, BigDecimal(maxD).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-      }
-      .toDF("asset_id", "n_frames", "cut_frames", "max_diff")
+    val cuts = udf { (data: Array[Byte]) =>
+      val v = decodeY4m(data)
+      val diffs = v.frames.iterator.sliding(2).withPartial(false).map { w =>
+        val (a, b) = (w.head, w(1))
+        var s = 0L
+        var i = 0
+        while (i < a.length) { s += math.abs((a(i) & 0xff) - (b(i) & 0xff)); i += 1 }
+        s.toDouble / a.length
+      }.toArray
+      val cutFrames = diffs.iterator.zipWithIndex
+        .collect { case (d, i) if d >= threshold => (i + 1).toString }
+        .mkString(",")
+      (v.frames.length, cutFrames, round6(if (diffs.isEmpty) 0.0 else diffs.max))
+    }
+    PerRow.append(assets.select(col("asset_id").cast("long"), col("data")),
+      Seq("n_frames", "cut_frames", "max_diff"), cuts(col("data"))).drop("data")
   }
 }

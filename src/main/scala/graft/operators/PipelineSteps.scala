@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{Handoff, PerRow}
+import graft.core.{Handoff, PerRow, SmallInput}
 import graft.core.Pipeline._
 import graft.functions.{HashFunctions, PiiFunctions, TextFunctions}
 import graft.sources.WetSource
@@ -173,30 +173,37 @@ object PipelineSteps {
     }
   }
 
-  /** clustering: LSH pairs ([[Dedup.lshPairs]]) → [[Dedup.loserMap]],
-    * the one dedup tail, ranked by `length`: per component the max
-    * (length, doc_id) survives — the reference's pick order minus the
-    * absent ts (reference: dedup/dedup.py:123-130) — and the losers are
-    * anti-joined out. Only component members are grouped; singletons
-    * pass straight through the anti-join. Connected components fold on
-    * the driver up to [[graft.core.SmallInput.SmallGraphEdges]] pairs
-    * (the one small-input switch, [[graft.core.SmallInput]]) and run the
-    * distributed star loop above it (the reference folds every graph on
-    * the driver: dedup/dedup.py:157-197 take_all + union-find). */
+  /** clustering: [[Dedup.lshLosers]], the LSH pairs → [[Dedup.loserMap]]
+    * tail, ranked by `length`: per component the max (length, doc_id)
+    * survives — the reference's pick order minus the absent ts
+    * (reference: dedup/dedup.py:123-130) — and the losers are anti-joined
+    * out. Only component members are grouped; singletons pass straight
+    * through the anti-join. Below the [[graft.core.SmallInput]] bound the
+    * pairs, the components and the pick are built on the driver, as the
+    * reference folds every graph there (dedup/dedup.py:74-130): one
+    * shuffle plus bounded collects, and the losers come back as a local
+    * relation, so the anti-join broadcasts them with no exchange over the
+    * input. Above it the distributed pair build, star loop and pick run.
+    *
+    * The input is not cached: each read (the band rows, the members'
+    * lengths, the write) takes its own columns from parquet, and past the
+    * bound `lshLosers` caches the signatures for the pair build. A
+    * `cfg.limit` input is cached whole, so that every read sees the same
+    * rows. `extra` reports the `regime`: `driver` when the loser map came
+    * back as a local relation, else `distributed`. */
   case class ClusteringStep(mh: Dedup.MinHashConfig = Dedup.MinHashConfig()) extends Step {
     val name = "clustering"
     def run(spark: SparkSession, cfg: PipelineConfig): StepStats = {
       val r = readStep(spark, cfg, name)
-      // lazy: the first action below fills the cache
-      val in = r.df.persist(StorageLevel.MEMORY_AND_DISK)
+      val in = if (cfg.limit.isEmpty) r.df else r.df.persist(StorageLevel.MEMORY_AND_DISK)
       // counted only when the input was not written through the handoff
       val inRows = r.rows.getOrElse(in.count())
-      val pairs = Dedup.lshPairs(in.select(col("doc_id").as("id"), col("signature")), mh)
-      val losers = Dedup.loserMap(in, "doc_id", pairs, Some(col("length")))
+      val losers = Dedup.lshLosers(in, "doc_id", mh, Some(col("length")))
       val kept = in.join(losers.select(col("dropped_id").as("doc_id")), Seq("doc_id"), "left_anti")
       val out = writeStep(kept, cfg, name)
       in.unpersist()
-      StepStats(name, inRows, out, 0, Map("removed" -> (inRows - out).toString))
+      StepStats(name, inRows, out, 0, Map("removed" -> (inRows - out).toString,
+        "regime" -> (if (SmallInput.isLocal(losers)) "driver" else "distributed")))
     }
   }
 

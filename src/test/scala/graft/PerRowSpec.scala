@@ -3,14 +3,13 @@ package graft
 import graft.core.PerRow
 import graft.core.Pipeline.PipelineConfig
 import graft.functions.LangIdLabel
+import graft.gates.DedupGates
 import graft.operators.{FastTextBin, Multimodal, PipelineSteps, Tokenizer, TrainedLid}
-import org.apache.spark.TestBus
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
-import org.apache.spark.sql.execution.{DeserializeToObjectExec, MapPartitionsExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, Expression, ScalaUDF}
+import org.apache.spark.sql.execution.{DeserializeToObjectExec, MapElementsExec, MapPartitionsExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import java.nio.file.Files
 
@@ -91,29 +90,19 @@ class PerRowSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       "FastTextBin.predictDf" -> FastTextBin.predictDf(docs, "text", FastTextBin.read(ftFixture())),
       "Multimodal.extractFeatures" -> Multimodal.extractFeatures(assets),
       "Multimodal.imagePhashes" -> Multimodal.imagePhashes(assets),
-      "Multimodal.resizeImages" -> Multimodal.resizeImages(assets, 4))
+      "Multimodal.resizeImages" -> Multimodal.resizeImages(assets, 4),
+      "Multimodal.audioQuality" -> Multimodal.audioQuality(assets.filter(col("kind") === "audio")),
+      "Multimodal.sceneCuts" ->
+        Multimodal.sceneCuts(assets.filter(col("kind") === "video"), threshold = 30.0))
     outputs.foreach { case (name, df) =>
       assert(df.collect().nonEmpty, name)
       val maps = nodes(df.queryExecution.executedPlan).collect {
         case p: MapPartitionsExec => p.nodeName
+        case p: MapElementsExec => p.nodeName
         case p: DeserializeToObjectExec => p.nodeName
       }
       assert(maps.isEmpty, s"$name: $maps")
     }
-  }
-
-  /** The executed plans of every query `body` runs. */
-  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan)
-      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try { body; TestBus.drain(spark.sparkContext) }
-    finally spark.listenerManager.unregister(listener)
-    plans.toArray(Array.empty[SparkPlan]).toSeq
   }
 
   test("QualityStep evaluates its labeler once per document on every branch") {
@@ -138,5 +127,18 @@ class PerRowSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(keptModel == 2, p)
       assert(exprCount(plans) { case _: ScalaUDF => } == 1, p)
     }
+  }
+
+  test("x01's exact-Jaccard check computes each pair's intersection once") {
+    val dir = Files.createTempDirectory("perrow_x01").toString
+    val base = (1 to 40).map(i => s"w$i").mkString(" ")
+    Seq((1L, base), (2L, base + " tail"), (3L, base + " other tail"),
+      (4L, (1 to 40).map(i => s"v$i").mkString(" ")))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val x01 = DedupGates.all.find(_.name == "x01_minhash_dedup").get
+    var pairs = 0L
+    val plans = executedPlans { pairs = x01.build(spark, dir).collect().length.toLong }
+    assert(pairs == 3)
+    assert(exprCount(plans) { case _: ArrayIntersect => } == 1)
   }
 }

@@ -3,6 +3,10 @@ package graft
 import graft.core.Pipeline
 import graft.operators.PipelineSteps
 import graft.sources.WetSource
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions.col
 
 import java.io.{ByteArrayOutputStream, FileOutputStream, PrintStream}
@@ -13,7 +17,7 @@ import scala.jdk.CollectionConverters._
 
 /** Golden end-to-end: synthetic WET fixture → all nine steps → packed
   * binary, asserting schema/row contracts per stage (SURVEY §5 plan). */
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def wetRecord(url: String, date: String, rid: String, text: String): String = {
     val payload = text.getBytes(StandardCharsets.UTF_8)
@@ -127,6 +131,9 @@ class PipelineSpec extends SparkSpec {
     assert(byStep("clean").extra("dropped").toLong == rowsIn(s"$outBase/dropped_parquet"))
     assert(byStep("clean").inputRows == byStep("ingest").outputRows)
     assert(byStep("clustering").inputRows == byStep("minhash").outputRows)
+    // every step reports its codegen compiles; clustering its regime
+    stats.foreach(st => assert(st.extra("codegen_compiles").toLong >= 0, st.step))
+    assert(byStep("clustering").extra("regime") == "driver")
 
     // schema contracts per stage
     val cleaned = spark.read.parquet(s"$outBase/cleaned_parquet")
@@ -192,6 +199,7 @@ class PipelineSpec extends SparkSpec {
     // stats json checkpoint exists and is valid-ish
     val js = Files.readString(Path.of(s"$outBase/pipeline_stats.json"))
     assert(js.contains("\"step\": \"export\""))
+    assert(js.contains("\"regime\": \"driver\"") && js.contains("\"codegen_compiles\": "))
 
     // resume-from: re-run just export reusing prior outputs
     val stats2 = Pipeline.run(spark, cfg, PipelineSteps.all, Some("export"))
@@ -282,5 +290,29 @@ class PipelineSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(out("d1").contains("<NAME>") && !out("d1").contains("John"))
     assert(out("d2") == "no names in this plain lowercase text")
+  }
+
+  test("clustering below the bound writes with no exchange over its input") {
+    import spark.implicits._
+    val outBase = Files.createTempDirectory("clusterplan").toString
+    val t1 = mkText("alpha"); val t2 = mkText("omega")
+    Seq(("a1", t1), ("a2", t1 + " tail"), ("a3", t1), ("o1", t2), ("o2", t2 + " end"),
+      ("g1", mkText("gamma")))
+      .toDF("doc_id", "text").write.parquet(s"$outBase/pii_parquet")
+    val cfg = Pipeline.PipelineConfig(dataDir = ".", outputBase = outBase)
+    PipelineSteps.MinhashStep().run(spark, cfg)
+    var st: Pipeline.StepStats = null
+    val plans = executedPlans { st = PipelineSteps.ClusteringStep().run(spark, cfg) }
+    assert(st.extra("regime") == "driver" && st.outputRows == 3)
+    val kept = spark.read.parquet(Pipeline.stepDir(outBase, "clustering"))
+      .select("doc_id").as[String].collect().toSet
+    // per cluster the longest text survives
+    assert(kept == Set("a2", "o2", "g1"))
+    val write = plans.filter(p => collect(p) { case w: DataWritingCommandExec => w }.nonEmpty)
+    assert(write.size == 1)
+    assert(collect(write.head) { case e: ShuffleExchangeLike => e }.isEmpty, write.head)
+    assert(collect(write.head) { case j: BroadcastHashJoinExec => j }.size == 1, write.head)
+    // chain mode (the default) builds no member array of a bucket
+    plans.foreach(p => assert(!p.toString.contains("collect_list"), p))
   }
 }
