@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 import org.apache.spark.sql.functions._
 
 /** Benchmark main: times every declared query on SPARK_GRAFT_SF_DIR and
@@ -154,19 +154,7 @@ object Bench {
     def optionalSpendOk(): Boolean = wallLeft() > sf1Reserve + 60.0
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // optional shuffle-width override (scale probing): running the same
-    // queries at 8-32x the local core count emulates the task counts a
-    // real cluster would schedule — correctness must hold (every gate
-    // is partition-invariant by construction) and wall time should move
-    // only by scheduler overhead. Default stays = cpus.
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
+    val builder0 = Session.builder()
       // StreamingQuery.stop() waits INDEFINITELY by default (stopTimeout
       // 0): the sf1 cap-kill path stops live streams from the harness
       // thread, and a wedged stream-execution thread must fail that stop
@@ -255,7 +243,7 @@ object Bench {
     // distrust instead of presenting inflated tails as plan cost.
     // max, not sum: ANSI mode makes a 4M-row sum of xxhash64 Longs an
     // overflow error; max still forces the hash for every row
-    val canaryDf = spark.range(0L, 4000000L, 1L, cpus.toInt)
+    val canaryDf = spark.range(0L, 4000000L, 1L, Session.Cpus)
       .agg(max(xxhash64(col("id"))))
     def canaryOnce(): Double = {
       val t0 = System.nanoTime(); canaryDf.head(); (System.nanoTime() - t0) / 1e9
@@ -653,7 +641,7 @@ object Bench {
     // replicate to ~40M tokens so the measurement is throughput-bound
     val repl = math.max(1, (40000000L / math.max(1L, nDocs * 60)).toInt)
     val corpus = docs.crossJoin(spark.range(repl)).select(col("text")).as[String]
-      .repartition(cpus.toInt * 2).cache()
+      .repartition(Session.Cpus * 2).cache()
     corpus.count() // materialize before timing
     // bestOf2 (shared with the query loop): the first throughput window
     // on a cold JIT/page-cache has shown up to 3x run-to-run variance

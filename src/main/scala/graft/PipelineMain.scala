@@ -1,8 +1,7 @@
 package graft
 
-import graft.core.Pipeline
+import graft.core.{Pipeline, Session}
 import graft.operators.PipelineSteps
-import org.apache.spark.sql.SparkSession
 
 /** CLI entry for the nine-step pipeline — the reference's
   * `pipeline.py main()` surface (reference: src/llm_data_pipeline/
@@ -56,14 +55,9 @@ object PipelineMain {
 
   def main(args: Array[String]): Unit = {
     val (cfg, flags, opts) = parseConfig(args)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val builder = Session.builder().appName("graft-pipeline")
+    sys.env.get("SPARK_MASTER").foreach(builder.master) // a deployment address
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val all = PipelineSteps.all.map {
       case _: PipelineSteps.PiiStep => PipelineSteps.PiiStep(enableNer = flags("--enable-ner"))

@@ -81,13 +81,11 @@ object Pipeline {
   val stepOrder: Seq[String] = Seq("ingest", "clean", "quality", "pii",
     "minhash", "clustering", "train_tokenizer", "tokenize", "export")
 
-  private def statsJson(all: Seq[StepStats]): String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+  private[graft] def statsJson(all: Seq[StepStats]): String =
     all.map { st =>
-      val extra = st.extra.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString(", ")
-      s"""{"step": ${q(st.step)}, "input_rows": ${st.inputRows}, "output_rows": ${st.outputRows}, "elapsed_sec": ${st.elapsedSec}${if (extra.nonEmpty) ", " + extra else ""}}"""
+      val extra = st.extra.map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }.mkString(", ")
+      s"""{"step": ${Json.quote(st.step)}, "input_rows": ${st.inputRows}, "output_rows": ${st.outputRows}, "elapsed_sec": ${st.elapsedSec}${if (extra.nonEmpty) ", " + extra else ""}}"""
     }.mkString("[\n", ",\n", "\n]")
-  }
 
   /** Run a sub-sequence of steps (all by default, or resume-from), with
     * stats persisted to `pipeline_stats.json` after every step

@@ -214,13 +214,12 @@ object BpeTrainer {
   }
 
   /** [[Tokenizer.corpusWordCounts]] of the NFKC-normalized corpus →
-    * driver merge loop. `maxWords` bounds the frequency table (the long
-    * tail below it cannot affect early merges materially — standard
-    * trainer practice); `inputSentenceSize` trains on the deterministic
-    * hash-ordered sample; `characterCoverage` maps to the alphabet cut
-    * in [[train]]. */
+    * driver merge loop. `maxWords` bounds the frequency table
+    * ([[Tokenizer.TrainerWords]]); `inputSentenceSize` trains on the
+    * deterministic hash-ordered sample; `characterCoverage` maps to the
+    * alphabet cut in [[train]]. */
   def trainFromCorpus(df: DataFrame, textCol: String, vocabSize: Int,
-                      maxWords: Int = 100000,
+                      maxWords: Int = TrainerWords,
                       inputSentenceSize: Option[Int] = None,
                       characterCoverage: Double = 1.0): BpeModel =
     train(corpusWordCounts(df, textCol, normalizeForTokenize, maxWords, inputSentenceSize),

@@ -215,7 +215,9 @@ object PipelineSteps {
     * data-side contract (corpus in, vocab artifact out) is identical.
     * `bpe` adds [[BpeTrainer]]'s merge artifact and `unigram`
     * [[UnigramTrainer]]'s piece table. All three count corpus words
-    * through [[Tokenizer.corpusWordCounts]]. */
+    * through [[Tokenizer.corpusWordCounts]]; `extra` reports that
+    * distributed layer (`count_s`) apart from the driver trainer
+    * (`train_s`; `word` trains nothing). */
   case class TrainTokenizerStep(corpusShards: Int = 8, maxCorpusChars: Int = 100000) extends Step {
     val name = "train_tokenizer"
     def run(spark: SparkSession, cfg: PipelineConfig): StepStats = {
@@ -232,22 +234,36 @@ object PipelineSteps {
       // id assignment happens driver-side after the distributed top-k:
       // the vocab artifact is <= vocabSize rows by construction, and this
       // avoids an unpartitioned (single-task) ranking window entirely
+      val t0 = System.nanoTime()
       val words = Tokenizer.corpusWordCounts(in, "text", TextFunctions.normalizeForDedup,
         cfg.vocabSize - Tokenizer.Specials.length)
+      val wordCountNs = System.nanoTime() - t0
       val vocab = (Tokenizer.Specials.map(_ -> 0L) ++ words).zipWithIndex
         .map { case ((w, f), id) => (w, f, id) }.toDF("word", "freq", "id")
       val n = Handoff.write(vocab, s"${cfg.outputBase}/vocab_parquet")
-      if (cfg.tokenizer == "bpe")
-        BpeTrainer.writeModel(spark, cfg.outputBase, BpeTrainer.trainFromCorpus(in, "text",
-          cfg.vocabSize, inputSentenceSize = cfg.inputSentenceSize,
-          characterCoverage = cfg.characterCoverage))
-      if (cfg.tokenizer == "unigram")
-        UnigramTrainer.writeModel(spark, s"${cfg.outputBase}/unigram_model_parquet",
-          UnigramTrainer.trainFromCorpus(in, "text", cfg.vocabSize,
-            inputSentenceSize = cfg.inputSentenceSize,
-            characterCoverage = cfg.characterCoverage,
-            softEm = cfg.unigramSoftEm))
-      StepStats(name, -1, n)
+      // the step's two layers, timed apart: the distributed corpus counts
+      // (count_s), then the driver trainer (train_s)
+      val t1 = System.nanoTime()
+      val trainerWords = cfg.tokenizer match {
+        case "bpe" | "unigram" => Tokenizer.corpusWordCounts(in, "text",
+          Tokenizer.normalizeForTokenize, Tokenizer.TrainerWords, cfg.inputSentenceSize)
+        case _ => Nil
+      }
+      val t2 = System.nanoTime()
+      val model: Option[Tokenizer.Model] = cfg.tokenizer match {
+        case "bpe" => Some(BpeTrainer.train(trainerWords, cfg.vocabSize, cfg.characterCoverage))
+        case "unigram" => Some(UnigramTrainer.train(trainerWords, cfg.vocabSize,
+          characterCoverage = cfg.characterCoverage, softEm = cfg.unigramSoftEm))
+        case _ => None
+      }
+      val t3 = System.nanoTime()
+      model.foreach {
+        case m: BpeTrainer.BpeModel => BpeTrainer.writeModel(spark, cfg.outputBase, m)
+        case m: UnigramTrainer.UnigramModel =>
+          UnigramTrainer.writeModel(spark, s"${cfg.outputBase}/unigram_model_parquet", m)
+      }
+      StepStats(name, -1, n, 0, Map("count_s" -> ((wordCountNs + t2 - t1) / 1e9).toString,
+        "train_s" -> ((t3 - t2) / 1e9).toString))
     }
   }
 

@@ -139,6 +139,9 @@ object Tokenizer {
     def encodeWord(word: String): Seq[Int] = Seq(vocab.getOrElse(word, UnkId))
   }
 
+  /** The trainers' word-table bound; the tail below it barely moves early merges. */
+  val TrainerWords: Int = 100000
+
   /** The corpus word count every trainer starts from: the `limit` most
     * frequent normalized words, ordered (freq desc, word asc). A
     * distributed groupBy; only the bounded table reaches the driver.

@@ -345,7 +345,7 @@ object UnigramTrainer {
     * driver train loop; the same corpus contract as
     * [[BpeTrainer.trainFromCorpus]]. */
   def trainFromCorpus(df: DataFrame, textCol: String, vocabSize: Int,
-                      maxWords: Int = 100000,
+                      maxWords: Int = TrainerWords,
                       inputSentenceSize: Option[Int] = None,
                       characterCoverage: Double = 1.0,
                       softEm: Boolean = false): UnigramModel =

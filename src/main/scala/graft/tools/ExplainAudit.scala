@@ -1,6 +1,8 @@
 package graft.tools
 
 import graft.SparkEntry
+import graft.core.Session
+import org.apache.spark.GraftBus
 import org.apache.spark.sql.SparkSession
 
 /** Plan audit: prints formatted physical plans for representative
@@ -58,6 +60,13 @@ object ExplainAudit {
     flags.toSeq
   }
 
+  /** Plans at a fixed width of 8, so they compare across machines. */
+  private def session(): SparkSession = {
+    val spark = Session.builder(8, 8).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.01")
     if (args.length > 1 && args(1) == "--sweep") { sweep(d); return }
@@ -67,12 +76,7 @@ object ExplainAudit {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q02_filter_project", "q03_segment_revenue", "q05_region_revenue",
         "q22_customers_without_orders", "d09_source_stats", "e01_cosine_knn")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     names.foreach { n =>
       println(s"\n########## $n ##########")
       val plan = SparkEntry.queries(n)(spark, d).queryExecution.explainString(
@@ -96,12 +100,7 @@ object ExplainAudit {
     * the static dump cannot (the q46 claim). One file per query under
     * `outDir/<name>_executed.txt`. */
   def executed(d: String, outDir: String, names: Seq[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     new java.io.File(outDir).mkdirs()
     val captured = new java.util.concurrent.CopyOnWriteArrayList[(String, String)]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -120,7 +119,7 @@ object ExplainAudit {
       // noop write would wrap it in a separate command), no column
       // pruning, so the final adaptive plan below is the real one
       df.foreach(_ => ())
-      Thread.sleep(3000) // listener bus drains asynchronously
+      GraftBus.drain(spark.sparkContext)
       val finalPlan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       val sb = new StringBuilder
@@ -144,12 +143,7 @@ object ExplainAudit {
     * one line per query, SWEEP-FAIL if any flag fires. Plan-only (no
     * execution), so the whole inventory audits in seconds. */
   def sweep(d: String): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     var bad = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (n, fn) =>
       // st01/w01/k02 execute side effects while building; plan-audit them too

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.core.Session
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -198,8 +199,7 @@ object ScaleData {
     fk("supplier", "s_nationkey", "nation", "n_nationkey")
     // 4. densification keeps the event time RANGE (10x events in the
     // SAME window — a shifted-ts defect would stretch it)
-    // type-generic compare: ts reads as long nanos or as timestamp
-    // depending on the session's nanosAsLong setting
+    // type-generic compare: ts reads as long nanos under `Session`
     val sR = src("events").agg(min("ts"), max("ts")).head()
     val oR = out("events").agg(min("ts"), max("ts")).head()
     require(sR.get(0) == oR.get(0) && sR.get(1) == oR.get(1),
@@ -214,13 +214,7 @@ object ScaleData {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "target/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if (isComplete(outDir)) {
       println(s"[scaledata] $outDir already complete; skipping")

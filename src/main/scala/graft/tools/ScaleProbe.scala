@@ -1,9 +1,9 @@
 package graft.tools
 
-import graft.core.Tables
+import graft.core.{Session, Tables}
 import graft.operators.{Dedup, Packer, Similarity}
 import graft.streaming.Streaming
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
@@ -37,10 +37,7 @@ object ScaleProbe {
     // replication runs and the probe exits having measured nothing
     require(Set("dedup", "ann", "stream", "lm", "hygiene", "graph", "mm", "clique", "all")(suite),
       s"unknown suite '$suite' (expected dedup | ann | stream | lm | hygiene | graph | mm | clique | all)")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.builder(32, 64).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def in(suites: String*) = suite == "all" || suites.contains(suite)
 

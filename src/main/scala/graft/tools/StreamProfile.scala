@@ -1,7 +1,8 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
+import org.apache.spark.GraftBus
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Streaming-row attribution profile (r12 verdict #6): run the named
@@ -19,12 +20,7 @@ object StreamProfile {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args(1).split(",").toSeq
       else Seq("st13_stream_sessions", "st18_stream_chained_agg")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val progress = new java.util.concurrent.CopyOnWriteArrayList[String]()
     spark.streams.addListener(new StreamingQueryListener {
@@ -38,7 +34,7 @@ object StreamProfile {
       val t0 = System.nanoTime()
       SparkEntry.queries(n)(spark, d).write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(2000) // listener bus drains asynchronously
+      GraftBus.drain(spark.sparkContext)
       println(s"\n########## $n — ${"%.3f".format(sec)} s, ${progress.size} progress events ##########")
       progress.forEach(j => println(j))
       spark.catalog.clearCache()

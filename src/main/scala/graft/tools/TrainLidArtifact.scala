@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.operators.TrainedLid
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 
 /** Builds the committed wide-coverage LID artifact
   * (`fixtures/models/lid48`) — run once, commit the parquet; the
@@ -13,11 +13,7 @@ import org.apache.spark.sql.SparkSession
 object TrainLidArtifact {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse(TrainedLid.DefaultArtifactDir)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(8, 8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val m = TrainedLid.trainWideArtifact(spark, out)
     println(s"[lid] wrote ${m.langs.length}-language model " +

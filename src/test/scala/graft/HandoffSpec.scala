@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.Handoff
-import org.apache.spark.TestBus
+import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.lit
 
@@ -19,7 +19,7 @@ class HandoffSpec extends SparkSpec {
   /** `body`'s result and the number of Spark jobs it started. */
   private def jobsDuring[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext
-    TestBus.drain(sc)
+    GraftBus.drain(sc)
     val jobs = new AtomicInteger()
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
@@ -27,7 +27,7 @@ class HandoffSpec extends SparkSpec {
     sc.addSparkListener(l)
     try {
       val out = body
-      TestBus.drain(sc)
+      GraftBus.drain(sc)
       (out, jobs.get)
     } finally sc.removeSparkListener(l)
   }

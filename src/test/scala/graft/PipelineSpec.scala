@@ -231,6 +231,20 @@ class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(idsU.forall(id => id >= 0 && id < 500))
     assert(idsU.exists(_ >= graft.operators.Tokenizer.FirstLearnedId),
       "at least one learned piece id in the stream")
+
+    // bpe: train_tokenizer reports its distributed count and its driver
+    // trainer apart
+    val tt = Pipeline.run(spark, cfg.copy(tokenizer = "bpe"),
+      Seq(PipelineSteps.TrainTokenizerStep())).head
+    assert(tt.extra("count_s").toDouble > 0 && tt.extra("train_s").toDouble > 0, tt.extra)
+  }
+
+  test("pipeline_stats.json escapes control chars in a step's extra") {
+    val st = Pipeline.StepStats("export", 1, 2, 0.5, Map("path" -> "out\tbase\n\"x\""))
+    val js = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Pipeline.statsJson(Seq(st)))
+    assert(js.get(0).get("path").asText === "out\tbase\n\"x\"")
+    assert(js.get(0).get("output_rows").asLong === 2)
   }
 
   test("export warns on a token id that does not fit uint16, and wraps it") {

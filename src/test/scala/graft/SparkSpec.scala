@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.TestBus
+import graft.core.Session
+import org.apache.spark.GraftBus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
@@ -27,7 +28,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    try { body; TestBus.drain(spark.sparkContext) }
+    try { body; GraftBus.drain(spark.sparkContext) }
     finally spark.listenerManager.unregister(listener)
     plans.toArray(Array.empty[SparkPlan]).toSeq
   }
@@ -35,14 +36,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    // a fixed width, whatever SPARK_GRAFT_CPUS says: specs that pin a
+    // plan shape or a partition count must not depend on the machine
+    val s = Session.builder(4, 4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
