@@ -42,12 +42,20 @@ object Handoff {
     rows
   }
 
-  def read(spark: SparkSession, dir: String): Read =
-    Option(written.get(qualified(spark, dir))) match {
-      case Some(w) if w.files == partFiles(spark, dir) =>
-        Read(spark.read.schema(w.schema).parquet(dir), Some(w.rows))
-      case _ => Read(spark.read.parquet(dir), None)
-    }
+  def read(spark: SparkSession, dir: String): Read = intact(spark, dir) match {
+    case Some(w) => Read(spark.read.schema(w.schema).parquet(dir), Some(w.rows))
+    case None => Read(spark.read.parquet(dir), None)
+  }
+
+  /** The part files (name -> length) the last `write` recorded for `dir`,
+    * while the directory still holds exactly them: the check `read`
+    * makes. None with no record (a new JVM) or after a rewrite by
+    * anything else. */
+  def writtenFiles(spark: SparkSession, dir: String): Option[Map[String, Long]] =
+    intact(spark, dir).map(_.files)
+
+  private def intact(spark: SparkSession, dir: String): Option[Written] =
+    Option(written.get(qualified(spark, dir))).filter(_.files == partFiles(spark, dir))
 
   private def qualified(spark: SparkSession, dir: String): String = {
     val p = new Path(dir)

@@ -66,30 +66,22 @@ object BpeTrainer {
       }.stripSuffix(" ")
   }
 
-  /** Apply one merge to a symbol sequence, greedy left-to-right. */
-  private def applyMerge(syms: Array[String], a: String, b: String): Array[String] = {
-    val merged = a + b
-    val out = mutable.ArrayBuffer[String]()
-    var i = 0
-    while (i < syms.length) {
-      if (i < syms.length - 1 && syms(i) == a && syms(i + 1) == b) {
-        out += merged; i += 2
-      } else { out += syms(i); i += 1 }
-    }
-    out.toArray
-  }
-
   /** The merge loop over a word-frequency table (pure, driver-side —
     * the table is small by construction).
     *
-    * Incremental, like production trainers: pair counts live in a
-    * TreeSet-backed argmax and only the words CONTAINING the merged pair
-    * are recounted per iteration (occurrence index), so a merge costs
-    * O(affected words × their length × log P) instead of a full corpus
-    * rescan — the difference between minutes and hours at the
-    * reference's 32k-vocab scale. Argmax semantics are identical to the
-    * naive loop: max count, ties by lexicographic pair (the equivalence
-    * is property-tested against a naive reference implementation). */
+    * Incremental, like production trainers, and on primitives: every
+    * symbol is interned to an `Int` by its string (two merges that spell
+    * the same string make one symbol), a word is an `Array[Int]`, and a
+    * pair is one `Long` key (`left << 32 | right`) into a slot table of
+    * live counts and occurrence lists. A merge rewrites only the words
+    * that contain the merged pair and recounts their pairs, so it costs
+    * O(affected words × their length) plus the heap pushes of the counts
+    * that moved. The argmax is a binary heap with lazy invalidation: a
+    * popped entry whose count is no longer its pair's live count is
+    * stale and dropped. Argmax semantics are identical to the naive
+    * loop: max count, ties by (left, right) in `Ordering.String` (UTF-16
+    * order); the equivalence is property-tested against a naive
+    * reference implementation, and one merge list is pinned by digest. */
   def train(wordFreqs: Seq[(String, Long)], vocabSize: Int,
             characterCoverage: Double = 1.0): BpeModel = {
     // specials (4) + byte tokens (256) are fixed overhead; at least one
@@ -99,12 +91,19 @@ object BpeTrainer {
       "(4 special + 256 byte-fallback ids are fixed overhead)")
     require(characterCoverage > 0.0 && characterCoverage <= 1.0,
       s"characterCoverage=$characterCoverage must be in (0, 1]")
+    // symbol id -> string; the end-of-word marker is id 0 and the
+    // characters follow in order of first appearance, so ids
+    // 0 until nChars are the whole alphabet in its LinkedHashSet order
+    val strs = mutable.ArrayBuffer[String]()
+    val idOf = mutable.HashMap[String, Int]()
+    def intern(s: String): Int = idOf.getOrElseUpdate(s, { strs += s; strs.length - 1 })
+    intern(EndOfWord)
     // words as symbol sequences with the end-of-word marker
-    val words: Array[Array[String]] =
-      wordFreqs.map(wf => (codePoints(wf._1) :+ EndOfWord).toArray).toArray
-    val wfreq: Array[Long] = wordFreqs.map(_._2).toArray
-    val allBase = mutable.LinkedHashSet[String](EndOfWord)
-    wordFreqs.foreach(wf => codePoints(wf._1).foreach(allBase += _))
+    val words: Array[Array[Int]] = wordFreqs.iterator.map { case (w, _) =>
+      (codePoints(w).iterator.map(intern) ++ Iterator(0)).toArray
+    }.toArray
+    val wfreq: Array[Long] = wordFreqs.iterator.map(_._2).toArray
+    val nChars = strs.length
     // Alphabet cut — SentencePiece's character_coverage knob (reference:
     // src/llm_data_pipeline/tokenizer/train.py:111-134 passes 0.9995):
     // keep the minimal most-frequent-first prefix of characters whose
@@ -114,22 +113,23 @@ object BpeTrainer {
     // invariant the export path relies on); whichever bound is tighter
     // wins. coverage=1.0 with a fitting alphabet keeps every char.
     val symbolBudget = vocabSize - FirstLearnedId
-    val baseSymbols: mutable.LinkedHashSet[String] =
-      if (allBase.size <= symbolBudget && characterCoverage >= 1.0) allBase
+    val baseSymbols: Seq[Int] =
+      if (nChars <= symbolBudget && characterCoverage >= 1.0) 0 until nChars
       else {
-        val charFreq = mutable.HashMap[String, Long]().withDefaultValue(0L)
-        wordFreqs.foreach { case (w, f) =>
-          codePoints(w).foreach(s => charFreq(s) += f)
+        val charFreq = new Array[Long](nChars)
+        var wi = 0
+        while (wi < words.length) {
+          val syms = words(wi)
+          var i = 0
+          while (i < syms.length - 1) { charFreq(syms(i)) += wfreq(wi); i += 1 }
+          wi += 1
         }
-        val sorted = allBase.toSeq.filterNot(_ == EndOfWord)
-          .sortBy(s => (-charFreq(s), s))
-        val total = sorted.iterator.map(charFreq).sum
-        val target = math.ceil(characterCoverage * total).toLong
+        val sorted = (1 until nChars).sortBy(s => (-charFreq(s), strs(s)))
+        val target = math.ceil(characterCoverage * sorted.iterator.map(charFreq(_)).sum).toLong
         var cum = 0L
         var k = 0
         while (k < sorted.size && cum < target) { cum += charFreq(sorted(k)); k += 1 }
-        val kept = sorted.take(math.min(k, symbolBudget - 1))
-        mutable.LinkedHashSet(EndOfWord) ++ kept
+        0 +: sorted.take(math.min(k, symbolBudget - 1))
       }
 
     // only kept-alphabet symbols (and their merge products) may form
@@ -139,78 +139,232 @@ object BpeTrainer {
     // decided once per symbol (base chars at the cut, merge products at
     // creation) and never changes, so add/remove bookkeeping stays
     // symmetric. No cut -> every symbol mergeable -> prior behavior.
-    val mergeable = mutable.HashSet[String]() ++ baseSymbols
-    val counts = mutable.HashMap[(String, String), Long]()
-    val occ = mutable.HashMap[(String, String), mutable.HashSet[Int]]()
-    val bestFirst: Ordering[(Long, String, String)] =
-      Ordering.Tuple3(Ordering.Long.reverse, Ordering.String, Ordering.String)
-        .on((t: (Long, String, String)) => (t._1, t._2, t._3))
-    val ranked = mutable.TreeSet.empty[(Long, String, String)](bestFirst)
+    var mergeable = new Array[Boolean](math.max(16, nChars * 2))
+    baseSymbols.foreach(mergeable(_) = true)
 
-    def bump(p: (String, String), delta: Long): Unit = {
-      val old = counts.getOrElse(p, 0L)
-      val nw = old + delta
-      if (old != 0L) ranked.remove((old, p._1, p._2))
-      if (nw != 0L) { counts(p) = nw; ranked.add((nw, p._1, p._2)) }
-      else counts.remove(p)
-    }
-    def removeWord(wi: Int): Unit = {
-      val syms = words(wi); val f = wfreq(wi)
+    val pairs = new PairTable
+    val heap = new PairHeap(pairs, strs)
+    // slots whose count moved during the current merge, with the count
+    // each had before it
+    var stamp = new Array[Int](1024)
+    var before = new Array[Long](1024)
+    val moved = mutable.ArrayBuffer[Int]()
+    var round = 1
+    def bump(wi: Int, sign: Long): Unit = {
+      val syms = words(wi); val f = sign * wfreq(wi)
       var i = 0
       while (i < syms.length - 1) {
-        if (mergeable(syms(i)) && mergeable(syms(i + 1))) {
-          val p = (syms(i), syms(i + 1))
-          bump(p, -f)
-          occ.get(p).foreach { s => s -= wi; if (s.isEmpty && !counts.contains(p)) occ.remove(p) }
+        val a = syms(i); val b = syms(i + 1)
+        if (mergeable(a) && mergeable(b)) {
+          val s = pairs.slot(a, b)
+          if (s >= stamp.length) {
+            stamp = java.util.Arrays.copyOf(stamp, s * 2)
+            before = java.util.Arrays.copyOf(before, s * 2)
+          }
+          if (stamp(s) != round) { stamp(s) = round; before(s) = pairs.count(s); moved += s }
+          pairs.count(s) += f
+          if (sign > 0) pairs.addOccurrence(s, wi)
         }
         i += 1
       }
     }
-    def addWord(wi: Int): Unit = {
-      val syms = words(wi); val f = wfreq(wi)
-      var i = 0
-      while (i < syms.length - 1) {
-        if (mergeable(syms(i)) && mergeable(syms(i + 1))) {
-          val p = (syms(i), syms(i + 1))
-          bump(p, f)
-          occ.getOrElseUpdate(p, mutable.HashSet.empty[Int]) += wi
-        }
-        i += 1
-      }
-    }
-    words.indices.foreach(addWord)
+    words.indices.foreach(bump(_, 1L))
+    moved.foreach(s => if (pairs.count(s) > 0) heap.push(s))
 
     val merges = mutable.ArrayBuffer[(String, String)]()
     // vocabSize budget = specials (4) + byte-fallback tokens (256) +
     // base symbols + merges — the SentencePiece convention where byte
     // tokens count inside vocab_size, so max emitted id < vocabSize
     val maxMerges = math.max(0, vocabSize - FirstLearnedId - baseSymbols.size)
-    var iter = 0
     var exhausted = false
-    while (iter < maxMerges && !exhausted) {
-      if (ranked.isEmpty) exhausted = true
+    while (merges.length < maxMerges && !exhausted) {
+      val best = heap.popLive()
+      if (best < 0) exhausted = true
       else {
-        val (_, a, b) = ranked.head
-        merges += ((a, b))
-        mergeable += a + b
-        val affected = occ.getOrElse((a, b), mutable.HashSet.empty[Int]).toArray.sorted
-        affected.foreach { wi =>
-          removeWord(wi)
-          words(wi) = applyMerge(words(wi), a, b)
-          addWord(wi)
+        val a = pairs.left(best); val b = pairs.right(best)
+        merges += ((strs(a), strs(b)))
+        val ab = intern(strs(a) + strs(b))
+        if (ab >= mergeable.length) mergeable = java.util.Arrays.copyOf(mergeable, ab * 2)
+        mergeable(ab) = true
+        round += 1
+        moved.clear()
+        // the occurrence list may name a word twice, or a word a past
+        // merge rewrote; neither changes the counts, as the merge skips
+        // a word without the pair
+        pairs.takeOccurrences(best).foreach { wi =>
+          val rewritten = applyMerge(words(wi), a, b, ab)
+          if (rewritten.length < words(wi).length) {
+            bump(wi, -1L)
+            words(wi) = rewritten
+            bump(wi, 1L)
+          }
         }
-        // the merged pair must be gone from the index now (its count fell
-        // to zero when every occurrence was rewritten)
+        moved.foreach(s => if (pairs.count(s) > 0 && pairs.count(s) != before(s)) heap.push(s))
       }
-      iter += 1
     }
 
-    val symbols = (baseSymbols.toSeq ++ merges.map(m => m._1 + m._2)).distinct
+    val symbols = (baseSymbols.map(strs) ++ merges.map(m => m._1 + m._2)).distinct
     val vocab = ReservedVocab ++
       symbols.zipWithIndex.map { case (s, i) => s -> (i + FirstLearnedId) }
     assert(vocab.valuesIterator.max < vocabSize,
       s"BPE id-bound invariant violated: max id ${vocab.valuesIterator.max} >= $vocabSize")
     BpeModel(merges.toSeq, vocab)
+  }
+
+  /** One merge applied to a symbol sequence, greedy left-to-right. */
+  private def applyMerge(syms: Array[Int], a: Int, b: Int, ab: Int): Array[Int] = {
+    val out = new Array[Int](syms.length)
+    var i = 0
+    var o = 0
+    while (i < syms.length) {
+      if (i < syms.length - 1 && syms(i) == a && syms(i + 1) == b) { out(o) = ab; i += 2 }
+      else { out(o) = syms(i); i += 1 }
+      o += 1
+    }
+    if (o == syms.length) syms else java.util.Arrays.copyOf(out, o)
+  }
+
+  /** Symbol pairs by slot: an open-addressing index from the packed key
+    * `left << 32 | right` to a dense slot, and per slot the pair's live
+    * count and the words it was added in (duplicates and stale entries
+    * allowed; [[takeOccurrences]] sorts them out). */
+  private final class PairTable {
+    private var index = Array.fill(1 << 12)(-1)
+    private var keys = new Array[Long](1 << 10)
+    var count = new Array[Long](1 << 10)
+    private var occ = new Array[Array[Int]](1 << 10)
+    private var occLen = new Array[Int](1 << 10)
+    private var size = 0
+
+    def left(s: Int): Int = (keys(s) >>> 32).toInt
+    def right(s: Int): Int = keys(s).toInt
+
+    private def home(key: Long, mask: Int): Int = {
+      val h = key * 0x9E3779B97F4A7C15L
+      (h ^ (h >>> 29)).toInt & mask
+    }
+
+    /** The slot of pair (a, b), created with count 0 if new. */
+    def slot(a: Int, b: Int): Int = {
+      val key = (a.toLong << 32) | (b & 0xffffffffL)
+      val mask = index.length - 1
+      var i = home(key, mask)
+      while (index(i) >= 0) {
+        if (keys(index(i)) == key) return index(i)
+        i = (i + 1) & mask
+      }
+      val s = size
+      if (s == keys.length) {
+        keys = java.util.Arrays.copyOf(keys, s * 2)
+        count = java.util.Arrays.copyOf(count, s * 2)
+        occ = java.util.Arrays.copyOf(occ, s * 2)
+        occLen = java.util.Arrays.copyOf(occLen, s * 2)
+      }
+      keys(s) = key
+      size += 1
+      index(i) = s
+      if (size * 2 > index.length) rehash()
+      s
+    }
+
+    private def rehash(): Unit = {
+      index = Array.fill(index.length * 2)(-1)
+      val mask = index.length - 1
+      var s = 0
+      while (s < size) {
+        var i = home(keys(s), mask)
+        while (index(i) >= 0) i = (i + 1) & mask
+        index(i) = s
+        s += 1
+      }
+    }
+
+    def addOccurrence(s: Int, wi: Int): Unit = {
+      val n = occLen(s)
+      if (n == 0 || occ(s)(n - 1) != wi) {
+        if (occ(s) == null) occ(s) = new Array[Int](4)
+        else if (n == occ(s).length) occ(s) = java.util.Arrays.copyOf(occ(s), n * 2)
+        occ(s)(n) = wi
+        occLen(s) = n + 1
+      }
+    }
+
+    /** The distinct words pair `s` was added in, ascending; the list is
+      * emptied (the merge of `s` rewrites every one of them). */
+    def takeOccurrences(s: Int): Array[Int] = {
+      val ws = if (occ(s) == null) Array.emptyIntArray else java.util.Arrays.copyOf(occ(s), occLen(s))
+      occ(s) = null
+      occLen(s) = 0
+      java.util.Arrays.sort(ws)
+      var o = 0
+      var i = 0
+      while (i < ws.length) {
+        if (o == 0 || ws(o - 1) != ws(i)) { ws(o) = ws(i); o += 1 }
+        i += 1
+      }
+      java.util.Arrays.copyOf(ws, o)
+    }
+  }
+
+  /** A binary max-heap of (count, slot) entries, ordered by count
+    * descending, then the pair's (left, right) strings ascending. An
+    * entry is pushed whenever a pair's count moves and is never updated
+    * in place: one whose count differs from its pair's live count is
+    * stale. */
+  private final class PairHeap(pairs: PairTable, strs: mutable.ArrayBuffer[String]) {
+    private var counts = new Array[Long](1 << 12)
+    private var slots = new Array[Int](1 << 12)
+    private var size = 0
+
+    private def before(i: Int, j: Int): Boolean = {
+      val ci = counts(i); val cj = counts(j)
+      if (ci != cj) ci > cj
+      else {
+        val si = slots(i); val sj = slots(j)
+        val l = strs(pairs.left(si)).compareTo(strs(pairs.left(sj)))
+        if (l != 0) l < 0
+        else strs(pairs.right(si)).compareTo(strs(pairs.right(sj))) < 0
+      }
+    }
+
+    private def swap(i: Int, j: Int): Unit = {
+      val c = counts(i); counts(i) = counts(j); counts(j) = c
+      val s = slots(i); slots(i) = slots(j); slots(j) = s
+    }
+
+    /** Push slot `s` at its live count. */
+    def push(s: Int): Unit = {
+      if (size == counts.length) {
+        counts = java.util.Arrays.copyOf(counts, size * 2)
+        slots = java.util.Arrays.copyOf(slots, size * 2)
+      }
+      counts(size) = pairs.count(s); slots(size) = s
+      var i = size
+      size += 1
+      while (i > 0 && before(i, (i - 1) / 2)) { swap(i, (i - 1) / 2); i = (i - 1) / 2 }
+    }
+
+    private def pop(): Unit = {
+      size -= 1
+      counts(0) = counts(size); slots(0) = slots(size)
+      var i = 0
+      var done = false
+      while (!done) {
+        val l = 2 * i + 1; val r = l + 1
+        var top = i
+        if (l < size && before(l, top)) top = l
+        if (r < size && before(r, top)) top = r
+        if (top == i) done = true else { swap(i, top); i = top }
+      }
+    }
+
+    /** The slot of the best live pair, removed from the heap; -1 when no
+      * pair is left. */
+    def popLive(): Int = {
+      while (size > 0 && counts(0) != pairs.count(slots(0))) pop()
+      if (size == 0) -1
+      else { val s = slots(0); pop(); s }
+    }
   }
 
   /** [[Tokenizer.corpusWordCounts]] of the NFKC-normalized corpus →

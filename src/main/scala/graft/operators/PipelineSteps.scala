@@ -45,6 +45,13 @@ object PipelineSteps {
   private def writeStep(df: DataFrame, cfg: PipelineConfig, step: String): Long =
     Handoff.write(df, stepDir(cfg.outputBase, step))
 
+  /** `body`'s result and its wall time in seconds. */
+  private def timed[T](body: => T): (T, Double) = {
+    val t0 = System.nanoTime()
+    val out = body
+    (out, (System.nanoTime() - t0) / 1e9)
+  }
+
   /** ingest: WET files → documents parquet (S1-S3). */
   case class IngestStep(maxFiles: Int = Int.MaxValue,
                         wetCfg: WetSource.WetConfig = WetSource.WetConfig()) extends Step {
@@ -94,7 +101,8 @@ object PipelineSteps {
   case class QualityStep() extends Step {
     val name = "quality"
     def run(spark: SparkSession, cfg: PipelineConfig): StepStats = {
-      val in = readStep(spark, cfg, name).df
+      val r = readStep(spark, cfg, name)
+      val in = r.df
       // model seam (reference lid.176.bin swap, quality/model.py:267-340):
       // an artifact path routes labeling through the trained NB scorer —
       // DEFAULTING to the committed 48-language artifact when present
@@ -126,7 +134,7 @@ object PipelineSteps {
           substring(lang, 10, 10).isin(cfg.langs: _*)
             && col("lang_score") >= cfg.langThreshold)
       val out = writeStep(scored.filter(col("quality_keep")), cfg, name)
-      StepStats(name, -1, out)
+      StepStats(name, r.rows.getOrElse(-1), out)
     }
   }
 
@@ -138,8 +146,8 @@ object PipelineSteps {
   case class PiiStep(enableNer: Boolean = false) extends Step {
     val name = "pii"
     def run(spark: SparkSession, cfg: PipelineConfig): StepStats = {
-      val in = readStep(spark, cfg, name).df
-      val flagged0 = in
+      val r = readStep(spark, cfg, name)
+      val flagged0 = r.df
         .withColumn("pii_has_email", PiiFunctions.hasEmail(col("text")))
         .withColumn("pii_has_ip4", PiiFunctions.hasIpv4(col("text")))
         .withColumn("pii_has_ssn", PiiFunctions.hasSsn(col("text")))
@@ -154,7 +162,7 @@ object PipelineSteps {
         if (cfg.keepPiiStats) flagged
         else flagged.drop("pii_has_email", "pii_has_ip4", "pii_has_ssn", "pii_has_phone")
       val out = writeStep(result, cfg, name)
-      StepStats(name, -1, out)
+      StepStats(name, r.rows.getOrElse(-1), out)
     }
   }
 
@@ -163,13 +171,13 @@ object PipelineSteps {
   case class MinhashStep(mh: Dedup.MinHashConfig = Dedup.MinHashConfig()) extends Step {
     val name = "minhash"
     def run(spark: SparkSession, cfg: PipelineConfig): StepStats = {
-      val in = readStep(spark, cfg, name).df
-      val out = writeStep(in
+      val r = readStep(spark, cfg, name)
+      val out = writeStep(r.df
         .withColumn("signature",
           HashFunctions.minhash(TextFunctions.normalizeForDedup(col("text")),
             mh.k, mh.ngram, mh.seed))
         .withColumn("length", length(col("text")).cast("long")), cfg, name)
-      StepStats(name, -1, out)
+      StepStats(name, r.rows.getOrElse(-1), out)
     }
   }
 
@@ -214,78 +222,69 @@ object PipelineSteps {
     * written: a model-free stand-in for SentencePiece training whose
     * data-side contract (corpus in, vocab artifact out) is identical.
     * `bpe` adds [[BpeTrainer]]'s merge artifact and `unigram`
-    * [[UnigramTrainer]]'s piece table. All three count corpus words
-    * through [[Tokenizer.corpusWordCounts]]; `extra` reports that
-    * distributed layer (`count_s`) apart from the driver trainer
-    * (`train_s`; `word` trains nothing). */
+    * [[UnigramTrainer]]'s piece table. Every model is saved through
+    * [[Tokenizer.saveModel]], which keeps the last one in driver memory
+    * for [[TokenizeStep]]. All three count corpus words through
+    * [[Tokenizer.corpusWordCounts]]; `extra` reports that distributed
+    * layer (`count_s`) apart from the driver trainer (`train_s`; `word`
+    * trains nothing) and the step's writes (`write_s`). */
   case class TrainTokenizerStep(corpusShards: Int = 8, maxCorpusChars: Int = 100000) extends Step {
     val name = "train_tokenizer"
     def run(spark: SparkSession, cfg: PipelineConfig): StepStats = {
-      import spark.implicits._
-      val in = readStep(spark, cfg, name).df
+      val r = readStep(spark, cfg, name)
+      val in = r.df
       // S7 sharded text sink: one doc per line, newlines flattened,
       // repartitioned for parallel shard writes (reference:
       // src/llm_data_pipeline/tokenizer/train.py:25-87) - the corpus a
       // native SentencePiece trainer would consume.
-      in.select(substring(regexp_replace(col("text"), "\\n", " "), 1, maxCorpusChars).as("value"))
-        .na.drop()
-        .repartition(corpusShards)
-        .write.mode("overwrite").text(s"${cfg.outputBase}/train_corpus_txt")
+      val (_, corpusS) = timed(
+        in.select(substring(regexp_replace(col("text"), "\\n", " "), 1, maxCorpusChars).as("value"))
+          .na.drop()
+          .repartition(corpusShards)
+          .write.mode("overwrite").text(s"${cfg.outputBase}/train_corpus_txt"))
       // id assignment happens driver-side after the distributed top-k:
       // the vocab artifact is <= vocabSize rows by construction, and this
       // avoids an unpartitioned (single-task) ranking window entirely
-      val t0 = System.nanoTime()
-      val words = Tokenizer.corpusWordCounts(in, "text", TextFunctions.normalizeForDedup,
-        cfg.vocabSize - Tokenizer.Specials.length)
-      val wordCountNs = System.nanoTime() - t0
-      val vocab = (Tokenizer.Specials.map(_ -> 0L) ++ words).zipWithIndex
-        .map { case ((w, f), id) => (w, f, id) }.toDF("word", "freq", "id")
-      val n = Handoff.write(vocab, s"${cfg.outputBase}/vocab_parquet")
-      // the step's two layers, timed apart: the distributed corpus counts
-      // (count_s), then the driver trainer (train_s)
-      val t1 = System.nanoTime()
-      val trainerWords = cfg.tokenizer match {
+      val (words, wordCountS) = timed(Tokenizer.corpusWordCounts(in, "text",
+        TextFunctions.normalizeForDedup, cfg.vocabSize - Tokenizer.Specials.length))
+      val wordModel = Tokenizer.WordModel(words)
+      val (_, vocabS) = timed(Tokenizer.saveModel(spark, cfg.outputBase, wordModel))
+      // the step's layers, timed apart: the distributed corpus counts
+      // (count_s), the driver trainer (train_s) and the writes (write_s)
+      val (trainerWords, trainerCountS) = timed(cfg.tokenizer match {
         case "bpe" | "unigram" => Tokenizer.corpusWordCounts(in, "text",
           Tokenizer.normalizeForTokenize, Tokenizer.TrainerWords, cfg.inputSentenceSize)
         case _ => Nil
-      }
-      val t2 = System.nanoTime()
-      val model: Option[Tokenizer.Model] = cfg.tokenizer match {
+      })
+      val (model, trainS) = timed(cfg.tokenizer match {
         case "bpe" => Some(BpeTrainer.train(trainerWords, cfg.vocabSize, cfg.characterCoverage))
         case "unigram" => Some(UnigramTrainer.train(trainerWords, cfg.vocabSize,
           characterCoverage = cfg.characterCoverage, softEm = cfg.unigramSoftEm))
         case _ => None
-      }
-      val t3 = System.nanoTime()
-      model.foreach {
-        case m: BpeTrainer.BpeModel => BpeTrainer.writeModel(spark, cfg.outputBase, m)
-        case m: UnigramTrainer.UnigramModel =>
-          UnigramTrainer.writeModel(spark, s"${cfg.outputBase}/unigram_model_parquet", m)
-      }
-      StepStats(name, -1, n, 0, Map("count_s" -> ((wordCountNs + t2 - t1) / 1e9).toString,
-        "train_s" -> ((t3 - t2) / 1e9).toString))
+      })
+      val (_, modelS) = timed(model.foreach(Tokenizer.saveModel(spark, cfg.outputBase, _)))
+      StepStats(name, r.rows.getOrElse(-1), wordModel.table.size, 0, Map(
+        "count_s" -> (wordCountS + trainerCountS).toString,
+        "train_s" -> trainS.toString,
+        "write_s" -> (corpusS + vocabS + modelS).toString))
     }
   }
 
-  /** tokenize + pack: load the [[Tokenizer]] model `cfg.tokenizer` names,
-    * encode every doc with it ([[Tokenizer.encode]]: the model broadcast
-    * once, a per-row UDF appended through [[PerRow.append]], the
-    * ActorPool equivalent, SURVEY §2.11), append eos, then the
-    * constant-length [[Packer]]. */
+  /** tokenize + pack: load the [[Tokenizer]] model `cfg.tokenizer` names
+    * ([[Tokenizer.loadModel]]: the model train_tokenizer kept in driver
+    * memory when its artifact is unchanged, else read from the
+    * artifact), encode every doc with it ([[Tokenizer.encode]]: the model
+    * broadcast once, a per-row UDF appended through [[PerRow.append]],
+    * the ActorPool equivalent, SURVEY §2.11), append eos, then the
+    * constant-length [[Packer]]. `extra` reports where the model came
+    * from (`model`: `memory` or `disk`) and the load time (`load_s`). */
   case class TokenizeStep(numPartitions: Int = 0) extends Step {
     val name = "tokenize"
     def run(spark: SparkSession, cfg: PipelineConfig): StepStats = {
-      import spark.implicits._
-      val in = readStep(spark, cfg, name).df
-      val model: Tokenizer.Model = cfg.tokenizer match {
-        case "bpe" => BpeTrainer.loadModel(spark, cfg.outputBase)
-        case "unigram" =>
-          UnigramTrainer.loadModel(spark, s"${cfg.outputBase}/unigram_model_parquet")
-        case _ => Tokenizer.WordModel(Handoff.read(spark, s"${cfg.outputBase}/vocab_parquet").df
-          .select("word", "id").as[(String, Int)].collect().toMap)
-      }
+      val r = readStep(spark, cfg, name)
+      val (loaded, loadS) = timed(Tokenizer.loadModel(spark, cfg.outputBase, cfg.tokenizer))
       val eos = Tokenizer.EosId
-      val tokenized = Tokenizer.encode(in.select("doc_id", "text"), "text", model)
+      val tokenized = Tokenizer.encode(r.df.select("doc_id", "text"), "text", loaded.model)
         .select(col("doc_id"), concat(col("ids"), array(lit(eos))).as("ids"))
       val toks = tokenized
         .withColumn("ord", xxhash64(col("doc_id"))) // stable pseudo-order
@@ -295,7 +294,8 @@ object PipelineSteps {
       // (reference: src/llm_data_pipeline/tokenizer/run.py:220-261,540)
       val out = Handoff.write(packed, stepDir(cfg.outputBase, name),
         Map("compression" -> "zstd", "maxRecordsPerFile" -> "2048"))
-      StepStats(name, -1, out, 0, Map("seq_len" -> cfg.seqLen.toString))
+      StepStats(name, r.rows.getOrElse(-1), out, 0, Map("seq_len" -> cfg.seqLen.toString,
+        "model" -> (if (loaded.fromMemory) "memory" else "disk"), "load_s" -> loadS.toString))
     }
   }
 
@@ -322,7 +322,7 @@ object PipelineSteps {
     val name = "export"
     def run(spark: SparkSession, cfg: PipelineConfig): StepStats = {
       import spark.implicits._
-      val in = readStep(spark, cfg, name).df
+      val r = readStep(spark, cfg, name)
       val outPath = new HPath(s"${cfg.outputBase}/export_tokens.bin")
       val shardDir = new HPath(s"${cfg.outputBase}/export_tokens.shards")
       val hconf = spark.sparkContext.hadoopConfiguration
@@ -336,7 +336,7 @@ object PipelineSteps {
       val bcConf = spark.sparkContext.broadcast(new SerializableHadoopConf(hconf))
       val uint16 = cfg.exportDtype == "uint16"
       val parts = spark.sessionState.conf.numShufflePartitions
-      val flat = in.select(col("part_id"), col("chunk_in_part"), col("input_ids"))
+      val flat = r.df.select(col("part_id"), col("chunk_in_part"), col("input_ids"))
         .repartitionByRange(parts, col("part_id"), col("chunk_in_part"))
         .sortWithinPartitions("part_id", "chunk_in_part")
         .select(col("input_ids"))
@@ -398,7 +398,7 @@ object PipelineSteps {
       try mos.write(manifest.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally mos.close()
       val n = shardStats.map(_._2).sum
-      StepStats(name, -1, n, 0, Map("dtype" -> cfg.exportDtype, "path" -> outPath.toString,
+      StepStats(name, r.rows.getOrElse(-1), n, 0, Map("dtype" -> cfg.exportDtype, "path" -> outPath.toString,
         "shards" -> shardStats.length.toString))
     }
   }

@@ -1,11 +1,12 @@
 package graft.operators
 
-import graft.core.PerRow
+import graft.core.{Handoff, PerRow}
 import graft.functions.{HashFunctions, TextFunctions}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.atomic.AtomicReference
 import scala.collection.mutable
 
 /** The tokenizer layer: the id convention, the encode loop, the corpus
@@ -133,8 +134,14 @@ object Tokenizer {
   /** The pipeline's word vocab: dedup-normalized words (lowercase +
     * whitespace-flatten, no NFKC), ranked by frequency from id 4. A word
     * outside it is unk. Normalized text holds no whitespace but ' ', so
-    * [[Model.encodeText]]'s split is `split(norm, " ")` minus empties. */
-  case class WordModel(vocab: Map[String, Int]) extends Model {
+    * [[Model.encodeText]]'s split is `split(norm, " ")` minus empties.
+    * `words` is the ranked table (word, corpus frequency): `words(i)`
+    * takes id 4 + i. */
+  case class WordModel(words: Seq[(String, Long)]) extends Model {
+    /** The vocab table in id order, the specials at frequency 0 first:
+      * the artifact's rows. */
+    def table: Seq[(String, Long)] = Specials.map(_ -> 0L) ++ words
+    lazy val vocab: Map[String, Int] = table.iterator.map(_._1).zipWithIndex.toMap
     def normalize(c: Column): Column = TextFunctions.normalizeForDedup(c)
     def encodeWord(word: String): Seq[Int] = Seq(vocab.getOrElse(word, UnkId))
   }
@@ -170,6 +177,74 @@ object Tokenizer {
       .limit(limit)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
   }
+
+  /** The artifact directories of a `kind` model ("bpe" | "unigram" |
+    * "word", [[graft.core.Pipeline.PipelineConfig]]'s `tokenizer`) under
+    * `base`. */
+  def artifactDirs(base: String, kind: String): Seq[String] = kind match {
+    case "bpe" => Seq(s"$base/bpe_merges_parquet", s"$base/bpe_vocab_parquet")
+    case "unigram" => Seq(s"$base/unigram_model_parquet")
+    case _ => Seq(s"$base/vocab_parquet")
+  }
+
+  /** A model as [[loadModel]] found it: the one [[saveModel]] kept in
+    * driver memory, or one read from its artifact. */
+  case class Loaded(model: Model, fromMemory: Boolean)
+
+  /** The last model saved, with the part files [[Handoff]] recorded for
+    * its artifact directories. One entry, so memory stays bounded. */
+  private case class Saved(dirs: Seq[String], files: Seq[Map[String, Long]], model: Model)
+  private val lastSaved = new AtomicReference[Option[Saved]](None)
+
+  /** The part files [[Handoff]] recorded for each of `dirs`, while every
+    * directory still holds exactly them. */
+  private def intactFiles(spark: SparkSession, dirs: Seq[String]): Option[Seq[Map[String, Long]]] = {
+    val files = dirs.map(Handoff.writtenFiles(spark, _))
+    if (files.forall(_.isDefined)) Some(files.flatten) else None
+  }
+
+  /** Write `model`'s artifact under `base` through [[Handoff]] and keep
+    * the model in driver memory for [[loadModel]]. */
+  def saveModel(spark: SparkSession, base: String, model: Model): Unit = {
+    import spark.implicits._
+    val kind = model match {
+      case m: BpeTrainer.BpeModel => BpeTrainer.writeModel(spark, base, m); "bpe"
+      case m: UnigramTrainer.UnigramModel =>
+        UnigramTrainer.writeModel(spark, artifactDirs(base, "unigram").head, m); "unigram"
+      case m: WordModel =>
+        Handoff.write(m.table.zipWithIndex.map { case ((w, f), id) => (w, f, id) }
+          .toDF("word", "freq", "id"), artifactDirs(base, "word").head)
+        "word"
+    }
+    val dirs = artifactDirs(base, kind)
+    lastSaved.set(intactFiles(spark, dirs).map(Saved(dirs, _, model)))
+  }
+
+  /** The `kind` model under `base`: the one [[saveModel]] kept, with no
+    * Spark job, when it was the last one saved in this JVM and every
+    * artifact directory still holds exactly the part files written then;
+    * otherwise (a `--resume-from` in a new JVM, a directory rewritten by
+    * anything else) read from the artifact. */
+  def loadModel(spark: SparkSession, base: String, kind: String): Loaded = {
+    import spark.implicits._
+    val dirs = artifactDirs(base, kind)
+    lastSaved.get.filter(s => s.dirs == dirs && intactFiles(spark, dirs).contains(s.files)) match {
+      case Some(s) => Loaded(s.model, fromMemory = true)
+      case None => Loaded(kind match {
+        case "bpe" => BpeTrainer.loadModel(spark, base)
+        case "unigram" => UnigramTrainer.loadModel(spark, dirs.head)
+        case _ =>
+          val table = Handoff.read(spark, dirs.head).df
+            .select("word", "freq", "id").as[(String, Long, Int)].collect().sortBy(_._3)
+          require(table.map(_._3).toSeq == table.indices && table.length >= Specials.length,
+            s"${dirs.head}: ids are not 0 until ${table.length}")
+          WordModel(table.toSeq.drop(Specials.length).map(r => (r._1, r._2)))
+      }, fromMemory = false)
+    }
+  }
+
+  /** Drops the model [[saveModel]] kept, as a new JVM starts without it. */
+  private[graft] def forgetSavedModel(): Unit = lastSaved.set(None)
 
   /** Distributed encode with the broadcast model: every input column
     * plus `ids: array<int>`, the model's [[Model.encodeText]] of the

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Handoff
 import graft.operators.Tokenizer._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -354,19 +355,18 @@ object UnigramTrainer {
 
   /** Model artifact: (kind, piece, logp, id) rows — probabilities ARE
     * the model (segmentation depends on them), stored explicitly like
-    * BPE stores merge rank. */
+    * BPE stores merge rank. One file, written through [[Handoff]]. */
   def writeModel(spark: org.apache.spark.sql.SparkSession, path: String,
                  m: UnigramModel): Unit = {
     import spark.implicits._
     val pieces = m.pieces.toSeq.map { case (p, lp) => ("piece", p, lp, -1) }
     val vocab = m.vocab.toSeq.map { case (p, id) => ("vocab", p, 0.0, id) }
-    (pieces ++ vocab).toDF("kind", "piece", "logp", "id")
-      .repartition(1).write.mode("overwrite").parquet(path)
+    Handoff.write((pieces ++ vocab).toDF("kind", "piece", "logp", "id").repartition(1), path)
   }
 
   def loadModel(spark: org.apache.spark.sql.SparkSession,
                 path: String): UnigramModel = {
-    val rows = spark.read.parquet(path)
+    val rows = Handoff.read(spark, path).df
       .select("kind", "piece", "logp", "id").collect()
     val pieces = rows.filter(_.getString(0) == "piece")
       .map(r => r.getString(1) -> r.getDouble(2)).toMap

@@ -111,57 +111,116 @@ class BpeTrainerSpec extends SparkSpec {
     assert(outAscii == outWide && outAscii.nonEmpty)
   }
 
-  test("incremental merge loop is equivalent to the naive full-rescan reference") {
-    // the naive loop the incremental trainer replaced: full pair recount
-    // + argmax per iteration; must produce the IDENTICAL merge sequence
-    def naiveMerges(wordFreqs: Seq[(String, Long)], vocabSize: Int): Seq[(String, String)] = {
-      def cps(w: String) = w.map(_.toString).toVector
-      var words: Array[(Array[String], Long)] =
-        wordFreqs.map { case (w, f) => ((cps(w) :+ "</w>").toArray, f) }.toArray
-      val base = scala.collection.mutable.LinkedHashSet[String]("</w>")
-      wordFreqs.foreach(_._1.foreach(c => base += c.toString))
-      val merges = scala.collection.mutable.ArrayBuffer[(String, String)]()
-      val maxMerges = math.max(0, vocabSize - 4 - 256 - base.size)
-      var iter = 0; var exhausted = false
-      while (iter < maxMerges && !exhausted) {
-        val pc = scala.collection.mutable.Map[(String, String), Long]()
-        words.foreach { case (syms, f) =>
-          var i = 0
-          while (i < syms.length - 1) {
-            val p = (syms(i), syms(i + 1)); pc.update(p, pc.getOrElse(p, 0L) + f); i += 1
-          }
-        }
-        if (pc.isEmpty) exhausted = true
-        else {
-          val best = pc.toSeq.minBy { case ((a, b), c) => (-c, a, b) }._1
-          merges += best
-          val ms = best._1 + best._2
-          words = words.map { case (syms, f) =>
-            val out = scala.collection.mutable.ArrayBuffer[String]()
-            var i = 0
-            while (i < syms.length) {
-              if (i < syms.length - 1 && syms(i) == best._1 && syms(i + 1) == best._2) {
-                out += ms; i += 2
-              } else { out += syms(i); i += 1 }
-            }
-            (out.toArray, f)
-          }
-        }
-        iter += 1
+  /** The naive loop the incremental trainer replaced, on code points:
+    * the alphabet cut, then a full pair recount + argmax per merge (max
+    * count, ties by (left, right) in String order), counting only pairs
+    * of mergeable symbols. Returns the merges and the vocab. */
+  private def naiveTrain(wordFreqs: Seq[(String, Long)], vocabSize: Int,
+                         coverage: Double = 1.0): (Seq[(String, String)], Map[String, Int]) = {
+    import scala.collection.mutable
+    val eow = "</w>"
+    def cps(w: String) = w.codePoints().toArray.toSeq.map(cp => new String(Character.toChars(cp)))
+    var words: Array[(Array[String], Long)] =
+      wordFreqs.map { case (w, f) => ((cps(w) :+ eow).toArray, f) }.toArray
+    val all = mutable.LinkedHashSet[String](eow)
+    wordFreqs.foreach(wf => cps(wf._1).foreach(all += _))
+    val budget = vocabSize - Tokenizer.FirstLearnedId
+    val base: Seq[String] =
+      if (all.size <= budget && coverage >= 1.0) all.toSeq
+      else {
+        val mass = mutable.Map[String, Long]().withDefaultValue(0L)
+        wordFreqs.foreach { case (w, f) => cps(w).foreach(c => mass(c) += f) }
+        val byMass = all.toSeq.filterNot(_ == eow).sortBy(c => (-mass(c), c))
+        val target = math.ceil(coverage * byMass.map(mass).sum).toLong
+        var k = 0; var cum = 0L
+        while (k < byMass.size && cum < target) { cum += mass(byMass(k)); k += 1 }
+        eow +: byMass.take(math.min(k, budget - 1))
       }
-      merges.toSeq
+    val mergeable = mutable.Set[String]() ++ base
+    val merges = mutable.ArrayBuffer[(String, String)]()
+    val maxMerges = math.max(0, budget - base.size)
+    var exhausted = false
+    while (merges.size < maxMerges && !exhausted) {
+      val pc = mutable.Map[(String, String), Long]()
+      words.foreach { case (syms, f) =>
+        syms.sliding(2).filter(p => p.length == 2 && mergeable(p(0)) && mergeable(p(1)))
+          .foreach(p => pc((p(0), p(1))) = pc.getOrElse((p(0), p(1)), 0L) + f)
+      }
+      if (pc.isEmpty) exhausted = true
+      else {
+        val best = pc.toSeq.minBy { case ((a, b), c) => (-c, a, b) }._1
+        merges += best
+        val ms = best._1 + best._2
+        mergeable += ms
+        words = words.map { case (syms, f) =>
+          val out = mutable.ArrayBuffer[String]()
+          var i = 0
+          while (i < syms.length) {
+            if (i < syms.length - 1 && syms(i) == best._1 && syms(i + 1) == best._2) {
+              out += ms; i += 2
+            } else { out += syms(i); i += 1 }
+          }
+          (out.toArray, f)
+        }
+      }
     }
+    val symbols = (base ++ merges.map(m => m._1 + m._2)).distinct
+    (merges.toSeq, Tokenizer.ReservedVocab ++
+      symbols.zipWithIndex.map { case (s, i) => s -> (i + Tokenizer.FirstLearnedId) })
+  }
+
+  /** `n` weighted words over `alphabet` (code points), repeats summed. */
+  private def randomTable(rnd: scala.util.Random, alphabet: IndexedSeq[String], n: Int,
+                          maxLen: Int): Seq[(String, Long)] =
+    Seq.fill(n) {
+      (1 to (1 + rnd.nextInt(maxLen))).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString ->
+        (1L + rnd.nextInt(9) * rnd.nextInt(9))
+    }.groupMapReduce(_._1)(_._2)(_ + _).toSeq.sortBy(_._1)
+
+  test("incremental merge loop is equivalent to the naive full-rescan reference") {
+    val ascii = "abcd".map(_.toString)
+    // U+E000 sorts after U+1F600's surrogates in UTF-16 but before it by
+    // code point; U+1D538 is a second non-BMP letter
+    val wide = IndexedSeq("a", "b", "\u00e9", "\ue000", "\ud83d\ude00", "\ud835\udd38")
     val rnd = new scala.util.Random(11)
-    for (trial <- 1 to 5) {
-      val alphabet = "abcd"
-      val words = (1 to 30).map { _ =>
-        (1 to (2 + rnd.nextInt(6))).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString ->
-          (1L + rnd.nextInt(9))
-      }.groupBy(_._1).map { case (w, xs) => w -> xs.map(_._2).sum }.toSeq.sortBy(_._1)
-      val vocab = 270 + rnd.nextInt(20)
-      assert(BpeTrainer.train(words, vocab).merges == naiveMerges(words, vocab),
-        s"trial $trial")
+    for (trial <- 1 to 24) {
+      val alphabet = if (trial % 2 == 0) wide else ascii
+      val n = if (trial % 6 == 0) 2000 else 20 + rnd.nextInt(400)
+      val words = randomTable(rnd, alphabet, n, maxLen = if (n == 2000) 10 else 2 + rnd.nextInt(8))
+      val coverage = Seq(1.0, 1.0, 0.99, 0.9, 0.7)(trial % 5)
+      val vocab = Tokenizer.FirstLearnedId + alphabet.size + 1 + rnd.nextInt(if (n > 500) 120 else 60)
+      val m = BpeTrainer.train(words, vocab, coverage)
+      val (merges, vocabRef) = naiveTrain(words, vocab, coverage)
+      assert(m.merges == merges, s"trial $trial (n=$n, coverage=$coverage)")
+      assert(m.vocab == vocabRef, s"trial $trial vocab")
     }
+  }
+
+  test("merge ties break by UTF-16 String order, not code-point order") {
+    // (U+1F600, </w>) and (U+E000, </w>) tie at count 5: U+1F600's high
+    // surrogate D83D sorts before E000, so it merges first
+    val words = Seq("\ue000" -> 5L, "\ud83d\ude00" -> 5L)
+    val m = BpeTrainer.train(words, vocabSize = 300)
+    assert(m.merges.take(2) == Seq("\ud83d\ude00" -> "</w>", "\ue000" -> "</w>"))
+    assert(m.merges == naiveTrain(words, 300)._1)
+  }
+
+  test("merge list at vocab 8000 is pinned on a fixed synthetic corpus") {
+    // 3,000 Zipf-weighted words over 26 latin letters, two accented
+    // letters and two non-BMP letters: thousands of merges, and ties at
+    // every low count
+    val rnd = new scala.util.Random(2024)
+    val alphabet = ('a' to 'z').map(_.toString) ++
+      Seq("\u00e9", "\u00fc", "\ud83d\ude00", "\ud835\udd38")
+    val words = Iterator.continually {
+      (1 to (2 + rnd.nextInt(9))).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
+    }.distinct.take(3000).toSeq.zipWithIndex.map { case (w, r) => w -> (1L + 20000L / (r + 1)) }
+    val m = BpeTrainer.train(words, vocabSize = 8000)
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(m.merges.map { case (a, b) => a + "\u0000" + b }.mkString("\n").getBytes("UTF-8"))
+      .map(b => f"$b%02x").mkString
+    assert(m.merges.size == 7709)
+    assert(digest == "e214be154473c2dd0426054a1e819e061c51658aee37cc49460b531aa1a26d93")
   }
 
   test("frequent whole words collapse to few tokens, rare words to more") {

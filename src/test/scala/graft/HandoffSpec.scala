@@ -1,12 +1,9 @@
 package graft
 
 import graft.core.Handoff
-import org.apache.spark.GraftBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.lit
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 /** The step-directory handoff: writes count their own rows, and a
   * directory written through the handoff reads back without a Spark job
@@ -15,22 +12,6 @@ class HandoffSpec extends SparkSpec {
 
   private def freshDir(): String =
     Files.createTempDirectory("handoff").resolve("out").toString
-
-  /** `body`'s result and the number of Spark jobs it started. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    GraftBus.drain(sc)
-    val jobs = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      val out = body
-      GraftBus.drain(sc)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   test("a directory written through the handoff reads back with no Spark job") {
     import spark.implicits._

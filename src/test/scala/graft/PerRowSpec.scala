@@ -85,7 +85,7 @@ class PerRowSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val lid = TrainedLid.train(docs.na.drop(), "lang", "text")
     val assets = Multimodal.synthesizeAssets(spark.range(12).toDF("id"), "id").localCheckpoint()
     val outputs = Seq(
-      "Tokenizer.encode" -> Tokenizer.encode(docs, "text", Tokenizer.WordModel(Map("der" -> 4))),
+      "Tokenizer.encode" -> Tokenizer.encode(docs, "text", Tokenizer.WordModel(Seq("der" -> 2L))),
       "TrainedLid.predict" -> TrainedLid.predict(docs, "text", lid),
       "FastTextBin.predictDf" -> FastTextBin.predictDf(docs, "text", FastTextBin.read(ftFixture())),
       "Multimodal.extractFeatures" -> Multimodal.extractFeatures(assets),

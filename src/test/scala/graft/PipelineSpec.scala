@@ -129,11 +129,17 @@ class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
     assert(byStep("train_tokenizer").outputRows == rowsIn(s"$outBase/vocab_parquet"))
     assert(byStep("clean").extra("dropped").toLong == rowsIn(s"$outBase/dropped_parquet"))
-    assert(byStep("clean").inputRows == byStep("ingest").outputRows)
-    assert(byStep("clustering").inputRows == byStep("minhash").outputRows)
+    // every step reports as its input rows what its input step wrote
+    Pipeline.stepInput.foreach { case (s, from) =>
+      assert(byStep(s).inputRows == byStep(from).outputRows, s)
+    }
     // every step reports its codegen compiles; clustering its regime
     stats.foreach(st => assert(st.extra("codegen_compiles").toLong >= 0, st.step))
     assert(byStep("clustering").extra("regime") == "driver")
+    // train_tokenizer times its writes; tokenize got the model it kept
+    assert(byStep("train_tokenizer").extra("write_s").toDouble > 0)
+    assert(byStep("tokenize").extra("model") == "memory")
+    assert(byStep("tokenize").extra("load_s").toDouble >= 0)
 
     // schema contracts per stage
     val cleaned = spark.read.parquet(s"$outBase/cleaned_parquet")

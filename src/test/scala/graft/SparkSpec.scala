@@ -2,6 +2,7 @@ package graft
 
 import graft.core.Session
 import org.apache.spark.GraftBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
@@ -18,6 +19,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * local relation, not a distributed computation. */
   def foldedOnDriver(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    GraftBus.drain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      GraftBus.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
 
   /** The executed plans of every query `body` runs. */
   def executedPlans(body: => Unit): Seq[SparkPlan] = {

@@ -21,7 +21,7 @@ class TokenizerSpec extends SparkSpec {
       .toDF("text")
     val words = Tokenizer.corpusWordCounts(corpus, "text", TextFunctions.normalizeForDedup, 5)
     val vocab = (Tokenizer.Specials.map(_ -> 0L) ++ words).map(_._1).zipWithIndex.toMap
-    val m = Tokenizer.WordModel(vocab)
+    val m = Tokenizer.WordModel(words)
     val df = adversarial.zipWithIndex.toDF("text", "i")
     val norm = TextFunctions.normalizeForDedup(col("text"))
     // the word path before the shared encode: split the dedup-normalized
@@ -50,7 +50,7 @@ class TokenizerSpec extends SparkSpec {
     val models: Seq[Tokenizer.Model] = Seq(
       BpeTrainer.trainFromCorpus(corpus, "text", vocabSize = 280),
       UnigramTrainer.trainFromCorpus(corpus, "text", vocabSize = 280),
-      Tokenizer.WordModel(Map("shared" -> 4, "words" -> 5)))
+      Tokenizer.WordModel(Seq("shared" -> 2L, "words" -> 2L)))
     models.foreach { m =>
       val before = adversarial.map(t => m.encodeText(t).toSeq) // fills the memo
       val bytes = new java.io.ByteArrayOutputStream()
@@ -73,7 +73,7 @@ class TokenizerSpec extends SparkSpec {
         .collect().toSeq
       assert(ids == Seq(Some(m.encodeText("shared words").toSeq), None))
     }
-  nullTextCase("word", _ => Tokenizer.WordModel(Map("shared" -> 4, "words" -> 5)))
+  nullTextCase("word", _ => Tokenizer.WordModel(Seq("shared" -> 2L, "words" -> 2L)))
   nullTextCase("BPE", BpeTrainer.trainFromCorpus(_, "text", vocabSize = 280))
   nullTextCase("unigram", UnigramTrainer.trainFromCorpus(_, "text", vocabSize = 280))
 }
