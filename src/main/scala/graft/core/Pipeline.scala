@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.collection.mutable.ArrayBuffer
@@ -92,7 +93,8 @@ object Pipeline {
     * (reference: pipeline.py:144-186). Each step's `extra` gains
     * `codegen_compiles`: the generated classes the JVM compiled while the
     * step ran (Spark's codegen cache misses; a warm pass that recompiles
-    * is thrashing that cache). */
+    * is thrashing that cache), and `codegen_s`: the seconds those
+    * compiles took (`CodeGenerator.compileTime`). */
   def run(spark: SparkSession, cfg: PipelineConfig, steps: Seq[Step],
           resumeFrom: Option[String] = None): Seq[StepStats] = {
     val ordered = steps.sortBy(s => stepOrder.indexOf(s.name))
@@ -105,9 +107,11 @@ object Pipeline {
     selected.foreach { step =>
       val t0 = System.nanoTime()
       val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val ct0 = CodeGenerator.compileTime
       val st0 = step.run(spark, cfg)
       val st = st0.copy(elapsedSec = (System.nanoTime() - t0) / 1e9, extra = st0.extra +
-        ("codegen_compiles" -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0).toString))
+        ("codegen_compiles" -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0).toString) +
+        ("codegen_s" -> ((CodeGenerator.compileTime - ct0) / 1e9).toString))
       acc += st
       Files.write(Paths.get(s"${cfg.outputBase}/pipeline_stats.json"),
         statsJson(acc.toSeq).getBytes("UTF-8"),

@@ -70,6 +70,11 @@ object HashFunctions {
   def stopwordLangHits(c: Column, table: Seq[Seq[String]]): Column =
     ExpressionUtils.column(StopwordLangHits(ExpressionUtils.expression(c), table))
 
+  /** `best / greatest(total, 1)` over [[stopwordLangHits]]' counts, one
+    * pass; see [[StopwordMargin]]. */
+  def stopwordMargin(c: Column, table: Seq[Seq[String]]): Column =
+    ExpressionUtils.column(StopwordMargin(ExpressionUtils.expression(c), table))
+
   /** Sign-LSH bucket ids for `tables` independent hyperplane tables in
     * one pass (array<long>, one bucket per table). The Column-HOF
     * formulation evaluates `tables × planes` interpreted aggregate
@@ -607,20 +612,14 @@ private[functions] object AsciiWordTokenizer {
     }
     m
   }
-}
 
-case class StopwordLangHits(child: Expression, table: Seq[Seq[String]])
-    extends UnaryExpression with RefEvalCodegen {
-  import AsciiWordTokenizer._
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override protected def javaResultType: String =
-    "org.apache.spark.sql.catalyst.util.ArrayData"
-
-  @transient private lazy val wordLangs = buildWordLangs(table)
-
-  override def nullSafeEval(v: Any): Any = {
-    val bytes = v.asInstanceOf[UTF8String].getBytes
-    val hits = new Array[Int](table.length)
+  /** Per-language hit counts of `s`: each maximal word-char run of at
+    * most [[MaxTokenLen]] bytes that `wordLangs` lists counts once for
+    * every language listing it. */
+  def stopwordHits(s: UTF8String, wordLangs: java.util.HashMap[String, Array[Int]],
+                   nLangs: Int): Array[Int] = {
+    val bytes = s.getBytes
+    val hits = new Array[Int](nLangs)
     var i = 0
     while (i < bytes.length) {
       while (i < bytes.length && !isWordByte(bytes(i))) i += 1
@@ -635,10 +634,47 @@ case class StopwordLangHits(child: Expression, table: Seq[Seq[String]])
         }
       }
     }
-    new GenericArrayData(hits)
+    hits
   }
+}
+
+case class StopwordLangHits(child: Expression, table: Seq[Seq[String]])
+    extends UnaryExpression with RefEvalCodegen {
+  import AsciiWordTokenizer._
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override protected def javaResultType: String =
+    "org.apache.spark.sql.catalyst.util.ArrayData"
+
+  @transient private lazy val wordLangs = buildWordLangs(table)
+
+  override def nullSafeEval(v: Any): Any =
+    new GenericArrayData(stopwordHits(v.asInstanceOf[UTF8String], wordLangs, table.length))
   override protected def withNewChildInternal(c: Expression): StopwordLangHits = copy(child = c)
   override def prettyName: String = "stopword_lang_hits"
+}
+
+/** Normalized stopword-evidence margin `best / greatest(total, 1)` over
+  * [[StopwordLangHits]]' per-language counts, in the same pass that
+  * counts them: `best` is the largest count (0 for an empty table) and
+  * `total` their sum, both divided as doubles, exactly as the `aggregate`
+  * fold this kernel replaced did. */
+case class StopwordMargin(child: Expression, table: Seq[Seq[String]])
+    extends UnaryExpression with RefEvalCodegen {
+  import AsciiWordTokenizer._
+  override def dataType: DataType = DoubleType
+  override protected def javaResultType: String = "Double"
+
+  @transient private lazy val wordLangs = buildWordLangs(table)
+
+  override def nullSafeEval(v: Any): Any = {
+    val hits = stopwordHits(v.asInstanceOf[UTF8String], wordLangs, table.length)
+    var best = 0
+    var total = 0
+    hits.foreach { h => best = math.max(best, h); total += h }
+    best.toDouble / math.max(total.toDouble, 1.0)
+  }
+  override protected def withNewChildInternal(c: Expression): StopwordMargin = copy(child = c)
+  override def prettyName: String = "stopword_margin"
 }
 
 /** Complete language-ID label in ONE pass over the text's bytes:

@@ -1,7 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
+import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-cleaning and text-analysis functions, all as native Spark Column
   * expressions (whole-stage-codegen'd — no UDFs in the hot path).
@@ -178,25 +182,13 @@ object TextFunctions {
         (length(c) - length(regexp_replace(c, "[0-9]", ""))).cast("double") / length(c))
 
   /** F6 — duplicate-line ratio: split lines, trim, drop blanks; <5 lines
-    * -> 0.0; else (# lines whose trimmed form occurs >1 times)/lines.
-    * Pure higher-order-function implementation (no UDF): count, for each
-    * line, whether its frequency in the full array is > 1.
+    * -> 0.0; else (# lines whose trimmed form occurs >1 times)/lines; NULL
+    * text gives NULL. One codegen'd kernel ([[DupLineRatio]]): the
+    * lambda chain it replaced was interpreted and pulled CleanStep's
+    * judge out of whole-stage codegen.
     * (reference: src/llm_data_pipeline/clean/rules.py:72-81) */
-  def dupLineRatio(c: Column): Column = {
-    val lines = filter(transform(split(c, "\n"), l => trim(l)), l => length(l) > 0)
-    // count lines whose value occurs more than once: sort, then a line is
-    // duplicated iff it equals its sorted predecessor or successor -
-    // O(n log n) instead of the naive O(n^2) per-row scan
-    val sorted = sort_array(lines)
-    val n = size(sorted)
-    val prev = concat(array(lit(null).cast("string")), slice(sorted, lit(1), n - 1))
-    val next = concat(slice(sorted, lit(2), n), array(lit(null).cast("string")))
-    val eqPrev = zip_with(sorted, prev, (a, b) => a <=> b)
-    val eqNext = zip_with(sorted, next, (a, b) => a <=> b)
-    val dupCount = aggregate(zip_with(eqPrev, eqNext, (a, b) => a || b),
-      lit(0), (acc, x) => acc + when(x, 1).otherwise(0))
-    when(n < 5, lit(0.0)).otherwise(dupCount.cast("double") / n)
-  }
+  def dupLineRatio(c: Column): Column =
+    ExpressionUtils.column(DupLineRatio(ExpressionUtils.expression(c)))
 
   /** Rule thresholds (reference: src/llm_data_pipeline/clean/rules.py:84-113
     * defaults). */
@@ -363,4 +355,37 @@ object TextFunctions {
       // list with the JVM default locale would mismatch it (tr_TR folds
       // "KILL" to dotless-i "kıll" and the blocklisted page survives)
       lit(badwords.map(_.toLowerCase(java.util.Locale.ROOT)).toArray))
+}
+
+/** [[TextFunctions.dupLineRatio]]'s kernel, with the semantics of the
+  * Spark built-ins it replaced: `split(text, "\n")` (limit -1), `trim`
+  * (U+0020 only: tabs stay), lines left empty dropped, then each line
+  * counts when it equals its neighbour in UTF-8 binary order. Fewer than
+  * 5 lines give 0.0; else the count over the lines, divided as doubles. */
+case class DupLineRatio(child: Expression) extends UnaryExpression with RefEvalCodegen {
+  override def dataType: DataType = DoubleType
+  override protected def javaResultType: String = "Double"
+
+  override def nullSafeEval(v: Any): Any = {
+    val lines = v.asInstanceOf[UTF8String].split(DupLineRatio.Newline, -1)
+      .map(_.trim()).filter(_.numBytes > 0)
+    val n = lines.length
+    if (n < 5) 0.0
+    else {
+      java.util.Arrays.sort(lines, java.util.Comparator.naturalOrder[UTF8String]())
+      var dup = 0
+      var i = 0
+      while (i < n) {
+        if ((i > 0 && lines(i) == lines(i - 1)) || (i < n - 1 && lines(i) == lines(i + 1))) dup += 1
+        i += 1
+      }
+      dup.toDouble / n
+    }
+  }
+  override protected def withNewChildInternal(c: Expression): DupLineRatio = copy(child = c)
+  override def prettyName: String = "dup_line_ratio"
+}
+
+object DupLineRatio {
+  private val Newline = UTF8String.fromString("\n")
 }

@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.RowBridge
 import org.apache.spark.sql.types._
 
 import scala.collection.mutable.ArrayBuffer
@@ -146,7 +149,16 @@ object Packer {
     *
     * Chunk boundaries are global positions ≡ 0 (mod seqLen), so the
     * emitted chunk sequence ordered by (part_id, chunk_in_part) equals
-    * the one-partition stream exactly — no dropped per-partition tails. */
+    * the one-partition stream exactly — no dropped per-partition tails.
+    *
+    * Both passes stream catalyst rows: pass 1 reads the sorted rows'
+    * token arrays straight off `queryExecution.toRdd`, inside one SQL
+    * execution ([[RowBridge.withRows]]), and local-checkpoints them, so
+    * pass 2 sees the partitions pass 1 counted; pass 2 builds its chunks
+    * as `InternalRow`s over `UnsafeArrayData` and returns them as a
+    * DataFrame ([[RowBridge.dataFrame]]). No token id is boxed and no
+    * object (de)serializer is generated. A NULL token array counts as an
+    * empty document. */
   def packExact(df: DataFrame, orderCol: String, tokensCol: String, seqLen: Int,
                 eosId: Int, padTail: Boolean = false,
                 numPartitions: Int = 0): DataFrame = {
@@ -154,27 +166,23 @@ object Packer {
     val parts =
       if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
-    val prepared = df
+    val sorted = df
       .select(col(orderCol).cast("long").as("__ord"), col(tokensCol).as("__toks"))
       .repartitionByRange(parts, col("__ord"))
       .sortWithinPartitions("__ord")
-      .localCheckpoint(true) // both passes must see identical partitions
     val L = seqLen
 
     // pass 1: (pid, totalTokens, docCount, headTokens) — head carries no
     // doc ids; they are reconstructed from docOffsets on the driver side
-    case class PartInfo(pid: Int, total: Long, docs: Long,
-                        headToks: Array[Int], headSids: Array[Long])
-    val infos = {
-      import spark.implicits._
-      prepared.mapPartitions { rows =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
+    val (docs, infos) = RowBridge.withRows(sorted, "packExact") { rows =>
+      val docs = rows.map(r => if (r.isNullAt(1)) Array.emptyIntArray else r.getArray(1).toIntArray())
+      docs.localCheckpoint() // both passes must see identical partitions
+      val infos = docs.mapPartitionsWithIndex { (pid, it) =>
         var total = 0L
-        var docs = 0L
+        var n = 0L
         val headT = new ArrayBuffer[Int]()
         val headS = new ArrayBuffer[Long]() // doc index LOCAL to partition
-        rows.foreach { r =>
-          val ids = r.getSeq[Int](1)
+        it.foreach { ids =>
           if (ids.nonEmpty) { // empty docs are skipped stream-wide
             val withEos = ids.length + (if (ids.last != eosId) 1 else 0)
             if (headT.length < L - 1) {
@@ -182,16 +190,17 @@ object Packer {
               var i = 0
               while (i < take) {
                 headT += (if (i < ids.length) ids(i) else eosId)
-                headS += docs
+                headS += n
                 i += 1
               }
             }
             total += withEos
-            docs += 1
+            n += 1
           }
         }
-        Iterator((pid, total, docs, headT.toArray, headS.toArray))
-      }.collect().map(t => PartInfo(t._1, t._2, t._3, t._4, t._5)).sortBy(_.pid)
+        Iterator(PartInfo(pid, total, n, headT.toArray, headS.toArray))
+      }.collect().sortBy(_.pid)
+      (docs, infos)
     }
 
     val n = infos.length
@@ -236,20 +245,18 @@ object Packer {
     val bcPlans = spark.sparkContext.broadcast(plans)
     val bcDocOffset = spark.sparkContext.broadcast(docOffset)
 
-    val enc = org.apache.spark.sql.Encoders.row(chunkSchema)
-    prepared.mapPartitions { rows =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
+    // pass 2: each partition's owned chunks
+    val chunks = docs.mapPartitionsWithIndex { (pid, it) =>
       val (skip, nFull, ownsTail, spillToks, spillSids) =
         bcPlans.value.getOrElse(pid,
           (0L, 0L, false, Array.empty[Int], Array.empty[Long]))
-      val docs = rows.map(_.getSeq[Int](1).toArray)
       // Iterator.drop takes Int; skip < seqLen so the cast is safe
-      val own = tokenStream(docs, eosId, bcDocOffset.value(pid)).drop(skip.toInt)
+      val own = tokenStream(it, eosId, bcDocOffset.value(pid)).drop(skip.toInt)
       val full = own ++ spillToks.iterator.zip(spillSids.iterator)
       val idBuf = new ArrayBuffer[Int](L)
       val sidBuf = new ArrayBuffer[Long](L)
       var emitted = 0L
-      val out = new ArrayBuffer[Row]()
+      val out = new ArrayBuffer[InternalRow]()
       var done = false
       while (!done && (emitted < nFull || ownsTail)) {
         idBuf.clear(); sidBuf.clear()
@@ -258,8 +265,7 @@ object Packer {
           idBuf += t; sidBuf += s
         }
         if (idBuf.length == L && emitted < nFull) {
-          val (local, lens, offs) = runsFromSids(sidBuf.toArray.map(_.toInt))
-          out += Row(pid, emitted, idBuf.toArray.toSeq, local.toSeq, lens.toSeq, offs.toSeq)
+          out += chunkRow(pid, emitted, idBuf.toArray, sidBuf.toArray)
           emitted += 1
         } else {
           // global tail (only the owner reaches here with a short buffer)
@@ -268,14 +274,27 @@ object Packer {
             // pad run stays a distinct segment — reference run.py:207-209
             val freshSid = bcDocOffset.value.last
             while (idBuf.length < L) { idBuf += eosId; sidBuf += freshSid }
-            val (local, lens, offs) = runsFromSids(sidBuf.toArray.map(_.toInt))
-            out += Row(pid, emitted, idBuf.toArray.toSeq, local.toSeq, lens.toSeq, offs.toSeq)
+            out += chunkRow(pid, emitted, idBuf.toArray, sidBuf.toArray)
           }
           done = true
         }
       }
       out.iterator
-    }(enc)
+    }
+    RowBridge.dataFrame(spark, chunks, chunkSchema)
+  }
+
+  /** One partition's pass-1 summary; see [[packExact]]. */
+  private case class PartInfo(pid: Int, total: Long, docs: Long,
+                              headToks: Array[Int], headSids: Array[Long])
+
+  /** One [[chunkSchema]] row: the chunk's ids and its run-length
+    * metadata over the global doc ids `sids`. */
+  private def chunkRow(pid: Int, chunk: Long, ids: Array[Int], sids: Array[Long]): InternalRow = {
+    val (local, lens, offs) = runsFromSids(sids.map(_.toInt))
+    InternalRow(pid, chunk, UnsafeArrayData.fromPrimitiveArray(ids),
+      UnsafeArrayData.fromPrimitiveArray(local), UnsafeArrayData.fromPrimitiveArray(lens),
+      UnsafeArrayData.fromPrimitiveArray(offs))
   }
 
   /** Sequential First-Fit-Decreasing over an already length-descending

@@ -6,6 +6,7 @@ import graft.functions.{HashFunctions, PiiFunctions, TextFunctions}
 import graft.sources.WetSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.RowBridge
 import org.apache.spark.storage.StorageLevel
 
 import org.apache.hadoop.fs.{Path => HPath}
@@ -317,11 +318,15 @@ object PipelineSteps {
     * uint16 bounds: the reference WARNS and wraps (numpy astype;
     * reference: export/run.py:125-127) — mirrored here, `toShort` wraps
     * identically mod 65536. Each shard task reports its max id with its
-    * counts, so the check costs no pass of its own. */
+    * counts, so the check costs no pass of its own.
+    *
+    * The shard tasks read the sorted chunks' catalyst rows
+    * (`queryExecution.toRdd`) inside one SQL execution
+    * ([[RowBridge.withRows]]) and copy each chunk's ids straight out of
+    * its `UnsafeArrayData`: no object deserializer, no boxed ids. */
   case class ExportStep() extends Step {
     val name = "export"
     def run(spark: SparkSession, cfg: PipelineConfig): StepStats = {
-      import spark.implicits._
       val r = readStep(spark, cfg, name)
       val outPath = new HPath(s"${cfg.outputBase}/export_tokens.bin")
       val shardDir = new HPath(s"${cfg.outputBase}/export_tokens.shards")
@@ -340,9 +345,8 @@ object PipelineSteps {
         .repartitionByRange(parts, col("part_id"), col("chunk_in_part"))
         .sortWithinPartitions("part_id", "chunk_in_part")
         .select(col("input_ids"))
-      val shardStats = flat.mapPartitions { it =>
+      val shardStats = RowBridge.withRows(flat, "export") { _.mapPartitionsWithIndex { (pid, it) =>
         val tc = org.apache.spark.TaskContext.get()
-        val pid = tc.partitionId()
         val fs = new HPath(shardPath).getFileSystem(bcConf.value.conf)
         // write to an attempt-private temp file, then rename into place:
         // a retried or speculative attempt can never interleave bytes
@@ -353,15 +357,19 @@ object PipelineSteps {
         var n = 0L
         var maxId = Int.MinValue
         it.foreach { r =>
-          val ids = r.getSeq[Int](0)
-          val bb = ByteBuffer.allocate(ids.length * (if (uint16) 2 else 4))
+          val ids = r.getArray(0)
+          val len = ids.numElements()
+          val bb = ByteBuffer.allocate(len * (if (uint16) 2 else 4))
             .order(ByteOrder.LITTLE_ENDIAN)
-          ids.foreach { i =>
+          var k = 0
+          while (k < len) {
+            val i = ids.getInt(k)
             if (i > maxId) maxId = i
             if (uint16) bb.putShort(i.toShort) else bb.putInt(i)
+            k += 1
           }
           os.write(bb.array())
-          n += ids.length
+          n += len
         }
         os.close()
         val f = new HPath(shardPath, f"part-$pid%05d.bin")
@@ -376,7 +384,7 @@ object PipelineSteps {
             throw new java.io.IOException(s"shard commit failed: $f")
         }
         Iterator((pid, n, fs.getFileStatus(f).getLen, maxId))
-      }.collect().sortBy(_._1)
+      }.collect() }.sortBy(_._1)
       val topId = shardStats.map(_._4).maxOption.getOrElse(Int.MinValue)
       if (uint16 && topId >= 65535)
         System.err.println(s"[graft] WARNING: token id $topId >= 65535 exported as uint16 (wraps)")

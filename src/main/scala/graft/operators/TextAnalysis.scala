@@ -75,20 +75,16 @@ object TextAnalysis {
     graft.functions.HashFunctions.langIdLabelExpr(text, table, 0.05)
 
   /** LID score in [0,1]: normalized stopword-evidence margin,
-    * `best / greatest(total, 1)` over the per-language hit counts,
-    * rounded 6dp (total = 0 implies best = 0). The hits array is
-    * referenced once, folded by one `aggregate`: QualityStep appends the
-    * score through a generator ([[graft.core.PerRow]]), which has no
-    * common-subexpression elimination, so each `element_at(hits, i)`
-    * reference would re-run the tokenizing pass. */
+    * `best / greatest(total, 1)` over the per-language hit counts of
+    * `lower(text)`, rounded 6dp (total = 0 implies best = 0); NULL text
+    * gives NULL. The counting and the margin are one codegen'd kernel
+    * ([[graft.functions.StopwordMargin]]): QualityStep appends the score
+    * through a generator ([[graft.core.PerRow]]), and a lambda fold here
+    * would be interpreted, keep that generator out of whole-stage codegen
+    * and split the step into two stages. */
   def langIdScore(text: Column,
                   table: Seq[(String, Seq[String])] = LangStopwords): Column =
-    aggregate(graft.functions.HashFunctions.stopwordLangHits(lower(text), table.map(_._2)),
-      struct(lit(0).as("best"), lit(0).as("total")),
-      (acc, h) => struct(greatest(acc.getField("best"), h).as("best"),
-        (acc.getField("total") + h).as("total")),
-      acc => round(acc.getField("best").cast("double") /
-        greatest(acc.getField("total").cast("double"), lit(1.0)), 6))
+    round(graft.functions.HashFunctions.stopwordMargin(lower(text), table.map(_._2)), 6)
 
   /** BM25 relevance of each document for a bag of query `terms`
     * (Robertson/Spärck Jones; the Lucene-default formulation:

@@ -111,6 +111,18 @@ class PackerSpec extends SparkSpec {
     }
   }
 
+  test("packExact counts a NULL token array as an empty document") {
+    import spark.implicits._
+    val docs = Seq((1L, Seq(1, 2, 3)), (2L, null), (3L, Seq(4, 5)))
+    val got = Packer.packExact(docs.toDF("id", "ids"), "id", "ids", seqLen = 4, eosId = 0,
+        padTail = true, numPartitions = 3)
+      .orderBy("part_id", "chunk_in_part").collect()
+    val want = Packer.packStream(Iterator(Array(1, 2, 3), Array.empty[Int], Array(4, 5)),
+      4, 0, padTail = true).toSeq
+    assert(got.map(_.getSeq[Int](2)).toSeq == want.map(_._1.toSeq))
+    assert(got.map(_.getSeq[Int](3)).toSeq == want.map(_._2.toSeq))
+  }
+
   test("ffdStream matches a driver-side first-fit reference and respects capacity") {
     val docs = Seq(60L, 55L, 40L, 35L, 30L, 20L, 10L, 5L, 5L, 1L)
       .zipWithIndex.map { case (len, i) => (i.toLong, len) }

@@ -3,8 +3,12 @@ package graft
 import graft.core.Pipeline
 import graft.operators.PipelineSteps
 import graft.sources.WetSource
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.{CollectMetricsExec, DeserializeToObjectExec, FileSourceScanExec,
+  InputAdapter, MapPartitionsExec, SerializeFromObjectExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.WriteFilesExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions.col
@@ -133,8 +137,11 @@ class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     Pipeline.stepInput.foreach { case (s, from) =>
       assert(byStep(s).inputRows == byStep(from).outputRows, s)
     }
-    // every step reports its codegen compiles; clustering its regime
-    stats.foreach(st => assert(st.extra("codegen_compiles").toLong >= 0, st.step))
+    // every step reports its codegen compiles and their time; clustering its regime
+    stats.foreach { st =>
+      assert(st.extra("codegen_compiles").toLong >= 0, st.step)
+      assert(st.extra("codegen_s").toDouble >= 0, st.step)
+    }
     assert(byStep("clustering").extra("regime") == "driver")
     // train_tokenizer times its writes; tokenize got the model it kept
     assert(byStep("train_tokenizer").extra("write_s").toDouble > 0)
@@ -205,7 +212,8 @@ class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // stats json checkpoint exists and is valid-ish
     val js = Files.readString(Path.of(s"$outBase/pipeline_stats.json"))
     assert(js.contains("\"step\": \"export\""))
-    assert(js.contains("\"regime\": \"driver\"") && js.contains("\"codegen_compiles\": "))
+    assert(js.contains("\"regime\": \"driver\"") && js.contains("\"codegen_compiles\": ") &&
+      js.contains("\"codegen_s\": "))
 
     // resume-from: re-run just export reusing prior outputs
     val stats2 = Pipeline.run(spark, cfg, PipelineSteps.all, Some("export"))
@@ -334,5 +342,75 @@ class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(collect(write.head) { case j: BroadcastHashJoinExec => j }.size == 1, write.head)
     // chain mode (the default) builds no member array of a bucket
     plans.foreach(p => assert(!p.toString.contains("collect_list"), p))
+  }
+
+  /** The operators of `plan` that run outside whole-stage codegen, other
+    * than the write itself (with the handoff's row count) and the scan
+    * that feeds a stage. */
+  private def uncompiled(plan: SparkPlan): Seq[SparkPlan] = {
+    def walk(p: SparkPlan, inStage: Boolean): Seq[SparkPlan] = p match {
+      case w: WholeStageCodegenExec => walk(w.child, inStage = true)
+      case i: InputAdapter => walk(i.child, inStage = false)
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan, inStage = false)
+      case q: QueryStageExec => walk(q.plan, inStage = false)
+      case _: DataWritingCommandExec | _: WriteFilesExec | _: CollectMetricsExec |
+           _: FileSourceScanExec =>
+        p.children.flatMap(walk(_, inStage))
+      case _ => (if (inStage) Nil else Seq(p)) ++ p.children.flatMap(walk(_, inStage))
+    }
+    walk(plan, inStage = false)
+  }
+
+  /** `plan` is one whole-stage-codegen stage over its parquet scan. */
+  private def assertOneStageOverScan(plan: SparkPlan, what: String): Unit = {
+    val stages = collect(plan) { case w: WholeStageCodegenExec => w }
+    assert(stages.size == 1, s"$what: ${stages.size} stages\n$plan")
+    assert(collect(stages.head) { case s: FileSourceScanExec => s }.size == 1, s"$what\n$plan")
+    assert(uncompiled(plan).isEmpty, s"$what runs ${uncompiled(plan).map(_.nodeName)}\n$plan")
+  }
+
+  test("plan shapes: clean's judge and quality's write are one codegen stage each; " +
+    "tokenize and export decode no objects") {
+    val dataDir = Files.createTempDirectory("wetshape")
+    val outBase = Files.createTempDirectory("shapeout").toString
+    writeWetGz(dataDir.resolve("a.wet.gz"), Seq("alpha", "omega", "gamma", "delta").zipWithIndex.map {
+      case (w, i) => wetRecord(s"http://s/$i", "2025-01-01T00:00:00Z", s"s$i",
+        mkText(w).replace(" the ", " the\n"))
+    })
+    val cfg = Pipeline.PipelineConfig(dataDir = dataDir.toString, outputBase = outBase,
+      langs = Seq("en"), langThreshold = 0.0, defaultLidArtifact = false,
+      seqLen = 64, vocabSize = 500)
+    PipelineSteps.IngestStep().run(spark, cfg)
+    def writes(plans: Seq[SparkPlan]) =
+      plans.filter(p => collect(p) { case w: DataWritingCommandExec => w }.nonEmpty)
+
+    // clean: the judge (the cached lineage both writes read) is one stage
+    val clean = writes(executedPlans { PipelineSteps.CleanStep().run(spark, cfg) })
+    val judge = clean.flatMap(p => collect(p) { case m: InMemoryTableScanExec => m })
+    assert(judge.nonEmpty, clean)
+    assertOneStageOverScan(judge.head.relation.cachedPlan, "clean judge")
+    assert(judge.head.relation.cachedPlan.toString.contains("dup_line_ratio"))
+
+    // quality: the labeler, its score and the keep filter are one stage
+    val quality = writes(executedPlans { PipelineSteps.QualityStep().run(spark, cfg) })
+    assert(quality.size == 1)
+    assertOneStageOverScan(quality.head, "quality write")
+    assert(quality.head.toString.contains("stopword_margin"), quality.head)
+
+    Seq(PipelineSteps.PiiStep(), PipelineSteps.MinhashStep(), PipelineSteps.ClusteringStep(),
+      PipelineSteps.TrainTokenizerStep()).foreach(_.run(spark, cfg))
+    // tokenize and export stream catalyst rows: no object (de)serializer
+    // and no typed mapPartitions in any plan they run
+    Seq(PipelineSteps.TokenizeStep(), PipelineSteps.ExportStep()).foreach { step =>
+      val plans = executedPlans { step.run(spark, cfg) }
+      assert(plans.nonEmpty, step.name)
+      plans.foreach { p =>
+        val objects = collect(p) {
+          case o @ (_: DeserializeToObjectExec | _: SerializeFromObjectExec | _: MapPartitionsExec) => o
+        }
+        assert(objects.isEmpty, s"${step.name}: $p")
+      }
+    }
+    assert(Files.size(Path.of(s"$outBase/export_tokens.bin")) > 0)
   }
 }
