@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.io.{BufferedInputStream, ByteArrayOutputStream, FileInputStream, InputStream}
@@ -29,7 +29,7 @@ import scala.collection.mutable.ArrayBuffer
   * byte for byte only between runs that read the same directory.
   *
   * Distribution model = the reference's (S2/S3): the *file list* is the
-  * parallel collection — `spark.createDataset(paths).flatMap(parse)` —
+  * parallel collection — `parallelize(paths).flatMap(parse)` —
   * so each task streams one file; at 100 TB the unit of work is a file,
   * which is exactly how CommonCrawl shards.
   */
@@ -137,13 +137,15 @@ object WetSource {
     }
   }
 
-  /** File list → distributed document table. */
+  /** File list → distributed document table: the sorted paths sliced
+    * into at most 256 partitions, one file each up to 256 files, with no
+    * shuffle. The partitions hold equal file counts, so the step writes
+    * evenly sized parts and the steps reading them get even splits. */
   def read(spark: SparkSession, paths: Seq[String], cfg: WetConfig = WetConfig()): DataFrame = {
     import spark.implicits._
     val sorted = paths.sorted
-    val ds: Dataset[String] =
-      spark.createDataset(sorted).repartition(math.max(1, math.min(sorted.size, 256)))
-    ds.flatMap(p => parseFile(p, cfg)).toDF()
+    val files = spark.sparkContext.parallelize(sorted, math.max(1, math.min(sorted.size, 256)))
+    spark.createDataset(files.flatMap(p => parseFile(p, cfg))).toDF()
   }
 
   /** Directory scan with the reference's listing semantics: recursive
