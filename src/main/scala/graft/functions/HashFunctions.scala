@@ -961,6 +961,7 @@ case class MinHashSignature(child: Expression, k: Int, ngram: Int, seed: Long)
     val bytes = v.asInstanceOf[UTF8String].getBytes
     val sig = new Array[Long](k)
     if (bytes.length == 0) return new GenericArrayData(sig)
+    java.util.Arrays.fill(sig, -1L) // unsigned max
     // Incremental polynomial window hash + splitmix64 avalanche: O(1)
     // per shingle instead of a full hash call per 5-byte window (the
     // per-call overhead dominated at ~450 shingles/doc). Deviation from
@@ -968,33 +969,25 @@ case class MinHashSignature(child: Expression, k: Int, ngram: Int, seed: Long)
     // consistency, not a pinned hash family (see SURVEY §7.4).
     val n = math.min(ngram, bytes.length)
     val seen = new HashFunctions.LongSet(512)
-    val last = bytes.length - n
-    val shingles = new Array[Long](last + 1)
-    var m = 0
     var h = 0L
     var i = 0
     while (i < n) { h = h * RollBase + (bytes(i) & 0xffL); i += 1 }
+    val last = bytes.length - n
     var s = 0
     while (s <= last) {
       val mixed = HashFunctions.splitmix64(h)
-      if (seen.add(mixed)) { shingles(m) = mixed; m += 1 }
+      if (seen.add(mixed)) {
+        var j = 0
+        while (j < k) {
+          val cand = mixed * pa(j) + pb(j)
+          if (java.lang.Long.compareUnsigned(cand, sig(j)) < 0) sig(j) = cand
+          j += 1
+        }
+      }
       if (s < last) {
         h = (h - (bytes(s) & 0xffL) * rollPow) * RollBase + (bytes(s + n) & 0xffL)
       }
       s += 1
-    }
-    // one permutation at a time over the distinct shingles: the running
-    // minimum stays in a register. Flipping the sign bit turns the
-    // unsigned order into the signed one, so the min is a plain math.min
-    var j = 0
-    while (j < k) {
-      val a = pa(j)
-      val b = pb(j)
-      var best = Long.MaxValue // unsigned max, sign-flipped
-      var t = 0
-      while (t < m) { best = math.min(best, (shingles(t) * a + b) ^ Long.MinValue); t += 1 }
-      sig(j) = best ^ Long.MinValue
-      j += 1
     }
     new GenericArrayData(sig)
   }

@@ -1,13 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
-import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
-
-import java.util.regex.Pattern
 
 /** Structured PII detection / redaction as pure Column expressions.
   *
@@ -34,11 +28,14 @@ object PiiFunctions {
   /** Full structured redaction chain — order matters (SSN before phone so
     * the phone pattern cannot eat an SSN; email before IP so hostnames in
     * addresses survive), matching the reference's apply order
-    * (reference: src/llm_data_pipeline/pii/run.py:105-125). One codegen'd
-    * kernel ([[PiiRedact]]) with the semantics of the five chained
-    * `regexp_replace` calls it replaced. */
-  def redact(c: Column): Column =
-    ExpressionUtils.column(PiiRedact(ExpressionUtils.expression(c)))
+    * (reference: src/llm_data_pipeline/pii/run.py:105-125). */
+  def redact(c: Column): Column = {
+    val s1 = regexp_replace(c, EmailPattern, "<EMAIL>")
+    val s2 = regexp_replace(s1, SsnPattern, "<SSN>")
+    val s3 = regexp_replace(s2, Ipv4Pattern, "<IP>")
+    val s4 = regexp_replace(s3, Ipv6Pattern, "<IP>")
+    regexp_replace(s4, PhonePattern, "<PHONE>")
+  }
 
   /** Stable pseudonymization: replace EACH email occurrence with a
     * deterministic token derived from that value ('user_' + first 8
@@ -116,46 +113,4 @@ object PiiFunctions {
     c.contains("@") ||
       c.rlike("(?i)contact|about us|email us|联系|关于") ||
       c.rlike("\\b[A-Z][a-z]+ [A-Z][a-z]+\\b")
-}
-
-/** [[PiiFunctions.redact]]'s kernel: the five patterns applied in order
-  * to the decoded text, each as `regexp_replace` applies it (every match
-  * replaced, left to right), and the result encoded once. A pattern is
-  * skipped when the text lacks a character every match of it contains
-  * (`@`, `-`, `.`, `:`, a digit), which leaves the text as it was. */
-case class PiiRedact(child: Expression) extends UnaryExpression with RefEvalCodegen {
-  import PiiRedact._
-  override def dataType: DataType = StringType
-  override protected def javaResultType: String = "org.apache.spark.unsafe.types.UTF8String"
-
-  override def nullSafeEval(v: Any): Any = {
-    var s = v.asInstanceOf[UTF8String].toString
-    Steps.foreach { case (needs, p, token) =>
-      if (needs(s)) s = p.matcher(s).replaceAll(token)
-    }
-    UTF8String.fromString(s)
-  }
-  override protected def withNewChildInternal(c: Expression): PiiRedact = copy(child = c)
-  override def prettyName: String = "pii_redact"
-}
-
-object PiiRedact {
-  import PiiFunctions._
-  private def has(ch: Char): String => Boolean = _.indexOf(ch) >= 0
-  private val Steps: Seq[(String => Boolean, Pattern, String)] = Seq(
-    (has('@'), Pattern.compile(EmailPattern), "<EMAIL>"),
-    (has('-'), Pattern.compile(SsnPattern), "<SSN>"),
-    (has('.'), Pattern.compile(Ipv4Pattern), "<IP>"),
-    (has(':'), Pattern.compile(Ipv6Pattern), "<IP>"),
-    (hasDigit, Pattern.compile(PhonePattern), "<PHONE>"))
-
-  private def hasDigit(s: String): Boolean = {
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c >= '0' && c <= '9') return true
-      i += 1
-    }
-    false
-  }
 }

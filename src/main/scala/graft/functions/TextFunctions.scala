@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-cleaning and text-analysis functions, all as native Spark Column
@@ -20,11 +20,9 @@ import org.apache.spark.unsafe.types.UTF8String
 object TextFunctions {
 
   /** F1 — newline normalize: \r\n|\r -> \n, trim, collapse 3+ \n to 2.
-    * One codegen'd kernel ([[NormalizeNewlines]]) with the semantics of
-    * `regexp_replace(regexp_replace(trim(c), "\r\n?", "\n"), "\n{3,}", "\n\n")`.
     * (reference: src/llm_data_pipeline/ingest/step.py:25-32) */
   def normalizeNewlines(c: Column): Column =
-    ExpressionUtils.column(NormalizeNewlines(ExpressionUtils.expression(c)))
+    regexp_replace(regexp_replace(trim(c), "\r\n?", "\n"), "\n{3,}", "\n\n")
 
   /** F2 — whitespace flatten: `" ".join(text.split())`.
     * (reference: src/llm_data_pipeline/quality/model.py:130-132) */
@@ -156,21 +154,32 @@ object TextFunctions {
     regexp_replace(stripped, "\n{3,}", "\n\n")
   }
 
-  /** F3 — non-whitespace ratio: count(\S)/len; empty -> 0.0; NULL text
-    * gives NULL. One counting pass ([[CharClassRatio]]).
+  /** F3 — non-whitespace ratio: count(\S)/len; empty -> 0.0.
     * (reference: src/llm_data_pipeline/clean/rules.py:12,66) */
-  def nonWsRatio(c: Column): Column = CharClassRatio.column(c, CharClassRatio.NonWs)
+  def nonWsRatio(c: Column): Column =
+    when(length(c) === 0, lit(0.0))
+      .otherwise(length(regexp_replace(c, "\\s", "")).cast("double") / length(c))
 
-  /** F4 — alpha+CJK ratio: count([A-Za-z] or U+4E00-U+9FFF)/len.
-    * (reference: src/llm_data_pipeline/clean/rules.py:13-14,67) */
-  def alphaCjkRatio(c: Column): Column = CharClassRatio.column(c, CharClassRatio.AlphaCjk)
+  /** F4 — alpha+CJK ratio. (reference: src/llm_data_pipeline/clean/rules.py:13-14,67) */
+  def alphaCjkRatio(c: Column): Column =
+    when(length(c) === 0, lit(0.0))
+      .otherwise(
+        (length(c) - length(regexp_replace(c, "[A-Za-z\\x{4e00}-\\x{9fff}]", "")))
+          .cast("double") / length(c))
 
   /** F5 — punctuation ratio: count([^\w\s CJK])/len.
     * (reference: src/llm_data_pipeline/clean/rules.py:15,68) */
-  def punctRatio(c: Column): Column = CharClassRatio.column(c, CharClassRatio.Punct)
+  def punctRatio(c: Column): Column =
+    when(length(c) === 0, lit(0.0))
+      .otherwise(
+        (length(c) - length(regexp_replace(c, "[^\\w\\s\\x{4e00}-\\x{9fff}]", "")))
+          .cast("double") / length(c))
 
   /** Digit ratio — extra quality signal beyond the reference's rule set. */
-  def digitRatio(c: Column): Column = CharClassRatio.column(c, CharClassRatio.Digit)
+  def digitRatio(c: Column): Column =
+    when(length(c) === 0, lit(0.0))
+      .otherwise(
+        (length(c) - length(regexp_replace(c, "[0-9]", ""))).cast("double") / length(c))
 
   /** F6 — duplicate-line ratio: split lines, trim, drop blanks; <5 lines
     * -> 0.0; else (# lines whose trimmed form occurs >1 times)/lines; NULL
@@ -379,107 +388,4 @@ case class DupLineRatio(child: Expression) extends UnaryExpression with RefEvalC
 
 object DupLineRatio {
   private val Newline = UTF8String.fromString("\n")
-}
-
-/** [[TextFunctions.normalizeNewlines]]'s kernel, with the semantics of
-  * the built-ins it replaced: Spark `trim` (U+0020 only), then on the
-  * decoded text every `\r\n` or lone `\r` becomes `\n`, and every run of
-  * three or more `\n` becomes two. The result is re-encoded from the
-  * decoded text, as `regexp_replace` re-encodes it. */
-case class NormalizeNewlines(child: Expression) extends UnaryExpression with RefEvalCodegen {
-  override def dataType: DataType = StringType
-  override protected def javaResultType: String = "org.apache.spark.unsafe.types.UTF8String"
-
-  override def nullSafeEval(v: Any): Any = {
-    val s = v.asInstanceOf[UTF8String].trim().toString
-    val out = new java.lang.StringBuilder(s.length)
-    var run = 0 // newlines seen since the last other char
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\n' || c == '\r') {
-        if (c == '\r' && i + 1 < s.length && s.charAt(i + 1) == '\n') i += 1
-        run += 1
-      } else {
-        NormalizeNewlines.flush(out, run)
-        run = 0
-        out.append(c)
-      }
-      i += 1
-    }
-    NormalizeNewlines.flush(out, run)
-    UTF8String.fromString(out.toString)
-  }
-  override protected def withNewChildInternal(c: Expression): NormalizeNewlines = copy(child = c)
-  override def prettyName: String = "normalize_newlines"
-}
-
-object NormalizeNewlines {
-  private def flush(out: java.lang.StringBuilder, run: Int): Unit = {
-    var k = if (run >= 3) 2 else run
-    while (k > 0) { out.append('\n'); k -= 1 }
-  }
-}
-
-/** Share of a text's characters in one character class, in one pass:
-  * the kernel of [[TextFunctions.nonWsRatio]], [[TextFunctions.alphaCjkRatio]],
-  * [[TextFunctions.punctRatio]] and [[TextFunctions.digitRatio]], with the
-  * semantics of the `regexp_replace` formulations they replaced. `len` is
-  * Spark's `length` (the UTF-8 char count); the class is matched per code
-  * point of the decoded text, as Java regex matches it (`\s` is
-  * `[ \t\n\x0B\f\r]`, `\w` is `[A-Za-z0-9_]`). Empty text gives 0.0,
-  * NULL gives NULL. */
-case class CharClassRatio(child: Expression, kind: Int) extends UnaryExpression with RefEvalCodegen {
-  import CharClassRatio._
-  override def dataType: DataType = DoubleType
-  override protected def javaResultType: String = "Double"
-
-  override def nullSafeEval(v: Any): Any = {
-    val u = v.asInstanceOf[UTF8String]
-    val len = u.numChars()
-    if (len == 0) return 0.0
-    val s = u.toString
-    var cps = 0   // code points of the decoded text
-    var hits = 0  // of them in the class
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      val supplementary = Character.isHighSurrogate(c) && i + 1 < s.length &&
-        Character.isLowSurrogate(s.charAt(i + 1))
-      val hit =
-        if (supplementary) kind == NonWs || kind == Punct
-        else {
-          val ws = c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
-          val alpha = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
-          val digit = c >= '0' && c <= '9'
-          val cjk = c >= '\u4e00' && c <= '\u9fff'
-          kind match {
-            case NonWs => !ws
-            case AlphaCjk => alpha || cjk
-            case Punct => !(alpha || digit || c == '_' || ws || cjk)
-            case _ => digit
-          }
-        }
-      if (hit) hits += 1
-      cps += 1
-      i += (if (supplementary) 2 else 1)
-    }
-    // as the regexp_replace forms count: NonWs is the length left after
-    // deleting \s; the others are len minus the length left after
-    // deleting the class, which differ only on invalid UTF-8
-    if (kind == NonWs) hits.toDouble / len
-    else (len - (cps - hits)).toDouble / len
-  }
-  override protected def withNewChildInternal(c: Expression): CharClassRatio = copy(child = c)
-  override def prettyName: String = "char_class_ratio"
-}
-
-object CharClassRatio {
-  val NonWs = 0
-  val AlphaCjk = 1
-  val Punct = 2
-  val Digit = 3
-
-  def column(c: Column, kind: Int): Column =
-    ExpressionUtils.column(CharClassRatio(ExpressionUtils.expression(c), kind))
 }

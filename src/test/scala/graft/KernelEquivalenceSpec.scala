@@ -1,67 +1,14 @@
 package graft
 
-import graft.functions.{HashFunctions, PiiFunctions, TextFunctions}
+import graft.functions.{HashFunctions, TextFunctions}
 import graft.operators.TextAnalysis
 import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 
-/** The Column formulations (lambda chains and `regexp_replace` passes)
-  * that [[TextFunctions.dupLineRatio]], [[TextAnalysis.langIdScore]],
-  * [[TextFunctions.normalizeNewlines]], the character-class ratios and
-  * [[PiiFunctions.redact]] replaced with one codegen'd kernel each, and
-  * MinHashSignature's former loop, kept as the reference the kernels must
-  * match. */
+/** The Column-lambda formulations that [[TextFunctions.dupLineRatio]] and
+  * [[TextAnalysis.langIdScore]] replaced with one codegen'd kernel each,
+  * kept as the reference the kernels must match. */
 object LambdaKernels {
-
-  def piiRedact(c: Column): Column = {
-    import graft.functions.PiiFunctions._
-    val s1 = regexp_replace(c, EmailPattern, "<EMAIL>")
-    val s2 = regexp_replace(s1, SsnPattern, "<SSN>")
-    val s3 = regexp_replace(s2, Ipv4Pattern, "<IP>")
-    val s4 = regexp_replace(s3, Ipv6Pattern, "<IP>")
-    regexp_replace(s4, PhonePattern, "<PHONE>")
-  }
-
-  def normalizeNewlines(c: Column): Column =
-    regexp_replace(regexp_replace(trim(c), "\r\n?", "\n"), "\n{3,}", "\n\n")
-
-  def nonWsRatio(c: Column): Column =
-    when(length(c) === 0, lit(0.0))
-      .otherwise(length(regexp_replace(c, "\\s", "")).cast("double") / length(c))
-
-  /** count(class)/len as `len - length(text with the class deleted)`. */
-  private def classRatio(c: Column, cls: String): Column =
-    when(length(c) === 0, lit(0.0))
-      .otherwise((length(c) - length(regexp_replace(c, cls, ""))).cast("double") / length(c))
-
-  def alphaCjkRatio(c: Column): Column = classRatio(c, "[A-Za-z\\x{4e00}-\\x{9fff}]")
-  def punctRatio(c: Column): Column = classRatio(c, "[^\\w\\s\\x{4e00}-\\x{9fff}]")
-  def digitRatio(c: Column): Column = classRatio(c, "[0-9]")
-
-  /** MinHashSignature's loop before it went one permutation at a time:
-    * per distinct shingle hash, every permutation's unsigned minimum. */
-  def minhash(text: String, k: Int, ngram: Int, seed: Long): Array[Long] = {
-    val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val sig = new Array[Long](k)
-    if (bytes.isEmpty) return sig
-    java.util.Arrays.fill(sig, -1L)
-    val (pa, pb) = HashFunctions.permParams(k, seed)
-    val base = 1099511628211L
-    val n = math.min(ngram, bytes.length)
-    val pow = (1 until ngram).foldLeft(1L)((p, _) => p * base)
-    val seen = new HashFunctions.LongSet(512)
-    var h = bytes.take(n).foldLeft(0L)((acc, b) => acc * base + (b & 0xffL))
-    for (s <- 0 to bytes.length - n) {
-      val mixed = HashFunctions.splitmix64(h)
-      if (seen.add(mixed))
-        for (j <- 0 until k) {
-          val cand = mixed * pa(j) + pb(j)
-          if (java.lang.Long.compareUnsigned(cand, sig(j)) < 0) sig(j) = cand
-        }
-      if (s < bytes.length - n) h = (h - (bytes(s) & 0xffL) * pow) * base + (bytes(s + n) & 0xffL)
-    }
-    sig
-  }
 
   /** split on \n, trim, drop blanks, sort, count lines equal to a sorted
     * neighbour; <5 lines -> 0.0. */
@@ -131,75 +78,6 @@ class KernelEquivalenceSpec extends SparkSpec {
     // the long doc is not a degenerate 0.0
     val r = Seq(longDoc).toDF("t").select(TextFunctions.dupLineRatio(col("t"))).head().getDouble(0)
     assert(r > 0.0 && r < 1.0, r)
-  }
-
-  /** Texts for the character-class kernels: every class boundary, the
-    * six \s chars and their look-alikes, CJK range edges, non-BMP. */
-  private val classTexts = Seq(
-    null, "", " ", "\t\n\u000B\f\r ", "\u00a0\u2003\u001c",     // \s vs other spaces
-    "abc XYZ 0189 __ !?.,;:'\"()[]{}<>/\\|@#$%^&*-+=~`",
-    "\u4dff\u4e00\u9fff\ua000 中文，标点。",                  // CJK range edges
-    "caf\u00e9 na\u00efve \u00c5ngstr\u00f6m \u0130stanbul",
-    "\ud83d\ude00 \ud835\udd18x\ud800\udc00",                  // non-BMP
-    "\r\n\r\r\n  lines\n\n\n\n  more \r\n\r\n\r\n end  ",
-    "  \n\n\n\n  ", "\r", "\n\r\n\r", "\t x \t", "\uffff\ufffd",
-    "word " * 2000)
-
-  /** Texts with invalid UTF-8, as a binary cast to string leaves them. */
-  private def invalidUtf8(c: String): Column = unhex(lit(c)).cast("string")
-  private val invalidHex = Seq("FF", "61C328", "EDA080", "F09F98", "0D0A0D0DFF0A0A0A0A20",
-    "2020C0AF41", "E4B8AD0D")
-
-  private def assertSameStrings(kernel: Column => Column, reference: Column => Column,
-                                texts: Seq[String] = classTexts): Unit = {
-    val df = texts.toDF("t").union(invalidHex.toDF("h").select(invalidUtf8("h").as("t")))
-      .withColumn("i", monotonically_increasing_id())
-    val rows = df.select(col("i"), kernel(col("t")), reference(col("t"))).collect()
-    assert(rows.length == texts.length + invalidHex.length)
-    rows.foreach { r => assert(r.get(1) == r.get(2), s"row ${r.get(0)}: '${r.get(1)}' vs '${r.get(2)}'") }
-  }
-
-  test("normalizeNewlines kernel equals the regexp_replace chain") {
-    assertSameStrings(TextFunctions.normalizeNewlines, LambdaKernels.normalizeNewlines)
-  }
-
-  test("PII redaction kernel equals the regexp_replace chain") {
-    val pii = Seq(
-      "mail a.b+c@ex-ample.co.uk or x@y.z, then 123-45-6789 and 1234-56-789",
-      "ip 192.168.0.1 and 256.1.1.1 and 1.2.3.4.5 and 10.0.0.255x and fe80::1:2 2001:db8:0:0:1:0:0:1",
-      "call +1 (555) 123-4567 or 555 123 4567 or 12-34 or 1234567890123",
-      "ssn_123-45-6789 a123-45-6789 123-45-67890 中文123-45-6789中文",
-      "no digits here - just . and : and @ alone", "<EMAIL> <SSN> <IP> <PHONE>",
-      "\ud83d\ude00user@host.org\ud83d\ude00 tel 0044 20 7946 0958\n\t(020) 7946-0958",
-      "user@127.0.0.1 ab:cd:ef ::1 1:2:3:4:5:6:7:8:9", "9" * 40)
-    assertSameStrings(PiiFunctions.redact, LambdaKernels.piiRedact, classTexts ++ pii)
-  }
-
-  test("character-class ratio kernels equal the regexp_replace formulations") {
-    val pairs = Seq[(Column => Column, Column => Column)](
-      (TextFunctions.nonWsRatio, LambdaKernels.nonWsRatio),
-      (TextFunctions.alphaCjkRatio, LambdaKernels.alphaCjkRatio),
-      (TextFunctions.punctRatio, LambdaKernels.punctRatio),
-      (TextFunctions.digitRatio, LambdaKernels.digitRatio))
-    pairs.foreach { case (k, r) =>
-      assertSame(classTexts, k(col("t")), r(col("t")))
-      // the invalid UTF-8 rows too, compared as the doubles' strings
-      assertSameStrings(c => k(c).cast("string"), c => r(c).cast("string"))
-    }
-  }
-
-  test("MinHashSignature equals the per-shingle loop it replaced") {
-    val rnd = new scala.util.Random(11)
-    val texts = Seq("", "a", "abcd", "abcde", "aaaaaaaaaaaa", "中文中文中文", "\ud83d\ude00\ud83d\ude00x",
-      (1 to 300).map(_ => rnd.alphanumeric.take(5).mkString).mkString(" "),
-      "the same line\n" * 50)
-    for ((k, ngram, seed) <- Seq((128, 5, 42L), (7, 3, 1L), (64, 9, -5L))) {
-      val got = texts.toDF("t").select(HashFunctions.minhash(col("t"), k, ngram, seed)).collect()
-        .map(_.getSeq[Long](0))
-      texts.zip(got).foreach { case (t, g) =>
-        assert(g == LambdaKernels.minhash(t, k, ngram, seed).toSeq, s"k=$k n=$ngram '${t.take(30)}'")
-      }
-    }
   }
 
   test("langIdScore kernel equals the aggregate fold on adversarial rows") {
