@@ -378,8 +378,7 @@ object Bench {
 
     // --- sf1 step-up (the r8 verdict's #1 ask): re-run the query
     // suite at 10x the primary SF and record per-query sf1/sf0.1
-    // ratios — the replica-based ScaleProbes emulate scale, this
-    // measures it on materialized 10x data (deterministic, generated
+    // ratios, measured on materialized 10x data (deterministic, generated
     // once by ScaleData from the primary dir; generation is untimed
     // per-row but debited against the global wall). One timed run per
     // query (ratio precision, not absolute benchmarking — the sf0.1

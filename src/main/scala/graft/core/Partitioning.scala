@@ -1,9 +1,7 @@
 package graft.core
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** Parallelism guards for compute-heavy per-row operators.
   *
@@ -52,72 +50,5 @@ object Partitioning {
     val splitBytes = math.min(maxSplit, math.max(openCost, bytesPerCore))
     val approxSplits = (padded + math.max(1L, splitBytes) - 1) / math.max(1L, splitBytes)
     if (approxSplits < target) df.repartition(target) else df
-  }
-
-  /** Distributed global running sum: for each `(valueCol -> runCol)`
-    * pair, `runCol` = the sum of `valueCol` over every row at or before
-    * this one in the total order `sortExprs` — what a bare
-    * `Window.orderBy` computes, WITHOUT the single task holding the
-    * whole dataset that a partition-less window plans as (the q30/q31
-    * scale-killer class).
-    *
-    * Shape: `repartitionByRange` on the sort key (a real distributed
-    * sort — deterministic reservoir-sampled boundaries), one
-    * #partitions-row aggregate of per-partition sums, exclusive prefix
-    * offsets computed on the driver (bounded by partition count, not
-    * data) and broadcast back, then a running sum WITHIN each
-    * partition (`Window.partitionBy` on the partition id — parallel,
-    * contiguous ranges). Values must be integral so partial sums are
-    * exact and order-free; `sortExprs` must be a TOTAL order (break
-    * ties) or the prefix is not well-defined.
-    *
-    * The returned frame is persisted (partition ids must stay stable
-    * for the offset join); callers drop it via the session's normal
-    * cache lifecycle. */
-  def distributedPrefixSum(df: DataFrame, sortExprs: Seq[Column],
-                           sums: Seq[(String, String)],
-                           numParts: Int = 0): DataFrame = {
-    require(sums.nonEmpty, "need at least one (valueCol, runCol) pair")
-    val spark = df.sparkSession
-    val parts = if (numParts > 0) numParts
-      else spark.sessionState.conf.numShufflePartitions
-    val sorted = df
-      .repartitionByRange(parts, sortExprs: _*)
-      .sortWithinPartitions(sortExprs: _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist()
-    // coalesce: a partition whose values are ALL null sums to null and
-    // would NPE the driver read; null values count as 0 — consistent
-    // with the within-partition window sum, which skips nulls.
-    val perPart = sorted.groupBy("__pid")
-      .agg(coalesce(sum(col(sums.head._1).cast("long")), lit(0L)).as("__s0"),
-        sums.tail.zipWithIndex.map { case ((v, _), i) =>
-          coalesce(sum(col(v).cast("long")), lit(0L)).as(s"__s${i + 1}")
-        }: _*)
-      .collect()
-      .map(r => r.getInt(0) -> sums.indices.map(i => r.getLong(i + 1)))
-      .sortBy(_._1)
-    val acc = Array.fill(sums.size)(0L)
-    val offsets = perPart.map { case (pid, ss) =>
-      val row = pid +: acc.toSeq
-      sums.indices.foreach(i => acc(i) += ss(i))
-      row
-    }
-    val offsetsDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(offsets.map(org.apache.spark.sql.Row.fromSeq), 1),
-      org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField("__pid",
-          org.apache.spark.sql.types.IntegerType, nullable = false) +:
-        sums.indices.map(i => org.apache.spark.sql.types.StructField(
-          s"__off$i", org.apache.spark.sql.types.LongType, nullable = false))))
-    val w = Window.partitionBy("__pid").orderBy(sortExprs: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withRuns = sums.zipWithIndex.foldLeft(
-        sorted.join(broadcast(offsetsDf), "__pid")) {
-      case (acc0, ((v, runCol), i)) =>
-        acc0.withColumn(runCol,
-          col(s"__off$i") + sum(col(v).cast("long")).over(w))
-    }
-    withRuns.drop("__pid" +: sums.indices.map(i => s"__off$i"): _*)
   }
 }

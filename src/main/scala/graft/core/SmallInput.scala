@@ -21,9 +21,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
   * values. Measured in a test JVM, those bounds hold 33 MB (200k
   * (band_id, band_hash, sha1 id) rows), 14 MB (200k pairs of shared
   * sha1 ids) and 50 MB (12,500 signatures of k = 128).
-  * `Ranking.withRunningSum`
-  * bounds its offset collect with the same probe and its own limit, and
-  * fails past it instead of switching. The reference folds every
+  * `Ranking.withRunningSum`, the one distributed running sum (grouped or
+  * global), bounds its per-(partition, group) offset collect with the
+  * same probe and its own limit, `MaxOffsetEntries`, and fails past it
+  * instead of switching. The reference folds every
   * graph on the driver (reference: src/llm_data_pipeline/dedup/
   * dedup.py:103-121); here that is strictly a bounded fallback.
   */

@@ -382,10 +382,10 @@ object DocCurationGates {
       // write plan for the sharded sinks): order key = md5(doc_id), the
       // content-stable coin d37 uses; shard = first hex char (16-way);
       // within-shard position = the scale-safe range-partition +
-      // driver-offset rank (Ranking.withRowNumber), NOT a per-shard
-      // single-task window. Any engine/run/partitioning reproduces the
-      // exact (shard, pos) layout — reshuffling training data must not
-      // depend on cluster shape.
+      // driver-offset rank (Ranking.withRowNumber grouped by shard),
+      // NOT a per-shard single-task window. Any engine/run/partitioning
+      // reproduces the exact (shard, pos) layout — reshuffling training
+      // data must not depend on cluster shape.
       val h = md5(col("doc_id").cast("string").cast("binary"))
       val keyed = docs(s, d)
         .select(col("doc_id"), substring(h, 1, 1).as("shard"), h.as("hk"))
@@ -634,10 +634,10 @@ object DocCurationGates {
       // docs (quality-milli desc, doc_id tiebreak) until the global
       // running token total exceeds the budget — the final selection
       // step a token-budgeted training run makes. budgetSelect
-      // (Sampling.scala) keeps the global prefix sum DISTRIBUTED:
-      // range-partitioned sort + per-partition offsets broadcast back,
-      // never a single-task whole-corpus window. Integer cost/priority
-      // so the cut replays exactly in SQL.
+      // (Sampling.scala) keeps the global prefix sum DISTRIBUTED through
+      // Ranking.withRunningSum: one range shuffle + per-partition
+      // offsets, never a single-task whole-corpus window. Integer
+      // cost/priority so the cut replays exactly in SQL.
       val scored = docs(s, d).select(col("doc_id"),
         floor(TextFunctions.qualityScore(col("text")) * 1000).cast("long")
           .as("quality_milli"),

@@ -393,7 +393,7 @@ object DocQualityGates {
       val q = docs(s, d).select(col("doc_id"), col("lang"),
         TextFunctions.qualityScore(col("text")).as("qs"))
         .localCheckpoint(true)
-      val bands = Ranking.exactQuantiles(q, "lang", "qs",
+      val bands = Ranking.exactQuantiles(q, Seq("lang"), "qs",
         Seq(0.05 -> "p05", 0.95 -> "p95"))
       q.join(broadcast(bands), "lang")
         .select(col("doc_id"), col("lang"), col("qs").as("quality_score"),
@@ -441,11 +441,10 @@ object DocQualityGates {
       val scored = TextAnalysis.bigramPerplexity(
           all.select("doc_id", "text"), "text", lm)
         .select(col("doc_id"), col("ppl"))
-        .withColumn("__all", lit(1))
         .localCheckpoint(true)
       val cuts = Ranking.exactQuantiles(scored.where(col("ppl").isNotNull),
-        "__all", "ppl", Seq(1.0 / 3 -> "p33", 2.0 / 3 -> "p67"))
-      scored.join(broadcast(cuts), "__all")
+        Nil, "ppl", Seq(1.0 / 3 -> "p33", 2.0 / 3 -> "p67"))
+      scored.crossJoin(broadcast(cuts))
         .select(col("doc_id"), col("ppl"), col("p33"), col("p67"),
           when(col("ppl").isNull, lit("tail"))
             .when(col("ppl") <= col("p33"), lit("head"))
@@ -514,9 +513,9 @@ object DocQualityGates {
       // distributions of two corpus halves (even vs odd doc_id — the
       // stand-in for "yesterday's snapshot vs today's"). KS needs the
       // running CDF over the global score order — the partition-less
-      // window scale-killer — so the cumulatives come from
-      // core.Partitioning.distributedPrefixSum (range partition +
-      // broadcast offsets, both counters in ONE pass). The decision
+      // window scale-killer — so the cumulatives come from the global
+      // form of Ranking.withRunningSum (one range shuffle + driver
+      // offsets, both counters in ONE pass). The decision
       // value |r0*n1 - r1*n0| is pure INTEGER arithmetic (== the KS
       // sup scaled by n0*n1): no float CDF ever reaches the argmax.
       // Exact to ~3e9 rows per side before i64 overflow; beyond that,
@@ -527,8 +526,8 @@ object DocQualityGates {
       val counts = scored.groupBy("q").agg(
         sum(when(col("g0"), 1L).otherwise(0L)).as("c0"),
         sum(when(!col("g0"), 1L).otherwise(0L)).as("c1"))
-      val cums = graft.core.Partitioning.distributedPrefixSum(
-        counts, Seq(col("q").asc), Seq("c0" -> "r0", "c1" -> "r1"))
+      val cums = Ranking.withRunningSum(counts, Nil, Seq(col("q").asc),
+        Seq(col("c0") -> "r0", col("c1") -> "r1"))
       val tot = counts.agg(sum("c0").as("n0"), sum("c1").as("n1"))
       cums.crossJoin(broadcast(tot))
         .withColumn("diff", abs(col("r0") * col("n1") - col("r1") * col("n0")))

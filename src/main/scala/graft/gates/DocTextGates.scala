@@ -269,8 +269,8 @@ object DocTextGates {
     Gate("d45_zipf_report", (s, d) => {
       // corpus-health Zipf report: global rank of every vocabulary term
       // by (freq DESC, term). A global row_number is the prefix-sum
-      // problem at scale, so the rank uses the range-partition +
-      // driver-offset construction (Ranking.withRowNumber — q30/q31's
+      // problem at scale, so the rank is Ranking.withRowNumber with no
+      // group columns (one range shuffle + driver offsets — q30/q31's
       // machinery), NOT a single-partition window. Log columns are
       // per-row only; no cross-row float sums (those hash-differ under
       // partial-agg order).
@@ -278,9 +278,7 @@ object DocTextGates {
         .select(explode(split(lower(trim(col("text"))), "\\s+")).as("term"))
         .where(length(col("term")) > 0)
         .groupBy("term").agg(count(lit(1)).as("freq"))
-        .withColumn("__all", lit(1))
-      Ranking.withRowNumber(words, Seq("__all"),
-          Seq(col("freq").desc, col("term")), "rank")
+      Ranking.withRowNumber(words, Nil, Seq(col("freq").desc, col("term")), "rank")
         .select(col("rank"), col("term"), col("freq"),
           round(log10(col("rank")), 6).as("log_rank"),
           round(log10(col("freq")), 6).as("log_freq"),

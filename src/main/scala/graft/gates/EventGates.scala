@@ -505,7 +505,7 @@ object EventGates {
       // embedded-assertion convention); the exact values hash-gate.
       val e = ev(s, d).where(col("value").isNotNull)
         .select(col("event_type"), col("value"))
-      val exact = Ranking.exactQuantiles(e, "event_type", "value",
+      val exact = Ranking.exactQuantiles(e, Seq("event_type"), "value",
         Seq(0.5 -> "p50", 0.95 -> "p95"))
       val approx = e.groupBy("event_type").agg(
         percentile_approx(col("value"), array(lit(0.5), lit(0.95)), lit(1000))
@@ -603,7 +603,7 @@ object EventGates {
           Array(col("view_to_click"), col("click_to_purchase")),
           "stage", "dur_us")
         .where(col("dur_us").isNotNull)
-      Ranking.exactQuantiles(durs, "stage", "dur_us",
+      Ranking.exactQuantiles(durs, Seq("stage"), "dur_us",
           Seq(0.5 -> "p50_us", 0.9 -> "p90_us"))
         .join(durs.groupBy("stage").agg(count(lit(1)).as("n_converted")), "stage")
         .select("stage", "n_converted", "p50_us", "p90_us")

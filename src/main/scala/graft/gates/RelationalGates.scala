@@ -379,9 +379,9 @@ object RelationalGates {
       // — but their eager rank passes (repartition + checkpoint +
       // offset collect) are independent jobs; overlap them (guide §2.6)
       val Seq(price, qty) = inParallel(Seq(
-        () => Ranking.exactQuantiles(base, "l_returnflag", "l_extendedprice",
+        () => Ranking.exactQuantiles(base, Seq("l_returnflag"), "l_extendedprice",
           Seq(0.5 -> "p50", 0.95 -> "p95")),
-        () => Ranking.exactQuantiles(base, "l_returnflag", "l_quantity",
+        () => Ranking.exactQuantiles(base, Seq("l_returnflag"), "l_quantity",
           Seq(0.5 -> "q50"))))
       price.join(qty, "l_returnflag").orderBy("l_returnflag")
     },

@@ -142,15 +142,16 @@ object TokenizeGates {
       // chunk's contents must equal the corresponding L-token slice of
       // the global (doc-order, EOS-terminated) token stream — k01
       // gates the chunk COUNT, this gates the CONTENT. packExact at 8
-      // partitions + the distributed chunk index; per-chunk state is
+      // partitions + the distributed chunk index (Ranking.withRowNumber
+      // with no group columns: a global row number); per-chunk state is
       // bounded (L tokens). The oracle rebuilds every chunk's md5 from
       // first principles via a SQL prefix sum.
       val toks = docs(s, d).select(col("doc_id"),
         expr("transform(sequence(1, size(split(trim(text), '\\\\s+'))), i -> i)")
           .as("ids"))
       val packed = Packer.packExact(toks, "doc_id", "ids", seqLen = 512,
-        eosId = 0, numPartitions = 8).withColumn("__all", lit(1))
-      Ranking.withRowNumber(packed, Seq("__all"),
+        eosId = 0, numPartitions = 8)
+      Ranking.withRowNumber(packed, Nil,
           Seq(col("part_id"), col("chunk_in_part")), "chunk_idx")
         .select((col("chunk_idx") - 1).as("chunk_idx"),
           md5(array_join(transform(col("input_ids"), x => x.cast("string")), ",")
@@ -374,8 +375,8 @@ object TokenizeGates {
       // many tokens land in full chunks (trained), how many die in the
       // dropped tail, and which chunks each source touches (both
       // doc-chunk incidences and distinct chunks). Computed
-      // analytically from the global doc-order token stream: the
-      // distributed prefix sum gives each doc its global start (no
+      // analytically from the global doc-order token stream: the global
+      // Ranking.withRunningSum gives each doc its global start (no
       // single-task window — the k05/d60 construction), chunk indices
       // are integer division, and the per-doc chunk range explode is
       // bounded by tokens/seqLen. Tied to the REAL packer by asserting
@@ -383,8 +384,8 @@ object TokenizeGates {
       val L = 512
       val toks = docs(s, d).select(col("doc_id"), col("source"),
         (size(split(trim(col("text")), "\\s+")) + 1).cast("long").as("wtok"))
-      val cums = graft.core.Partitioning.distributedPrefixSum(
-        toks, Seq(col("doc_id").asc), Seq("wtok" -> "run"))
+      val cums = Ranking.withRunningSum(toks, Nil, Seq(col("doc_id").asc),
+        Seq(col("wtok") -> "run"))
       val totalV = toks.agg(sum("wtok")).head().getLong(0)
       val ids = docs(s, d).select(col("doc_id"),
         expr("transform(sequence(1, size(split(trim(text), '\\\\s+'))), i -> i)")

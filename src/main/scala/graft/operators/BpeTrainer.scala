@@ -389,7 +389,8 @@ object BpeTrainer {
     * reference's `tokenizer.model` file plays (reference:
     * src/llm_data_pipeline/tokenizer/train.py:111-134): train once, ship
     * the artifact, and any job tokenizes identically. Two tables under
-    * `dir`, each one file written through [[Handoff]]:
+    * `dir`, each one file (the rule in `Tokenizer.saveModel`) written
+    * through [[Handoff]]:
     * `bpe_merges_parquet` (rank, left, right) — merge ORDER is the model
     * (rank = priority), stored explicitly because parquet row order is
     * not a contract — and `bpe_vocab_parquet` (word, freq, id), freq

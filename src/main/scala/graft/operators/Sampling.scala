@@ -17,28 +17,30 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
+  /** `df` plus `__rn`: each row's 1-based rank in its stratum by
+    * ascending md5 of `hashCol` (a stable id column) — the one
+    * stratum-rank window every sampler here keeps a prefix of. */
+  private def withStratumRank(df: DataFrame, strataCol: String,
+                              hashCol: String): DataFrame =
+    df.withColumn("__rn", row_number().over(
+      Window.partitionBy(col(strataCol)).orderBy(md5(col(hashCol).cast("string")))))
+
   /** Exact stratified sample: keep ceil(frac * n) rows per stratum,
-    * selected by ascending md5 of `hashCol` (a stable id column). */
+    * selected by ascending md5 of `hashCol` — [[mixture]] with no
+    * per-stratum fractions. */
   def stratifiedExact(df: DataFrame, strataCol: String, frac: Double,
                       hashCol: String): DataFrame = {
     require(frac > 0 && frac <= 1)
-    val w = Window.partitionBy(col(strataCol)).orderBy(md5(col(hashCol).cast("string")))
-    val cw = Window.partitionBy(col(strataCol))
-    df.withColumn("__rn", row_number().over(w))
-      .withColumn("__n", count(lit(1)).over(cw))
-      .where(col("__rn") <= ceil(lit(frac) * col("__n")))
-      .drop("__rn", "__n")
+    mixture(df, strataCol, Map.empty, frac, hashCol)
   }
 
   /** Per-stratum cap (take at most `maxRows` per stratum, same stable
     * hash order) — the "downsample overrepresented sources" operation. */
   def capPerStratum(df: DataFrame, strataCol: String, maxRows: Int,
-                    hashCol: String): DataFrame = {
-    val w = Window.partitionBy(col(strataCol)).orderBy(md5(col(hashCol).cast("string")))
-    df.withColumn("__rn", row_number().over(w))
+                    hashCol: String): DataFrame =
+    withStratumRank(df, strataCol, hashCol)
       .where(col("__rn") <= maxRows)
       .drop("__rn")
-  }
 
   /** Temperature-weighted mixture under a TOKEN budget — the standard
     * pre-training recipe (sample source s with probability ∝ tokens(s)^T,
@@ -237,18 +239,19 @@ object Sampling {
     * A naive `Window.orderBy` with no partition key is a SINGLE-TASK
     * sort of the whole corpus — the exact scale-killer the q30/q31
     * rework removed. The global running sum instead comes from
-    * [[graft.core.Partitioning.distributedPrefixSum]] (range-partition
-    * + per-partition offsets broadcast back — see its doc for the
-    * shape); this operator is just that prefix sum plus the budget cut.
+    * [[Ranking.withRunningSum]] with no group columns (one range
+    * shuffle + per-partition offsets — see its doc for the shape);
+    * this operator is just that prefix sum plus the budget cut.
     *
-    * `cost` must be integral (token counts) so the prefix sums are
-    * exact and order-independent; priority ties MUST be broken by a
-    * unique `tie` column or the cut is not well-defined. */
+    * `cost` is cast to long (token counts) so the prefix sums are
+    * exact and order-independent; a NULL cost adds nothing, and rows
+    * before the first non-NULL cost have a NULL total and are dropped,
+    * as in SQL. Priority ties MUST be broken by a unique `tie` column
+    * or the cut is not well-defined. */
   def budgetSelect(df: DataFrame, priorityCol: String, costCol: String,
                    tieCol: String, budget: Long, numParts: Int = 0): DataFrame =
-    graft.core.Partitioning.distributedPrefixSum(df,
-        Seq(col(priorityCol).desc, col(tieCol).asc),
-        Seq(costCol -> "__run"), numParts)
+    Ranking.withRunningSum(df, Nil, Seq(col(priorityCol).desc, col(tieCol).asc),
+        Seq(col(costCol) -> "__run"), numParts)
       .where(col("__run") <= budget)
       .drop("__run")
 
@@ -259,10 +262,8 @@ object Sampling {
     val fracCol = fractions.foldLeft(lit(defaultFrac)) { case (acc, (k, v)) =>
       when(col(strataCol) === k, lit(v)).otherwise(acc)
     }
-    val w = Window.partitionBy(col(strataCol)).orderBy(md5(col(hashCol).cast("string")))
-    val cw = Window.partitionBy(col(strataCol))
-    df.withColumn("__rn", row_number().over(w))
-      .withColumn("__n", count(lit(1)).over(cw))
+    withStratumRank(df, strataCol, hashCol)
+      .withColumn("__n", count(lit(1)).over(Window.partitionBy(col(strataCol))))
       .where(col("__rn") <= ceil(fracCol * col("__n")))
       .drop("__rn", "__n")
   }

@@ -204,7 +204,10 @@ object Tokenizer {
   }
 
   /** Write `model`'s artifact under `base` through [[Handoff]] and keep
-    * the model in driver memory for [[loadModel]]. */
+    * the model in driver memory for [[loadModel]]. Every model table is
+    * written as one file by `coalesce(1)`: a driver-sized table needs
+    * no shuffle and no more than one task, and the readers key by word,
+    * piece or id, so row order inside the file does not matter. */
   def saveModel(spark: SparkSession, base: String, model: Model): Unit = {
     import spark.implicits._
     val kind = model match {
@@ -213,7 +216,7 @@ object Tokenizer {
         UnigramTrainer.writeModel(spark, artifactDirs(base, "unigram").head, m); "unigram"
       case m: WordModel =>
         Handoff.write(m.table.zipWithIndex.map { case ((w, f), id) => (w, f, id) }
-          .toDF("word", "freq", "id"), artifactDirs(base, "word").head)
+          .toDF("word", "freq", "id").coalesce(1), artifactDirs(base, "word").head)
         "word"
     }
     val dirs = artifactDirs(base, kind)

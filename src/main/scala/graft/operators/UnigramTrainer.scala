@@ -355,13 +355,14 @@ object UnigramTrainer {
 
   /** Model artifact: (kind, piece, logp, id) rows — probabilities ARE
     * the model (segmentation depends on them), stored explicitly like
-    * BPE stores merge rank. One file, written through [[Handoff]]. */
+    * BPE stores merge rank. One file (the rule in `Tokenizer.saveModel`),
+    * written through [[Handoff]]. */
   def writeModel(spark: org.apache.spark.sql.SparkSession, path: String,
                  m: UnigramModel): Unit = {
     import spark.implicits._
     val pieces = m.pieces.toSeq.map { case (p, lp) => ("piece", p, lp, -1) }
     val vocab = m.vocab.toSeq.map { case (p, id) => ("vocab", p, 0.0, id) }
-    Handoff.write((pieces ++ vocab).toDF("kind", "piece", "logp", "id").repartition(1), path)
+    Handoff.write((pieces ++ vocab).toDF("kind", "piece", "logp", "id").coalesce(1), path)
   }
 
   def loadModel(spark: org.apache.spark.sql.SparkSession,

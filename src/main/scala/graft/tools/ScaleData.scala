@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *    time range is densification, the realistic growth shape for
   *    window/as-of families.
   *  - documents: replica k>0 texts get a " repK" suffix (n_chars
-  *    recomputed) — the ScaleProbe convention: copies become NEAR-dups
+  *    recomputed), a salted replica: copies become NEAR-dups
   *    (high-Jaccard), the adversarial shape for the LSH/dedup families
   *    (every band collides; candidate volume is maximal).
   *  - embeddings: replicated with shifted vec_id, vectors kept — exact

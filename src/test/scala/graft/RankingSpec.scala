@@ -1,6 +1,9 @@
 package graft
 
 import graft.operators.Ranking
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,7 +37,7 @@ class RankingSpec extends SparkSpec {
     val expected = df.withColumn("rs", sum("w").over(win))
       .select("id", "rs").as[(Long, Long)].collect().toMap
     val got = Ranking.withRunningSum(df, Seq("grp"), Seq(col("v"), col("id")),
-        col("w"), "rs", numPartitions = 5)
+        Seq(col("w") -> "rs"), numPartitions = 5)
       .select("id", "rs").as[(Long, Long)].collect().toMap
     assert(got == expected)
   }
@@ -47,9 +50,75 @@ class RankingSpec extends SparkSpec {
     (1L to 200L).foreach(i => assert(got(i) == 200L - i + 1))
   }
 
+  test("withRunningSum: global order with two sums matches the driver-side running sum, any partitioning") {
+    // non-trivial order (desc key, asc tiebreak) + two value columns
+    val rows = (1L to 300L).map(i => (i, i % 13, i % 5 + 1, i % 3))
+    val ref = {
+      var a = 0L; var b = 0L
+      rows.sortBy { case (id, k, _, _) => (-k, id) }.map { case (id, _, v1, v2) =>
+        a += v1; b += v2; (id, a, b)
+      }.sortBy(_._1)
+    }
+    for (parts <- Seq(1, 4, 17)) {
+      val got = Ranking.withRunningSum(rows.toDF("id", "k", "v1", "v2").repartition(parts),
+          Nil, Seq(col("k").desc, col("id").asc),
+          Seq(col("v1") -> "r1", col("v2") -> "r2"), numPartitions = 5)
+        .select("id", "r1", "r2").as[(Long, Long, Long)]
+        .collect().sortBy(_._1).toSeq
+      assert(got == ref, s"input partitions=$parts")
+    }
+  }
+
+  test("withRunningSum: global single row and empty input") {
+    val one = Ranking.withRunningSum(Seq((1L, 7L)).toDF("id", "v"), Nil,
+      Seq(col("id").asc), Seq(col("v") -> "r"))
+    assert(one.select("r").as[Long].collect().toSeq == Seq(7L))
+    val empty = Ranking.withRunningSum(Seq.empty[(Long, Long)].toDF("id", "v"), Nil,
+      Seq(col("id").asc), Seq(col("v") -> "r"))
+    assert(empty.count() == 0)
+  }
+
+  test("withRunningSum: NULLs that open a range partition match the window sum, with and without groups") {
+    // a leading NULL run, an all-NULL stretch wider than a partition, and
+    // NULLs on two of every three rows, so range partitions open on NULLs
+    val df = (1L to 120L).map { i =>
+      val v = if (i <= 20 || (i >= 40 && i <= 80) || i % 3 != 0) None else Some(i % 5)
+      (i, if (i % 2 == 0) "a" else "b", v)
+    }.toDF("id", "g", "v")
+    for (groups <- Seq(Nil, Seq("g"))) {
+      val win = Window.partitionBy(groups.map(col): _*).orderBy("id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val expected = df.withColumn("rs", sum("v").over(win))
+        .select("id", "rs").as[(Long, Option[Long])].collect().sortBy(_._1).toSeq
+      assert(expected.head._2.isEmpty && expected.last._2.nonEmpty)
+      for (parts <- Seq(1, 2, 3, 5, 8, 13)) {
+        val got = Ranking.withRunningSum(df, groups, Seq(col("id")),
+            Seq(col("v") -> "rs"), numPartitions = parts)
+          .select("id", "rs").as[(Long, Option[Long])].collect().sortBy(_._1).toSeq
+        assert(got == expected, s"groups=$groups partitions=$parts")
+      }
+    }
+  }
+
+  test("withRunningSum: a global running sum caches nothing and plans one Exchange, a range one") {
+    spark.catalog.clearCache()
+    val df = (1L to 200L).map(i => (i, i % 7)).toDF("id", "v")
+    var n = 0L
+    val plans = executedPlans {
+      n = Ranking.withRunningSum(df, Nil, Seq(col("id")), Seq(col("v") -> "r"),
+        numPartitions = 4).collect().length
+    }
+    assert(n == 200)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    object Plans extends AdaptiveSparkPlanHelper
+    val exchanges = plans.flatMap(p => Plans.collect(p) { case e: Exchange => e })
+    assert(exchanges.size == 1, plans.mkString("\n"))
+    assert(exchanges.head.outputPartitioning.isInstanceOf[RangePartitioning])
+  }
+
   test("exactQuantiles matches brute-force sorted extraction") {
     val df = randomDf(400, 3)
-    val got = Ranking.exactQuantiles(df, "grp", "v", Seq(0.5 -> "p50", 0.9 -> "p90"))
+    val got = Ranking.exactQuantiles(df, Seq("grp"), "v", Seq(0.5 -> "p50", 0.9 -> "p90"))
       .select("grp", "p50", "p90").as[(String, Double, Double)].collect()
       .map(r => r._1 -> (r._2, r._3)).toMap
     val byGroup = df.select("grp", "v").as[(String, Double)].collect()
@@ -63,7 +132,7 @@ class RankingSpec extends SparkSpec {
 
   test("exactQuantiles on empty group column domain returns no rows") {
     val df = Seq.empty[(Long, String, Double)].toDF("id", "grp", "v")
-    assert(Ranking.exactQuantiles(df, "grp", "v", Seq(0.5 -> "p50")).count() == 0)
+    assert(Ranking.exactQuantiles(df, Seq("grp"), "v", Seq(0.5 -> "p50")).count() == 0)
   }
 
   test("preferencePairs: argmax/argmin per prompt, margin gate, tie policy") {

@@ -40,14 +40,12 @@ class SamplingSpec extends SparkSpec {
         .select("id").collect().map(_.getLong(0)).sorted.toSeq
       assert(got == expected.toSeq, s"input partitions=$parts")
     }
-    spark.catalog.clearCache()
   }
 
   test("budgetSelect: over-budget first row yields empty; huge budget keeps all") {
     val base = Seq((1L, 5L, 100L), (2L, 4L, 1L)).toDF("id", "pr", "cost")
     assert(Sampling.budgetSelect(base, "pr", "cost", "id", 50L).count() == 0)
     assert(Sampling.budgetSelect(base, "pr", "cost", "id", 1000L).count() == 2)
-    spark.catalog.clearCache()
   }
 
   test("weighted mixture applies per-stratum fractions") {
