@@ -50,7 +50,7 @@ class RankingSpec extends SparkSpec {
     (1L to 200L).foreach(i => assert(got(i) == 200L - i + 1))
   }
 
-  test("withRunningSum: global order with two sums matches the driver-side running sum, any partitioning") {
+  test("withRunningSum: global two sums match the driver-side sum, any partitioning") {
     // non-trivial order (desc key, asc tiebreak) + two value columns
     val rows = (1L to 300L).map(i => (i, i % 13, i % 5 + 1, i % 3))
     val ref = {
